@@ -87,11 +87,11 @@ object Bench {
         // --untracked-files=no let a brand-new not-yet-added source file
         // stamp clean, while any scope that counts root-level scratch/
         // artifact JSONs makes every regenerate-then-commit run dirty).
-        // src + build.sbt + scripts is exactly "the code that built and
-        // drove this measurement".
+        // src + build.sbt + project + scripts is exactly "the code and
+        // build definition that built and drove this measurement".
         val st = new StringBuilder
         Process(Seq("git", "status", "--porcelain", "--",
-            "src", "build.sbt", "scripts"))
+            "src", "build.sbt", "project", "scripts"))
           .!(ProcessLogger(o => { st.append(o); () }, _ => ()))
         out.toString.trim + (if (st.nonEmpty) "-dirty" else "")
       }

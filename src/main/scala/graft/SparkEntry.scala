@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ast.CorrelateStmt
 import graft.exec.{CorrelateExec, QueryExec, SelectExec}
 import graft.ingest.Merge
-import graft.ml.{Ann, Multimodal, NearDup}
+import graft.ml.{Ann, Ivf, IvfCodec, Multimodal, NearDup}
 import graft.model.{Catalog, Tables}
 import graft.operators.{PostingAlgebra, TimeSeriesOps}
 import graft.operators.PostingAlgebra._
@@ -75,6 +75,19 @@ object SparkEntry {
   private val DeadIdsSql: String =
     s"""SELECT doc_id AS vec_id FROM (${graft.ml.Clusters.oracleSql(0.6)})
        | WHERE doc_id <> cluster_id""".stripMargin.replaceAll("\\s+", " ")
+
+  /** The dense tiers' restrictions over the shared id space: the tombstone
+    * mask above, and the lang=en metadata slice every filtered quantized
+    * entry serves — each with its DuckDB mirror. */
+  private def deadMask(s: SparkSession, dir: String): Ivf.Restrict[DataFrame] =
+    Ivf.Masked(tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")))
+
+  private def enSlice(s: SparkSession, dir: String): Ivf.Restrict[DataFrame] =
+    Ivf.Allowed(Catalog.docMeta(s, dir).filter(col("lang") === "en")
+      .select(col("doc_id").as("vec_id")))
+
+  private val EnSliceSql: Ivf.Restrict[String] =
+    Ivf.Allowed("SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'")
 
   /** The literal batch's distinct term dictionary, derived driver-side from
     * the same BatchQueries constant the batch frame is built from — pushed
@@ -1355,12 +1368,9 @@ object SparkEntry {
     // tombstone set (shared doc/vec id space) anti-joins the IVF probed
     // candidates — deletes that masked only the lexical tier would serve
     // inconsistent hybrid fusions...
-    "ann_masked_serve" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.Ann.ivfTopKMaskedFrom(Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")), 10)
-    }),
+    "ann_masked_serve" -> ((s, dir) =>
+      Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
+        Catalog.embeddings(s, dir), 0L, 10, deadMask(s, dir))),
     // ...and its compaction end: tombstones folded OUT of the flat store
     // into a new sorted generation behind the atomic MANIFEST flip, served
     // identically (cosine carries no corpus stats, so masked == compacted
@@ -1639,7 +1649,7 @@ object SparkEntry {
     // BUILD (like every *_compact entry); the lookup itself is the pinned
     // cell-pruned plan.
     "sq8_topk_gen" -> ((s, dir) =>
-      graft.ml.Quant.sq8IvfTopKFrom(
+      Ivf.topK(IvfCodec.Sq8,
         graft.streaming.EmbeddingsIngest.sq8GenServing(s, dir,
           Catalog.scratch(dir, "sq8_topk_gen")),
         Catalog.embeddings(s, dir), 0, 10)),
@@ -1649,8 +1659,8 @@ object SparkEntry {
     // directly, so the former assignment-table ⋈ embeddings corpus join is
     // gone from the serving plans (VERDICT r14 #5 job audit)
     "emb_topk_ivf" -> ((s, dir) =>
-      Ann.ivfTopKFrom(Catalog.ivfFlat(s, dir), Catalog.embeddings(s, dir),
-        0, 10)),
+      Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
+        Catalog.embeddings(s, dir), 0, 10)),
     // index-health audit: per-cell population + load factor from the
     // STORED assignment (hot cell = probe becomes a scan; empty cell =
     // wasted centroid — the IVF rebalance trigger)
@@ -1673,23 +1683,24 @@ object SparkEntry {
     // the predicate reaches the flat store's parquet scan as a pushed
     // EqualTo beside the partition pruning; probe stage identical
     "emb_topk_filtered" -> ((s, dir) =>
-      Ann.ivfTopKFilteredFrom(Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir), 0, 3, 10)),
+      Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
+        Catalog.embeddings(s, dir), 0, 10, Ivf.Label(3))),
     // BATCHED IVF serving: a whole query table answered in ONE plan —
     // probe assignment, candidate join and per-query top-k all declarative,
     // zero per-query driver round-trips (the 100 TB serving shape; the
     // single-query entries above are the point-lookup shape)
     "emb_topk_ivf_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      Ann.ivfTopKBatchFrom(Catalog.ivfFlat(s, dir),
+      Ivf.topKBatch(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
     }),
     // the serving matrix's fourth corner: batched AND metadata-filtered —
     // same batch plan, label predicate pushed into the flat-store scan
     "emb_topk_filtered_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      Ann.ivfTopKBatchFilteredFrom(Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 3, 10)
+      Ivf.topKBatch(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
+        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10,
+        Ivf.Label(3))
     }),
     // scalar int8 quantization COMPOSED with the coarse quantizer: the 4x-
     // smaller byte codes live inside the MATERIALIZED cell-partitioned
@@ -1699,7 +1710,7 @@ object SparkEntry {
     // scan (VERDICT r10 #1); QuantSpec bounds the ranking cost and pins
     // the pruned plan
     "emb_topk_sq8" -> ((s, dir) =>
-      graft.ml.Quant.sq8IvfTopKFrom(Catalog.sq8IvfStore(s, dir),
+      Ivf.topK(IvfCodec.Sq8, Catalog.sq8IvfStore(s, dir),
         Catalog.embeddings(s, dir), 0, 10)),
     // filtered + masked serving at the QUANTIZED tiers (r16): the sidecar
     // slice / tombstone set composes with the composed stores exactly as
@@ -1731,36 +1742,26 @@ object SparkEntry {
     // exercises the escalation at verify scale
     "emb_topk_adaptive" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Ann.ivfTopKAllowedAdaptive(Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        Catalog.docMeta(s, dir).filter(col("lang") === "fr")
-          .select(col("doc_id").as("vec_id")), 20)
+      Ivf.topKAdaptive(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
+        Catalog.embeddings(s, dir), 0L, 20,
+        Ivf.Allowed(Catalog.docMeta(s, dir).filter(col("lang") === "fr")
+          .select(col("doc_id").as("vec_id"))))
     }),
     "sq8_topk_filtered" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.Quant.sq8IvfTopKAllowed(Catalog.sq8IvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        Catalog.docMeta(s, dir).filter(col("lang") === "en")
-          .select(col("doc_id").as("vec_id")), 10)
+      Ivf.topK(IvfCodec.Sq8, Catalog.sq8IvfStore(s, dir),
+        Catalog.embeddings(s, dir), 0L, 10, enSlice(s, dir))
     }),
     "sq8_masked_serve" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.Quant.sq8IvfTopKMasked(Catalog.sq8IvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")), 10)
+      Ivf.topK(IvfCodec.Sq8, Catalog.sq8IvfStore(s, dir),
+        Catalog.embeddings(s, dir), 0L, 10, deadMask(s, dir))
     }),
     "pq_topk_filtered" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.Pq.pqIvfTopKAllowed(Catalog.pqIvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        Catalog.docMeta(s, dir).filter(col("lang") === "en")
-          .select(col("doc_id").as("vec_id")), 10)
+      Ivf.topK(IvfCodec.Pq, Catalog.pqIvfStore(s, dir),
+        Catalog.embeddings(s, dir), 0L, 10, enSlice(s, dir))
     }),
     "pq_masked_serve" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.Pq.pqIvfTopKMasked(Catalog.pqIvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")), 10)
+      Ivf.topK(IvfCodec.Pq, Catalog.pqIvfStore(s, dir),
+        Catalog.embeddings(s, dir), 0L, 10, deadMask(s, dir))
     }),
     // PRODUCT quantization composed with the coarse quantizer: one byte
     // per subspace (32x smaller than the floats, vs SQ8's 4x); the lookup
@@ -1768,13 +1769,12 @@ object SparkEntry {
     // candidates contribute only their M code bytes, every reconstructed
     // float comes from the committed codebook constants
     "emb_topk_pq" -> ((s, dir) =>
-      graft.ml.Pq.pqIvfTopKFrom(Catalog.pqIvfStore(s, dir),
+      Ivf.topK(IvfCodec.Pq, Catalog.pqIvfStore(s, dir),
         Catalog.embeddings(s, dir), 0, 10)),
     // batched PQ serving — the sq8_topk_batch shape over the 32x store
     "pq_topk_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Pq.pqIvfTopKBatchFrom(Catalog.pqIvfStore(s, dir),
-        Catalog.embeddings(s, dir),
+      Ivf.topKBatch(IvfCodec.Pq, Catalog.pqIvfStore(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
     }),
     // the PQ store's content, exploded to scalar so codes pin element-wise
@@ -1789,7 +1789,7 @@ object SparkEntry {
     // the same M bytes quantize a tighter distribution (PqrSpec pins the
     // reconstruction-error win over the raw tier)
     "emb_topk_pqr" -> ((s, dir) =>
-      graft.ml.PqResidual.pqrIvfTopKFrom(Catalog.pqrIvfStore(s, dir),
+      Ivf.topK(IvfCodec.Pqr, Catalog.pqrIvfStore(s, dir),
         Catalog.embeddings(s, dir), 0, 10)),
     // the residual store's content, exploded like pq_store_codes
     "pqr_store_codes" -> ((s, dir) => {
@@ -1802,7 +1802,7 @@ object SparkEntry {
     // the residual tier's planted recall gate (stored fixtures, the
     // pq_recall_planted twin — completes the quality ladder)
     "pqr_recall_planted" -> ((s, dir) =>
-      graft.ml.PqResidual.recallAtKFrom(Catalog.plantedPqrIvf(s, dir),
+      Ivf.recallAtKFrom(IvfCodec.Pqr, Catalog.plantedPqrIvf(s, dir),
         Catalog.plantedEmb(s, dir), Catalog.plantedExactTop10(s, dir),
         0L, 10)),
     // residual-PQ upkeep: coarse argmax + residual + committed-codebook
@@ -1816,25 +1816,19 @@ object SparkEntry {
     // filtered serving at the residual tier — the metadata slice
     // semi-joined on the candidate side (pq_topk_filtered's twin)
     "pqr_topk_filtered" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.PqResidual.pqrIvfTopKAllowed(Catalog.pqrIvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        Catalog.docMeta(s, dir).filter(col("lang") === "en")
-          .select(col("doc_id").as("vec_id")), 10)
+      Ivf.topK(IvfCodec.Pqr, Catalog.pqrIvfStore(s, dir),
+        Catalog.embeddings(s, dir), 0L, 10, enSlice(s, dir))
     }),
     // the delete lifecycle's masked serve at the residual tier
     "pqr_masked_serve" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.PqResidual.pqrIvfTopKMasked(Catalog.pqrIvfStore(s, dir),
-        Catalog.embeddings(s, dir), 0L,
-        tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")), 10)
+      Ivf.topK(IvfCodec.Pqr, Catalog.pqrIvfStore(s, dir),
+        Catalog.embeddings(s, dir), 0L, 10, deadMask(s, dir))
     }),
     // batched residual-PQ serving — the pq_topk_batch shape with the
     // candidate's cell feeding the IVFADC reconstruction kernel
     "pqr_topk_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.PqResidual.pqrIvfTopKBatchFrom(Catalog.pqrIvfStore(s, dir),
-        Catalog.embeddings(s, dir),
+      Ivf.topKBatch(IvfCodec.Pqr, Catalog.pqrIvfStore(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
     }),
     // PQ upkeep: new embeddings encode through the COMMITTED codebooks and
@@ -1857,8 +1851,7 @@ object SparkEntry {
     // (hard-negative mining, dedup-against-index) never inflating the store
     "sq8_topk_batch" -> ((s, dir) => {
       import org.apache.spark.sql.functions.col
-      graft.ml.Quant.sq8IvfTopKBatchFrom(Catalog.sq8IvfStore(s, dir),
-        Catalog.embeddings(s, dir),
+      Ivf.topKBatch(IvfCodec.Sq8, Catalog.sq8IvfStore(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
     }),
     // ANN QUALITY as an oracle entry: recall@10 of the LSH and IVF lookups
@@ -1886,20 +1879,20 @@ object SparkEntry {
     // (VERDICT r13 #7) — completes the quality ladder: LSH/IVF via
     // ann_recall_planted, PQ here, floors pinned in PqSpec
     "pq_recall_planted" -> ((s, dir) =>
-      graft.ml.Pq.recallAtKFrom(Catalog.plantedPqIvf(s, dir),
+      Ivf.recallAtKFrom(IvfCodec.Pq, Catalog.plantedPqIvf(s, dir),
         Catalog.plantedEmb(s, dir), Catalog.plantedExactTop10(s, dir),
         0L, 10)),
     // FILTERED recall: the label-constrained lookup vs the exact slice
     // baseline — the number that quantifies post-filtering's recall trade
     // (the filtered-serving contract the docs promise the ladder measures)
     "ann_recall_filtered" -> ((s, dir) =>
-      Ann.recallFilteredFrom(Catalog.ivfFlat(s, dir),
+      Ivf.recallAtKFrom(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
         Catalog.embeddings(s, dir), Catalog.exactTop10Filtered(s, dir),
-        0L, 3, 10)),
+        0L, 10, Ivf.Label(3), Some("ivf_filtered"))),
     // the SQ8 tier's recall gate in the same planted regime — the ladder
     // now covers all four serving tiers (LSH, IVF, SQ8, PQ)
     "sq8_recall_planted" -> ((s, dir) =>
-      graft.ml.Quant.recallAtKFrom(Catalog.plantedSq8Ivf(s, dir),
+      Ivf.recallAtKFrom(IvfCodec.Sq8, Catalog.plantedSq8Ivf(s, dir),
         Catalog.plantedEmb(s, dir), Catalog.plantedExactTop10(s, dir),
         0L, 10)),
   )
@@ -2600,10 +2593,10 @@ object SparkEntry {
           .replaceAll("\\s+", " ")),
     // ONE oracle for both dense delete-lifecycle ends — identity across
     // the compaction flip IS the contract (cosine carries no corpus stats)
-    "ann_masked_serve" -> Ann.ivfMaskedOracleSql(0L, 10,
-      DeadIdsSql),
-    "ann_tombstone_compact" -> Ann.ivfMaskedOracleSql(0L, 10,
-      DeadIdsSql),
+    "ann_masked_serve" -> Ivf.oracleSql(IvfCodec.Flat, 0L, 10,
+      Ivf.Masked(DeadIdsSql)),
+    "ann_tombstone_compact" -> Ivf.oracleSql(IvfCodec.Flat, 0L, 10,
+      Ivf.Masked(DeadIdsSql)),
     // DeadIdsSql aliases to vec_id; this oracle's dead CTE needs doc_id
     "rrf_stored_masked" -> graft.ml.Retrieval.rrfStoredMaskedOracleSql(
       Seq("stream", "table", "scan"), 0L,
@@ -2676,58 +2669,54 @@ object SparkEntry {
     "emb_topk_lsh_batch" -> Ann.lshBatchOracleSql(8, 10),
     "emb_topk_lsh_mp_batch" -> Ann.multiProbeBatchOracleSql(8, 10),
     "ann_stream_index" -> Ann.bucketsOracleSql,
-    "emb_topk_ivf" -> Ann.ivfOracleSql(0, 10),
+    "emb_topk_ivf" -> Ivf.oracleSql(IvfCodec.Flat, 0, 10),
     "ivf_balance" -> Ann.ivfBalanceOracleSql,
     "emb_outliers" -> Ann.ivfOutliersOracleSql(),
     "ivf_drift" -> Ann.ivfDriftOracleSql,
-    "emb_topk_filtered" -> Ann.ivfFilteredOracleSql(0, 3, 10),
+    "emb_topk_filtered" -> Ivf.oracleSql(IvfCodec.Flat, 0, 10, Ivf.Label(3)),
     "ann_recall" -> Ann.recallOracleSql(0, 10),
-    "ann_recall_filtered" -> Ann.recallFilteredOracleSql(0, 3, 10),
+    "ann_recall_filtered" -> Ivf.recallOracleSql(IvfCodec.Flat, 0, 10,
+      Ivf.Label(3), method = Some("ivf_filtered")),
     "ann_recall_planted" -> Ann.recallOracleSql(0, 10,
       Ann.plantedClusterSrcSql(0L, 10)),
-    "pq_recall_planted" -> graft.ml.Pq.pqRecallOracleSql(0L, 10,
+    "pq_recall_planted" -> Ivf.recallOracleSql(IvfCodec.Pq, 0L, 10, srcSql =
       Ann.plantedClusterSrcSql(0L, 10)),
-    "sq8_recall_planted" -> graft.ml.Quant.sq8RecallOracleSql(0L, 10,
+    "sq8_recall_planted" -> Ivf.recallOracleSql(IvfCodec.Sq8, 0L, 10, srcSql =
       Ann.plantedClusterSrcSql(0L, 10)),
     "ivf_stream_index" -> Ann.cellsOracleSql,
     "sq8_stream_index" -> graft.ml.Quant.sq8StreamOracleSql,
-    "emb_topk_ivf_batch" -> Ann.ivfBatchOracleSql(8, 10),
-    "emb_topk_filtered_batch" -> Ann.ivfBatchFilteredOracleSql(8, 3, 10),
+    "emb_topk_ivf_batch" -> Ivf.batchOracleSql(IvfCodec.Flat, 8, 10),
+    "emb_topk_filtered_batch" -> Ivf.batchOracleSql(IvfCodec.Flat, 8, 10,
+      Ivf.Label(3)),
     "ann_compact" -> Ann.bucketsOracleSql,
     "ivf_compact" -> Ann.cellsOracleSql,
     "sq8_compact" -> graft.ml.Quant.sq8StreamOracleSql,
-    "sq8_topk_gen" -> graft.ml.Quant.sq8IvfOracleSql(0, 10),
-    "emb_topk_sq8" -> graft.ml.Quant.sq8IvfOracleSql(0, 10),
-    "emb_topk_adaptive" -> Ann.ivfAdaptiveOracleSql(0L, 20,
-      "SELECT doc_id AS vec_id FROM documents WHERE lang = 'fr'"),
+    "sq8_topk_gen" -> Ivf.oracleSql(IvfCodec.Sq8, 0, 10),
+    "emb_topk_sq8" -> Ivf.oracleSql(IvfCodec.Sq8, 0, 10),
+    "emb_topk_adaptive" -> Ivf.adaptiveOracleSql(IvfCodec.Flat, 0L, 20,
+      Ivf.Allowed("SELECT doc_id AS vec_id FROM documents WHERE lang = 'fr'")),
     "hardneg_mine" -> Ann.hardNegOracleSql(32L, 10,
       NearDup.pairCtesSql(0.6)),
-    "sq8_topk_filtered" -> graft.ml.Quant.sq8IvfRestrictedOracleSql(0L, 10,
-      "SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'",
-      masked = false),
-    "sq8_masked_serve" -> graft.ml.Quant.sq8IvfRestrictedOracleSql(0L, 10,
-      DeadIdsSql, masked = true),
-    "pq_topk_filtered" -> graft.ml.Pq.pqIvfRestrictedOracleSql(0L, 10,
-      "SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'",
-      masked = false),
-    "pq_masked_serve" -> graft.ml.Pq.pqIvfRestrictedOracleSql(0L, 10,
-      DeadIdsSql, masked = true),
-    "sq8_topk_batch" -> graft.ml.Quant.sq8IvfBatchOracleSql(8, 10),
-    "emb_topk_pq" -> graft.ml.Pq.pqIvfOracleSql(0, 10),
-    "pq_topk_batch" -> graft.ml.Pq.pqIvfBatchOracleSql(8, 10),
+    "sq8_topk_filtered" -> Ivf.oracleSql(IvfCodec.Sq8, 0L, 10, EnSliceSql),
+    "sq8_masked_serve" -> Ivf.oracleSql(IvfCodec.Sq8, 0L, 10,
+      Ivf.Masked(DeadIdsSql)),
+    "pq_topk_filtered" -> Ivf.oracleSql(IvfCodec.Pq, 0L, 10, EnSliceSql),
+    "pq_masked_serve" -> Ivf.oracleSql(IvfCodec.Pq, 0L, 10,
+      Ivf.Masked(DeadIdsSql)),
+    "sq8_topk_batch" -> Ivf.batchOracleSql(IvfCodec.Sq8, 8, 10),
+    "emb_topk_pq" -> Ivf.oracleSql(IvfCodec.Pq, 0, 10),
+    "pq_topk_batch" -> Ivf.batchOracleSql(IvfCodec.Pq, 8, 10),
     "pq_store_codes" -> graft.ml.Pq.codesOracleSql,
-    "emb_topk_pqr" -> graft.ml.PqResidual.pqrIvfOracleSql(0, 10),
+    "emb_topk_pqr" -> Ivf.oracleSql(IvfCodec.Pqr, 0, 10),
     "pqr_store_codes" -> graft.ml.PqResidual.codesOracleSql(),
-    "pqr_recall_planted" -> graft.ml.PqResidual.pqrRecallOracleSql(0L, 10,
+    "pqr_recall_planted" -> Ivf.recallOracleSql(IvfCodec.Pqr, 0L, 10, srcSql =
       Ann.plantedClusterSrcSql(0L, 10)),
     "pqr_stream_index" -> graft.ml.PqResidual.codesOracleSql(),
     "pqr_compact" -> graft.ml.PqResidual.codesOracleSql(),
-    "pqr_topk_filtered" -> graft.ml.PqResidual.pqrIvfRestrictedOracleSql(
-      0L, 10, "SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'",
-      masked = false),
-    "pqr_masked_serve" -> graft.ml.PqResidual.pqrIvfRestrictedOracleSql(
-      0L, 10, DeadIdsSql, masked = true),
-    "pqr_topk_batch" -> graft.ml.PqResidual.pqrIvfBatchOracleSql(8, 10),
+    "pqr_topk_filtered" -> Ivf.oracleSql(IvfCodec.Pqr, 0L, 10, EnSliceSql),
+    "pqr_masked_serve" -> Ivf.oracleSql(IvfCodec.Pqr, 0L, 10,
+      Ivf.Masked(DeadIdsSql)),
+    "pqr_topk_batch" -> Ivf.batchOracleSql(IvfCodec.Pqr, 8, 10),
     "pq_stream_index" -> graft.ml.Pq.pqStreamOracleSql,
     "pq_compact" -> graft.ml.Pq.pqStreamOracleSql,
     "pq_rerank" -> graft.ml.Pq.pqRerankOracleSql(0, 50, 10),

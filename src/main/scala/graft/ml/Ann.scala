@@ -201,7 +201,7 @@ object Ann {
     // pathological bucket holding a corpus-scale fraction (correlated or
     // all-equal embeddings that defeat the planes) then degrades to a
     // shuffle join instead of OOMing the driver on a forced broadcast
-    // (ADVICE r15 — same posture as ivfTopKAllowed)
+    // (ADVICE r15 — same posture as the IVF allowed-id restriction)
     val cands = bk.filter(col("bucket").isin(qbs: _*))
       .filter(col("vec_id") =!= qVecId)
       .select("vec_id")
@@ -231,7 +231,7 @@ object Ann {
     * the WindowGroupLimit pushdown. Nothing is collected; |Q| can itself
     * be data-scale — bulk lookup against a bucketed corpus is the
     * dedup-against-index-at-ingest shape (NearDup.incrementalDupesFrom's
-    * embedding analogue). Same query-table contract as ivfTopKBatch:
+    * embedding analogue). Same query-table contract as Ivf.topKBatch:
     * distinct qids; excludeSelf = false for an external id space.
     * Returns (qid, vec_id, sim), ≤ k rows per query. */
   def topKBatch(emb: DataFrame, bk: DataFrame, queries: DataFrame, k: Int,
@@ -378,8 +378,8 @@ object Ann {
     * cells instead of re-quantizing the corpus per query (VERDICT r4 #1).
     * The probed cell ids are collected eagerly (probedCells above) and
     * pushed as a static In filter, giving STATIC partition pruning on the
-    * cell-partitioned table — at 100 TB the cell id is the partition key
-    * and a lookup touches |probed cells| partitions. Returns (vec_id, sim). */
+    * cell-partitioned table. The reference derivation the stored serving
+    * path (Ivf) is pinned against. Returns (vec_id, sim). */
   def ivfTopK(emb: DataFrame, cells: DataFrame, qVecId: Long, k: Int,
       cents: Option[DataFrame] = None): DataFrame = {
     val e = emb.select(col("vec_id"), col("embedding").as("emb"))
@@ -395,34 +395,10 @@ object Ann {
       .limit(k)
   }
 
-  /** DuckDB mirror of ivfTopK over the `embeddings` view — the centroid CTE
-    * embeds the same TrainedCentroids literal matrix the Spark plan uses. */
-  def ivfOracleSql(qVecId: Long, k: Int,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT $Probes),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId)
-       |SELECT cell.vec_id AS vec_id,
-       |  round(list_dot_product(e.emb, q.qemb) /
-       |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM cell JOIN qc USING (cell) JOIN e USING (vec_id), q
-       |WHERE cell.vec_id <> $qVecId
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-
-  /** FILTERED IVF top-k: the metadata-constrained serving shape ("nearest
-    * neighbours among label = L" — the language/source/licence predicate
-    * every production vector store exposes). Post-filtering within the
-    * probed cells: the probe stage is identical to ivfTopK (the quantizer
-    * knows nothing of labels), and the label predicate prunes the CANDIDATE
-    * side before ranking — applied by pre-filtering the embeddings table,
-    * so it reaches the parquet scan as a pushed filter (AnnIndexSpec pins
-    * it) rather than post-filtering ranked rows. Fewer than k survivors in
-    * the probed cells returns fewer than k rows — the standard filtered-ANN
-    * contract (raise Probes for highly selective predicates; the recall
-    * ladder's gates quantify the trade). Returns (vec_id, sim). */
+  /** FILTERED IVF top-k reference: nearest neighbours among label = L,
+    * post-filtered within the probed cells (the quantizer knows nothing of
+    * labels) — the label predicate prunes the CANDIDATE side before
+    * ranking. Returns (vec_id, sim). */
   def ivfTopKFiltered(emb: DataFrame, cells: DataFrame, qVecId: Long,
       label: Int, k: Int, cents: Option[DataFrame] = None): DataFrame = {
     val full = emb.select(col("vec_id"), col("embedding").as("emb"))
@@ -440,292 +416,44 @@ object Ann {
       .limit(k)
   }
 
-  /** DuckDB mirror of ivfTopKFiltered: ivfOracleSql's CTE chain plus the
-    * label semi-join on the candidate side. */
-  // No srcSql parameter (ADVICE r15): the label slice below is anchored to
-  // the base `embeddings` table, so a non-base source would silently pair a
-  // re-sourced corpus with a base-table slice — only the base corpus is
-  // supported, and the signature now says so.
-  def ivfFilteredOracleSql(qVecId: Long, label: Int, k: Int): String =
-    s"""WITH ${cellCtesSql(BaseSrcSql)},
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT $Probes),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |el AS (SELECT vec_id FROM embeddings WHERE label = $label)
-       |SELECT cell.vec_id AS vec_id,
-       |  round(list_dot_product(e.emb, q.qemb) /
-       |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM cell JOIN qc USING (cell) JOIN e USING (vec_id) JOIN el USING (vec_id), q
-       |WHERE cell.vec_id <> $qVecId
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** BATCHED IVF top-k: serve a whole query TABLE in one declarative plan —
-    * the realistic 100 TB serving shape (queries arrive in batches, not one
-    * at a time), and the scale answer to the single-query path's per-query
-    * driver round-trip: probedCells' bounded collect disappears entirely.
-    * Three stages, all in-plan: (1) probe assignment — each query row ranks
-    * the broadcast centroid matrix and keeps its `Probes` nearest cells (a
-    * |Q|×Cells projection + per-query WindowGroupLimit, no aggregation);
-    * (2) candidates — the probed (qid, cell) rows equi-join the
-    * cell-partitioned assignment table, so each query touches only its
-    * probed cells' members (the join key IS the partition key; a vector
-    * lives in exactly one cell, so no candidate dedup is needed);
-    * (3) ranking — exact cosine + per-query row_number ≤ k (the rank rides
-    * Spark's WindowGroupLimit pushdown: partial top-k map-side, never a
-    * global sort). Nothing is collected; |Q| can itself be data-scale.
-    *
-    * Query-table contract: qids must be DISTINCT (both per-query windows
-    * key on qid — a duplicated qid merges two queries' probe rankings).
-    * `excludeSelf` (default true, matching the single-query lookups)
-    * assumes qids are corpus vec_ids and drops each query's own row from
-    * its candidates; an EXTERNAL query table whose ids live in a different
-    * id space must pass excludeSelf = false, or each query silently loses
-    * the unrelated corpus vector that happens to share its id.
-    * Returns (qid, vec_id, sim), k rows per query. */
-  def ivfTopKBatch(emb: DataFrame, cells: DataFrame, queries: DataFrame,
-      k: Int, cents: Option[DataFrame] = None,
-      excludeSelf: Boolean = true, keepRank: Boolean = false): DataFrame = {
-    val e = emb.select(col("vec_id"), col("embedding").as("emb"))
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").as("qemb"))
-    val probed = probeBatch(q, cents.getOrElse(centroids(emb)))
-    val joined = probed.join(prunedByProbedCells(cells, probed), Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    topKPerQuery(cand.join(e, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        asymSim(col("emb"), col("qemb"), col("qn")).as("sim")), k, keepRank)
-  }
-
-  /** FILTERED batched IVF top-k — the serving matrix's fourth corner
-    * (single/batch × unfiltered/filtered): ivfTopKBatch's plan with the
-    * label predicate pre-filtering the embeddings side of the candidate
-    * re-rank, exactly as in ivfTopKFiltered — pushed to the parquet scan,
-    * applied after the cell join bounds candidates, before any ranking
-    * work. Same query contract and fewer-than-k-survivors semantics. */
-  def ivfTopKBatchFiltered(emb: DataFrame, cells: DataFrame,
-      queries: DataFrame, label: Int, k: Int,
-      cents: Option[DataFrame] = None,
-      excludeSelf: Boolean = true): DataFrame = {
-    val el = emb.filter(col("label") === label)
-      .select(col("vec_id"), col("embedding").as("emb"))
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").as("qemb"))
-    val probed = probeBatch(q, cents.getOrElse(centroids(emb)))
-    val joined = probed.join(prunedByProbedCells(cells, probed), Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    topKPerQuery(cand.join(el, Seq("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        asymSim(col("emb"), col("qemb"), col("qn")).as("sim")), k)
-  }
-
-  /** DuckDB mirror of ivfTopKBatchFiltered: the batch CTE chain with the
-    * label semi-join on the candidate side. */
-  def ivfBatchFilteredOracleSql(maxQid: Long, label: Int, k: Int,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |${batchQueryCtesSql(maxQid)},
-       |el AS (SELECT vec_id FROM embeddings WHERE label = $label),
-       |cand AS (SELECT p.qid AS qid, cell.vec_id AS vec_id,
-       |    round(list_dot_product(e.emb, p.qemb) /
-       |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN e ON e.vec_id = cell.vec_id
-       |  JOIN el ON el.vec_id = cell.vec_id
-       |  WHERE cell.vec_id <> p.qid)
-       |${batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** Partition-skip the cell-keyed store down to the batch's probed cells
-    * BEFORE the candidate join: a broadcast left-semi on the store's
-    * partition column hands Spark a dynamic partition-pruning filter, so
-    * unprobed store partitions are never read — the single-query path's
-    * static `isin` pruning, recovered for batches without any driver
-    * round-trip (VERDICT r11 #1). The broadcast side is bounded by the
-    * CELL COUNT, not |Q|: distinct(probed cells) ≤ Cells regardless of how
-    * many queries the batch carries, so this is always a safe broadcast —
-    * at data-scale |Q| the filter approaches a no-op and the plan degrades
-    * gracefully to the full-store join it was before. */
-  private[ml] def prunedByProbedCells(store: DataFrame,
-      probed: DataFrame): DataFrame =
-    // no .distinct() on the build side: a left-semi join dedups by
-    // construction, and the distinct added a whole exchange + stage wave
-    // to every batch lookup (r15 #6 job audit); the build stays bounded by
-    // |Q| × Probes cell rows either way
-    store.join(broadcast(probed.select("cell")), Seq("cell"), "left_semi")
-
   // ---- IVF-FLAT serving store (VERDICT r14 #5/#3 job audit) ----
   // A real IVF-flat index stores the VECTORS inside the cell layout — the
   // float tier's analogue of sq8IvfStore/pqIvfStore: Catalog.ivfFlat is
   // embeddings re-laid-out hive-partitioned by cell (vec_id, embedding,
   // label, cell). Serving from it needs NO corpus join: a lookup reads the
-  // probed partitions' vectors directly, so the former assignment-table ⋈
-  // embeddings exchange pair (2-3 AQE stage jobs per statement, a full
-  // corpus shuffle at scale) disappears from every IVF-float path. The
-  // (vec_id, cell) assignment store stays the build intermediate and the
-  // streamed-upkeep content; this is the read-optimized layout derived
-  // from it — the reference's posture of serving from derived index blocks
-  // (/root/reference/src/table-backend-writeonce.cc:594-636).
+  // probed partitions' vectors directly. Every tier serves through the
+  // shared path (Ivf) with its codec (IvfCodec.Flat here).
 
-  /** ivfTopK served from the FLAT store: ONE bounded query-row collect,
-    * probe arithmetic on the driver, then a single probed-partition scan
-    * ranked against the literal query — a 2-job point lookup. Returns
-    * (vec_id, sim). */
+  // Entry points the benchmark harness (perfbench/harness) calls by name;
+  // the harness may not change with the engine, so each keeps its
+  // signature as one call into the shared path.
   def ivfTopKFrom(flat: DataFrame, emb: DataFrame, qVecId: Long,
       k: Int): DataFrame =
-    ivfTopKFromVec(flat, queryVec(emb, qVecId), qVecId, k)
-
-  private[ml] def ivfTopKFromVec(flat: DataFrame, vec: Array[Double],
-      qVecId: Long, k: Int): DataFrame = {
-    val qemb = litVec(vec)
-    flat.filter(col("cell").isin(probedCellsOf(vec): _*))
-      .filter(col("vec_id") =!= qVecId)
-      .select(col("vec_id"),
-        round(dot(col("embedding"), qemb) /
-          sqrt(dot(col("embedding"), col("embedding")) * lit(selfDot(vec))),
-          6).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
-
-  /** ivfTopKFiltered from the flat store — the label predicate reaches the
-    * flat store's parquet scan as a pushed EqualTo beside the partition
-    * pruning (the store carries the metadata columns precisely so filtered
-    * serving stays one scan). */
+    Ivf.topK(IvfCodec.Flat, flat, emb, qVecId, k)
   def ivfTopKFilteredFrom(flat: DataFrame, emb: DataFrame, qVecId: Long,
-      label: Int, k: Int): DataFrame = {
-    val vec = queryVec(emb, qVecId)
-    val qemb = litVec(vec)
-    flat.filter(col("cell").isin(probedCellsOf(vec): _*))
-      .filter(col("label") === label)
-      .filter(col("vec_id") =!= qVecId)
-      .select(col("vec_id"),
-        round(dot(col("embedding"), qemb) /
-          sqrt(dot(col("embedding"), col("embedding")) * lit(selfDot(vec))),
-          6).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
-
-  /** IVF lookup post-filtered to an ALLOWED id set FRAME — the
-    * metadata-filtered shape when the predicate lives in a sidecar table
-    * (document metadata) rather than a column of the vector store itself:
-    * probed candidates left-semi the allowed ids, then rank. The semi is
-    * unhinted — an allowed set is sub-corpus-sized (a language slice), so
-    * a forced broadcast would OOM at data scale; AQE broadcasts it while
-    * small. Same fewer-than-k-survivors contract as the label filter. */
-  def ivfTopKAllowed(flat: DataFrame, emb: DataFrame, qVecId: Long,
-      allowed: DataFrame, k: Int): DataFrame =
-    ivfTopKAllowedAt(flat, queryVec(emb, qVecId), qVecId, allowed, k, Probes)
-
-  private def ivfTopKAllowedAt(flat: DataFrame, vec: Array[Double],
-      qVecId: Long, allowed: DataFrame, k: Int, p: Int): DataFrame = {
-    val qemb = litVec(vec)
-    flat.filter(col("cell").isin(probedCellsOf(vec, p): _*))
-      .filter(col("vec_id") =!= qVecId)
-      .join(allowed.select("vec_id"), Seq("vec_id"), "left_semi")
-      .select(col("vec_id"),
-        round(dot(col("embedding"), qemb) /
-          sqrt(dot(col("embedding"), col("embedding")) * lit(selfDot(vec))),
-          6).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
-
-  /** ADAPTIVE probe widening for filtered lookups — the production answer
-    * to the fewer-than-k-survivors contract: serve at the standard Probes
-    * width, and when the metadata slice thins the probed candidates below
-    * k, DOUBLE the probed cells (Probes → 2·Probes → … → Cells, i.e. an
-    * exact slice scan at the ladder's end) before answering short. Recall
-    * under selective filters degrades gracefully at bounded extra cost —
-    * each escalation is ONE bounded count over an already cell-pruned
-    * k-limited plan (the adaptive control decision is driver-side by
-    * nature, the same class as the probe constants), and a non-escalating
-    * query pays exactly one count more than the static lookup. The
-    * escalation rule is deterministic in the data, so the DuckDB oracle
-    * mirrors it exactly (ivfAdaptiveOracleSql). */
-  def ivfTopKAllowedAdaptive(flat: DataFrame, emb: DataFrame, qVecId: Long,
-      allowed: DataFrame, k: Int): DataFrame = {
-    val vec = queryVec(emb, qVecId)
-    val widths = adaptiveWidths
-    widths.init.foreach { p =>
-      val at = ivfTopKAllowedAt(flat, vec, qVecId, allowed, k, p)
-      if (at.count() >= k) return at
-    }
-    ivfTopKAllowedAt(flat, vec, qVecId, allowed, k, widths.last)
-  }
-
-  /** The probe ladder Probes → 2·Probes → … → Cells, shared by the lookup
-    * and its oracle so the two can never disagree on the escalation
-    * levels. */
-  private[graft] def adaptiveWidths: Seq[Int] =
-    (Iterator.iterate(Probes)(_ * 2).takeWhile(_ < Cells).toSeq :+ Cells)
-      .distinct
-
-  /** DuckDB mirror of ivfTopKAllowedAdaptive: one ranked CTE per ladder
-    * width, then the first width whose hit count reaches k (or the last
-    * width) answers — the same deterministic escalation rule. */
-  def ivfAdaptiveOracleSql(qVecId: Long, k: Int, allowedSql: String): String = {
-    val widths = adaptiveWidths
-    val rCtes = widths.map { p =>
-      s"""r$p AS (SELECT vec_id, sim FROM (
-         |  SELECT cell.vec_id AS vec_id,
-         |    round(list_dot_product(e.emb, q.qemb) /
-         |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-         |  FROM cell JOIN (SELECT cent_id AS cell FROM asg
-         |                  WHERE vec_id = $qVecId
-         |                  ORDER BY csim DESC, cent_id ASC LIMIT $p) qc$p
-         |    USING (cell)
-         |  JOIN e USING (vec_id)
-       |  JOIN (SELECT DISTINCT vec_id FROM al) ald ON ald.vec_id = cell.vec_id, q
-         |  WHERE cell.vec_id <> $qVecId)
-         |ORDER BY sim DESC, vec_id LIMIT $k)""".stripMargin
-    }.mkString(",\n")
-    val arms = widths.zipWithIndex.map { case (p, i) =>
-      val shorter = widths.take(i)
-        .map(s => s"(SELECT count(*) FROM r$s) < $k")
-      val cond = (if (i == widths.size - 1) shorter
-        else shorter :+ s"(SELECT count(*) FROM r$p) >= $k")
-        .mkString(" AND ")
-      s"SELECT vec_id, sim FROM r$p" +
-        (if (cond.nonEmpty) s" WHERE $cond" else "")
-    }.mkString(" UNION ALL ")
-    s"""WITH ${cellCtesSql(BaseSrcSql)},
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |al AS ($allowedSql),
-       |$rCtes
-       |$arms
-       |""".stripMargin.replaceAll("\\s+", " ")
-  }
-
-  /** IVF lookup with a TOMBSTONE mask — the DENSE end of the no-reindex
-    * delete lifecycle (bm25StoredTopKMasked's twin, VERDICT r15 #4):
-    * near-dup losers (or any deleted-id set) anti-join the probed
-    * candidates at serving time, so deletes mask results immediately
-    * without touching the stored cells. Unlike the lexical tier, cosine
-    * scores carry NO corpus statistics, so masked serving and a
-    * tombstone-folding compaction (ivfTombstoneCompactServe) return
-    * IDENTICAL rows — pinned by AnnIndexSpec; a hybrid deployment masks
-    * BOTH tiers with the same tombstone set or serves inconsistent
-    * fusions. */
+      label: Int, k: Int): DataFrame =
+    Ivf.topK(IvfCodec.Flat, flat, emb, qVecId, k, Ivf.Label(label))
   def ivfTopKMaskedFrom(flat: DataFrame, emb: DataFrame, qVecId: Long,
       tombstones: DataFrame, k: Int): DataFrame =
-    // one scoring/tie-break rendering for the whole lifecycle: the masked
-    // serve IS the standard lookup over the anti-joined store (the
-    // anti-join commutes with the cell/self filters), so the spec-pinned
-    // masked == compacted identity cannot drift between two copies of the
-    // cosine chain (review finding, r16)
-    ivfTopKFromVec(
-      flat.join(tombstones.select("vec_id"), Seq("vec_id"), "left_anti"),
-      queryVec(emb, qVecId), qVecId, k)
+    Ivf.topK(IvfCodec.Flat, flat, emb, qVecId, k, Ivf.Masked(tombstones))
+  def ivfTopKBatchFrom(flat: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    Ivf.topKBatch(IvfCodec.Flat, flat, queries, k)
+  def ivfOracleSql(qVecId: Long, k: Int): String =
+    Ivf.oracleSql(IvfCodec.Flat, qVecId, k)
+  def ivfFilteredOracleSql(qVecId: Long, label: Int, k: Int): String =
+    Ivf.oracleSql(IvfCodec.Flat, qVecId, k, Ivf.Label(label))
+  def ivfMaskedOracleSql(qVecId: Long, k: Int, deadSql: String): String =
+    Ivf.oracleSql(IvfCodec.Flat, qVecId, k, Ivf.Masked(deadSql))
+  def ivfBatchOracleSql(maxQid: Long, k: Int): String =
+    Ivf.batchOracleSql(IvfCodec.Flat, maxQid, k)
 
   /** The COMPACTION end of the dense delete lifecycle: fold the tombstoned
     * vectors out of the flat store into a new sorted generation behind the
     * atomic MANIFEST flip (the bm25_clean_rebuild equivalence), then serve
     * the same lookup from the flipped generation — the cell In-filter
-    * file-skips via min/max on the (cell, vec_id) sort. Memoized per
-    * statement window like every *Once compaction. */
+    * file-skips via min/max on the (cell, vec_id) sort. Cosine carries no
+    * corpus statistics, so this equals the masked serve exactly. Memoized
+    * per statement window like every *Once compaction. */
   def ivfTombstoneCompactServe(spark: org.apache.spark.sql.SparkSession,
       flat: DataFrame, emb: DataFrame, qVecId: Long, tombstones: DataFrame,
       scratchBase: String, k: Int): DataFrame = {
@@ -735,117 +463,8 @@ object Ann {
         flat.join(tombstones.select("vec_id"), Seq("vec_id"), "left_anti"),
         scratchBase, "cell", Seq("cell", "vec_id"), partitions = Some(4))
     }
-    ivfTopKFromVec(clean, queryVec(emb, qVecId), qVecId, k)
+    Ivf.topK(IvfCodec.Flat, clean, emb, qVecId, k)
   }
-
-  /** DuckDB mirror of ivfTopKMaskedFrom AND the compacted serve (one
-    * oracle — identity across the flip is the lifecycle's contract): the
-    * ivfOracleSql chain with the dead-id subquery anti-joined. */
-  def ivfMaskedOracleSql(qVecId: Long, k: Int, deadSql: String,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT $Probes),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |dead AS ($deadSql)
-       |SELECT cell.vec_id AS vec_id,
-       |  round(list_dot_product(e.emb, q.qemb) /
-       |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM cell JOIN qc USING (cell) JOIN e USING (vec_id), q
-       |WHERE cell.vec_id <> $qVecId
-       |  AND cell.vec_id NOT IN (SELECT vec_id FROM dead)
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** DuckDB mirror of ivfTopKAllowed: ivfOracleSql's CTE chain with the
-    * caller-supplied allowed-id subquery (must yield a vec_id column)
-    * semi-joined on the candidate side — the ivfFilteredOracleSql shape
-    * with the predicate externalized. */
-  def ivfAllowedOracleSql(qVecId: Long, k: Int, allowedSql: String,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT $Probes),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |al AS ($allowedSql)
-       |SELECT cell.vec_id AS vec_id,
-       |  round(list_dot_product(e.emb, q.qemb) /
-       |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM cell JOIN qc USING (cell) JOIN e USING (vec_id)
-       |  JOIN (SELECT DISTINCT vec_id FROM al) ald ON ald.vec_id = cell.vec_id, q
-       |WHERE cell.vec_id <> $qVecId
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** ivfTopKBatch from the flat store: probe assignment, broadcast
-    * probed-cell semi for dynamic partition pruning, candidates ranked
-    * straight off the probed partitions' vectors — the corpus-sized
-    * equi-join on vec_id is GONE (it existed only to fetch floats the flat
-    * layout already co-locates with the cell). Same query contract. */
-  /** The ONE batch candidate chain — probe assignment, probed-cell
-    * pruning of the (possibly pre-restricted) store, optional
-    * self-exclusion, asymmetric scoring. Every batch lookup and the
-    * hard-negative miner compose THIS chain, so a change to the probe or
-    * scoring stages lands once (review finding, r16: the block existed in
-    * four verbatim copies). Returns (qid, vec_id, sim), unranked. */
-  private def scoredCandidates(store: DataFrame, queries: DataFrame,
-      cents: Option[DataFrame], excludeSelf: Boolean): DataFrame = {
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").as("qemb"))
-    val probed = probeBatch(q, cents.getOrElse(centroids(queries)))
-    val joined = probed.join(prunedByProbedCells(store, probed), Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    cand.select(col("qid"), col("vec_id"),
-      asymSim(col("embedding"), col("qemb"), col("qn")).as("sim"))
-  }
-
-  def ivfTopKBatchFrom(flat: DataFrame, queries: DataFrame, k: Int,
-      cents: Option[DataFrame] = None, excludeSelf: Boolean = true,
-      keepRank: Boolean = false): DataFrame =
-    topKPerQuery(scoredCandidates(flat, queries, cents, excludeSelf),
-      k, keepRank)
-
-  /** ivfTopKBatchFiltered from the flat store — label pushed into the flat
-    * scan beside the dynamic partition pruning. */
-  def ivfTopKBatchFilteredFrom(flat: DataFrame, queries: DataFrame,
-      label: Int, k: Int, cents: Option[DataFrame] = None,
-      excludeSelf: Boolean = true): DataFrame =
-    topKPerQuery(scoredCandidates(flat.filter(col("label") === label),
-      queries, cents, excludeSelf), k)
-
-  /** BATCHED IVF lookup post-filtered to an ALLOWED id set frame — the
-    * batch twin of ivfTopKAllowed (sidecar-defined slice), composed from
-    * the same stages as ivfTopKBatchFrom with the probed partitions'
-    * candidates left-semi'd to the allowed ids BEFORE the probe join, so
-    * the per-query ranking never sees out-of-slice vectors. The semi is
-    * unhinted (slice is sub-corpus-sized, not fixed-bounded; AQE
-    * broadcasts while small). */
-  def ivfTopKBatchAllowed(flat: DataFrame, queries: DataFrame,
-      allowed: DataFrame, k: Int, cents: Option[DataFrame] = None,
-      excludeSelf: Boolean = true, keepRank: Boolean = false): DataFrame =
-    // the allowed semi commutes with the probed-cell pruning — the store
-    // is restricted BEFORE the shared chain, same rows either way
-    topKPerQuery(scoredCandidates(
-      flat.join(allowed.select("vec_id"), Seq("vec_id"), "left_semi"),
-      queries, cents, excludeSelf), k, keepRank)
-
-  /** DuckDB mirror of ivfTopKBatchAllowed: ivfBatchOracleSql's CTE chain
-    * with the caller-supplied allowed-id subquery semi-joined on the
-    * candidate side (the ivfAllowedOracleSql shape, batched). */
-  def ivfBatchAllowedOracleSql(maxQid: Long, k: Int, allowedSql: String,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |${batchQueryCtesSql(maxQid)},
-       |al AS ($allowedSql),
-       |cand AS (SELECT p.qid AS qid, cell.vec_id AS vec_id,
-       |    round(list_dot_product(e.emb, p.qemb) /
-       |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN e ON e.vec_id = cell.vec_id
-       |    JOIN (SELECT DISTINCT vec_id FROM al) ald ON ald.vec_id = cell.vec_id
-       |  WHERE cell.vec_id <> p.qid)
-       |${batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
 
   /** HARD-NEGATIVE mining over the stored IVF-flat index — the
     * contrastive-training data op: for each query vector, the top-k
@@ -853,15 +472,13 @@ object Ann {
     * POSITIVES — a (qid, vec_id) pair table: labeled relevants, near-dup
     * partners (the verified pair graph's both orientations), a
     * self-supervised per-query top-1, or any union of those. Composes the
-    * batched probe/rank machinery with ONE anti-join on (qid, vec_id);
-    * everything stays in-plan, so |Q| can itself be data-scale (mining a
-    * whole training set's negatives in one statement — the realistic
-    * 100 TB shape). Returns (qid, vec_id, sim), ≤ k rows per query. */
+    * shared batch candidate chain with ONE anti-join on (qid, vec_id);
+    * everything stays in-plan, so |Q| can itself be data-scale.
+    * Returns (qid, vec_id, sim), ≤ k rows per query. */
   def hardNegatives(flat: DataFrame, queries: DataFrame,
-      positives: DataFrame, k: Int,
-      cents: Option[DataFrame] = None,
-      excludeTopM: Int = 0): DataFrame = {
-    val scored = scoredCandidates(flat, queries, cents, excludeSelf = true)
+      positives: DataFrame, k: Int, excludeTopM: Int = 0): DataFrame = {
+    val scored = Ivf.candidates(IvfCodec.Flat, flat, queries,
+      Ivf.Unrestricted, excludeSelf = true)
     // excludeTopM: each query's top-M of the PLAIN ranking are treated as
     // self-supervised positives INSIDE the same chain — the window rides
     // the qid exchange the final top-k already needs, instead of a second
@@ -879,14 +496,13 @@ object Ann {
         "left_anti"), k)
   }
 
-  /** DuckDB mirror of the hardneg_mine entry: the batch candidate chain,
-    * positives = the verified near-dup pair graph (both orientations) ∪
-    * each query's top-`excludeTopM` candidates (the self-supervised
-    * positives, which guarantee the exclusion bites for every query),
-    * then the per-query top-k over the surviving candidates. `pairCtes`
-    * supplies a `dup` CTE (NearDup.pairCtesSql); `excludeTopM` mirrors
-    * hardNegatives' parameter so the pair cannot drift (the
-    * adaptiveWidths convention). */
+  /** DuckDB mirror of the hardneg_mine entry: the shared batch candidate
+    * chain, positives = the verified near-dup pair graph (both
+    * orientations) ∪ each query's top-`excludeTopM` candidates (the
+    * self-supervised positives, which guarantee the exclusion bites for
+    * every query), then the per-query top-k over the surviving candidates.
+    * `pairCtes` supplies a `dup` CTE (NearDup.pairCtesSql); `excludeTopM`
+    * mirrors hardNegatives' parameter so the pair cannot drift. */
   def hardNegOracleSql(maxQid: Long, k: Int, pairCtes: String,
       excludeTopM: Int = 1): String = {
     val selfPos = if (excludeTopM <= 0) ""
@@ -894,14 +510,8 @@ object Ann {
            |    SELECT qid, vec_id, row_number() OVER (PARTITION BY qid
            |      ORDER BY sim DESC, vec_id ASC) AS rk FROM cand)
            |  WHERE rk <= $excludeTopM""".stripMargin
-    s"""WITH ${cellCtesSql(BaseSrcSql)},
-       |${batchQueryCtesSql(maxQid)},
+    s"""WITH ${Ivf.batchCandSql(IvfCodec.Flat, maxQid, Ivf.Unrestricted)},
        |$pairCtes,
-       |cand AS (SELECT p.qid AS qid, cell.vec_id AS vec_id,
-       |    round(list_dot_product(e.emb, p.qemb) /
-       |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN e ON e.vec_id = cell.vec_id
-       |  WHERE cell.vec_id <> p.qid),
        |pos AS (SELECT doc_a AS qid, doc_b AS vec_id FROM dup
        |  UNION ALL SELECT doc_b, doc_a FROM dup
        |  $selfPos),
@@ -915,57 +525,9 @@ object Ann {
        |""".stripMargin.replaceAll("\\s+", " ")
   }
 
-  /** The batched probe stage shared by ivfTopKBatch and the SQ8 batch
-    * lookup (Quant.sq8IvfTopKBatchFrom): each (qid, qemb) row of `q` ranks
-    * the broadcast centroid matrix and keeps its `Probes` nearest cells —
-    * a |Q|×Cells projection + per-query WindowGroupLimit, no aggregation,
-    * no driver round-trip. Also carries the query self-dot `qn` so the
-    * downstream ranking pays the query norm once per probed row (it
-    * materializes at the candidate shuffle), not once per candidate.
-    * Returns (qid, qemb, qn, cell), `Probes` rows per query. */
-  private[ml] def probeBatch(q: DataFrame, cents: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("qemb"), col("cent_id").as("cell"),
-        cosine(col("qemb"), col("cemb")).as("csim"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("qid").orderBy(desc("csim"), asc("cell"))))
-      .filter(col("rk") <= Probes)
-      .select(col("qid"), col("qemb"),
-        dot(col("qemb"), col("qemb")).as("qn"), col("cell"))
-  }
-
-  /** DuckDB mirror of ivfTopKBatch for the query batch vec_id < maxQid:
-    * same probe ranking (csim DESC, cent_id ASC per query), same candidate
-    * join, same rounded-cosine rank with the identical tie-break. */
-  def ivfBatchOracleSql(maxQid: Long, k: Int,
-      srcSql: String = BaseSrcSql): String =
-    s"""WITH ${cellCtesSql(srcSql)},
-       |${batchQueryCtesSql(maxQid)},
-       |cand AS (SELECT p.qid AS qid, cell.vec_id AS vec_id,
-       |    round(list_dot_product(e.emb, p.qemb) /
-       |      sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN e ON e.vec_id = cell.vec_id
-       |  WHERE cell.vec_id <> p.qid)
-       |${batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** The batched-oracle query + probe CTEs shared by ivfBatchOracleSql and
-    * Quant.sq8IvfBatchOracleSql: the query batch (corpus rows with
-    * vec_id < maxQid) and its per-query `Probes` nearest cells ranked from
-    * the shared `asg` CTE with ivfTopKBatch's exact tie-break. */
-  private[ml] def batchQueryCtesSql(maxQid: Long): String =
-    s"""q AS (SELECT vec_id AS qid, emb AS qemb FROM e WHERE vec_id < $maxQid),
-       |probed AS (SELECT qid, qemb, cell FROM (
-       |    SELECT q.qid, q.qemb, asg.cent_id AS cell,
-       |      row_number() OVER (PARTITION BY q.qid
-       |        ORDER BY asg.csim DESC, asg.cent_id ASC) AS rk
-       |    FROM q JOIN asg ON asg.vec_id = q.qid)
-       |  WHERE rk <= $Probes)""".stripMargin
-
   /** The batched-oracle final rank over a `cand(qid, vec_id, sim)` CTE —
-    * per-query top-k with the (sim DESC, vec_id ASC) tie-break both batch
-    * lookups pin. */
+    * per-query top-k with the (sim DESC, vec_id ASC) tie-break every batch
+    * lookup pins. */
   private[ml] def batchRankSql(k: Int): String =
     s"""SELECT qid, vec_id, sim FROM (
        |  SELECT qid, vec_id, sim, row_number() OVER (PARTITION BY qid
@@ -1224,37 +786,6 @@ object Ann {
       .select("vec_id")
   }
 
-  /** The FILTERED recall gate (stored-fixture shape): recall@k of the
-    * label-constrained IVF lookup against the exact slice baseline — the
-    * number that quantifies post-filtering's recall trade (selective
-    * predicates thin the probed cells; raise Probes when it drops), which
-    * the filtered-serving docs promise the ladder measures. */
-  def recallFilteredFrom(flat: DataFrame, emb: DataFrame, exact: DataFrame,
-      qVecId: Long, label: Int, k: Int): DataFrame = {
-    val ids = exact.select("vec_id").collect().map(_.getLong(0)).toSet
-    val got = ivfTopKFilteredFrom(flat, emb, qVecId, label, k)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    recallRows(emb.sparkSession, ids, Seq("ivf_filtered" -> got), k)
-  }
-
-  /** DuckDB mirror of recallFilteredFrom: exact slice baseline CTE + the
-    * already-verified filtered-IVF oracle, recallOracleSql's count shape. */
-  def recallFilteredOracleSql(qVecId: Long, label: Int, k: Int): String =
-    s"""WITH e AS ($BaseSrcSql),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |el AS (SELECT vec_id FROM embeddings WHERE label = $label),
-       |exact AS (SELECT vec_id FROM (
-       |    SELECT e.vec_id AS vec_id,
-       |      round(list_dot_product(e.emb, q.qemb) /
-       |        sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |    FROM e JOIN el USING (vec_id), q WHERE e.vec_id <> $qVecId)
-       |  ORDER BY sim DESC, vec_id LIMIT $k),
-       |flr AS ((${ivfFilteredOracleSql(qVecId, label, k)}))
-       |SELECT 'ivf_filtered' AS method, count(*) AS hits,
-       |  round(count(*) * 1.0 / $k, 4) AS recall
-       |FROM flr WHERE vec_id IN (SELECT vec_id FROM exact)
-       |""".stripMargin.replaceAll("\\s+", " ")
-
   /** The ONE rendering of the recall row every gate emits:
     * (method, hits, recall@k) of an approximate lookup's ids against the
     * exact baseline — shared by the LSH/IVF gate here and the SQ8/PQ
@@ -1330,15 +861,15 @@ object Ann {
       exact: DataFrame, qVecId: Long, k: Int): DataFrame = {
     val ids = exact.select("vec_id").collect().map(_.getLong(0)).toSet
     val vec = queryVec(emb, qVecId)
-    // BOTH lookups rank inside ONE tagged-union action (each branch is its
-    // own TakeOrdered — the union concatenates two ≤k results, it does not
+    // ALL lookups rank inside ONE tagged-union action (each branch is its
+    // own TakeOrdered — the union concatenates ≤k results, it does not
     // merge their orderings), so the gate schedules one ranking wave
     val both = topKWithVec(emb, bk, vec, qVecId, k)
         .select(lit("lsh").as("method"), col("vec_id"))
       .unionAll(topKWithKeys(emb, bk, vec, queryMultiProbeKeysOf(vec),
           qVecId, k)
         .select(lit("lsh_mp").as("method"), col("vec_id")))
-      .unionAll(ivfTopKFromVec(flat, vec, qVecId, k)
+      .unionAll(Ivf.topKAt(IvfCodec.Flat, flat, vec, qVecId, k)
         .select(lit("ivf").as("method"), col("vec_id")))
       .collect().map(r => (r.getString(0), r.getLong(1)))
     recallRows(emb.sparkSession, ids,
@@ -1346,41 +877,45 @@ object Ann {
         m -> both.collect { case (`m`, id) => id }.toSeq), k)
   }
 
-  /** DuckDB mirror of recallAtK: the exact, LSH, and IVF top-k oracles
-    * (each already verified stand-alone) composed as CTE subqueries. */
-  /** ONE rendering of the exact brute-force top-k subquery — shared by the
-    * LSH/IVF recall oracle below AND the PQ recall oracle
-    * (Pq.pqRecallOracleSql), so the exact tier every recall gate compares
-    * against cannot drift between them (the cellCtesSql convention). */
-  private[ml] def exactTopKSql(qVecId: Long, k: Int, srcSql: String): String =
+  /** ONE rendering of the exact brute-force top-k subquery — every recall
+    * oracle compares against it, so the exact tier cannot drift between
+    * gates (the cellCtesSql convention). `andWhere` restricts the
+    * candidates (a filtered gate's slice) over `e.vec_id`. */
+  private[ml] def exactTopKSql(qVecId: Long, k: Int, srcSql: String,
+      andWhere: String = ""): String =
     s"""WITH e AS ($srcSql),
        |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId)
        |SELECT e.vec_id AS vec_id,
        |  round(list_dot_product(e.emb, q.qemb) /
        |    sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM e, q WHERE e.vec_id <> $qVecId
+       |FROM e, q WHERE e.vec_id <> $qVecId $andWhere
        |ORDER BY sim DESC, e.vec_id LIMIT $k""".stripMargin
 
-  def recallOracleSql(qVecId: Long, k: Int,
-      srcSql: String = BaseSrcSql): String = {
-    val exact = exactTopKSql(qVecId, k, srcSql)
-    s"""WITH exact AS ((${exact})),
-       |lshr AS ((${oracleSql(qVecId, k, srcSql)})),
-       |lshmpr AS ((${multiProbeOracleSql(qVecId, k, srcSql)})),
-       |ivfr AS ((${ivfOracleSql(qVecId, k, srcSql)}))
-       |SELECT 'lsh' AS method, count(*) AS hits,
-       |  round(count(*) * 1.0 / $k, 4) AS recall
-       |FROM lshr WHERE vec_id IN (SELECT vec_id FROM exact)
-       |UNION ALL
-       |SELECT 'lsh_mp' AS method, count(*) AS hits,
-       |  round(count(*) * 1.0 / $k, 4) AS recall
-       |FROM lshmpr WHERE vec_id IN (SELECT vec_id FROM exact)
-       |UNION ALL
-       |SELECT 'ivf' AS method, count(*) AS hits,
-       |  round(count(*) * 1.0 / $k, 4) AS recall
-       |FROM ivfr WHERE vec_id IN (SELECT vec_id FROM exact)
+  /** The ONE rendering of a recall oracle: per (method, lookup oracle)
+    * arm, the (method, hits, recall@k) row of the lookup's ids against the
+    * exact baseline subquery — recallRows' SQL twin. */
+  private[ml] def recallArmsSql(exactSql: String,
+      arms: Seq[(String, String)], k: Int): String = {
+    val ctes = arms.zipWithIndex.map { case ((_, sql), i) => s"a$i AS (($sql))" }
+    val rows = arms.zipWithIndex.map { case ((method, _), i) =>
+      s"""SELECT '$method' AS method, count(*) AS hits,
+         |  round(count(*) * 1.0 / $k, 4) AS recall
+         |FROM a$i WHERE vec_id IN (SELECT vec_id FROM exact)""".stripMargin
+    }
+    s"""WITH exact AS (($exactSql)),
+       |${ctes.mkString(",\n")}
+       |${rows.mkString("\nUNION ALL\n")}
        |""".stripMargin.replaceAll("\\s+", " ")
   }
+
+  /** DuckDB mirror of recallAtK: the exact, LSH, and IVF top-k oracles
+    * (each already verified stand-alone) composed as recall arms. */
+  def recallOracleSql(qVecId: Long, k: Int,
+      srcSql: String = BaseSrcSql): String =
+    recallArmsSql(exactTopKSql(qVecId, k, srcSql), Seq(
+      "lsh" -> oracleSql(qVecId, k, srcSql),
+      "lsh_mp" -> multiProbeOracleSql(qVecId, k, srcSql),
+      "ivf" -> Ivf.oracleSql(IvfCodec.Flat, qVecId, k, srcSql = srcSql)), k)
 
   /** Shared oracle CTE chain `e, c, asg, cell` — ONE rendering of the
     * coarse quantizer (centroid VALUES + cosine assignment + per-vector

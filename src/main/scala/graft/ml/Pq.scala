@@ -84,74 +84,24 @@ object Pq {
         col("embedding").cast("array<double>").as("emb"))
       .select(col("vec_id"), codesExpr(col("emb")).as("codes"))
 
-  /** The ADC ranking sim (expressions.PqSim kernel), rounded like every
-    * other similarity the engine serves. */
-  private def pqSim(codes: Column, qemb: Column, qn: Column): Column =
-    round(call_function("graft_pq_sim", codes, qemb, qn), 6)
+  // Serving: the composed PQ×IVF store (Catalog.pqIvfStore) is one tier
+  // of the shared IVF path (Ivf); its codec (IvfCodec.Pq) ranks probed rows
+  // through the PqSim ADC kernel on the code bytes alone.
 
-  /** Top-k by asymmetric PQ cosine against the COMPOSED PQ×IVF store
-    * (Catalog.pqIvfStore) — the sq8IvfTopKFrom shape over the 32×-smaller
-    * codes: probe the query's nearest cells (bounded collect → static
-    * partition pruning), rank the probed rows through the PqSim kernel.
-    * Returns (vec_id, sim). */
+  // Entry points the benchmark harness (perfbench/harness) calls by name;
+  // the harness may not change with the engine, so each keeps its
+  // signature as one call into the shared path.
   def pqIvfTopKFrom(store: DataFrame, emb: DataFrame, qVecId: Long,
       k: Int): DataFrame =
-    pqIvfTopKFromVec(store, Ann.queryVec(emb, qVecId), qVecId, k)
-
-  /** PQ×IVF lookup restricted to an ALLOWED id set — filtered serving at
-    * the 32×-compressed tier (Quant.sq8IvfTopKAllowed's twin; the
-    * semi-join commutes with the probed-cell filters, one scoring
-    * chain). */
-  def pqIvfTopKAllowed(store: DataFrame, emb: DataFrame, qVecId: Long,
-      allowed: DataFrame, k: Int): DataFrame =
-    pqIvfTopKFrom(store.join(allowed.select("vec_id"), Seq("vec_id"),
-      "left_semi"), emb, qVecId, k)
-
-  /** PQ×IVF lookup under a TOMBSTONE mask — the delete lifecycle's masked
-    * serve at the product-quantized tier. */
-  def pqIvfTopKMasked(store: DataFrame, emb: DataFrame, qVecId: Long,
-      tombstones: DataFrame, k: Int): DataFrame =
-    pqIvfTopKFrom(store.join(tombstones.select("vec_id"), Seq("vec_id"),
-      "left_anti"), emb, qVecId, k)
-
-  private[ml] def pqIvfTopKFromVec(store: DataFrame, vec: Array[Double],
-      qVecId: Long, k: Int): DataFrame =
-    store.filter(col("cell").isin(Ann.probedCellsOf(vec): _*))
-      .filter(col("vec_id") =!= qVecId)
-      .select(col("vec_id"),
-        pqSim(col("codes"), Ann.litVec(vec),
-          lit(Ann.selfDot(vec))).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-
-  /** BATCHED PQ serving — the sq8IvfTopKBatchFrom shape: shared probe
-    * stage (Ann.probeBatch), broadcast probed-cell semi-join for dynamic
-    * partition pruning, candidates ranked through the PqSim kernel,
-    * per-query top-k riding the rank pushdown. Same query-table contract
-    * as the other batch lookups. Returns (qid, vec_id, sim). */
-  def pqIvfTopKBatchFrom(store: DataFrame, emb: DataFrame,
-      queries: DataFrame, k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").cast("array<double>").as("qemb"))
-    val probed = Ann.probeBatch(q, Ann.centroids(emb))
-    val joined = probed.join(Ann.prunedByProbedCells(store, probed),
-      Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    Ann.topKPerQuery(cand
-      .select(col("qid"), col("vec_id"),
-        pqSim(col("codes"), col("qemb"), col("qn")).as("sim")), k)
-  }
+    Ivf.topK(IvfCodec.Pq, store, emb, qVecId, k)
+  def pqIvfOracleSql(qVecId: Long, k: Int): String =
+    Ivf.oracleSql(IvfCodec.Pq, qVecId, k)
 
   /** Recall@k of the PQ×IVF lookup against the exact brute-force top-k in
-    * the PLANTED regime — the quantized tier's driver-checked quality gate
-    * (VERDICT r13 #7), completing the recall ladder ann_recall_planted
-    * pins for LSH/IVF: the planted clones are provably reachable (they
-    * concentrate in the query's probed cells), so a codebook / encode /
-    * ADC-kernel regression moves this number on BOTH engines instead of
-    * only in a spec. The ad-hoc store is built from the planted corpus
+    * the PLANTED regime over an ad-hoc store built from the planted corpus
     * with the same pqCodes ∘ cellAssignment composition as
-    * Catalog.pqIvfStore. Returns (method, hits, recall). */
+    * Catalog.pqIvfStore (the stored-fixture gate is Ivf.recallAtKFrom over
+    * Catalog.plantedPqIvf). Returns (method, hits, recall). */
   def recallAtKPlanted(emb: DataFrame, qVecId: Long, m: Int,
       k: Int): DataFrame = {
     val e = graft.util.Caches.track(
@@ -165,20 +115,7 @@ object Pq {
       .cache())
     val ee = e.select(col("vec_id"), col("embedding").as("emb"))
     Ann.recallOf(Ann.exactTopKIds(ee, qVecId, k),
-      pqIvfTopKFrom(store, e, qVecId, k), "pq", k)
-  }
-
-  /** The planted PQ gate served from STORED fixtures (VERDICT r14 #5):
-    * planted corpus, composed PQ×IVF store, and the k-row exact baseline
-    * all materialized once per sf-dir (Catalog.plantedEmb / plantedPqIvf /
-    * plantedExactTop10) — the 128-centroid encode never re-runs inside the
-    * statement. */
-  def recallAtKFrom(store: DataFrame, emb: DataFrame, exact: DataFrame,
-      qVecId: Long, k: Int): DataFrame = {
-    val ids = exact.select("vec_id").collect().map(_.getLong(0)).toSet
-    val pq = pqIvfTopKFrom(store, emb, qVecId, k)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    Ann.recallRows(emb.sparkSession, ids, Seq("pq" -> pq), k)
+      Ivf.topK(IvfCodec.Pq, store, e, qVecId, k), "pq", k)
   }
 
   /** The multi-stage retrieval LADDER: a cheap PQ shortlist (kCoarse
@@ -193,7 +130,7 @@ object Pq {
     * Returns (vec_id, sim) — exact cosines. */
   def pqRerank(store: DataFrame, emb: DataFrame, qVecId: Long,
       kCoarse: Int, k: Int): DataFrame = {
-    val shortlist = pqIvfTopKFrom(store, emb, qVecId, kCoarse)
+    val shortlist = Ivf.topK(IvfCodec.Pq, store, emb, qVecId, kCoarse)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val e = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("emb"))
@@ -212,9 +149,6 @@ object Pq {
       books: Seq[Seq[Seq[Double]]]): String =
     books(j).map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
 
-  private def cbListSql(j: Int): String =
-    cbListSqlWith(j, TrainedPqCodebooks.books)
-
   /** The (j, k) squared distance, unrolled in the same left-to-right
     * component order as distExpr. Parameterized over codebooks and the
     * source array's SQL rendering (the residual tier's is an expression,
@@ -227,9 +161,6 @@ object Pq {
       s"($x - ${c(d)}) * ($x - ${c(d)})"
     }.mkString(" + ")
   }
-
-  private def distSql(j: Int, k: Int): String =
-    distSqlWith(j, k, TrainedPqCodebooks.books, "emb")
 
   /** The argmin code list over arbitrary codebooks/source (shared with the
     * residual tier so the encode mirroring has ONE rendering). */
@@ -255,12 +186,6 @@ object Pq {
     }
     s"flatten([${subs.mkString(",")}])"
   }
-
-  private def xqSql: String = xqSqlWith(TrainedPqCodebooks.books, "emb")
-
-  /** The reconstructed-corpus CTE `pxq` both PQ oracles share. */
-  private def pxqCteSql: String =
-    s"pxq AS (SELECT vec_id, $xqSql AS xq FROM e)"
 
   /** The ONE SQL rendering of the M-code list (argmin per subspace, tie →
     * first occurrence) — shared by every PQ store-content oracle so the
@@ -295,96 +220,13 @@ object Pq {
        |JOIN cell ON cell.vec_id = ux.vec_id
        |""".stripMargin.replaceAll("\\s+", " ")
 
-  /** DuckDB mirror of pqRerank: the single-query PQ oracle's ranking as a
-    * kCoarse-deep shortlist CTE, then the exact float cosine over ONLY the
-    * shortlist — ivfOracleSql's ranking expression, so the re-rank tier
-    * and the IVF-flat oracle cannot drift. */
+  /** DuckDB mirror of pqRerank: the PQ lookup oracle as a kCoarse-deep
+    * shortlist, then the exact brute-force rendering (Ann.exactTopKSql)
+    * restricted to the shortlist — so the re-rank tier and the exact
+    * baseline cannot drift. */
   def pqRerankOracleSql(qVecId: Long, kCoarse: Int, k: Int): String =
-    s"""WITH ${Ann.cellCtesSql(Ann.BaseSrcSql)},
-       |$pxqCteSql,
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT ${Ann.Probes}),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |short AS (SELECT pxq.vec_id AS vec_id,
-       |    round(list_dot_product(pxq.xq, q.qemb) /
-       |      sqrt(list_dot_product(pxq.xq, pxq.xq) * list_dot_product(q.qemb, q.qemb)), 6) AS psim
-       |  FROM pxq JOIN cell USING (vec_id) JOIN qc USING (cell), q
-       |  WHERE pxq.vec_id <> $qVecId
-       |  ORDER BY psim DESC, vec_id LIMIT $kCoarse)
-       |SELECT s.vec_id AS vec_id,
-       |  round(list_dot_product(e.emb, q.qemb) /
-       |    sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM short s JOIN e ON e.vec_id = s.vec_id, q
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** DuckDB mirror of pqIvfTopKFrom ∘ pqIvfStore (srcSql parameterized so
-    * the planted-regime recall gate reuses the exact same rendering). */
-  def pqIvfOracleSql(qVecId: Long, k: Int,
-      srcSql: String = Ann.BaseSrcSql): String =
-    s"""WITH ${Ann.cellCtesSql(srcSql)},
-       |$pxqCteSql,
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT ${Ann.Probes}),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId)
-       |SELECT pxq.vec_id AS vec_id,
-       |  round(list_dot_product(pxq.xq, q.qemb) /
-       |    sqrt(list_dot_product(pxq.xq, pxq.xq) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM pxq JOIN cell USING (vec_id) JOIN qc USING (cell), q
-       |WHERE pxq.vec_id <> $qVecId
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** DuckDB mirror of pqIvfTopKAllowed / pqIvfTopKMasked: pqIvfOracleSql's
-    * chain with the caller-supplied id subquery semi- (allowed) or
-    * anti-joined (masked) on the candidate side. */
-  def pqIvfRestrictedOracleSql(qVecId: Long, k: Int, idsSql: String,
-      masked: Boolean): String = {
-    val (cte, pred) =
-      if (masked) ("dead", "AND pxq.vec_id NOT IN (SELECT vec_id FROM dead)")
-      else ("al", "AND pxq.vec_id IN (SELECT vec_id FROM al)")
-    s"""WITH ${Ann.cellCtesSql(Ann.BaseSrcSql)},
-       |$pxqCteSql,
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT ${Ann.Probes}),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |$cte AS ($idsSql)
-       |SELECT pxq.vec_id AS vec_id,
-       |  round(list_dot_product(pxq.xq, q.qemb) /
-       |    sqrt(list_dot_product(pxq.xq, pxq.xq) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM pxq JOIN cell USING (vec_id) JOIN qc USING (cell), q
-       |WHERE pxq.vec_id <> $qVecId
-       |  $pred
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-  }
-
-  /** DuckDB mirror of recallAtKPlanted: the exact top-k and the PQ lookup
-    * oracle composed over the same planted source — the
-    * Ann.recallOracleSql shape for the PQ tier. */
-  def pqRecallOracleSql(qVecId: Long, k: Int, srcSql: String): String = {
-    // the exact tier is Ann's ONE rendering — the PQ gate must compare
-    // against the same brute-force baseline as the LSH/IVF gate
-    val exact = Ann.exactTopKSql(qVecId, k, srcSql)
-    s"""WITH exact AS (($exact)),
-       |pqr AS ((${pqIvfOracleSql(qVecId, k, srcSql)}))
-       |SELECT 'pq' AS method, count(*) AS hits,
-       |  round(count(*) * 1.0 / $k, 4) AS recall
-       |FROM pqr WHERE vec_id IN (SELECT vec_id FROM exact)
-       |""".stripMargin.replaceAll("\\s+", " ")
-  }
-
-  /** DuckDB mirror of pqIvfTopKBatchFrom for the query batch
-    * vec_id < maxQid — the shared batch CTEs and rank tail. */
-  def pqIvfBatchOracleSql(maxQid: Long, k: Int): String =
-    s"""WITH ${Ann.cellCtesSql(Ann.BaseSrcSql)},
-       |$pxqCteSql,
-       |${Ann.batchQueryCtesSql(maxQid)},
-       |cand AS (SELECT p.qid AS qid, pxq.vec_id AS vec_id,
-       |    round(list_dot_product(pxq.xq, p.qemb) /
-       |      sqrt(list_dot_product(pxq.xq, pxq.xq) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN pxq ON pxq.vec_id = cell.vec_id
-       |  WHERE pxq.vec_id <> p.qid)
-       |${Ann.batchRankSql(k)}
+    s"""WITH short AS ((${Ivf.oracleSql(IvfCodec.Pq, qVecId, kCoarse)}))
+       |SELECT vec_id, sim FROM (${Ann.exactTopKSql(qVecId, k, Ann.BaseSrcSql,
+            "AND e.vec_id IN (SELECT vec_id FROM short)")})
        |""".stripMargin.replaceAll("\\s+", " ")
 }

@@ -46,178 +46,34 @@ object PqResidual {
       .select(col("vec_id"), col("cell"),
         Pq.codesExprWith(col("remb"), TrainedPqrCodebooks.books).as("codes"))
 
-  private def pqrSim(codes: Column, cell: Column, qemb: Column,
-      qn: Column): Column =
-    round(call_function("graft_pqr_sim", codes, cell, qemb, qn), 6)
-
-  /** Top-k by asymmetric residual-PQ cosine against the composed store —
-    * the pqIvfTopKFrom shape with the cell id feeding the reconstruction.
-    * Returns (vec_id, sim). */
-  def pqrIvfTopKFrom(store: DataFrame, emb: DataFrame, qVecId: Long,
-      k: Int): DataFrame = {
-    val vec = Ann.queryVec(emb, qVecId)
-    store.filter(col("cell").isin(Ann.probedCellsOf(vec): _*))
-      .filter(col("vec_id") =!= qVecId)
-      .select(col("vec_id"),
-        // the hive partition column comes back INT; the kernel takes the
-        // 1-based cell as BIGINT
-        pqrSim(col("codes"), col("cell").cast("long"), Ann.litVec(vec),
-          lit(Ann.selfDot(vec))).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-  }
-
-  /** Residual-PQ×IVF lookup restricted to an ALLOWED id set — filtered
-    * serving at the residual tier (Pq.pqIvfTopKAllowed's twin: the
-    * semi-join commutes with the probed-cell filters, one scoring
-    * chain). */
-  def pqrIvfTopKAllowed(store: DataFrame, emb: DataFrame, qVecId: Long,
-      allowed: DataFrame, k: Int): DataFrame =
-    pqrIvfTopKFrom(store.join(allowed.select("vec_id"), Seq("vec_id"),
-      "left_semi"), emb, qVecId, k)
-
-  /** Residual-PQ×IVF lookup under a TOMBSTONE mask — the delete
-    * lifecycle's masked serve at the residual tier. */
-  def pqrIvfTopKMasked(store: DataFrame, emb: DataFrame, qVecId: Long,
-      tombstones: DataFrame, k: Int): DataFrame =
-    pqrIvfTopKFrom(store.join(tombstones.select("vec_id"), Seq("vec_id"),
-      "left_anti"), emb, qVecId, k)
-
-  /** BATCHED residual-PQ serving — Pq.pqIvfTopKBatchFrom's shape with the
-    * candidate's cell id feeding the reconstruction kernel: shared probe
-    * stage, broadcast probed-cell semi-join for partition pruning,
-    * PqrSim ranking, per-query top-k riding the rank pushdown.
-    * Returns (qid, vec_id, sim). */
-  def pqrIvfTopKBatchFrom(store: DataFrame, emb: DataFrame,
-      queries: DataFrame, k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").cast("array<double>").as("qemb"))
-    val probed = Ann.probeBatch(q, Ann.centroids(emb))
-    val joined = probed.join(Ann.prunedByProbedCells(store, probed),
-      Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    Ann.topKPerQuery(cand
-      .select(col("qid"), col("vec_id"),
-        pqrSim(col("codes"), col("cell").cast("long"), col("qemb"),
-          col("qn")).as("sim")), k)
-  }
-
-  /** The residual gate served from stored fixtures — Pq.recallAtKFrom's
-    * twin. Returns (method, hits, recall). */
-  def recallAtKFrom(store: DataFrame, emb: DataFrame, exact: DataFrame,
-      qVecId: Long, k: Int): DataFrame = {
-    val ids = exact.select("vec_id").collect().map(_.getLong(0)).toSet
-    val pqr = pqrIvfTopKFrom(store, emb, qVecId, k)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    Ann.recallRows(emb.sparkSession, ids, Seq("pqr" -> pqr), k)
-  }
+  // Serving: the composed residual-PQ×IVF store (Catalog.pqrIvfStore) is
+  // one tier of the shared IVF path (Ivf); its codec (IvfCodec.Pqr) ranks
+  // probed rows through the PqrSim kernel with the cell id feeding the
+  // reconstruction.
 
   // ---- DuckDB mirrors ----
 
-  /** The residual CTE chain over the shared coarse-quantizer CTEs: rr is
-    * the residual rows (same per-element subtraction order as zip_with),
-    * px the chosen residual centroids, pxq the IVFADC reconstruction
-    * c(cell) + decode(codes) — per-element addition first, then
-    * list_dot_product's left-to-right accumulate, the PqrSim kernel's
-    * exact IEEE sequence. */
-  private def reconCtesSql: String = {
-    val dims = Ann.Dims
+  /** The residual rows `rr(vec_id, cell, remb)` over the shared
+    * coarse-quantizer CTEs — the same per-element subtraction order as
+    * residualRows' zip_with — shared by the store-content and serving
+    * (IvfCodec.Pqr) mirrors. */
+  private[ml] def residualCteSql: String =
     s"""rr AS (SELECT e.vec_id AS vec_id, cell.cell AS cell,
-       |    list_transform(range(1, ${dims + 1}),
-       |      i -> e.emb[i] - cv.cemb[i]) AS remb
-       |  FROM e JOIN cell USING (vec_id) JOIN c cv ON cv.cent_id = cell.cell),
-       |px AS (SELECT vec_id, cell,
-       |    ${Pq.xqSqlWith(TrainedPqrCodebooks.books, "remb")} AS xqr
-       |  FROM rr),
-       |pxq AS (SELECT px.vec_id AS vec_id, px.cell AS cell,
-       |    list_transform(range(1, ${dims + 1}),
-       |      i -> cv.cemb[i] + px.xqr[i]) AS xq
-       |  FROM px JOIN c cv ON cv.cent_id = px.cell)""".stripMargin
-  }
+       |    list_transform(range(1, ${Ann.Dims + 1}),
+       |      i -> e.emb[i] - cc.cemb[i]) AS remb
+       |  FROM e JOIN cell USING (vec_id) JOIN c cc ON cc.cent_id = cell.cell)""".stripMargin
 
   /** DuckDB mirror of the store content (vec_id, cell, pos, code). */
   def codesOracleSql(srcSql: String = Ann.BaseSrcSql): String = {
     val codes = Pq.codesListSqlWith(TrainedPqrCodebooks.books, "remb")
     s"""WITH ${Ann.cellCtesSql(srcSql)},
-       |rr AS (SELECT e.vec_id AS vec_id, cell.cell AS cell,
-       |    list_transform(range(1, ${Ann.Dims + 1}),
-       |      i -> e.emb[i] - cv.cemb[i]) AS remb
-       |  FROM e JOIN cell USING (vec_id) JOIN c cv ON cv.cent_id = cell.cell),
+       |$residualCteSql,
        |cx AS (SELECT vec_id, cell, $codes AS codes FROM rr)
        |SELECT vec_id, CAST(cell AS BIGINT) AS cell,
        |  CAST(u.pos AS INT) AS pos, CAST(u.code AS TINYINT) AS code
        |FROM (SELECT vec_id, cell,
        |  unnest(list_transform(range(1, ${Pq.M} + 1),
        |    i -> {'pos': i - 1, 'code': codes[i]})) AS u FROM cx)
-       |""".stripMargin.replaceAll("\\s+", " ")
-  }
-
-  /** DuckDB mirror of pqrIvfTopKFrom ∘ pqrIvfStore (srcSql parameterized
-    * for the planted gate — the pqIvfOracleSql convention). */
-  def pqrIvfOracleSql(qVecId: Long, k: Int,
-      srcSql: String = Ann.BaseSrcSql): String =
-    s"""WITH ${Ann.cellCtesSql(srcSql)},
-       |$reconCtesSql,
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT ${Ann.Probes}),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId)
-       |SELECT pxq.vec_id AS vec_id,
-       |  round(list_dot_product(pxq.xq, q.qemb) /
-       |    sqrt(list_dot_product(pxq.xq, pxq.xq) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM pxq JOIN qc USING (cell), q
-       |WHERE pxq.vec_id <> $qVecId
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** DuckDB mirror of pqrIvfTopKAllowed / pqrIvfTopKMasked:
-    * pqrIvfOracleSql's chain with the caller-supplied id subquery semi-
-    * (allowed) or anti-joined (masked) on the candidate side — the
-    * Pq.pqIvfRestrictedOracleSql shape over the IVFADC reconstruction. */
-  def pqrIvfRestrictedOracleSql(qVecId: Long, k: Int, idsSql: String,
-      masked: Boolean): String = {
-    val (cte, pred) =
-      if (masked) ("dead", "AND pxq.vec_id NOT IN (SELECT vec_id FROM dead)")
-      else ("al", "AND pxq.vec_id IN (SELECT vec_id FROM al)")
-    s"""WITH ${Ann.cellCtesSql(Ann.BaseSrcSql)},
-       |$reconCtesSql,
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT ${Ann.Probes}),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |$cte AS ($idsSql)
-       |SELECT pxq.vec_id AS vec_id,
-       |  round(list_dot_product(pxq.xq, q.qemb) /
-       |    sqrt(list_dot_product(pxq.xq, pxq.xq) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |FROM pxq JOIN qc USING (cell), q
-       |WHERE pxq.vec_id <> $qVecId
-       |  $pred
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-  }
-
-  /** DuckDB mirror of pqrIvfTopKBatchFrom for the query batch
-    * vec_id < maxQid — the shared batch CTEs over the reconstruction
-    * chain (pxq carries its cell, so the candidate join is direct). */
-  def pqrIvfBatchOracleSql(maxQid: Long, k: Int): String =
-    s"""WITH ${Ann.cellCtesSql(Ann.BaseSrcSql)},
-       |$reconCtesSql,
-       |${Ann.batchQueryCtesSql(maxQid)},
-       |cand AS (SELECT p.qid AS qid, pxq.vec_id AS vec_id,
-       |    round(list_dot_product(pxq.xq, p.qemb) /
-       |      sqrt(list_dot_product(pxq.xq, pxq.xq) * list_dot_product(p.qemb, p.qemb)), 6) AS sim
-       |  FROM pxq JOIN probed p USING (cell)
-       |  WHERE pxq.vec_id <> p.qid)
-       |${Ann.batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** DuckDB mirror of recallAtKFrom — the Pq.pqRecallOracleSql shape. */
-  def pqrRecallOracleSql(qVecId: Long, k: Int, srcSql: String): String = {
-    val exact = Ann.exactTopKSql(qVecId, k, srcSql)
-    s"""WITH exact AS (($exact)),
-       |pqr AS ((${pqrIvfOracleSql(qVecId, k, srcSql)}))
-       |SELECT 'pqr' AS method, count(*) AS hits,
-       |  round(count(*) * 1.0 / $k, 4) AS recall
-       |FROM pqr WHERE vec_id IN (SELECT vec_id FROM exact)
        |""".stripMargin.replaceAll("\\s+", " ")
   }
 }

@@ -83,123 +83,63 @@ object Quant {
   def codesFrozen(emb: Column, mn: Double, scale: Double): Column =
     codeExpr(emb, lit(mn), lit(scale))
 
-  /** The int8 ranking kernel (expressions.Sq8Sim): asymmetric cosine
-    * computed directly over the RAW byte codes in one codegen'd pass —
-    * the affine correction applied once per row, no per-candidate
-    * dequantized array<double> allocation (VERDICT r11 #5). */
-  private def sq8Sim(codes: Column, qemb: Column, mn: Column, scale: Column,
-      qn: Column): Column =
-    round(call_function("graft_sq8_sim", codes, qemb, mn, scale, qn), 6)
-
   /** Attach the shipped quantizer constants to a compacted generation's
     * (vec_id, cell, codes) rows: generation files store ONLY the byte
     * codes — the affine (mn, scale) pair is index METADATA a deployment
     * distributes alongside the MANIFEST, not a per-row payload. Literal
-    * columns make the probe path's dequant expression identical over the
+    * columns make the probe path's scoring expression identical over the
     * hive store and a compacted generation, so the serving code is
     * oblivious to which layout answered. */
   def attachQuantizer(gen: DataFrame, mn: Double, scale: Double): DataFrame =
     gen.withColumn("mn", lit(mn)).withColumn("scale", lit(scale))
 
-  /** Top-k by cosine against the COMPOSED SQ8×IVF store
-    * (Catalog.sq8IvfStore): probe the query's `Ann.Probes` nearest cells (a
-    * bounded eager collect pushed as a static In filter → static partition
-    * pruning on the cell-partitioned codes), rank the probed rows by
-    * asymmetric distance DIRECTLY on the byte codes (the Sq8Sim kernel —
-    * the affine correction applied once per row; candidates are never
-    * dequantized to a per-row double array). The raw embeddings table is
-    * touched ONLY for the single query row (pushed EqualTo filter);
-    * candidates never load a float vector. Returns (vec_id, sim). */
+  // Serving: the composed SQ8×IVF store (Catalog.sq8IvfStore) is one tier
+  // of the shared IVF path (Ivf) — its codec (IvfCodec.Sq8) ranks probed
+  // rows by asymmetric distance DIRECTLY on the byte codes through the
+  // Sq8Sim kernel; candidates never load a float vector.
+
+  // Entry points the benchmark harness (perfbench/harness) calls by name;
+  // the harness may not change with the engine, so each keeps its
+  // signature as one call into the shared path.
   def sq8IvfTopKFrom(store: DataFrame, emb: DataFrame, qVecId: Long,
       k: Int): DataFrame =
-    sq8IvfTopKFromVec(store, Ann.queryVec(emb, qVecId), qVecId, k)
+    Ivf.topK(IvfCodec.Sq8, store, emb, qVecId, k)
+  def sq8IvfOracleSql(qVecId: Long, k: Int): String =
+    Ivf.oracleSql(IvfCodec.Sq8, qVecId, k)
 
-  /** SQ8×IVF lookup restricted to an ALLOWED id set (a metadata-sidecar
-    * slice) — filtered serving at the quantized tier: the semi-join
-    * commutes with the probed-cell and self filters, so the lookup IS the
-    * standard one over the sliced store (Ann.ivfTopKAllowed's posture at
-    * 4× compression, one shared scoring chain). Fewer-than-k survivors is
-    * the same documented contract as the float tier. */
-  def sq8IvfTopKAllowed(store: DataFrame, emb: DataFrame, qVecId: Long,
-      allowed: DataFrame, k: Int): DataFrame =
-    sq8IvfTopKFrom(store.join(allowed.select("vec_id"), Seq("vec_id"),
-      "left_semi"), emb, qVecId, k)
+  /** Ad-hoc store for in-memory corpora (tests, exploratory use): the
+    * same sq8Store ⋈ cellAssignment join the Catalog materializes, cached
+    * for the statement. */
+  private def adHocStore(emb: DataFrame): DataFrame =
+    graft.util.Caches.track(sq8Store(emb)
+      .join(Ann.cellAssignment(emb).select(col("vec_id"), col("cell")),
+        Seq("vec_id"))
+      .cache())
 
-  /** SQ8×IVF lookup under a TOMBSTONE mask — the delete lifecycle's dense
-    * masked serve at the quantized tier (Ann.ivfTopKMaskedFrom's twin):
-    * the anti-join commutes with the probed-cell filters; asymmetric
-    * similarity carries no corpus statistics, so masked serving equals a
-    * tombstone-folded compacted generation exactly. */
-  def sq8IvfTopKMasked(store: DataFrame, emb: DataFrame, qVecId: Long,
-      tombstones: DataFrame, k: Int): DataFrame =
-    sq8IvfTopKFrom(store.join(tombstones.select("vec_id"), Seq("vec_id"),
-      "left_anti"), emb, qVecId, k)
+  /** sq8IvfTopKFrom over an ad-hoc derived store. */
+  def sq8IvfTopK(emb: DataFrame, qVecId: Long, k: Int): DataFrame =
+    Ivf.topK(IvfCodec.Sq8, adHocStore(emb), emb, qVecId, k)
 
-  private[ml] def sq8IvfTopKFromVec(store: DataFrame, vec: Array[Double],
-      qVecId: Long, k: Int): DataFrame =
-    store.filter(col("cell").isin(Ann.probedCellsOf(vec): _*))
-      .filter(col("vec_id") =!= qVecId)
-      .select(col("vec_id"),
-        sq8Sim(col("codes"), Ann.litVec(vec), col("mn"), col("scale"),
-          lit(Ann.selfDot(vec))).as("sim"))
-      .orderBy(desc("sim"), asc("vec_id"))
-      .limit(k)
-
-  /** BATCHED quantized serving: a whole query TABLE against the composed
-    * SQ8×IVF store in one declarative plan — Ann.ivfTopKBatch's shape with
-    * the float corpus swapped for the 4×-smaller byte codes. Probe
-    * assignment is the shared Ann.probeBatch stage (per-query
-    * WindowGroupLimit over the broadcast centroid matrix, no driver
-    * round-trip); candidates arrive through a hash equi-join on the cell
-    * key (the store's partition key) and rank by asymmetric distance
-    * DIRECTLY on the byte codes (the Sq8Sim kernel — no per-candidate
-    * dequantized array) with a per-query row_number ≤ k riding the rank
-    * pushdown. Raw
-    * embeddings are touched only for the |Q| query rows; candidates never
-    * load a float vector, and nothing is collected — |Q| can itself be
-    * data-scale (bulk retrieval over a quantized index: hard-negative
-    * mining, dedup-against-index). Same query-table contract as
-    * ivfTopKBatch: distinct qids; excludeSelf = false for an external id
-    * space. Returns (qid, vec_id, sim). */
-  def sq8IvfTopKBatchFrom(store: DataFrame, emb: DataFrame,
-      queries: DataFrame, k: Int, excludeSelf: Boolean = true): DataFrame = {
-    val q = queries.select(col("vec_id").as("qid"),
-      col("embedding").cast("array<double>").as("qemb"))
-    val probed = Ann.probeBatch(q, Ann.centroids(emb))
-    val joined = probed.join(Ann.prunedByProbedCells(store, probed),
-      Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    Ann.topKPerQuery(cand
-      .select(col("qid"), col("vec_id"),
-        sq8Sim(col("codes"), col("qemb"), col("mn"), col("scale"),
-          col("qn")).as("sim")), k)
-  }
-
-  /** Ad-hoc overload for in-memory corpora (tests, exploratory use):
-    * derives the composed store inline — the same sq8Store ⋈ cellAssignment
-    * join the Catalog materializes — and caches it for the statement. */
-  def sq8IvfTopK(emb: DataFrame, qVecId: Long, k: Int): DataFrame = {
-    val store = graft.util.Caches.track(
-      sq8Store(emb).join(Ann.cellAssignment(emb), Seq("vec_id")).cache())
-    sq8IvfTopKFrom(store, emb, qVecId, k)
-  }
+  /** The quantizer oracle CTEs: the global (mn, scale) aggregate `st`
+    * (the frozen quantizer the store ships) and the coded corpus `cx` —
+    * the same clamp-round-to-int-minus-128 byte codes — shared by the
+    * store-content and serving (IvfCodec.Sq8) mirrors. */
+  private[ml] def codesCtesSql: String =
+    """st AS (SELECT mn, CASE WHEN mx = mn THEN 1.0 ELSE (mx - mn) / 255.0 END AS scale
+      |       FROM (SELECT min(u) AS mn, max(u) AS mx
+      |             FROM (SELECT unnest(emb) AS u FROM e))),
+      |cx AS (SELECT vec_id, mn, scale,
+      |         list_transform(emb, x ->
+      |           least(greatest(CAST(round((x - mn) / scale) AS INT), 0), 255) - 128) AS codes
+      |       FROM e, st)""".stripMargin
 
   /** DuckDB mirror of the streamed composed-store upkeep
-    * (EmbeddingsIngest.sq8Rows): the same coarse-quantizer CTE chain, the
-    * same global (mn, scale) aggregate (the frozen quantizer the stream
-    * ships), the same clamp-round-to-int-minus-128 byte code; rows exploded to
-    * (vec_id, cell, pos, code) so the store equality is pinned element-wise
-    * on scalar columns. */
+    * (EmbeddingsIngest.sq8Rows): the same coarse-quantizer CTE chain and
+    * quantizer codes; rows exploded to (vec_id, cell, pos, code) so the
+    * store equality is pinned element-wise on scalar columns. */
   def sq8StreamOracleSql: String =
     s"""WITH ${Ann.cellCtesSql(Ann.BaseSrcSql)},
-       |st AS (SELECT mn, CASE WHEN mx = mn THEN 1.0 ELSE (mx - mn) / 255.0 END AS scale
-       |       FROM (SELECT min(u) AS mn, max(u) AS mx
-       |             FROM (SELECT unnest(emb) AS u FROM e))),
-       |cx AS (SELECT vec_id,
-       |         list_transform(emb, x ->
-       |           least(greatest(CAST(round((x - mn) / scale) AS INT), 0), 255) - 128) AS codes
-       |       FROM e, st)
+       |$codesCtesSql
        |SELECT vec_id, CAST(cell AS BIGINT) AS cell, CAST(u.pos AS INT) AS pos,
        |  CAST(u.code AS TINYINT) AS code FROM (
        |  SELECT cx.vec_id AS vec_id, cell.cell AS cell,
@@ -207,139 +147,18 @@ object Quant {
        |  FROM cx JOIN cell USING (vec_id))
        |""".stripMargin.replaceAll("\\s+", " ")
 
-  /** The integer-domain oracle CTEs shared by both SQ8 lookup mirrors: the
-    * global (mn, scale) aggregate `st` (the frozen quantizer), the coded
-    * corpus `cx` (the same clamp-round-minus-128 byte codes the store
-    * holds), and `cq` carrying the per-row code sums the ranking kernel
-    * accumulates — Σc and Σc² (exact integers on both engines) plus the
-    * dimension count. */
-  private def intRankCtesSql: String =
-    """st AS (SELECT mn, CASE WHEN mx = mn THEN 1.0 ELSE (mx - mn) / 255.0 END AS scale
-      |       FROM (SELECT min(u) AS mn, max(u) AS mx
-      |             FROM (SELECT unnest(emb) AS u FROM e))),
-      |cx AS (SELECT vec_id, mn, scale,
-      |         list_transform(emb, x ->
-      |           least(greatest(CAST(round((x - mn) / scale) AS INT), 0), 255) - 128) AS codes
-      |       FROM e, st),
-      |cq AS (SELECT vec_id, mn, scale, codes,
-      |         CAST(list_sum(codes) AS DOUBLE) AS s1,
-      |         CAST(list_sum(list_transform(codes, c -> c * c)) AS DOUBLE) AS s2,
-      |         len(codes) AS nd
-      |       FROM cx)""".stripMargin
-
-  /** The ONE SQL rendering of the Sq8Sim kernel's arithmetic over a `cq`
-    * candidate row and a query embedding expression: with
-    * mp = mn + 128·scale, num = mp·Σq + scale·(c·q) and
-    * nrm = mp²·n + 2·mp·scale·Σc + scale²·Σc² — every term the same IEEE
-    * double op in the same order as the generated loop, so hashes match. */
-  private def intSimSql(q: String): String =
-    s"""round(((mn + 128 * scale) * list_sum($q)
-       |    + scale * list_dot_product(CAST(cq.codes AS DOUBLE[]), $q)) /
-       |  sqrt(((mn + 128 * scale) * (mn + 128 * scale) * cq.nd
-       |    + 2 * (mn + 128 * scale) * scale * cq.s1
-       |    + scale * scale * cq.s2) * list_dot_product($q, $q)), 6)""".stripMargin
-
-  /** DuckDB mirror of sq8IvfTopKFrom ∘ sq8IvfStore: the shared coarse-
-    * quantizer CTE chain (Ann.cellCtesSql — the SAME rendering ivfOracleSql
-    * pins), the same global (mn, scale) aggregate, the same
-    * clamp-round-minus-128 byte codes, probed cells from the RAW query,
-    * and the kernel's integer-domain asymmetric cosine (intSimSql). */
-  def sq8IvfOracleSql(qVecId: Long, k: Int,
-      srcSql: String = Ann.BaseSrcSql): String =
-    s"""WITH ${Ann.cellCtesSql(srcSql)},
-       |$intRankCtesSql,
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT ${Ann.Probes}),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId)
-       |SELECT cq.vec_id AS vec_id, ${intSimSql("q.qemb")} AS sim
-       |FROM cq JOIN cell USING (vec_id) JOIN qc USING (cell), q
-       |WHERE cq.vec_id <> $qVecId
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** DuckDB mirror of sq8IvfTopKAllowed / sq8IvfTopKMasked — ONE
-    * parameterized builder (the Pq.pqIvfRestrictedOracleSql form, review
-    * finding r16): the candidate side IN- (allowed) or NOT-IN-restricted
-    * (masked) by the caller-supplied id subquery. IN/NOT IN are set
-    * predicates, so duplicate id rows cannot duplicate candidates — the
-    * semi/anti-join semantics of the Spark side. */
-  def sq8IvfRestrictedOracleSql(qVecId: Long, k: Int, idsSql: String,
-      masked: Boolean): String = {
-    val pred = if (masked) "NOT IN" else "IN"
-    s"""WITH ${Ann.cellCtesSql(Ann.BaseSrcSql)},
-       |$intRankCtesSql,
-       |qc AS (SELECT cent_id AS cell FROM asg WHERE vec_id = $qVecId
-       |       ORDER BY csim DESC, cent_id ASC LIMIT ${Ann.Probes}),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |ids AS ($idsSql)
-       |SELECT cq.vec_id AS vec_id, ${intSimSql("q.qemb")} AS sim
-       |FROM cq JOIN cell USING (vec_id) JOIN qc USING (cell), q
-       |WHERE cq.vec_id <> $qVecId
-       |  AND cq.vec_id $pred (SELECT vec_id FROM ids)
-       |ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-  }
-
   /** Recall@k of the SQ8×IVF lookup against the exact brute-force top-k in
-    * the PLANTED regime — the scalar-quantized tier's driver-checked
-    * quality gate, completing the recall ladder across ALL FOUR serving
-    * tiers (LSH/IVF via ann_recall_planted, PQ via pq_recall_planted, SQ8
-    * here): an affine-map / clamp / kernel regression moves this number on
-    * BOTH engines instead of only in QuantSpec's overlap pin. The ad-hoc
-    * store is built from the planted corpus with the same
-    * sq8Store ∘ cellAssignment composition as Catalog.sq8IvfStore. */
+    * the PLANTED regime over an ad-hoc store built from the planted corpus
+    * (the stored-fixture gate is Ivf.recallAtKFrom over
+    * Catalog.plantedSq8Ivf; AnnRecallSpec pins the two equal). */
   def recallAtKPlanted(emb: DataFrame, qVecId: Long, m: Int,
       k: Int): DataFrame = {
     val e = graft.util.Caches.track(
       Ann.plantedCluster(emb, qVecId, m).cache())
-    val store = graft.util.Caches.track(sq8Store(e)
-      .join(Ann.cellAssignment(e).select(col("vec_id"), col("cell")),
-        Seq("vec_id"))
-      .cache())
     val ee = e.select(col("vec_id"), col("embedding").as("emb"))
     Ann.recallOf(Ann.exactTopKIds(ee, qVecId, k),
-      sq8IvfTopKFrom(store, e, qVecId, k), "sq8", k)
+      Ivf.topK(IvfCodec.Sq8, adHocStore(e), e, qVecId, k), "sq8", k)
   }
-
-  /** The planted SQ8 gate served from STORED fixtures (VERDICT r14 #5):
-    * planted corpus, composed SQ8×IVF store, and the k-row exact baseline
-    * all materialized once per sf-dir (Catalog.plantedEmb / plantedSq8Ivf /
-    * plantedExactTop10) — the statement ranks one probed-cell lookup and
-    * compares, nothing is derived or cached ad-hoc. */
-  def recallAtKFrom(store: DataFrame, emb: DataFrame, exact: DataFrame,
-      qVecId: Long, k: Int): DataFrame = {
-    val ids = exact.select("vec_id").collect().map(_.getLong(0)).toSet
-    val sq = sq8IvfTopKFrom(store, emb, qVecId, k)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    Ann.recallRows(emb.sparkSession, ids, Seq("sq8" -> sq), k)
-  }
-
-  /** DuckDB mirror of recallAtKPlanted — the Ann.recallOracleSql shape for
-    * the SQ8 tier, comparing against the SAME exact rendering
-    * (Ann.exactTopKSql) every recall gate uses. */
-  def sq8RecallOracleSql(qVecId: Long, k: Int, srcSql: String): String =
-    s"""WITH exact AS ((${Ann.exactTopKSql(qVecId, k, srcSql)})),
-       |sqr AS ((${sq8IvfOracleSql(qVecId, k, srcSql)}))
-       |SELECT 'sq8' AS method, count(*) AS hits,
-       |  round(count(*) * 1.0 / $k, 4) AS recall
-       |FROM sqr WHERE vec_id IN (SELECT vec_id FROM exact)
-       |""".stripMargin.replaceAll("\\s+", " ")
-
-  /** DuckDB mirror of sq8IvfTopKBatchFrom ∘ sq8IvfStore for the query batch
-    * vec_id < maxQid: the shared coarse-quantizer CTEs, the shared batched
-    * query/probe CTEs (Ann.batchQueryCtesSql — identical to the IVF-flat
-    * batch oracle), the single-query SQ8 oracle's integer-domain ranking,
-    * and the shared per-query rank (Ann.batchRankSql). */
-  def sq8IvfBatchOracleSql(maxQid: Long, k: Int): String =
-    s"""WITH ${Ann.cellCtesSql(Ann.BaseSrcSql)},
-       |$intRankCtesSql,
-       |${Ann.batchQueryCtesSql(maxQid)},
-       |cand AS (SELECT p.qid AS qid, cq.vec_id AS vec_id,
-       |    ${intSimSql("p.qemb")} AS sim
-       |  FROM probed p JOIN cell USING (cell) JOIN cq ON cq.vec_id = cell.vec_id
-       |  WHERE cq.vec_id <> p.qid)
-       |${Ann.batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
 
   // ---- Johnson-Lindenstrauss random projection -----------------------------
 

@@ -223,7 +223,7 @@ object Retrieval {
       stats, k)
 
   /** BATCHED BM25: serve a whole query TABLE (qid, terms array) in one
-    * declarative plan — the lexical twin of Ann.ivfTopKBatch (queries
+    * declarative plan — the lexical twin of Ivf.topKBatch (queries
     * arrive in batches at serving time; per-query driver round-trips don't
     * scale). Stages, all in-plan:
     *  1. tf — one corpus-sized pass whose SHUFFLE stays term-bounded: dl
@@ -430,7 +430,7 @@ object Retrieval {
   /** Filtered stored HYBRID: both tiers restricted to the same
     * metadata-defined slice of the shared id space — the lexical tier via
     * bm25StoredTopKFiltered, the dense tier via the probed-cell lookup
-    * semi-joined to the sidecar's allowed ids (Ann.ivfTopKAllowed) — then
+    * semi-joined to the sidecar's allowed ids (Ivf.Allowed) — then
     * the usual k-bounded fusion. Nothing corpus-sized at query time. */
   def rrfStoredFiltered(index: DataFrame, meta: DataFrame, flat: DataFrame,
       emb: DataFrame, terms: Seq[String], qVecId: Long, lang: String,
@@ -439,9 +439,9 @@ object Retrieval {
       .select(col("doc_id"), row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(desc("bm25"), asc("doc_id"))).as("rank"))
-    val den = Ann.ivfTopKAllowed(flat, emb, qVecId,
-        meta.filter(col("lang") === lang)
-          .select(col("doc_id").as("vec_id")), n)
+    val den = Ivf.topK(IvfCodec.Flat, flat, emb, qVecId, n,
+        Ivf.Allowed(meta.filter(col("lang") === lang)
+          .select(col("doc_id").as("vec_id"))))
       .select(col("vec_id").as("doc_id"), row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(desc("sim"), asc("vec_id"))).as("rank"))
@@ -552,8 +552,8 @@ object Retrieval {
        |den AS (
        |  SELECT vec_id AS doc_id,
        |    row_number() OVER (ORDER BY sim DESC, vec_id) AS den_rank
-       |  FROM (${Ann.ivfAllowedOracleSql(qVecId, n,
-            s"SELECT doc_id AS vec_id FROM documents WHERE lang = ${sqlLit(lang)}")}))
+       |  FROM (${Ivf.oracleSql(IvfCodec.Flat, qVecId, n, Ivf.Allowed(
+            s"SELECT doc_id AS vec_id FROM documents WHERE lang = ${sqlLit(lang)}"))}))
        |SELECT COALESCE(lex.doc_id, den.doc_id) AS doc_id,
        |  round(COALESCE(1.0::DOUBLE/($RrfK + lex_rank), 0) +
        |        COALESCE(1.0::DOUBLE/($RrfK + den_rank), 0), 6) AS rrf
@@ -638,7 +638,7 @@ object Retrieval {
       .select(col("doc_id"), row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(desc("bm25"), asc("doc_id"))).as("rank"))
-    val den = Ann.ivfTopKFrom(flat, emb, qVecId, n)
+    val den = Ivf.topK(IvfCodec.Flat, flat, emb, qVecId, n)
       .select(col("vec_id").as("doc_id"), row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(desc("sim"), asc("vec_id"))).as("rank"))
@@ -649,7 +649,7 @@ object Retrieval {
     * tiers of the same fusion (VERDICT r15 #4's rationale made an
     * operator): the lexical tier serves masked with pre-delete statistics
     * (bm25StoredTopKMasked), the dense tier anti-joins the same tombstone
-    * set inside its probed cells (Ann.ivfTopKMaskedFrom), and the fusion
+    * set inside its probed cells (Ivf.Masked), and the fusion
     * sees no deleted doc from either side — masking one tier only would
     * fuse a ranking that still contains the deleted doc with one that
     * doesn't, exactly the inconsistency this operator exists to prevent. */
@@ -660,8 +660,8 @@ object Retrieval {
       .select(col("doc_id"), row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(desc("bm25"), asc("doc_id"))).as("rank"))
-    val den = Ann.ivfTopKMaskedFrom(flat, emb, qVecId,
-        tombstones.select(col("doc_id").as("vec_id")), n)
+    val den = Ivf.topK(IvfCodec.Flat, flat, emb, qVecId, n,
+        Ivf.Masked(tombstones.select(col("doc_id").as("vec_id"))))
       .select(col("vec_id").as("doc_id"), row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(desc("sim"), asc("vec_id"))).as("rank"))
@@ -681,8 +681,8 @@ object Retrieval {
        |den AS (
        |  SELECT vec_id AS doc_id,
        |    row_number() OVER (ORDER BY sim DESC, vec_id) AS den_rank
-       |  FROM (${Ann.ivfMaskedOracleSql(qVecId, n,
-            "SELECT doc_id AS vec_id FROM dead")}))
+       |  FROM (${Ivf.oracleSql(IvfCodec.Flat, qVecId, n,
+            Ivf.Masked("SELECT doc_id AS vec_id FROM dead"))}))
        |SELECT COALESCE(lex.doc_id, den.doc_id) AS doc_id,
        |  round(COALESCE(1.0::DOUBLE/($RrfK + lex_rank), 0) +
        |        COALESCE(1.0::DOUBLE/($RrfK + den_rank), 0), 6) AS rrf
@@ -713,7 +713,7 @@ object Retrieval {
       .select(col("doc_id").as("vec_id"))
       .join(tombstones.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_anti")
-    val den = Ann.ivfTopKAllowed(flat, emb, qVecId, allowed, n)
+    val den = Ivf.topK(IvfCodec.Flat, flat, emb, qVecId, n, Ivf.Allowed(allowed))
       .select(col("vec_id").as("doc_id"), row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(desc("sim"), asc("vec_id"))).as("rank"))
@@ -735,11 +735,11 @@ object Retrieval {
        |den AS (
        |  SELECT vec_id AS doc_id,
        |    row_number() OVER (ORDER BY sim DESC, vec_id) AS den_rank
-       |  FROM (${Ann.ivfAllowedOracleSql(qVecId, n,
+       |  FROM (${Ivf.oracleSql(IvfCodec.Flat, qVecId, n, Ivf.Allowed(
             s"""SELECT doc_id AS vec_id FROM documents
                | WHERE lang = ${sqlLit(lang)}
                |   AND doc_id NOT IN (SELECT doc_id FROM dead)""".stripMargin
-              .replaceAll("\\s+", " "))}))
+              .replaceAll("\\s+", " ")))}))
        |SELECT COALESCE(lex.doc_id, den.doc_id) AS doc_id,
        |  round(COALESCE(1.0::DOUBLE/($RrfK + lex_rank), 0) +
        |        COALESCE(1.0::DOUBLE/($RrfK + den_rank), 0), 6) AS rrf
@@ -749,7 +749,7 @@ object Retrieval {
 
   /** BATCHED stored hybrid — the whole hybrid serving matrix in one plan:
     * the lexical tier is bm25StoredTopKBatch (stored postings, term-
-    * dictionary semi-join), the dense tier is Ann.ivfTopKBatch (stored
+    * dictionary semi-join), the dense tier is Ivf.topKBatch (stored
     * cells, probed-cell pruning), and the per-query fusion joins the two
     * k-bounded rankings on (qid, doc_id). Query contract: the lexical
     * queries table's qids ARE corpus vec_ids (the shared id space every
@@ -763,7 +763,7 @@ object Retrieval {
     val lex = bm25StoredTopKBatch(index, stats, queries, n, keepRank = true,
         termDict = termDict)
       .select("qid", "doc_id", "rank")
-    val den = Ann.ivfTopKBatchFrom(flat, denQueries, n, keepRank = true)
+    val den = Ivf.topKBatch(IvfCodec.Flat, flat, denQueries, n, keepRank = true)
       .select(col("qid"), col("vec_id").as("doc_id"), col("rank"))
     fuseBatch(lex, den, k)
   }
@@ -796,8 +796,8 @@ object Retrieval {
       .select("qid", "doc_id", "rank")
     val allowed = meta.filter(col("lang") === lang)
       .select(col("doc_id").as("vec_id"))
-    val den = Ann.ivfTopKBatchAllowed(flat, denQueries, allowed, n,
-        keepRank = true)
+    val den = Ivf.topKBatch(IvfCodec.Flat, flat, denQueries, n,
+        Ivf.Allowed(allowed), keepRank = true)
       .select(col("qid"), col("vec_id").as("doc_id"), col("rank"))
     fuseBatch(lex, den, k)
   }
@@ -814,8 +814,8 @@ object Retrieval {
        |den AS (
        |  SELECT qid, vec_id AS doc_id, row_number() OVER (PARTITION BY qid
        |      ORDER BY sim DESC, vec_id) AS den_rank
-       |  FROM (${Ann.ivfBatchAllowedOracleSql(maxQid, n,
-            s"SELECT doc_id AS vec_id FROM documents WHERE lang = ${sqlLit(lang)}")})),
+       |  FROM (${Ivf.batchOracleSql(IvfCodec.Flat, maxQid, n, Ivf.Allowed(
+            s"SELECT doc_id AS vec_id FROM documents WHERE lang = ${sqlLit(lang)}"))})),
        |f AS (SELECT COALESCE(lex.qid, den.qid) AS qid,
        |        COALESCE(lex.doc_id, den.doc_id) AS doc_id,
        |        round(COALESCE(1.0::DOUBLE/($RrfK + lex_rank), 0) +
@@ -838,7 +838,7 @@ object Retrieval {
        |den AS (
        |  SELECT qid, vec_id AS doc_id, row_number() OVER (PARTITION BY qid
        |      ORDER BY sim DESC, vec_id) AS den_rank
-       |  FROM (${Ann.ivfBatchOracleSql(maxQid, n)})),
+       |  FROM (${Ivf.batchOracleSql(IvfCodec.Flat, maxQid, n)})),
        |f AS (SELECT COALESCE(lex.qid, den.qid) AS qid,
        |        COALESCE(lex.doc_id, den.doc_id) AS doc_id,
        |        round(COALESCE(1.0::DOUBLE/($RrfK + lex_rank), 0) +
@@ -851,7 +851,7 @@ object Retrieval {
        |WHERE rn <= $k""".stripMargin.replaceAll("\\s+", " ")
 
   /** DuckDB mirror of rrfStored: the bm25 CTE is bm25OracleSql's rendering
-    * and the dense tier is Ann.ivfOracleSql's — each already verified
+    * and the dense tier is Ivf.oracleSql's — each already verified
     * stand-alone — composed with the same fusion tail as rrfOracleSql. */
   def rrfStoredOracleSql(terms: Seq[String], qVecId: Long, n: Int,
       k: Int): String =
@@ -861,7 +861,7 @@ object Retrieval {
        |den AS (
        |  SELECT vec_id AS doc_id,
        |    row_number() OVER (ORDER BY sim DESC, vec_id) AS den_rank
-       |  FROM (${Ann.ivfOracleSql(qVecId, n)}))
+       |  FROM (${Ivf.oracleSql(IvfCodec.Flat, qVecId, n)}))
        |SELECT COALESCE(lex.doc_id, den.doc_id) AS doc_id,
        |  round(COALESCE(1.0::DOUBLE/($RrfK + lex_rank), 0) +
        |        COALESCE(1.0::DOUBLE/($RrfK + den_rank), 0), 6) AS rrf

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
-import graft.ml.Ann
+import graft.ml.{Ann, Ivf, IvfCodec}
 import graft.model.Catalog
 
 /** VERDICT r5 #1 — the ANN entries must READ the materialized index, not
@@ -140,7 +140,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(batch == singles)
     // the external-id-space escape hatch: with excludeSelf = false a
     // corpus-drawn query keeps its own row, which must rank first (sim 1.0)
-    val self = Ann.ivfTopKBatchFrom(Catalog.ivfFlat(spark, dir),
+    val self = Ivf.topKBatch(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
         emb.filter(col("vec_id") < 4), 1, excludeSelf = false)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(self.length == 4 && self.forall(r => r._1 == r._2 && r._3 == 1.0),
@@ -182,8 +182,8 @@ class AnnIndexSpec extends AnyFunSuite {
   test("filtered batch == per-query filtered singles, label pushed") {
     val emb = Catalog.embeddings(spark, dir)
     val cells = Catalog.ivfCells(spark, dir)
-    val bdf = Ann.ivfTopKBatchFilteredFrom(Catalog.ivfFlat(spark, dir),
-      emb.filter(col("vec_id") < 8), 3, 10)
+    val bdf = Ivf.topKBatch(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
+      emb.filter(col("vec_id") < 8), 10, Ivf.Label(3))
     val batch = bdf.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val singles = (0L until 8L).flatMap { qid =>
@@ -202,9 +202,10 @@ class AnnIndexSpec extends AnyFunSuite {
     val all = emb.select(col("vec_id"))
     // unselective slice: the standard width already yields k — the
     // adaptive lookup must equal the static filtered lookup exactly
-    val adaptive = Ann.ivfTopKAllowedAdaptive(flat, emb, 0L, all, 5)
+    val adaptive = Ivf.topKAdaptive(IvfCodec.Flat, flat, emb, 0L, 5,
+        Ivf.Allowed(all))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val static0 = Ann.ivfTopKAllowed(flat, emb, 0L, all, 5)
+    val static0 = Ivf.topK(IvfCodec.Flat, flat, emb, 0L, 5, Ivf.Allowed(all))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(adaptive == static0)
     // a tiny slice can never reach k: the ladder must end at an EXACT
@@ -212,14 +213,15 @@ class AnnIndexSpec extends AnyFunSuite {
     // slice member sitting outside the narrow probes
     val tiny = emb.select("vec_id")
       .orderBy(org.apache.spark.sql.functions.desc("vec_id")).limit(3)
-    val short = Ann.ivfTopKAllowedAdaptive(flat, emb, 0L, tiny, 5)
+    val short = Ivf.topKAdaptive(IvfCodec.Flat, flat, emb, 0L, 5,
+        Ivf.Allowed(tiny))
       .collect().map(_.getLong(0)).toSet
     val sliceIds = tiny.collect().map(_.getLong(0)).toSet - 0L
     assert(short == sliceIds,
       s"ladder end must return the whole slice: $short vs $sliceIds")
     // the ladder's widths are the doubling sequence ending at Cells
-    assert(Ann.adaptiveWidths.last == Ann.Cells &&
-      Ann.adaptiveWidths == Ann.adaptiveWidths.distinct.sorted)
+    assert(Ivf.adaptiveWidths.last == Ann.Cells &&
+      Ivf.adaptiveWidths == Ivf.adaptiveWidths.distinct.sorted)
   }
 
   test("dense tombstone mask bites and == tombstone-folded compaction") {
@@ -228,11 +230,11 @@ class AnnIndexSpec extends AnyFunSuite {
     val emb = Catalog.embeddings(spark, dir)
     // tombstones drawn from the unmasked top-k, so the mask provably bites
     // regardless of fixture clustering (the RetrievalSpec convention)
-    val unmasked = Ann.ivfTopKFrom(flat, emb, 0L, 10)
+    val unmasked = Ivf.topK(IvfCodec.Flat, flat, emb, 0L, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val dead = unmasked.take(2).map(_._1)
-    val masked = Ann.ivfTopKMaskedFrom(flat, emb, 0L,
-        dead.toDF("vec_id"), 10)
+    val masked = Ivf.topK(IvfCodec.Flat, flat, emb, 0L, 10,
+        Ivf.Masked(dead.toDF("vec_id")))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(masked.map(_._1).toSet.intersect(dead.toSet).isEmpty)
     // cosine carries no corpus statistics: surviving scores are unchanged
@@ -260,7 +262,8 @@ class AnnIndexSpec extends AnyFunSuite {
     // baseline: plain batch top-(k+2); positives = each query's ranks 1
     // and 3 — excluding mid-list positives must CLOSE the rank gap, not
     // just truncate (the contrastive-mining contract)
-    val base = Ann.ivfTopKBatchFrom(flat, queries, 12, keepRank = true)
+    val base = Ivf.topKBatch(IvfCodec.Flat, flat, queries, 12,
+        keepRank = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3)))
     val pos = base.filter(r => r._4 == 1 || r._4 == 3)

@@ -109,13 +109,14 @@ class BenchArtifactsSpec extends AnyFunSuite {
     // scheduling slack on real work.
     val a = readArtifact("bench_last.json")
     val counters = a.get("counters")
-    // divisor from the artifact's recorded executor thread count, not a
-    // hard-coded 32 (ADVICE r21 — the literal made the bound wrong on any
-    // other machine); floor 3.0 s calibrated against the planning-heavy
-    // quiet entries (a1_max/decontaminate_report sit at 1.5-2 s of pure
-    // AQE-wave driver latency on an honest quiet run — ADVICE r21)
-    val cores =
-      if (a.has("cores")) a.get("cores").asInt() else 32
+    // divisor from the artifact's recorded executor thread count, never an
+    // assumed one (ADVICE r21 — a literal made the bound wrong on any other
+    // machine); floor 3.0 s calibrated against the planning-heavy quiet
+    // entries (a1_max/decontaminate_report sit at 1.5-2 s of pure AQE-wave
+    // driver latency on an honest quiet run — ADVICE r21)
+    assert(a.has("cores"),
+      "bench_last.json predates the `cores` field — regenerate it")
+    val cores = a.get("cores").asInt()
     val it = a.get("queries").fields()
     while (it.hasNext) {
       val e = it.next()

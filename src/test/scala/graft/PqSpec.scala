@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ml.{Ann, Pq}
+import graft.ml.{Ann, Ivf, IvfCodec, Pq}
 import graft.model.Catalog
 
 /** Product quantization (Pq): the store must be genuine M-byte rows (the
@@ -53,31 +53,6 @@ class PqSpec extends AnyFunSuite {
     graft.util.Caches.drain()
   }
 
-  test("batched PQ serving == per-query single lookups, partition-pruned") {
-    val emb = Catalog.embeddings(spark, dir)
-    val store = Catalog.pqIvfStore(spark, dir)
-    val df = SparkEntry.queries("pq_topk_batch")(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("pq_ivf"), s"batch plan does not scan pq_ivf:\n$p")
-    assert(!p.contains("CartesianProduct"),
-      s"batch plan has a cartesian product:\n$p")
-    assert(p.contains("hashpartitioning(cell#") || p.contains("HashJoin [cell#"),
-      s"candidate join is not a hash join on cell:\n$p")
-    assert("""PartitionFilters: \[[^\]]*(dynamicpruning|cell#\d+[^\]]* IN )""".r
-        .findFirstIn(p).isDefined,
-      s"no probed-cell partition filter on the batch pq_ivf scan:\n$p")
-    assert(p.contains("graft_pq_sim"),
-      s"batch path does not rank through the PQ kernel:\n$p")
-    val batch = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val singles = (0L until 8L).flatMap { qid =>
-      Pq.pqIvfTopKFrom(store, emb, qid, K).collect()
-        .map(r => (qid, r.getLong(0), r.getDouble(1)))
-    }.toSet
-    assert(batch == singles)
-    graft.util.Caches.drain()
-  }
-
   test("planted near-dup regime: PQ retrieves the planted cluster") {
     // the regime PQ is FOR: near-duplicates at cosine ~0.99 against a
     // ~0.51-ceiling background. The planted clones encode to (nearly) the
@@ -88,7 +63,7 @@ class PqSpec extends AnyFunSuite {
     val e = graft.util.Caches.track(Ann.plantedCluster(emb, 0, 10).cache())
     val store = graft.util.Caches.track(
       Pq.pqCodes(e).join(Ann.cellAssignment(e), Seq("vec_id")).cache())
-    val got = Pq.pqIvfTopKFrom(store, e, 0, K).collect()
+    val got = Ivf.topK(IvfCodec.Pq, store, e, 0, K).collect()
       .map(_.getLong(0)).toSet
     graft.util.Caches.drain()
     val planted = (1 to 10).map(j => Ann.PlantOffset + j).toSet
@@ -171,7 +146,7 @@ class PqSpec extends AnyFunSuite {
     val store = Catalog.pqIvfStore(spark, dir)
     val flat = Ann.ivfTopK(emb, Catalog.ivfCells(spark, dir), 0, K)
       .collect().map(_.getLong(0)).toSet
-    val pq = Pq.pqIvfTopKFrom(store, emb, 0, K)
+    val pq = Ivf.topK(IvfCodec.Pq, store, emb, 0, K)
       .collect().map(_.getLong(0)).toSet
     graft.util.Caches.drain()
     val overlap = (flat & pq).size.toDouble / K

@@ -68,55 +68,4 @@ class PqrSpec extends AnyFunSuite {
   }
 
   private def PqrSimCells: Int = graft.expressions.PqrSim.Cells
-
-  test("batched residual-PQ serving == per-query single lookups, " +
-      "partition-pruned through the PqrSim kernel") {
-    val emb = graft.model.Catalog.embeddings(spark, dir)
-    val store = graft.model.Catalog.pqrIvfStore(spark, dir)
-    val df = graft.ml.PqResidual.pqrIvfTopKBatchFrom(store, emb,
-      emb.filter(col("vec_id") < 8), 10)
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("pqr_ivf"), s"batch plan does not scan pqr_ivf:\n$p")
-    assert(!p.contains("CartesianProduct"),
-      s"batch plan has a cartesian product:\n$p")
-    assert(p.contains("graft_pqr_sim"),
-      s"batch path does not rank through the residual kernel:\n$p")
-    assert("""PartitionFilters: \[[^\]]*(dynamicpruning|cell#\d+[^\]]* IN )""".r
-        .findFirstIn(p).isDefined,
-      s"no probed-cell partition filter on the batch pqr_ivf scan:\n$p")
-    val batch = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val singles = (0L until 8L).flatMap { qid =>
-      graft.ml.PqResidual.pqrIvfTopKFrom(store, emb, qid, 10).collect()
-        .map(r => (qid, r.getLong(0), r.getDouble(1)))
-    }.toSet
-    assert(batch == singles)
-    graft.util.Caches.drain()
-  }
-
-  test("filtered and masked residual serving restrict the candidate set " +
-      "and agree with post-filtering the unrestricted ranking chain") {
-    val emb = graft.model.Catalog.embeddings(spark, dir)
-    val store = graft.model.Catalog.pqrIvfStore(spark, dir)
-    // the slice: even vec_ids — big enough that top-k is full
-    val allowed = emb.select(col("vec_id")).filter(col("vec_id") % 2 === 0)
-    val got = graft.ml.PqResidual
-      .pqrIvfTopKAllowed(store, emb, 0L, allowed, 10).collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    assert(got.length == 10)
-    assert(got.forall(_._1 % 2 == 0), "filtered serve leaked a non-slice id")
-    // reference: rank the unrestricted chain deep, then post-filter —
-    // the semi-join must commute with the scoring
-    val deep = graft.ml.PqResidual.pqrIvfTopKFrom(store, emb, 0L, 10000)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      .filter(_._1 % 2 == 0).take(10)
-    assert(got.toSeq == deep.toSeq)
-    // masked is the complement restriction: no tombstoned id may surface
-    val dead = emb.select(col("vec_id")).filter(col("vec_id") < 50)
-    val masked = graft.ml.PqResidual
-      .pqrIvfTopKMasked(store, emb, 0L, dead, 10).collect()
-      .map(_.getLong(0))
-    assert(masked.forall(_ >= 50), "masked serve surfaced a tombstoned id")
-    graft.util.Caches.drain()
-  }
 }

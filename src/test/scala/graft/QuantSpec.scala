@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ml.{Ann, Quant}
+import graft.ml.{Ann, Ivf, IvfCodec, Quant}
 import graft.model.Catalog
 
 /** Scalar int8 quantization (Quant): codes must be genuine uint8, the
@@ -97,52 +97,6 @@ class QuantSpec extends AnyFunSuite {
     assert(overlap >= 0.7, f"sq8 overlap $overlap%.2f below bound")
   }
 
-  test("batched SQ8 serving == per-query single lookups, quantized store only") {
-    // the batch path must answer each query EXACTLY as the single-query
-    // SQ8 lookup (same probes, same dequantized asymmetric ranking, same
-    // tie-break) while staying declarative end-to-end — and like the
-    // single-query path it must serve from the byte codes: raw embeddings
-    // may appear only as the query-side fetch, and candidates must arrive
-    // through a hash join on the cell key, never a cartesian product
-    val emb = Catalog.embeddings(spark, dir)
-    val store = Catalog.sq8IvfStore(spark, dir)
-    val df = SparkEntry.queries("sq8_topk_batch")(spark, dir)
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("sq8_ivf"), s"batch plan does not scan sq8_ivf:\n$p")
-    assert(!p.contains("CartesianProduct"),
-      s"batch plan has a cartesian product:\n$p")
-    assert(p.contains("hashpartitioning(cell#") || p.contains("HashJoin [cell#"),
-      s"candidate join is not a hash join on cell:\n$p")
-    val wgl = "WindowGroupLimit".r.findAllIn(p).size
-    assert(wgl >= 2,
-      s"expected both per-query ranks as WindowGroupLimit, found $wgl:\n$p")
-    // quantized serving: candidates never load a float vector — the raw
-    // embeddings table feeds only the query batch (and the probe stage's
-    // centroid ranking of those same |Q| rows)
-    assert(!p.contains("sq8_codes"),
-      s"batch lookup scans the full flat codes store:\n$p")
-    // the store scan must carry a PARTITION filter driven by the batch's
-    // probed cells (the broadcast left-semi → dynamic partition pruning):
-    // without it the batch join reads every store partition even for a
-    // 1-query batch, regressing the single-query path's static pruning
-    // (VERDICT r11 #1)
-    assert("""PartitionFilters: \[[^\]]*(dynamicpruning|cell#\d+[^\]]* IN )""".r
-        .findFirstIn(p).isDefined,
-      s"no probed-cell partition filter on the batch sq8_ivf scan:\n$p")
-    // batch ranking also runs on the byte codes through the int8 kernel
-    assert(p.contains("graft_sq8_sim"),
-      s"batch path does not rank through the int8 kernel:\n$p")
-    assert(!p.contains("transform(codes"),
-      s"batch path dequantizes candidates to double arrays:\n$p")
-    val batch = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val singles = (0L until 8L).flatMap { qid =>
-      Quant.sq8IvfTopKFrom(store, emb, qid, K).collect()
-        .map(r => (qid, r.getLong(0), r.getDouble(1)))
-    }.toSet
-    assert(batch == singles)
-  }
-
   test("serving over a compacted generation == hive store, cell filter pushed") {
     // serving CONTINUITY across the generation swap: a reader pointed at
     // the compacted streamed generation (manifest read-back + the
@@ -154,10 +108,11 @@ class QuantSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft_sq8_gen").toString
     try {
       val emb = Catalog.embeddings(spark, dir)
-      val served = Quant.sq8IvfTopKFrom(
+      val served = Ivf.topK(IvfCodec.Sq8,
         graft.streaming.EmbeddingsIngest.sq8GenServing(spark, dir, base),
         emb, 0, K)
-      val store = Quant.sq8IvfTopKFrom(Catalog.sq8IvfStore(spark, dir), emb, 0, K)
+      val store = Ivf.topK(IvfCodec.Sq8, Catalog.sq8IvfStore(spark, dir),
+        emb, 0, K)
       assert(served.collect().toSeq == store.collect().toSeq)
       // "In(cell, [" is the parquet PUSHED-filter rendering (the catalyst
       // DataFilter prints as "cell#NN IN ("), so this pins source-level
@@ -169,34 +124,6 @@ class QuantSpec extends AnyFunSuite {
       graft.util.Caches.drain()
       graft.ingest.Compact.rmTree(base)
     }
-  }
-
-  test("filtered stays in slice; mask bites with unchanged survivor sims") {
-    import TestSpark.spark.implicits._
-    val store = Catalog.sq8IvfStore(TestSpark.spark, dir)
-    val emb = Catalog.embeddings(TestSpark.spark, dir)
-    // filtered: every hit carries the slice's membership
-    val enIds = Catalog.docMeta(TestSpark.spark, dir)
-      .filter(col("lang") === "en").select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    val filtered = Quant.sq8IvfTopKAllowed(store, emb, 0L,
-      Catalog.docMeta(TestSpark.spark, dir).filter(col("lang") === "en")
-        .select(col("doc_id").as("vec_id")), 10)
-      .collect().map(_.getLong(0))
-    assert(filtered.nonEmpty && filtered.forall(enIds.contains),
-      "quantized filtered hit outside the slice")
-    // masked: tombstones drawn from the unmasked top-k so the mask
-    // provably bites; survivors keep their sims (no corpus stats in the
-    // asymmetric kernel — the masked == compacted identity's basis)
-    val unmasked = Quant.sq8IvfTopKFrom(store, emb, 0L, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val dead = unmasked.take(2).map(_._1)
-    val masked = Quant.sq8IvfTopKMasked(store, emb, 0L,
-        dead.toDF("vec_id"), 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(masked.map(_._1).toSet.intersect(dead.toSet).isEmpty)
-    val um = unmasked.toMap
-    assert(masked.forall { case (id, s) => um.get(id).forall(_ == s) })
   }
 
   test("frozen encode saturates out-of-range inputs instead of wrapping") {

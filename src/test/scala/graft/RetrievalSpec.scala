@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ml.{Ann, CorpusOps, Retrieval}
+import graft.ml.{Ann, CorpusOps, Ivf, IvfCodec, Retrieval}
 import graft.model.Catalog
 
 /** BM25 / hybrid-fusion retrieval and the bloom-pruned decontamination —
@@ -277,10 +277,10 @@ class RetrievalSpec extends AnyFunSuite {
     val lexIds = Retrieval.bm25StoredTopKFiltered(Catalog.lexIndex(spark, dir),
       Catalog.docMeta(spark, dir), terms, "en", 20)
       .collect().map(_.getLong(0)).toSet
-    val denIds = graft.ml.Ann.ivfTopKAllowed(Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0L,
-      Catalog.docMeta(spark, dir).filter(col("lang") === "en")
-        .select(col("doc_id").as("vec_id")), 20)
+    val denIds = Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
+      Catalog.embeddings(spark, dir), 0L, 20,
+      Ivf.Allowed(Catalog.docMeta(spark, dir).filter(col("lang") === "en")
+        .select(col("doc_id").as("vec_id"))))
       .collect().map(_.getLong(0)).toSet
     assert(denIds.subsetOf(enIds), "dense tier leaked outside the slice")
     assert(got.forall { case (id, _) =>
@@ -398,7 +398,7 @@ class RetrievalSpec extends AnyFunSuite {
     // provably bites on each side
     val lexTop = Retrieval.bm25StoredTopK(Catalog.lexIndex(spark, dir),
       Catalog.lexStats(spark, dir), terms, 5).collect().map(_.getLong(0))
-    val denTop = Ann.ivfTopKFrom(Catalog.ivfFlat(spark, dir),
+    val denTop = Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
       Catalog.embeddings(spark, dir), 0L, 5).collect().map(_.getLong(0))
     val dead = (lexTop.take(1) ++ denTop.take(1)).distinct.toSeq
     val fusedM = Retrieval.rrfStoredMasked(Catalog.lexIndex(spark, dir),
@@ -412,9 +412,9 @@ class RetrievalSpec extends AnyFunSuite {
     val lexIds = Retrieval.bm25StoredTopKMasked(Catalog.lexIndex(spark, dir),
       Catalog.lexStats(spark, dir), dead.toDF("doc_id"), terms, 20)
       .collect().map(_.getLong(0)).toSet
-    val denIds = Ann.ivfTopKMaskedFrom(Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0L,
-      dead.toDF("vec_id"), 20).collect().map(_.getLong(0)).toSet
+    val denIds = Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
+      Catalog.embeddings(spark, dir), 0L, 20,
+      Ivf.Masked(dead.toDF("vec_id"))).collect().map(_.getLong(0)).toSet
     assert(fusedM.forall { case (id, _) =>
       lexIds.contains(id) || denIds.contains(id) })
   }
@@ -523,8 +523,8 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("emb_topk_filtered: label predicate pushed, results all carry it") {
-    val df = Ann.ivfTopKFilteredFrom(Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0, 3, 10)
+    val df = Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
+      Catalog.embeddings(spark, dir), 0, 10, Ivf.Label(3))
     val labels = Catalog.embeddings(spark, dir)
       .filter(col("label") === 3).select("vec_id")
       .collect().map(_.getLong(0)).toSet
