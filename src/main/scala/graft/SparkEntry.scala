@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.ast.CorrelateStmt
 import graft.exec.{CorrelateExec, QueryExec, SelectExec}
 import graft.ingest.Merge
-import graft.ml.{Ann, Ivf, IvfCodec, Multimodal, NearDup}
+import graft.ml.{Ann, Ivf, IvfCodec, Multimodal, NearDup, Retrieval}
 import graft.model.{Catalog, Tables}
 import graft.operators.{PostingAlgebra, TimeSeriesOps}
 import graft.operators.PostingAlgebra._
@@ -72,9 +72,11 @@ object SparkEntry {
     Catalog.dupClusters(s, dir, 0.6)
       .filter(col("doc_id") =!= col("cluster_id"))
 
-  private val DeadIdsSql: String =
-    s"""SELECT doc_id AS vec_id FROM (${graft.ml.Clusters.oracleSql(0.6)})
+  private val DeadDocsSql: String =
+    s"""SELECT doc_id FROM (${graft.ml.Clusters.oracleSql(0.6)})
        | WHERE doc_id <> cluster_id""".stripMargin.replaceAll("\\s+", " ")
+
+  private val DeadIdsSql: String = s"SELECT doc_id AS vec_id FROM ($DeadDocsSql)"
 
   /** The dense tiers' restrictions over the shared id space: the tombstone
     * mask above, and the lang=en metadata slice every filtered quantized
@@ -88,6 +90,21 @@ object SparkEntry {
 
   private val EnSliceSql: Ivf.Restrict[String] =
     Ivf.Allowed("SELECT doc_id AS vec_id FROM documents WHERE lang = 'en'")
+
+  /** The same two restrictions as one stored lexical/hybrid scope — the
+    * lang=en slice (sidecar ids, memoized slice stats) and/or the tombstone
+    * mask — and its DuckDB mirror. */
+  private def lexScope(s: SparkSession, dir: String, en: Boolean,
+      dead: Boolean): Retrieval.Scope[Retrieval.Slice, DataFrame] =
+    Retrieval.Scope(
+      Option.when(en)(Retrieval.Slice.lang(Catalog.docMeta(s, dir), "en",
+        Some(Catalog.metaStatsFolded(s, dir, "en")))),
+      Option.when(dead)(tombstoneLosers(s, dir)))
+
+  private def lexScopeSql(en: Boolean,
+      dead: Boolean): Retrieval.Scope[String, String] =
+    Retrieval.Scope(Option.when(en)(Retrieval.langSql("en")),
+      Option.when(dead)(DeadDocsSql))
 
   /** The literal batch's distinct term dictionary, derived driver-side from
     * the same BatchQueries constant the batch frame is built from — pushed
@@ -1253,13 +1270,13 @@ object SparkEntry {
     // BM25 keyword top-k — the scored generalization of the reference's
     // boolean keyword lookups; one corpus shuffle, 1-row stats broadcast
     "bm25_topk" -> ((s, dir) =>
-      graft.ml.Retrieval.bm25TopK(Catalog.documents(s, dir),
+      Retrieval.bm25TopK(Catalog.documents(s, dir),
         Seq("merge", "stream", "window"), 20)),
     // BM25 served FROM the stored inverted index (Catalog.lexIndex): the
     // term isin prunes the token-sorted store, stats fold from the
     // additive generations — corpus text never re-tokenized at query time
     "bm25_stored" -> ((s, dir) =>
-      graft.ml.Retrieval.bm25StoredTopK(Catalog.lexIndex(s, dir),
+      Retrieval.bm25StoredTopK(Catalog.lexIndex(s, dir),
         Catalog.lexStatsFolded(s, dir), Seq("hash", "join", "filter"), 15)),
     // streamed upkeep of the inverted index: new docs through the same
     // stateless projection, == the batch index (the text twin of
@@ -1281,7 +1298,7 @@ object SparkEntry {
     // streamed-then-compacted generation through the flipped MANIFEST,
     // with the term isin still reaching the generation scan as a pushed In
     "bm25_topk_gen" -> ((s, dir) =>
-      graft.ml.Retrieval.bm25StoredTopK(
+      Retrieval.bm25StoredTopK(
         graft.streaming.DocumentsIngest.compactedLexOnce(s, dir,
           Catalog.scratch(dir, "bm25_topk_gen")),
         Catalog.lexStatsFolded(s, dir), Seq("hash", "join", "filter"), 15)),
@@ -1294,7 +1311,7 @@ object SparkEntry {
     // pass (the term-bounded tf scan)
     "bm25_topk_batch" -> ((s, dir) => {
       import s.implicits._
-      graft.ml.Retrieval.bm25TopKBatch(Catalog.documents(s, dir),
+      Retrieval.bm25TopKBatch(Catalog.documents(s, dir),
         BatchQueries.toDF("qid", "terms"), 5,
         stats = Some(Catalog.lexStatsFolded(s, dir)),
         termDict = BatchTermDict)
@@ -1303,7 +1320,7 @@ object SparkEntry {
     // term dictionary by a bounded broadcast semi-join, no re-tokenization
     "bm25_stored_batch" -> ((s, dir) => {
       import s.implicits._
-      graft.ml.Retrieval.bm25StoredTopKBatch(Catalog.lexIndex(s, dir),
+      Retrieval.bm25StoredTopKBatch(Catalog.lexIndex(s, dir),
         Catalog.lexStatsFolded(s, dir), BatchQueries.toDF("qid", "terms"), 5,
         termDict = BatchTermDict)
     }),
@@ -1312,31 +1329,33 @@ object SparkEntry {
     // reaches the documents scan pushed; candidates, df and stats all come
     // from the slice (the per-language-index semantics)
     "bm25_topk_filtered" -> ((s, dir) =>
-      graft.ml.Retrieval.bm25TopKFiltered(Catalog.documents(s, dir),
-        Seq("merge", "stream", "window"), 10, "en")),
+      Retrieval.bm25TopK(
+        Catalog.documents(s, dir).filter(col("lang") === "en"),
+        Seq("merge", "stream", "window"), 10)),
     // ...and FROM the stored index + metadata sidecar (Catalog.docMeta):
     // postings pruned by term then semi-joined to the slice's doc ids,
     // slice stats folded from the sidecar — corpus text never touched
     "bm25_stored_filtered" -> ((s, dir) =>
-      graft.ml.Retrieval.bm25StoredTopKFiltered(Catalog.lexIndex(s, dir),
-        Catalog.docMeta(s, dir), Seq("merge", "stream", "window"),
-        "en", 10, Some(Catalog.metaStatsFolded(s, dir, "en")))),
+      Retrieval.bm25StoredTopK(Catalog.lexIndex(s, dir),
+        Catalog.lexStatsFolded(s, dir), Seq("merge", "stream", "window"), 10,
+        lexScope(s, dir, en = true, dead = false))),
     // the filtered BATCH corners ({single,batch} × {corpus,stored} ×
     // filtered now closed): corpus-side composes the filter with the batch
     // operator; stored adds the slice semi-join to the batch store plan
     "bm25_topk_filtered_batch" -> ((s, dir) => {
       import s.implicits._
-      graft.ml.Retrieval.bm25TopKBatchFiltered(Catalog.documents(s, dir),
-        BatchQueries.toDF("qid", "terms"), 5, "en",
+      Retrieval.bm25TopKBatch(
+        Catalog.documents(s, dir).filter(col("lang") === "en"),
+        BatchQueries.toDF("qid", "terms"), 5,
         stats = Some(Catalog.metaStatsFolded(s, dir, "en")),
         termDict = BatchTermDict)
     }),
     "bm25_stored_filtered_batch" -> ((s, dir) => {
       import s.implicits._
-      graft.ml.Retrieval.bm25StoredTopKBatchFiltered(Catalog.lexIndex(s, dir),
-        Catalog.docMeta(s, dir), BatchQueries.toDF("qid", "terms"), "en", 5,
+      Retrieval.bm25StoredTopKBatch(Catalog.lexIndex(s, dir),
+        Catalog.lexStatsFolded(s, dir), BatchQueries.toDF("qid", "terms"), 5,
         termDict = BatchTermDict,
-        sliceStats = Some(Catalog.metaStatsFolded(s, dir, "en")))
+        scope = lexScope(s, dir, en = true, dead = false))
     }),
     // sidecar upkeep: new documents stream through the SAME stateless
     // projection the batch sidecar build uses and append — every stored
@@ -1348,22 +1367,18 @@ object SparkEntry {
     // df/stats stay those of the stored index (the deleted-docs contract
     // of every segment-based engine; the reference's summary-override
     // posture applied to retrieval)...
-    "bm25_masked_serve" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.Retrieval.bm25StoredTopKMasked(Catalog.lexIndex(s, dir),
-        Catalog.lexStatsFolded(s, dir),
-        tombstoneLosers(s, dir),
-        Seq("stream", "table", "scan"), 15)
-    }),
+    "bm25_masked_serve" -> ((s, dir) =>
+      Retrieval.bm25StoredTopK(Catalog.lexIndex(s, dir),
+        Catalog.lexStatsFolded(s, dir), Seq("stream", "table", "scan"), 15,
+        lexScope(s, dir, en = false, dead = true))),
     // ...and the REBUILD end: the physically deduped corpus re-scored, so
     // df/avgdl reflect the clean corpus — what a tombstone-folding
     // compaction serves
-    "bm25_clean_rebuild" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.Retrieval.bm25CleanRebuild(Catalog.documents(s, dir),
-        tombstoneLosers(s, dir),
-        Seq("stream", "table", "scan"), 15)
-    }),
+    "bm25_clean_rebuild" -> ((s, dir) =>
+      Retrieval.bm25TopK(Catalog.documents(s, dir)
+          .join(tombstoneLosers(s, dir).select("doc_id"), Seq("doc_id"),
+            "left_anti"),
+        Seq("stream", "table", "scan"), 15)),
     // the DENSE end of the delete lifecycle (VERDICT r15 #4): the same
     // tombstone set (shared doc/vec id space) anti-joins the IVF probed
     // candidates — deletes that masked only the lexical tier would serve
@@ -1376,7 +1391,6 @@ object SparkEntry {
     // identically (cosine carries no corpus stats, so masked == compacted
     // exactly — AnnIndexSpec pins it)
     "ann_tombstone_compact" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       graft.ml.Ann.ivfTombstoneCompactServe(s, Catalog.ivfFlat(s, dir),
         Catalog.embeddings(s, dir), 0L,
         tombstoneLosers(s, dir).select(col("doc_id").as("vec_id")),
@@ -1386,42 +1400,38 @@ object SparkEntry {
     // of one fusion — masking only one side would fuse a ranking that
     // still holds the deleted doc with one that doesn't (the
     // inconsistency the dense lifecycle exists to prevent)
-    "rrf_stored_masked" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      graft.ml.Retrieval.rrfStoredMasked(Catalog.lexIndex(s, dir),
+    "rrf_stored_masked" -> ((s, dir) =>
+      Retrieval.rrfStored(Catalog.lexIndex(s, dir),
         Catalog.lexStatsFolded(s, dir), Catalog.embeddings(s, dir),
-        Catalog.ivfFlat(s, dir),
-        tombstoneLosers(s, dir),
-        Seq("stream", "table", "scan"), 0L, 20, 10)
-    }),
+        Catalog.ivfFlat(s, dir), Seq("stream", "table", "scan"), 0L, 20, 10,
+        lexScope(s, dir, en = false, dead = true))),
     // the filtered stored HYBRID: both tiers restricted to the same
     // metadata slice of the shared id space, fused k-bounded — the
     // filtered-search shape every deployed retrieval stack exposes
     "rrf_stored_filtered" -> ((s, dir) =>
-      graft.ml.Retrieval.rrfStoredFiltered(Catalog.lexIndex(s, dir),
-        Catalog.docMeta(s, dir), Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir), Seq("merge", "stream", "window"),
-        0L, "en", 20, 10, Some(Catalog.metaStatsFolded(s, dir, "en")))),
+      Retrieval.rrfStored(Catalog.lexIndex(s, dir),
+        Catalog.lexStatsFolded(s, dir), Catalog.embeddings(s, dir),
+        Catalog.ivfFlat(s, dir), Seq("merge", "stream", "window"), 0L, 20, 10,
+        lexScope(s, dir, en = true, dead = false))),
     // the serving lattice's last single-query cell: slice AND tombstone
     // mask composed on both tiers of one fusion — slice statistics,
     // pre-delete scoring, no deleted doc from either side
     "rrf_stored_filtered_masked" -> ((s, dir) =>
-      graft.ml.Retrieval.rrfStoredFilteredMasked(Catalog.lexIndex(s, dir),
-        Catalog.docMeta(s, dir), Catalog.ivfFlat(s, dir),
-        Catalog.embeddings(s, dir), tombstoneLosers(s, dir),
-        Seq("merge", "stream", "window"), 0L, "en", 20, 10,
-        Some(Catalog.metaStatsFolded(s, dir, "en")))),
+      Retrieval.rrfStored(Catalog.lexIndex(s, dir),
+        Catalog.lexStatsFolded(s, dir), Catalog.embeddings(s, dir),
+        Catalog.ivfFlat(s, dir), Seq("merge", "stream", "window"), 0L, 20, 10,
+        lexScope(s, dir, en = true, dead = true))),
     // hybrid retrieval: reciprocal-rank fusion of the BM25 ranking and the
     // exact embedding-cosine ranking for the same query (id spaces shared)
     "rrf_fusion" -> ((s, dir) =>
-      graft.ml.Retrieval.rrfFusion(Catalog.documents(s, dir),
+      Retrieval.rrfFusion(Catalog.documents(s, dir),
         Catalog.embeddings(s, dir), Seq("merge", "stream", "window"),
         0L, 20, 10)),
     // the same hybrid query served ENTIRELY from stored indexes (lexIndex
     // postings + IVF cell probes) — the deployed serving shape: nothing
     // corpus-sized is touched at query time
     "rrf_stored" -> ((s, dir) =>
-      graft.ml.Retrieval.rrfStored(Catalog.lexIndex(s, dir),
+      Retrieval.rrfStored(Catalog.lexIndex(s, dir),
         Catalog.lexStatsFolded(s, dir), Catalog.embeddings(s, dir),
         Catalog.ivfFlat(s, dir), Seq("merge", "stream", "window"),
         0L, 20, 10)),
@@ -1429,8 +1439,7 @@ object SparkEntry {
     // fusion in ONE plan — the full hybrid serving matrix closed
     "rrf_stored_batch" -> ((s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.functions.col
-      graft.ml.Retrieval.rrfStoredBatch(Catalog.lexIndex(s, dir),
+      Retrieval.rrfStoredBatch(Catalog.lexIndex(s, dir),
         Catalog.lexStatsFolded(s, dir), Catalog.ivfFlat(s, dir),
         BatchQueries.toDF("qid", "terms"),
         Catalog.embeddings(s, dir).filter(col("vec_id") < BatchMaxQid),
@@ -1441,13 +1450,12 @@ object SparkEntry {
     // lang=en ids, sub-corpus stats, fused per query (VERDICT r15 #3)
     "rrf_stored_filtered_batch" -> ((s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.functions.col
-      graft.ml.Retrieval.rrfStoredFilteredBatch(Catalog.lexIndex(s, dir),
-        Catalog.docMeta(s, dir), Catalog.ivfFlat(s, dir),
+      Retrieval.rrfStoredBatch(Catalog.lexIndex(s, dir),
+        Catalog.lexStatsFolded(s, dir), Catalog.ivfFlat(s, dir),
         BatchQueries.toDF("qid", "terms"),
         Catalog.embeddings(s, dir).filter(col("vec_id") < BatchMaxQid),
-        "en", 20, 10, termDict = BatchTermDict,
-        sliceStats = Some(Catalog.metaStatsFolded(s, dir, "en")))
+        20, 10, termDict = BatchTermDict,
+        scope = lexScope(s, dir, en = true, dead = false))
     }),
     "text_quality" -> ((s, dir) =>
       graft.ml.TextAnalysis.quality(Catalog.documents(s, dir))),
@@ -1593,14 +1601,12 @@ object SparkEntry {
     // the stored index — zero per-query driver round-trips, the bulk
     // lookup twin of emb_topk_lsh (as emb_topk_ivf_batch is to emb_topk_ivf)
     "emb_topk_lsh_batch" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       Ann.topKBatch(Catalog.embeddings(s, dir), Catalog.annBuckets(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
     }),
     // batched multi-probe: each query row derives its 2L keys in-plan
     // (margin argmin + bit flip as declarative expressions)
     "emb_topk_lsh_mp_batch" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       Ann.topKBatchMultiProbe(Catalog.embeddings(s, dir),
         Catalog.annBuckets(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
@@ -1690,14 +1696,12 @@ object SparkEntry {
     // zero per-query driver round-trips (the 100 TB serving shape; the
     // single-query entries above are the point-lookup shape)
     "emb_topk_ivf_batch" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       Ivf.topKBatch(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
     }),
     // the serving matrix's fourth corner: batched AND metadata-filtered —
     // same batch plan, label predicate pushed into the flat-store scan
     "emb_topk_filtered_batch" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       Ivf.topKBatch(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10,
         Ivf.Label(3))
@@ -1725,7 +1729,6 @@ object SparkEntry {
     // bites for every query) — the contrastive-training data op, all
     // in-plan over the stored IVF index
     "hardneg_mine" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       val queries = Catalog.embeddings(s, dir).filter(col("vec_id") < 32)
       val pairs = Catalog.dupPairs(s, dir, 0.6)
       val pos = pairs
@@ -1741,7 +1744,6 @@ object SparkEntry {
     // fewer-than-k filtered-serving contract; the fr slice at k=20
     // exercises the escalation at verify scale
     "emb_topk_adaptive" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       Ivf.topKAdaptive(IvfCodec.Flat, Catalog.ivfFlat(s, dir),
         Catalog.embeddings(s, dir), 0L, 20,
         Ivf.Allowed(Catalog.docMeta(s, dir).filter(col("lang") === "fr")
@@ -1773,7 +1775,6 @@ object SparkEntry {
         Catalog.embeddings(s, dir), 0, 10)),
     // batched PQ serving — the sq8_topk_batch shape over the 32x store
     "pq_topk_batch" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       Ivf.topKBatch(IvfCodec.Pq, Catalog.pqIvfStore(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
     }),
@@ -1827,7 +1828,6 @@ object SparkEntry {
     // batched residual-PQ serving — the pq_topk_batch shape with the
     // candidate's cell feeding the IVFADC reconstruction kernel
     "pqr_topk_batch" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       Ivf.topKBatch(IvfCodec.Pqr, Catalog.pqrIvfStore(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
     }),
@@ -1850,7 +1850,6 @@ object SparkEntry {
     // float corpus swapped for the 4x-smaller byte codes — bulk retrieval
     // (hard-negative mining, dedup-against-index) never inflating the store
     "sq8_topk_batch" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       Ivf.topKBatch(IvfCodec.Sq8, Catalog.sq8IvfStore(s, dir),
         Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
     }),
@@ -2547,79 +2546,66 @@ object SparkEntry {
     // same oracle as decontaminate BY DESIGN: the bloom prune is invisible
     // in the result, only in the plan
     "decontaminate_bloom" -> graft.ml.CorpusOps.decontaminateOracleSql(25L, 3),
-    "bm25_topk" -> graft.ml.Retrieval.bm25OracleSql(
+    "bm25_topk" -> Retrieval.bm25OracleSql(
       Seq("merge", "stream", "window"), 20),
-    "bm25_topk_batch" -> graft.ml.Retrieval.bm25BatchOracleSql(BatchQueries, 5),
+    "bm25_topk_batch" -> Retrieval.bm25BatchOracleSql(BatchQueries, 5),
     // stored batch computes the same scores from the index — shared oracle
     "bm25_stored_batch" ->
-      graft.ml.Retrieval.bm25BatchOracleSql(BatchQueries, 5),
+      Retrieval.bm25BatchOracleSql(BatchQueries, 5),
     // the stored path computes the same scores from the index, so it
     // shares the corpus-side oracle form
-    "bm25_stored" -> graft.ml.Retrieval.bm25OracleSql(
+    "bm25_stored" -> Retrieval.bm25OracleSql(
       Seq("hash", "join", "filter"), 15),
-    "lex_stream_index" -> graft.ml.Retrieval.lexOracleSql,
-    "lex_compact" -> graft.ml.Retrieval.lexOracleSql,
-    "lex_stats_stream" -> graft.ml.Retrieval.lexStatsOracleSql,
-    "bm25_topk_gen" -> graft.ml.Retrieval.bm25OracleSql(
+    "lex_stream_index" -> Retrieval.lexOracleSql,
+    "lex_compact" -> Retrieval.lexOracleSql,
+    "lex_stats_stream" -> Retrieval.lexStatsOracleSql,
+    "bm25_topk_gen" -> Retrieval.bm25OracleSql(
       Seq("hash", "join", "filter"), 15),
     // one oracle for BOTH filtered lexical paths (slice-equivalence is
     // the stored path's contract)
-    "bm25_topk_filtered" -> graft.ml.Retrieval.bm25FilteredOracleSql(
+    "bm25_topk_filtered" -> Retrieval.bm25FilteredOracleSql(
       Seq("merge", "stream", "window"), 10, "en"),
-    "bm25_stored_filtered" -> graft.ml.Retrieval.bm25FilteredOracleSql(
+    "bm25_stored_filtered" -> Retrieval.bm25FilteredOracleSql(
       Seq("merge", "stream", "window"), 10, "en"),
-    "bm25_topk_filtered_batch" -> graft.ml.Retrieval
-      .bm25BatchFilteredOracleSql(BatchQueries, 5, "en"),
-    "bm25_stored_filtered_batch" -> graft.ml.Retrieval
-      .bm25BatchFilteredOracleSql(BatchQueries, 5, "en"),
-    "meta_stream_index" -> graft.ml.Retrieval.metaOracleSql,
+    "bm25_topk_filtered_batch" -> Retrieval.bm25BatchOracleSql(BatchQueries,
+      5, lexScopeSql(en = true, dead = false)),
+    "bm25_stored_filtered_batch" -> Retrieval.bm25BatchOracleSql(BatchQueries,
+      5, lexScopeSql(en = true, dead = false)),
+    "meta_stream_index" -> Retrieval.metaOracleSql,
     // masked serving: full-corpus scoring chain, losers excluded in the
     // final predicate (pre-delete statistics by contract)
     // terms chosen so the mask BITES at sf0.01 (losers 178/290 rank in
     // the unmasked top-15 — a vacuous mask would pass on any bug)
-    "bm25_masked_serve" -> graft.ml.Retrieval.bm25OracleSql(
-      Seq("stream", "table", "scan"), 15, andWhere =
-        s"""AND doc_id NOT IN (SELECT doc_id FROM
-           | (${graft.ml.Clusters.oracleSql(0.6)})
-           | WHERE doc_id <> cluster_id)""".stripMargin
-          .replaceAll("\\s+", " ")),
+    "bm25_masked_serve" -> Retrieval.bm25OracleSql(
+      Seq("stream", "table", "scan"), 15, lexScopeSql(en = false, dead = true)),
     // rebuild: losers excised BEFORE the scoring chain, so df/avgdl are
     // the clean corpus's
-    "bm25_clean_rebuild" -> graft.ml.Retrieval.bm25OracleSql(
-      Seq("stream", "table", "scan"), 15, where =
-        s"""WHERE doc_id NOT IN (SELECT doc_id FROM
-           | (${graft.ml.Clusters.oracleSql(0.6)})
-           | WHERE doc_id <> cluster_id)""".stripMargin
-          .replaceAll("\\s+", " ")),
+    "bm25_clean_rebuild" -> Retrieval.bm25OracleSql(
+      Seq("stream", "table", "scan"), 15,
+      Retrieval.Scope(slice = Some(s"doc_id NOT IN ($DeadDocsSql)"))),
     // ONE oracle for both dense delete-lifecycle ends — identity across
     // the compaction flip IS the contract (cosine carries no corpus stats)
     "ann_masked_serve" -> Ivf.oracleSql(IvfCodec.Flat, 0L, 10,
       Ivf.Masked(DeadIdsSql)),
     "ann_tombstone_compact" -> Ivf.oracleSql(IvfCodec.Flat, 0L, 10,
       Ivf.Masked(DeadIdsSql)),
-    // DeadIdsSql aliases to vec_id; this oracle's dead CTE needs doc_id
-    "rrf_stored_masked" -> graft.ml.Retrieval.rrfStoredMaskedOracleSql(
-      Seq("stream", "table", "scan"), 0L,
-      s"""SELECT doc_id FROM (${graft.ml.Clusters.oracleSql(0.6)})
-         | WHERE doc_id <> cluster_id""".stripMargin
-        .replaceAll("\\s+", " "), 20, 10),
-    "rrf_stored_filtered" -> graft.ml.Retrieval.rrfStoredFilteredOracleSql(
-      Seq("merge", "stream", "window"), 0L, "en", 20, 10),
-    "rrf_stored_filtered_masked" ->
-      graft.ml.Retrieval.rrfStoredFilteredMaskedOracleSql(
-        Seq("merge", "stream", "window"), 0L, "en",
-        s"""SELECT doc_id FROM (${graft.ml.Clusters.oracleSql(0.6)})
-           | WHERE doc_id <> cluster_id""".stripMargin
-          .replaceAll("\\s+", " "), 20, 10),
-    "rrf_fusion" -> graft.ml.Retrieval.rrfOracleSql(
+    "rrf_stored_masked" -> Retrieval.rrfStoredOracleSql(
+      Seq("stream", "table", "scan"), 0L, 20, 10,
+      lexScopeSql(en = false, dead = true)),
+    "rrf_stored_filtered" -> Retrieval.rrfStoredOracleSql(
+      Seq("merge", "stream", "window"), 0L, 20, 10,
+      lexScopeSql(en = true, dead = false)),
+    "rrf_stored_filtered_masked" -> Retrieval.rrfStoredOracleSql(
+      Seq("merge", "stream", "window"), 0L, 20, 10,
+      lexScopeSql(en = true, dead = true)),
+    "rrf_fusion" -> Retrieval.rrfOracleSql(
       Seq("merge", "stream", "window"), 0L, 20, 10),
-    "rrf_stored" -> graft.ml.Retrieval.rrfStoredOracleSql(
+    "rrf_stored" -> Retrieval.rrfStoredOracleSql(
       Seq("merge", "stream", "window"), 0L, 20, 10),
-    "rrf_stored_batch" -> graft.ml.Retrieval.rrfStoredBatchOracleSql(
+    "rrf_stored_batch" -> Retrieval.rrfStoredBatchOracleSql(
       BatchQueries, BatchMaxQid, 20, 10),
-    "rrf_stored_filtered_batch" ->
-      graft.ml.Retrieval.rrfStoredFilteredBatchOracleSql(
-        BatchQueries, BatchMaxQid, "en", 20, 10),
+    "rrf_stored_filtered_batch" -> Retrieval.rrfStoredBatchOracleSql(
+      BatchQueries, BatchMaxQid, 20, 10, lexScopeSql(en = true, dead = false)),
     "text_quality" -> (s"""SELECT doc_id,
       len(string_split(text, ' ')) AS n_tokens,
       round((len(text) - (len(string_split(text, ' ')) - 1)) * 1.0 / len(string_split(text, ' ')), 4) AS mean_tok_len,

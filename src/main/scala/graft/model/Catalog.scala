@@ -77,15 +77,15 @@ object Catalog {
     Map("documents" -> 256L, "embeddings" -> 128L).withDefaultValue(16384L)
 
   /** Single-file parquet row count straight off the footer — a driver-side
-    * metadata pread, no Spark job. */
-  private def footerRows(spark: SparkSession, src: String): Long =
-    try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(src),
-        spark.sessionState.newHadoopConf())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    } catch { case _: Throwable => 0L }
+    * metadata pread, no Spark job. A read error propagates: a count read as
+    * 0 would silently change the persisted split count. */
+  private def footerRows(spark: SparkSession, src: String): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(src),
+      spark.sessionState.newHadoopConf())
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getRecordCount finally r.close()
+  }
 
   /** Source tables are RE-LAID at first use into a range-partitioned
     * multi-file copy — the reference's ca-load posture (ingest into the

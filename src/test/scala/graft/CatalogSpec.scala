@@ -20,6 +20,21 @@ class CatalogSpec extends AnyFunSuite {
     assert(e.getMessage.contains(dir), e.getMessage)
   }
 
+  test("an unreadable source footer raises instead of being re-laid") {
+    import TestSpark.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-footer").toString
+    // a tableKeys name whose file is not parquet: the footer row count that
+    // sizes the re-lay must fail loud, not read as 0 rows
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/documents.parquet"), "not parquet")
+    val e = intercept[Throwable](Catalog.table(spark, dir, "documents"))
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(_.getStackTrace.exists(
+      _.getMethodName.contains("footerRows"))),
+      s"the error must come from the footer read, got $e")
+  }
+
   test("benchBands sidecar equals the live bench-split band build, and the " +
       "fuzzy entry memoizes its probe frame per statement window") {
     import TestSpark.spark

@@ -53,7 +53,8 @@ object RetrievalProps extends Properties("Retrieval") {
           org.apache.spark.sql.functions.when(
             org.apache.spark.sql.functions.col("doc_id") % 3 === 0, "en")
             .otherwise("de"))
-      val got = Retrieval.bm25TopKFiltered(df, ts, 5, lang)
+      val got = Retrieval.bm25TopK(
+        df.filter(org.apache.spark.sql.functions.col("lang") === lang), ts, 5)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       got == Bm25Ref.topK(docs.filter(d => langOf(d._1) == lang), ts, 5)
     }

@@ -221,11 +221,12 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("filtered lexical: stored slice == corpus-side slice; meta-only plan") {
     val terms = Seq("merge", "stream", "window")
-    val stored = Retrieval.bm25StoredTopKFiltered(Catalog.lexIndex(spark, dir),
-      Catalog.docMeta(spark, dir), terms, "en", 10)
+    val stored = Retrieval.bm25StoredTopK(Catalog.lexIndex(spark, dir),
+      Catalog.lexStats(spark, dir), terms, 10, Retrieval.Scope(Some(
+        Retrieval.Slice.lang(Catalog.docMeta(spark, dir), "en"))))
     val got = stored.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val corpus = Retrieval.bm25TopKFiltered(Catalog.documents(spark, dir),
-      terms, 10, "en")
+    val corpus = Retrieval.bm25TopK(
+      Catalog.documents(spark, dir).filter(col("lang") === "en"), terms, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == corpus, "stored filtered slice diverged from corpus-side")
     assert(got.nonEmpty)
@@ -246,45 +247,23 @@ class RetrievalSpec extends AnyFunSuite {
   test("filtered batch: stored == corpus-side, and == filtered singles") {
     val queries = Seq(0L -> Seq("merge", "stream", "window"),
       1L -> Seq("hash", "join"))
-    val stored = Retrieval.bm25StoredTopKBatchFiltered(
-      Catalog.lexIndex(spark, dir), Catalog.docMeta(spark, dir),
-      queries.toDF("qid", "terms"), "en", 5)
+    val en = Retrieval.Scope(Some(
+      Retrieval.Slice.lang(Catalog.docMeta(spark, dir), "en")))
+    val stored = Retrieval.bm25StoredTopKBatch(Catalog.lexIndex(spark, dir),
+      Catalog.lexStats(spark, dir), queries.toDF("qid", "terms"), 5,
+      scope = en)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val corpus = Retrieval.bm25TopKBatchFiltered(
-      Catalog.documents(spark, dir), queries.toDF("qid", "terms"), 5, "en")
+    val corpus = Retrieval.bm25TopKBatch(
+      Catalog.documents(spark, dir).filter(col("lang") === "en"),
+      queries.toDF("qid", "terms"), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(stored == corpus)
     // each batch slice equals the single-query filtered lookup
     val singles = queries.flatMap { case (qid, ts) =>
-      Retrieval.bm25StoredTopKFiltered(Catalog.lexIndex(spark, dir),
-        Catalog.docMeta(spark, dir), ts, "en", 5).collect()
+      Retrieval.bm25StoredTopK(Catalog.lexIndex(spark, dir),
+        Catalog.lexStats(spark, dir), ts, 5, en).collect()
         .map(r => (qid, r.getLong(0), r.getDouble(1))) }.toSet
     assert(stored == singles)
-  }
-
-  test("rrfStoredFiltered: all hits in slice, ranks decompose per tier") {
-    val terms = Seq("merge", "stream", "window")
-    val df = Retrieval.rrfStoredFiltered(Catalog.lexIndex(spark, dir),
-      Catalog.docMeta(spark, dir), Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), terms, 0L, "en", 20, 10)
-    val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(got.nonEmpty)
-    val enIds = Catalog.docMeta(spark, dir).filter(col("lang") === "en")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(got.forall { case (id, _) => enIds.contains(id) },
-      "fused hit outside the metadata slice")
-    // every fused score decomposes into the two filtered tier rankings
-    val lexIds = Retrieval.bm25StoredTopKFiltered(Catalog.lexIndex(spark, dir),
-      Catalog.docMeta(spark, dir), terms, "en", 20)
-      .collect().map(_.getLong(0)).toSet
-    val denIds = Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0L, 20,
-      Ivf.Allowed(Catalog.docMeta(spark, dir).filter(col("lang") === "en")
-        .select(col("doc_id").as("vec_id"))))
-      .collect().map(_.getLong(0)).toSet
-    assert(denIds.subsetOf(enIds), "dense tier leaked outside the slice")
-    assert(got.forall { case (id, _) =>
-      lexIds.contains(id) || denIds.contains(id) })
   }
 
   test("tombstone mask: losers gone, pre-delete stats, rebuild re-scores") {
@@ -296,8 +275,9 @@ class RetrievalSpec extends AnyFunSuite {
       Catalog.lexStats(spark, dir), terms, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val dead = unmasked.take(2).map(_._1)
-    val masked = Retrieval.bm25StoredTopKMasked(Catalog.lexIndex(spark, dir),
-      Catalog.lexStats(spark, dir), dead.toDF("doc_id"), terms, 10)
+    val masked = Retrieval.bm25StoredTopK(Catalog.lexIndex(spark, dir),
+      Catalog.lexStats(spark, dir), terms, 10,
+      Retrieval.Scope(mask = Some(dead.toDF("doc_id"))))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // deleted docs vanish from results...
     assert(masked.map(_._1).toSet.intersect(dead.toSet).isEmpty)
@@ -308,8 +288,8 @@ class RetrievalSpec extends AnyFunSuite {
       unmaskedScores.get(id).forall(_ == s) })
     // the rebuild end re-scores: same tombstones excised before indexing,
     // clean-corpus df/avgdl — scores for survivors may legitimately move
-    val rebuilt = Retrieval.bm25CleanRebuild(Catalog.documents(spark, dir),
-      dead.toDF("doc_id"), terms, 10)
+    val rebuilt = Retrieval.bm25TopK(Catalog.documents(spark, dir)
+        .join(dead.toDF("doc_id"), Seq("doc_id"), "left_anti"), terms, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(rebuilt.map(_._1).toSet.intersect(dead.toSet).isEmpty)
     assert(rebuilt.nonEmpty)
@@ -389,93 +369,6 @@ class RetrievalSpec extends AnyFunSuite {
       }.toMap
       assert(got == want, s"trial $trial: $got vs $want")
     }
-  }
-
-  test("rrfStoredMasked: no tombstoned doc from either tier, decomposes") {
-    import spark.implicits._
-    val terms = Seq("merge", "stream", "window")
-    // tombstones drawn from BOTH tiers' unmasked top-n so the mask
-    // provably bites on each side
-    val lexTop = Retrieval.bm25StoredTopK(Catalog.lexIndex(spark, dir),
-      Catalog.lexStats(spark, dir), terms, 5).collect().map(_.getLong(0))
-    val denTop = Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0L, 5).collect().map(_.getLong(0))
-    val dead = (lexTop.take(1) ++ denTop.take(1)).distinct.toSeq
-    val fusedM = Retrieval.rrfStoredMasked(Catalog.lexIndex(spark, dir),
-      Catalog.lexStats(spark, dir), Catalog.embeddings(spark, dir),
-      Catalog.ivfFlat(spark, dir), dead.toDF("doc_id"), terms, 0L, 20, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(fusedM.nonEmpty)
-    assert(fusedM.map(_._1).toSet.intersect(dead.toSet).isEmpty,
-      "a tombstoned doc surfaced through the fusion")
-    // every fused hit decomposes into the two MASKED tier rankings
-    val lexIds = Retrieval.bm25StoredTopKMasked(Catalog.lexIndex(spark, dir),
-      Catalog.lexStats(spark, dir), dead.toDF("doc_id"), terms, 20)
-      .collect().map(_.getLong(0)).toSet
-    val denIds = Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0L, 20,
-      Ivf.Masked(dead.toDF("vec_id"))).collect().map(_.getLong(0)).toSet
-    assert(fusedM.forall { case (id, _) =>
-      lexIds.contains(id) || denIds.contains(id) })
-  }
-
-  test("rrfStoredFilteredMasked: degrades to filtered when nothing is dead, " +
-      "masks both tiers otherwise") {
-    import spark.implicits._
-    val terms = Seq("merge", "stream", "window")
-    def run(dead: Seq[Long]) = Retrieval.rrfStoredFilteredMasked(
-      Catalog.lexIndex(spark, dir), Catalog.docMeta(spark, dir),
-      Catalog.ivfFlat(spark, dir), Catalog.embeddings(spark, dir),
-      dead.toDF("doc_id"), terms, 0L, "en", 20, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // empty tombstones: bit-identical to the plain filtered hybrid
-    val plain = Retrieval.rrfStoredFiltered(Catalog.lexIndex(spark, dir),
-      Catalog.docMeta(spark, dir), Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), terms, 0L, "en", 20, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(run(Nil) == plain, "empty mask must be the identity")
-    // tombstones drawn from the unmasked filtered result so the mask bites
-    val dead = plain.take(2).map(_._1)
-    val masked = run(dead)
-    assert(masked.nonEmpty)
-    assert(masked.map(_._1).toSet.intersect(dead.toSet).isEmpty,
-      "a tombstoned doc surfaced through the filtered fusion")
-    // slice contract survives the mask: every hit is in the lang slice
-    val slice = Catalog.docMeta(spark, dir).filter(col("lang") === "en")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(masked.map(_._1).forall(slice.contains),
-      "a hit escaped the metadata slice")
-  }
-
-  test("rrfStoredFilteredBatch slice == single rrfStoredFiltered; store-only") {
-    val terms = Seq("merge", "stream", "window")
-    val queries = Seq(0L -> terms, 1L -> Seq("hash", "join"))
-    val bdf = Retrieval.rrfStoredFilteredBatch(Catalog.lexIndex(spark, dir),
-      Catalog.docMeta(spark, dir), Catalog.ivfFlat(spark, dir),
-      queries.toDF("qid", "terms"),
-      Catalog.embeddings(spark, dir).filter(col("vec_id") < 2),
-      "en", 20, 10)
-    // both qid slices against the single filtered hybrid (the
-    // rrfStoredBatch convention: one slice alone can mask a fusion window
-    // not partitioned by qid)
-    for ((qid, ts) <- queries) {
-      val slice = bdf.filter(col("qid") === qid).collect()
-        .map(r => (r.getLong(1), r.getDouble(2))).toSet
-      val single = Retrieval.rrfStoredFiltered(Catalog.lexIndex(spark, dir),
-        Catalog.docMeta(spark, dir), Catalog.ivfFlat(spark, dir),
-        Catalog.embeddings(spark, dir), ts, qid, "en", 20, 10).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(slice == single, s"qid $qid slice diverges from single path")
-    }
-    // every fused hit stays inside the metadata slice
-    val enIds = Catalog.docMeta(spark, dir).filter(col("lang") === "en")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(bdf.collect().forall(r => enIds.contains(r.getLong(1))),
-      "fused hit outside the metadata slice")
-    val p = bdf.queryExecution.executedPlan.toString
-    assert(p.contains("lex_index") && p.contains("ivf_flat") &&
-      p.contains("doc_meta") && !TestSpark.scansCorpusText(p),
-      s"filtered batched hybrid must read only the stored tiers:\n$p")
   }
 
   test("decontaminateBloom == decontaminate, bloom probe in the plan") {
