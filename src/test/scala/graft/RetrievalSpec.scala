@@ -342,6 +342,65 @@ class RetrievalSpec extends AnyFunSuite {
       s"batched hybrid must read only the stored tiers:\n$p")
   }
 
+  private def enScope = Retrieval.Scope(
+    Some(Retrieval.Slice.lang(Catalog.docMeta(spark, dir), "en")))
+
+  test("rrfStoredFiltered: all hits in slice, ranks decompose per tier") {
+    val terms = Seq("merge", "stream", "window")
+    val df = Retrieval.rrfStored(Catalog.lexIndex(spark, dir),
+      Catalog.lexStats(spark, dir), Catalog.embeddings(spark, dir),
+      Catalog.ivfFlat(spark, dir), terms, 0L, 20, 10, enScope)
+    val got = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(got.nonEmpty)
+    val enIds = Catalog.docMeta(spark, dir).filter(col("lang") === "en")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(got.forall { case (id, _) => enIds.contains(id) },
+      "fused hit outside the metadata slice")
+    // every fused score decomposes into the two filtered tier rankings
+    val lexIds = Retrieval.bm25StoredTopKFiltered(Catalog.lexIndex(spark, dir),
+      Catalog.docMeta(spark, dir), terms, "en", 20)
+      .collect().map(_.getLong(0)).toSet
+    val denIds = Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
+      Catalog.embeddings(spark, dir), 0L, 20,
+      Ivf.Allowed(Catalog.docMeta(spark, dir).filter(col("lang") === "en")
+        .select(col("doc_id").as("vec_id"))))
+      .collect().map(_.getLong(0)).toSet
+    assert(denIds.subsetOf(enIds), "dense tier leaked outside the slice")
+    assert(got.forall { case (id, _) =>
+      lexIds.contains(id) || denIds.contains(id) })
+  }
+
+  test("rrfStoredFilteredBatch slice == single rrfStoredFiltered; store-only") {
+    val terms = Seq("merge", "stream", "window")
+    val queries = Seq(0L -> terms, 1L -> Seq("hash", "join"))
+    val bdf = Retrieval.rrfStoredBatch(Catalog.lexIndex(spark, dir),
+      Catalog.lexStats(spark, dir), Catalog.ivfFlat(spark, dir),
+      queries.toDF("qid", "terms"),
+      Catalog.embeddings(spark, dir).filter(col("vec_id") < 2), 20, 10,
+      scope = enScope)
+    // both qid slices against the single filtered hybrid (the
+    // rrfStoredBatch convention: one slice alone can mask a fusion window
+    // not partitioned by qid)
+    for ((qid, ts) <- queries) {
+      val slice = bdf.filter(col("qid") === qid).collect()
+        .map(r => (r.getLong(1), r.getDouble(2))).toSet
+      val single = Retrieval.rrfStored(Catalog.lexIndex(spark, dir),
+        Catalog.lexStats(spark, dir), Catalog.embeddings(spark, dir),
+        Catalog.ivfFlat(spark, dir), ts, qid, 20, 10, enScope).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSet
+      assert(slice == single, s"qid $qid slice diverges from single path")
+    }
+    // every fused hit stays inside the metadata slice
+    val enIds = Catalog.docMeta(spark, dir).filter(col("lang") === "en")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(bdf.collect().forall(r => enIds.contains(r.getLong(1))),
+      "fused hit outside the metadata slice")
+    val p = bdf.queryExecution.executedPlan.toString
+    assert(p.contains("lex_index") && p.contains("ivf_flat") &&
+      p.contains("doc_meta") && !TestSpark.scansCorpusText(p),
+      s"filtered batched hybrid must read only the stored tiers:\n$p")
+  }
+
   test("fusion union-sum == full-outer coalesce reference (randomized)") {
     // The r16 fusion rewrite's claim: rrf(d) = Σ 1/(K+rank) as a union +
     // aggregation is BIT-identical to the former full-outer-join coalesce
