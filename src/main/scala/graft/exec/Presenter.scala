@@ -1,7 +1,8 @@
 package graft.exec
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.ast._
+import graft.functions.Funcs
 import graft.model.Tables
 import graft.parser.Printer
 
@@ -46,31 +47,17 @@ object Presenter {
   def errorEnvelope(message: String): String =
     s"""{"error":"${jsonEscape(String.valueOf(message))}"}"""
 
-  /** Strip outer braces from a JSON object body (query.cc:866-875). */
-  private def body(json: String): String =
-    if (json != null && json.startsWith("{") && json.endsWith("}"))
-      json.substring(1, json.length - 1)
-    else Option(json).getOrElse("")
-
-  /** QUERY → the JSON envelope. Rows come from QueryExec.rows (summary +
-    * override merge already applied; optional _header/_header_key columns). */
+  /** QUERY → the JSON envelope: the fetched page (QueryExec.fetch — summary
+    * + override merge, pct bands and headers already on each row) and the
+    * count from the same evaluation. */
   def queryJson(spark: SparkSession, t: Tables, stmt: QueryStmt): String = {
-    // ONE evaluation of the query: results() is cached, the count and the
-    // page both read the cached set (drained by execute()'s finally after
-    // the collect below materializes — VERDICT r4 #6).
-    val (res, compiled) = QueryExec.results(spark, t, stmt)
-    val cached = graft.util.Caches.track(res.cache())
-    val total = cached.count()
-    val df = QueryExec.rowsFrom(spark, t, stmt, cached, compiled)
-    val hasHeaders = df.columns.contains("_header")
-    val hasBands = df.columns.contains("pct5")
-    // Rank order: rows() preserves no order after the join; re-sort the page.
-    val page = df.orderBy(org.apache.spark.sql.functions.desc("score"),
-      org.apache.spark.sql.functions.asc("off")).collect()
-    val items = page.map { r =>
+    val pg = QueryExec.fetch(spark, t, stmt)
+    val hasHeaders = pg.schema.fieldNames.contains("_header")
+    val hasBands = pg.schema.fieldNames.contains("pct5")
+    val items = pg.rows.map { r =>
       val sb = new StringBuilder
       sb.append("\"_key\":\"").append(jsonEscape(r.getAs[String]("key"))).append('"')
-      val b = body(r.getAs[String]("json"))
+      val b = Funcs.jsonBody(r.getAs[String]("json"))
       if (b.nonEmpty) sb.append(',').append(b)
       // percentile bands render as the ca-dump value string — score then the
       // four pcts, space-joined %.9g (ca-dump.cc:168-199, HasPercentiles)
@@ -89,15 +76,12 @@ object Presenter {
     // The reference's printf structure emits "[{" … "}]" unconditionally, so
     // an EMPTY result set renders as [{}] — one empty object — not []
     // (query.cc:930-941). Replicated for envelope parity.
-    s"""{"result-count":$total,"result":[{${items.mkString("},\n{")}}]}"""
+    s"""{"result-count":${pg.total},"result":[{${items.mkString("},\n{")}}]}"""
   }
 
   /** QUERY KEYS FOR — one key per line in rank order (query.cc:809-828). */
   def queryKeys(spark: SparkSession, t: Tables, stmt: QueryStmt): String =
-    QueryExec.keysRanked(spark, t, stmt)
-      .orderBy(org.apache.spark.sql.functions.desc("score"),
-        org.apache.spark.sql.functions.asc("off"))
-      .collect().map(_.getAs[String]("key")).mkString("\n")
+    QueryExec.fetch(spark, t, stmt).rows.map(_.getString(0)).mkString("\n")
 
   /** SELECT → CSV: key,v1,…[,"json" with doubled quotes] (select.cc:133-152);
     * values print %.9g, NaN prints "nan". */

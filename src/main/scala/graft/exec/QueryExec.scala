@@ -2,7 +2,9 @@ package graft.exec
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import graft.ast._
 import graft.compiler.{Compiled, QueryCompiler}
 import graft.functions.{Funcs, Keywords}
@@ -86,108 +88,144 @@ object QueryExec {
     (res, compiled)
   }
 
-  /** The ranked page (off, score [, _header, _header_key]) — partial_sort by
-    * score desc + [OFFSET, OFFSET+LIMIT) slice, then bucket-header attachment
-    * for threshold queries. The bucket table is tiny and broadcast; the range
-    * join is a ≤#buckets-row nested-loop against the page only. */
-  def page(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame = {
-    val (res, _) = results(spark, t, stmt)
-    val pg = topK(res, stmt.limit, stmt.offset)
-    stmt.thresholds match {
-      case None => pg
-      case Some(th) =>
-        val (_, bs) = thresholdPlan(th)
-        val bdf = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            bs.map(b => Row(b.lo, b.hi, b.header, b.headerKey)), 1),
-          StructType(Seq(
-            StructField("lo", DoubleType), StructField("hi", DoubleType),
-            StructField("_header", StringType), StructField("_header_key", StringType))))
-        pg.join(broadcast(bdf),
-            pg("score") >= bdf("lo") && pg("score") < bdf("hi"), "inner")
-          .select(pg("off"), pg("score"), bdf("_header"), bdf("_header_key"))
-    }
+  /** A page on the driver: rows in rank order under `schema`, plus the
+    * statement's total match count ("result-count", query.cc:933). */
+  final case class Page(total: Long, schema: StructType, rows: Seq[Row]) {
+    def toDF(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Full result rows: page + `_key` + summary JSON with the override overlay
-    * (S6, query.cc:877-890) and S4 extra headers (query.cc:892-898) applied.
-    * Columns: off, score, key, json [, _header, _header_key]. */
-  /** The page is LIMIT-bounded — broadcast it into the summary join so a
-    * small page never shuffles the (much larger) summary table. */
-  private def pageHint(pg: DataFrame, stmt: QueryStmt): DataFrame =
-    if (stmt.limit >= 0 && stmt.limit + stmt.offset <= 100000) broadcast(pg)
-    else pg
+  /** (score DESC, off ASC) — topK's order, applied on the driver. Doubles
+    * compare as Spark sorts them: NaN above every value, -0.0 == 0.0,
+    * nulls after every score. */
+  private val rankOrder: Ordering[Row] = (a: Row, b: Row) => {
+    val (sa, sb) = (a.get(1), b.get(1))
+    val byScore =
+      if (sa == null || sb == null) (sa == null).compare(sb == null)
+      else {
+        val (x, y) = (sa.asInstanceOf[Double], sb.asInstanceOf[Double])
+        if (x == y) 0 else java.lang.Double.compare(y, x)
+      }
+    if (byScore != 0) byScore else a.getLong(0).compare(b.getLong(0))
+  }
 
-  def rows(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame = {
+  private val CountMetric = "graft_result_count"
+
+  /** The ranked page (off, score [, pcts] [, _header, _header_key]) and the
+    * total count, from ONE evaluation of results() with no cache — the
+    * reference builds `offsets` once, partial-sorts it and pages it
+    * (query.cc:726-807):
+    *  - a LIMIT that plans as TakeOrderedAndProject: the count is observed on
+    *    the result set beneath it, which runs once;
+    *  - otherwise — LIMIT -1, or a result set the optimizer knows fits the
+    *    page, whose limit it drops — the page is the whole set: collected
+    *    unsorted, ranked and sliced on the driver, and counted there. A count
+    *    observed under the global sort would double: the range partitioner's
+    *    sampling job runs the observed subtree a second time.
+    * Threshold headers are looked up in the constant bucket table. */
+  def page(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame =
+    ranked(spark, t, stmt)._1.toDF(spark)
+
+  /** page() on the driver, with the statement's compiled extra. */
+  private def ranked(spark: SparkSession, t: Tables, stmt: QueryStmt): (Page, Compiled) = {
     val (res, compiled) = results(spark, t, stmt)
-    rowsFrom(spark, t, stmt, res, compiled)
-  }
-
-  /** rows() on an ALREADY-BUILT results() pair — lets the presenter derive
-    * `result-count` and the page from ONE cached result set instead of
-    * evaluating the query twice (VERDICT r4 #6; the reference materializes
-    * `offsets` once, query.cc:726-807). */
-  private[graft] def rowsFrom(spark: SparkSession, t: Tables, stmt: QueryStmt,
-      res: DataFrame, compiled: graft.compiler.Compiled): DataFrame = {
-    val pg = pageHint(topK(res, stmt.limit, stmt.offset), stmt)
-    val withSumm = pg.join(t.summaries, Seq("off"), "inner")
-    val ovr = t.overrides.withColumnRenamed("json", "ovr_json")
-    var out = withSumm.join(ovr, Seq("key"), "left_outer")
-      .select(Seq(col("off"), col("score"), col("key"),
-        when(col("ovr_json").isNotNull, Funcs.jsonMerge(col("json"), col("ovr_json")))
-          .otherwise(col("json")).as("json")) ++
-        pctCols(pg).map(col): _*)
-    compiled.extra.foreach { e =>
-      out = out.join(e, Seq("off"), "left_outer")
-    }
-    stmt.thresholds match {
-      case None => out
-      // Single threshold value: [t, t) is empty — results() already limited
-      // the page to 0 rows; attach null header columns so the schema matches
-      // the populated-thresholds shape instead of crashing on bs.head
-      // (ADVICE r3; query.cc:775-776).
-      case Some(th) if thresholdPlan(th)._2.isEmpty =>
-        out.withColumn("_header", lit(null).cast(StringType))
-          .withColumn("_header_key", lit(null).cast(StringType))
+    val set = res.select((Seq("off", "score") ++ pctCols(res)).map(col): _*)
+    val top = topK(set.observe(CountMetric, count(lit(1))), stmt.limit, stmt.offset)
+    val (rows, total) =
+      if (stmt.limit >= 0 && top.queryExecution.sparkPlan.isInstanceOf[TakeOrderedAndProjectExec]) {
+        val rows = top.collect().toSeq
+        val n = top.queryExecution.observedMetrics.getOrElse(CountMetric,
+          throw new IllegalStateException(s"no observed result count for $stmt"))
+        (rows, n.getLong(0))
+      } else {
+        val all = set.collect()
+        val from = math.min(stmt.offset, Int.MaxValue).toInt
+        val until = if (stmt.limit < 0) all.length
+          else from + math.min(stmt.limit, all.length.toLong).toInt
+        (all.sorted(rankOrder).slice(from, until).toSeq, all.length.toLong)
+      }
+    val pg = stmt.thresholds match {
+      case None => Page(total, set.schema, rows)
       case Some(th) =>
         val (_, bs) = thresholdPlan(th)
-        val whenChain = bs.tail.foldLeft(
-          when(col("score") < bs.head.hi, bs.head.header)) { (acc, b) =>
-          acc.when(col("score") < b.hi, b.header)
+        val schema = StructType(set.schema.fields ++ headerFields)
+        Page(total, schema, rows.map { r =>
+          val b = bs.find(b => r.getDouble(1) < b.hi)
+          row(schema, r.toSeq ++ Seq(b.map(_.header).orNull, b.map(_.headerKey).orNull))
+        })
+    }
+    (pg, compiled)
+  }
+
+  private val headerFields = Seq(
+    StructField("_header", StringType), StructField("_header_key", StringType))
+
+  private def row(schema: StructType, values: Seq[Any]): Row =
+    new GenericRowWithSchema(values.toArray, schema)
+
+  /** Fetch `df`'s rows whose `k` is in `values`, grouped by `k` — empty
+    * without a job when there is nothing to look up. The In predicate
+    * reaches the parquet scan, so a key-range store reads only the pages
+    * holding those keys. */
+  private def seek(df: DataFrame, k: String, values: Seq[Any]): Map[Any, Seq[Row]] =
+    if (values.isEmpty) Map.empty
+    else df.filter(col(k).isin(values: _*)).collect().toSeq.groupBy(_.getAs[Any](k))
+
+  /** THE page fetch (query.cc:809-898), shared by the Shell (Presenter) and
+    * every QUERY entry: the page's summaries by `off IN (page offsets)`;
+    * then, unless keys-only, the overrides by `key IN (those keys)` and the
+    * S4 extra headers by `off IN (page offsets)`, merged on the page in rank
+    * order. A page offset with no summary row yields no row; an override
+    * merges its body into the summary's (query.cc:877-890).
+    * Columns: keys-only → (key); else off, score, key, json [, pcts]
+    * [, _header, _header_key] — threshold headers win over S4 headers. */
+  def fetch(spark: SparkSession, t: Tables, stmt: QueryStmt): Page = {
+    val (pg, compiled) = ranked(spark, t, stmt)
+    val offs = pg.rows.map(_.getLong(0)).distinct
+    val summ = seek(t.summaries.select("off", "key", "json"), "off", offs)
+    val docs = pg.rows.map(r => r -> summ.getOrElse(r.getLong(0), Nil))
+    if (stmt.keysOnly) {
+      val schema = StructType(Seq(StructField("key", StringType)))
+      Page(pg.total, schema,
+        docs.flatMap(_._2).map(d => row(schema, Seq(d.getString(1)))))
+    } else {
+      val ovr = seek(t.overrides.select("key", "json"), "key",
+        docs.flatMap(_._2).map(_.getString(1)).distinct)
+      val extra = compiled.extra.filter(_ => stmt.thresholds.isEmpty).map(e =>
+        seek(e.select("off", "_header", "_header_key"), "off", offs))
+      val pcts = pctCols(pg.schema)
+      val schema = StructType(
+        Seq(StructField("off", LongType), StructField("score", DoubleType),
+          StructField("key", StringType), StructField("json", StringType)) ++
+          pcts.map(StructField(_, DoubleType)) ++
+          (if (stmt.thresholds.isDefined || extra.isDefined) headerFields else Nil))
+      Page(pg.total, schema, docs.flatMap { case (r, ds) =>
+        val headers: Seq[Seq[Any]] = extra match {
+          case _ if stmt.thresholds.isDefined =>
+            Seq(Seq(r.getAs[String]("_header"), r.getAs[String]("_header_key")))
+          case Some(x) => x.get(r.getLong(0))
+            .fold(Seq(Seq[Any](null, null)))(_.map(h => Seq(h.getString(1), h.getString(2))))
+          case None => Seq(Nil)
         }
-        val keyChain = bs.tail.foldLeft(
-          when(col("score") < bs.head.hi, bs.head.headerKey)) { (acc, b) =>
-          acc.when(col("score") < b.hi, b.headerKey)
-        }
-        out.withColumn("_header", whenChain).withColumn("_header_key", keyChain)
+        for {
+          d <- ds
+          o <- ovr.get(d.getString(1))
+            .fold(Seq(Option.empty[String]))(_.map(o => Option(o.getString(1))))
+          h <- headers
+        } yield row(schema, Seq(r.getLong(0), r.get(1), d.getString(1),
+          o.fold(d.getString(2))(Funcs.jsonMerge(d.getString(2), _))) ++
+          pcts.map(r.getAs[Any]) ++ h)
+      })
     }
   }
+
+  /** Full result rows (the fetch) as a DataFrame. */
+  def rows(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame =
+    fetch(spark, t, stmt).toDF(spark)
 
   /** KEYS FOR — the page's document keys in rank order (query.cc:809-828). */
-  /** The page's document keys IN RANK ORDER (query.cc:809-828) — sorted
-    * here, not left to the consumer: the summaries join destroys the topK
-    * order, so an unsorted select would return partition-dependent order
-    * in breach of this contract (review finding, r19; Presenter.queryKeys
-    * applies the same (score DESC, off) order). */
   def keys(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame =
-    keysRanked(spark, t, stmt)
-      .orderBy(org.apache.spark.sql.functions.desc("score"),
-        org.apache.spark.sql.functions.asc("off"))
-      .select("key")
-
-  /** Keys with their rank columns (the join does not preserve order; the
-    * presenter re-sorts by them — query.cc:809-828 prints in rank order). */
-  def keysRanked(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame = {
-    val (res, _) = results(spark, t, stmt)
-    pageHint(topK(res, stmt.limit, stmt.offset), stmt)
-      .join(t.summaries, Seq("off"), "inner")
-      .select("off", "score", "key")
-  }
-
-  /** Total match count before paging — the envelope's "result-count"
-    * (query.cc:933). */
-  def resultCount(spark: SparkSession, t: Tables, stmt: QueryStmt): Long =
-    results(spark, t, stmt)._1.count()
+    fetch(spark, t, stmt).toDF(spark)
 
   /** Convenience: parse a statement string and return the page / keys /
     * rows DataFrame for it (the driver CORRECTNESS entry points — these go

@@ -45,16 +45,18 @@ object Funcs {
 
   /** C4 — JSON object merge by brace-stripping + comma-concat
     * (/root/reference/src/query.cc:866-890): bodies of both objects joined
-    * into one. Inputs may or may not carry outer braces — stripped only
-    * when BOTH are present (the Presenter.body convention; a '{'-prefixed
-    * but truncated value would otherwise silently lose its real last
-    * character — review finding, r19). */
-  def jsonBody(j: Column): Column =
-    when(j.startsWith("{") && j.endsWith("}"),
-      j.substr(lit(2), length(j) - 2)).otherwise(j)
+    * into one, on the driver over a fetched page. Inputs may or may not
+    * carry outer braces — stripped only when BOTH are present (a
+    * '{'-prefixed but truncated value would otherwise silently lose its
+    * real last character — review finding, r19). A null body is empty; a
+    * merge with a null side is null. */
+  def jsonBody(j: String): String =
+    if (j == null) ""
+    else if (j.startsWith("{") && j.endsWith("}")) j.substring(1, j.length - 1)
+    else j
 
-  def jsonMerge(a: Column, b: Column): Column =
-    concat(lit("{"), jsonBody(a), lit(","), jsonBody(b), lit("}"))
+  def jsonMerge(a: String, b: String): String =
+    if (a == null || b == null) null else s"{${jsonBody(a)},${jsonBody(b)}}"
 
   /** C8 — deterministic shard assignment for a string key. The reference uses
     * a private 64-bit hash (/root/reference/src/util.cc:195-210); the contract

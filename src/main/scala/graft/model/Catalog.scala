@@ -27,14 +27,15 @@ final case class Tables(
   * is the document id; scores are kept as Double end-to-end so the DuckDB
   * oracle computes bit-identical values.
   *
-  * Scale: the index is MATERIALIZED once per sf-dir as parquet partitioned by
-  * `key` and sorted by `off` within each partition (the T4 sorted-table
-  * invariant, /root/reference/src/table-backend-writeonce.cc:661-663). A leaf
-  * lookup `filter(key === k)` is then a partition-pruned read of one sorted
-  * file — the Spark analogue of the reference's SeekToKey block index
-  * (table-backend-writeonce.cc:594-636) — instead of a full scan of the fact
-  * tables. On a 1000-executor cluster the same layout holds with key-prefix
-  * partitions and bucketing by `off`.
+  * Scale: the index, the summaries and the overrides are MATERIALIZED once
+  * per sf-dir in a key-range layout (`writeRanged`): files cut at key
+  * boundaries with disjoint [min, max] key ranges, rows sorted by key (the
+  * index then by `off`, the T4 sorted-table invariant,
+  * /root/reference/src/table-backend-writeonce.cc:661-663), and small
+  * parquet pages. A leaf lookup `filter(key === k)` then matches one file's
+  * statistics, and the page index narrows it to about one page — the Spark
+  * analogue of the reference's SeekToKey block index
+  * (table-backend-writeonce.cc:594-636) — instead of a full scan.
   */
 object Catalog {
 
@@ -126,7 +127,7 @@ object Catalog {
 
   /** Materialization cache. Versioned so a derivation change invalidates old
     * caches; lives inside the repo (the only writable area) and is gitignored. */
-  private val cacheVersion = "v12"
+  private val cacheVersion = "v13"
   /** Exposed for specs that assert the materialization landed on disk. */
   def cacheVersionTag: String = cacheVersion
   private def cacheRoot: String =
@@ -215,6 +216,60 @@ object Catalog {
         build.write.mode("overwrite").parquet(path)
     }
 
+  /** Rows per parquet data page in a range-laid store. The writer records
+    * each page's min/max in the page index, so a pushed key predicate reads
+    * about one page per matching key run instead of a whole row group. */
+  private val PageRows = 1000
+
+  /** Row budget of one range-laid file. A run of one key is never split, so
+    * a run longer than this gets a file of its own. */
+  private val RowsPerFile = 1L << 18
+
+  /** The file cut points of a range layout over column `k`: walk the exact
+    * per-value row counts in key order and start a new file before a value
+    * whose rows would take the current file past RowsPerFile. Exact counts
+    * (not the range partitioner's sample) make the cut points — and so the
+    * file count and every file's key range — a function of the rows alone,
+    * independent of session cores, shuffle partitions and input splits. */
+  private[model] def cutPoints(df: DataFrame, k: String): Seq[Any] = {
+    val cuts = Seq.newBuilder[Any]
+    var rows = 0L
+    df.groupBy(k).count().orderBy(k).collect().foreach { r =>
+      if (rows > 0 && rows + r.getLong(1) > RowsPerFile) {
+        cuts += r.get(0)
+        rows = 0L
+      }
+      rows += r.getLong(1)
+    }
+    cuts.result()
+  }
+
+  /** Write `df` as a key-range store at `path`: one file per cut-point
+    * range of `k`, rows sorted by `sortCols` within each file, parquet pages
+    * of PageRows rows. Files have disjoint [min, max] ranges of `k`, so a
+    * lookup's pushed predicate on `k` matches one file's statistics and the
+    * page index narrows it further. */
+  private[graft] def writeRanged(df: DataFrame, path: String, k: String,
+      sortCols: String*): Unit = {
+    val cuts = cutPoints(df, k)
+    val file = if (cuts.isEmpty) lit(0) else
+      cuts.indices.tail.foldLeft(when(col(k) < lit(cuts.head), 0)) { (w, i) =>
+        w.when(col(k) < lit(cuts(i)), i)
+      }.otherwise(cuts.size)
+    df.repartitionById(cuts.size + 1, file)
+      .sortWithinPartitions(sortCols.map(col): _*)
+      .write.option("parquet.page.row.count.limit", PageRows)
+      .mode("overwrite").parquet(path)
+  }
+
+  /** Materialize a key-range store (writeRanged) once. */
+  private def materializeRanged(path: String, k: String, sortCols: String*)(
+      build: => DataFrame): Unit =
+    synchronized {
+      if (!new java.io.File(s"$path/_SUCCESS").exists())
+        writeRanged(build, path, k, sortCols: _*)
+    }
+
   /** Materialize with a hive-style partition layout, so lookups joining on
     * the partition column get dynamic partition pruning. */
   private def materializeBy(path: String, parts: Seq[String])(
@@ -225,7 +280,10 @@ object Catalog {
     }
 
   /** The posting index: one row per (keyword, document, score), read from the
-    * materialized partitioned-by-key parquet (written on first use).
+    * materialized key-range store (written on first use; writeRanged: files
+    * cut at key boundaries, sorted by (key, off), 1k-row parquet pages).
+    * `key` stays a data column, so its min/max statistics serve pushdown: a
+    * `key === k` lookup matches one file and reads about one page of it.
     * Keyword classes mirror FIXTURES.md A.3:
     *  - boolean presence keywords (score 0): status:*, priority:*
     *  - continuous metrics: price, lineprice
@@ -234,16 +292,7 @@ object Catalog {
     */
   def index(spark: SparkSession, dir: String): DataFrame = {
     val path = cacheDir(dir, "index")
-    materialize(path) {
-      // One shuffle at build time: co-locate each key, sort by off (T4), so
-      // every per-key file is a sorted posting list. 12 keys → 12 partitions.
-      deriveIndex(spark, dir)
-        .repartition(col("key"))
-        .sortWithinPartitions("key", "off")
-    }
-    // The write above is .partitionBy-free: `key` stays a data column so its
-    // parquet dictionary + min/max stats serve pushdown, and the 1-file-per-
-    // key layout from repartition(key) gives pruning the same effect.
+    materializeRanged(path, "key", "key", "off")(deriveIndex(spark, dir))
     readImmutable(spark, path)
       .select("key", "off", "score", "pct5", "pct25", "pct75", "pct95")
   }
@@ -430,18 +479,15 @@ object Catalog {
     path
   }
 
-  /** Summary table: offset → (document key, JSON body), materialized
-    * RANGE-partitioned and sorted by `off` (/root/reference/README.md:24-27;
-    * fetch path src/query.cc:843-875). Range partitioning (not repartition(1),
-    * VERDICT r4 #4) keeps the build a parallel write and gives every file
-    * disjoint off min/max stats, so the page-fetch join can skip files — the
-    * Spark analogue of the reference's sorted seekable summary table. */
+  /** Summary table: offset → (document key, JSON body), materialized as a
+    * key-range store over `off` (writeRanged; /root/reference/README.md:24-27,
+    * fetch path src/query.cc:843-875). The page fetch filters it by
+    * `off IN (page offsets)`: the pushed predicate matches one file's off
+    * range and the page index reads about one page per offset — the Spark
+    * analogue of the reference's seek into the sorted summary table. */
   def summaries(spark: SparkSession, dir: String): DataFrame = {
     val path = cacheDir(dir, "summaries")
-    materialize(path) {
-      deriveSummaries(spark, dir)
-        .repartitionByRange(col("off")).sortWithinPartitions("off")
-    }
+    materializeRanged(path, "off", "off")(deriveSummaries(spark, dir))
     readImmutable(spark, path).select("off", "key", "json")
   }
 
@@ -486,9 +532,15 @@ object Catalog {
   /** Summary-override table: document key → JSON overlay, consulted per result
     * to overlay updated fields without rebuilding indexes
     * (/root/reference/README.md:38-49, src/query.cc:877-890). Derived: every
-    * 7th order is "archived" with its customer id attached. */
-  def overrides(spark: SparkSession, dir: String): DataFrame =
-    overrideRows(table(spark, dir, "orders"))
+    * 7th order is "archived" with its customer id attached. Materialized as
+    * a key-range store over `key` (writeRanged), so the page fetch's pushed
+    * `key IN (page keys)` reads about one page instead of deriving the
+    * overrides from a scan of `orders` per statement. */
+  def overrides(spark: SparkSession, dir: String): DataFrame = {
+    val path = cacheDir(dir, "overrides")
+    materializeRanged(path, "key", "key")(overrideRows(table(spark, dir, "orders")))
+    readImmutable(spark, path).select("key", "json")
+  }
 
   /** The override derivation as a pure projection over an orders relation —
     * shared by the batch table above and the streamed override ingest
@@ -542,10 +594,10 @@ object Catalog {
   def annBuckets(spark: SparkSession, dir: String): DataFrame = {
     val path = cacheDir(dir, "ann_buckets")
     materialize(path) {
-      // Same layout rationale as `index` above: repartition by bucket but
-      // keep bucket a DATA column, so each of the ~32 files covers a few
-      // buckets and the lookup's pushed In(bucket, ...) filter skips whole
-      // files via dictionary/min-max stats. A hive partitionBy("bucket")
+      // Repartition by bucket but keep bucket a DATA column: each file
+      // covers a few buckets, and the lookup's pushed In(bucket, ...) filter
+      // can skip a file whose bucket dictionary misses every probe key. A
+      // hive partitionBy("bucket")
       // layout (2^Bits × Tables = 256 directories of ~30 rows each) made
       // listing + footer reads dominate the lookup at bench scale.
       graft.ml.Ann.bucketIds(embeddings(spark, dir))

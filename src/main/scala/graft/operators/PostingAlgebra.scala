@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The cantera-table query algebra (SURVEY §2.2-2.7) over posting DataFrames
   * with columns (off: Long, score: Double).
@@ -27,7 +28,8 @@ object PostingAlgebra {
     * Presence is schema-level (decided at plan time by the compiler, per
     * keyword family); operators carry bands on the VALUE side — the side
     * whose element the reference copies into the result. */
-  def pctCols(df: DataFrame): Seq[String] = pctNames.filter(df.columns.contains)
+  def pctCols(df: DataFrame): Seq[String] = pctCols(df.schema)
+  def pctCols(schema: StructType): Seq[String] = pctNames.filter(schema.fieldNames.contains)
 
   private def p(df: DataFrame): DataFrame =
     df.select((postingCols ++ pctCols(df)).map(col): _*)

@@ -6,8 +6,8 @@ import graft.model.Catalog
 
 /** Plan-level scale audits: the predicates that make leaf lookups cheap at
   * 100 TB must actually reach the parquet scan (PushedFilters), and the page
-  * fetch must broadcast the bounded side. `.explain` shows the same facts a
-  * human audit reads; these pin them against regressions. */
+  * fetch must seek its stores by the page's keys. `.explain` shows the same
+  * facts a human audit reads; these pin them against regressions. */
 class PlanAuditSpec extends AnyFunSuite {
   import TestSpark.spark
 
@@ -15,6 +15,18 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** The plans a QUERY entry executed: the statement path evaluates its
+    * page and fetch eagerly and returns the page as a local frame. */
+  private def ranPlans(entry: String): Seq[String] =
+    TestSpark.executedPlans(SparkEntry.queries(entry)(spark, dir))._2
+
+  /** The PushedFilters of every scan in `plans` that reads the store
+    * named `store`. */
+  private def scansOf(plans: Seq[String], store: String): Seq[String] =
+    plans.flatMap(_.linesIterator).filter(l =>
+      l.contains("Scan parquet") && l.contains(s"/$store]"))
+      .map(l => l.substring(l.indexOf("PushedFilters:")))
 
   test("S1 leaf lookup pushes the key equality into the parquet scan") {
     val p = planOf(Catalog.index(spark, dir)
@@ -24,8 +36,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("band leaf reads only its columns plus the pct bands") {
-    val df = SparkEntry.queries("ql_pct_bands")(spark, dir)
-    val p = planOf(df)
+    val p = ranPlans("ql_pct_bands").mkString("\n")
     assert(p.contains("EqualTo(key,priceband)"), s"leaf filter not pushed:\n$p")
     // column pruning: the scan must not read `key` rows beyond the filter —
     // ReadSchema carries off/score/pcts only after pruning
@@ -41,10 +52,11 @@ class PlanAuditSpec extends AnyFunSuite {
   test("in-FIELD:PARAM contains-scan pushes its prefix (VERDICT r15 #7)") {
     // The S3 prefix+contains leaf is inherently a key sweep over one
     // prefix family, but the StartsWith conjunct must reach the parquet
-    // scan as a pushed filter: the 1-file-per-key index layout then skips
-    // every other key family via min/max stats — the 100× key dictionary
-    // is pruned, only the contains() check runs post-scan.
-    val p = planOf(SparkEntry.queries("ql_in_prefix")(spark, dir))
+    // scan as a pushed filter: in the key-range index layout (files cut at
+    // key boundaries, sorted by key, 1k-row pages) the min/max statistics
+    // of files and pages then skip every other key family — only the
+    // contains() check runs post-scan.
+    val p = ranPlans("ql_in_prefix").mkString("\n")
     assert(p.contains("StringStartsWith(key,priority)"),
       s"in-prefix leaf's StartsWith not pushed:\n$p")
   }
@@ -222,12 +234,36 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("multi-summary page fetch broadcasts the bounded page") {
-    val df = SparkEntry.queries("ql_multi_summary")(spark, dir)
-    val p = planOf(df)
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoop"),
-      s"page join not broadcast:\n$p")
-    assert(df.count() > 0)
+  test("page fetch seeks summaries by In(off) and overrides by In(key)") {
+    // the fetch filters each store by the collected page's keys: the
+    // predicate must reach the parquet scan, and no join may pull a whole
+    // store into the statement
+    for (entry <- Seq("ql_multi_summary", "ql_summaries", "s6_override",
+        "ql_keys_for")) {
+      val plans = ranPlans(entry)
+      val summ = scansOf(plans, "summaries")
+      assert(summ.nonEmpty && summ.forall(_.contains("In(off,")),
+        s"$entry: summaries not fetched by pushed In(off):\n${plans.mkString("\n")}")
+      assert(!plans.exists(p => p.contains("Join") && p.contains("/summaries]")),
+        s"$entry joins the summaries store:\n${plans.mkString("\n")}")
+      if (entry != "ql_keys_for") {
+        val ovr = scansOf(plans, "overrides")
+        assert(ovr.nonEmpty && ovr.forall(_.contains("In(key,")),
+          s"$entry: overrides not fetched by pushed In(key):\n${plans.mkString("\n")}")
+        assert(!plans.exists(_.contains("orders.parquet")) &&
+          !plans.exists(_.contains("/src_orders]")),
+          s"$entry re-derives the overrides from orders:\n${plans.mkString("\n")}")
+      }
+    }
+    // no QUERY statement scans all of summaries: every summaries scan
+    // pushes the page's offsets, or a KEY= leaf's key
+    for (entry <- SparkEntry.queries.keys.toSeq.sorted
+        if entry.startsWith("ql_") || entry == "s6_override") {
+      val plans = ranPlans(entry)
+      for (scan <- scansOf(plans, "summaries"))
+        assert(scan.contains("In(off,") || scan.contains("EqualTo(key,"),
+          s"$entry scans all of summaries:\n$scan")
+    }
   }
 
   test("multi-probe LSH pushes all 2L bucket keys into the stored-index " +

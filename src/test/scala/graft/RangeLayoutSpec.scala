@@ -1,0 +1,65 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.model.Catalog
+
+/** The key-range store layout (Catalog.writeRanged) on sf0.01: index files
+  * hold disjoint key ranges, a key lookup reads one page of one file, and
+  * the layout is a function of the rows alone. */
+class RangeLayoutSpec extends AnyFunSuite {
+  import TestSpark.spark
+
+  private val dir = "/root/testdata/sf0.01"
+
+  /** (min, max, rows) of `k` per file of `df`, in key order. */
+  private def fileRanges(df: DataFrame, k: String): Seq[(String, String, Long)] =
+    df.groupBy(input_file_name()).agg(min(k), max(k), count(lit(1))).collect()
+      .map(r => (r.get(1).toString, r.get(2).toString, r.getLong(3))).toSeq
+      .sortBy(_._1)
+
+  test("index files hold disjoint key ranges; a name: lookup reads one page") {
+    val idx = Catalog.index(spark, dir)
+    val ranges = fileRanges(idx, "key")
+    assert(ranges.size >= 2, s"expected a multi-file index at sf0.01: $ranges")
+    ranges.sliding(2).foreach { case Seq(a, b) =>
+      assert(a._2 < b._1, s"files overlap: $a and $b")
+    }
+    val key = "name:order7.com"
+    assert(ranges.count(r => r._1 <= key && key <= r._2) == 1)
+    val (rows, _, records) = TestSpark.jobsAndRecords(
+      idx.filter(col("key") === key).select("off").collect())
+    assert(rows.map(_.getLong(0)).toSeq == Seq(7L))
+    // one file matches the pushed key and its page index narrows the read
+    // to the page holding the key: 1k-row pages, never a whole file
+    assert(records <= 2000, s"a one-key lookup read $records records")
+  }
+
+  test("the range layout depends only on the rows, not on session " +
+      "parallelism or input splits") {
+    val base = java.nio.file.Files.createTempDirectory("graft-layout").toFile
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    def build(shuffle: String, split: String): Seq[(Int, Seq[(String, String, Long)])] =
+      try {
+        spark.conf.set(keys(0), shuffle)
+        spark.conf.set(keys(1), split)
+        Seq(
+          "index" -> Catalog.deriveIndex(spark, dir),
+          "overrides" -> Catalog.overrideRows(Catalog.table(spark, dir, "orders"))
+        ).map { case (name, df) =>
+          val path = s"$base/$name-$shuffle"
+          Catalog.writeRanged(df, path, "key", "key")
+          val files = new java.io.File(path).list().count(_.endsWith(".parquet"))
+          (files, fileRanges(spark.read.parquet(path), "key"))
+        }
+      } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val a = build("2", "1m")
+      val b = build("7", "64m")
+      assert(a.head._1 >= 2, s"expected a multi-file index at sf0.01: $a")
+      assert(a == b)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+  }
+}
