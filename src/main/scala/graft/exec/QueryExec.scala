@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.graft.InSetColumn
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import graft.ast._
 import graft.compiler.{Compiled, QueryCompiler}
@@ -14,9 +15,10 @@ import graft.parser.Printer
 
 /** Executes a parsed QUERY statement end-to-end — the Spark re-expression of
   * ca_schema_query (/root/reference/src/query.cc:726-948): compile the AST,
-  * final dedup (max), threshold join with score replacement, top-K paging,
-  * bucket-header synthesis, keys-only or summary+override fetch. The JSON
-  * envelope lives in Presenter.
+  * final dedup (max), threshold join with score replacement, top-K paging
+  * with the count from the same evaluation, bucket-header synthesis, and the
+  * page fetch by seek (keys-only, or summary + override + S4 headers). The
+  * JSON envelope lives in Presenter.
   */
 object QueryExec {
 
@@ -130,20 +132,22 @@ object QueryExec {
   private def ranked(spark: SparkSession, t: Tables, stmt: QueryStmt): (Page, Compiled) = {
     val (res, compiled) = results(spark, t, stmt)
     val set = res.select((Seq("off", "score") ++ pctCols(res)).map(col): _*)
-    val top = topK(set.observe(CountMetric, count(lit(1))), stmt.limit, stmt.offset)
-    val (rows, total) =
-      if (stmt.limit >= 0 && top.queryExecution.sparkPlan.isInstanceOf[TakeOrderedAndProjectExec]) {
+    val observed = Option.when(stmt.limit >= 0)(
+        topK(set.observe(CountMetric, count(lit(1))), stmt.limit, stmt.offset))
+      .filter(_.queryExecution.sparkPlan.isInstanceOf[TakeOrderedAndProjectExec])
+    val (rows, total) = observed match {
+      case Some(top) =>
         val rows = top.collect().toSeq
         val n = top.queryExecution.observedMetrics.getOrElse(CountMetric,
           throw new IllegalStateException(s"no observed result count for $stmt"))
         (rows, n.getLong(0))
-      } else {
+      case None =>
         val all = set.collect()
         val from = math.min(stmt.offset, Int.MaxValue).toInt
         val until = if (stmt.limit < 0) all.length
           else from + math.min(stmt.limit, all.length.toLong).toInt
         (all.sorted(rankOrder).slice(from, until).toSeq, all.length.toLong)
-      }
+    }
     val pg = stmt.thresholds match {
       case None => Page(total, set.schema, rows)
       case Some(th) =>
@@ -169,7 +173,7 @@ object QueryExec {
     * holding those keys. */
   private def seek(df: DataFrame, k: String, values: Seq[Any]): Map[Any, Seq[Row]] =
     if (values.isEmpty) Map.empty
-    else df.filter(col(k).isin(values: _*)).collect().toSeq.groupBy(_.getAs[Any](k))
+    else df.filter(InSetColumn(col(k), values)).collect().toSeq.groupBy(_.getAs[Any](k))
 
   /** THE page fetch (query.cc:809-898), shared by the Shell (Presenter) and
     * every QUERY entry: the page's summaries by `off IN (page offsets)`;
@@ -200,13 +204,11 @@ object QueryExec {
           pcts.map(StructField(_, DoubleType)) ++
           (if (stmt.thresholds.isDefined || extra.isDefined) headerFields else Nil))
       Page(pg.total, schema, docs.flatMap { case (r, ds) =>
-        val headers: Seq[Seq[Any]] = extra match {
-          case _ if stmt.thresholds.isDefined =>
+        val headers: Seq[Seq[Any]] =
+          if (stmt.thresholds.isDefined)
             Seq(Seq(r.getAs[String]("_header"), r.getAs[String]("_header_key")))
-          case Some(x) => x.get(r.getLong(0))
-            .fold(Seq(Seq[Any](null, null)))(_.map(h => Seq(h.getString(1), h.getString(2))))
-          case None => Seq(Nil)
-        }
+          else extra.fold(Seq(Seq.empty[Any]))(_.get(r.getLong(0))
+            .fold(Seq(Seq[Any](null, null)))(_.map(h => Seq(h.getString(1), h.getString(2)))))
         for {
           d <- ds
           o <- ovr.get(d.getString(1))
@@ -219,12 +221,9 @@ object QueryExec {
     }
   }
 
-  /** Full result rows (the fetch) as a DataFrame. */
+  /** The fetch as a DataFrame: full result rows, or for KEYS FOR the
+    * page's document keys in rank order (query.cc:809-828). */
   def rows(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame =
-    fetch(spark, t, stmt).toDF(spark)
-
-  /** KEYS FOR — the page's document keys in rank order (query.cc:809-828). */
-  def keys(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame =
     fetch(spark, t, stmt).toDF(spark)
 
   /** Convenience: parse a statement string and return the page / keys /
@@ -232,7 +231,7 @@ object QueryExec {
     * text → lexer → parser → compiler → executor). */
   def runPage(spark: SparkSession, t: Tables, text: String): DataFrame =
     graft.parser.Parser.parseStatement(text) match {
-      case q: QueryStmt if q.keysOnly => keys(spark, t, q)
+      case q: QueryStmt if q.keysOnly => rows(spark, t, q)
       case q: QueryStmt => page(spark, t, q)
       case s => throw new IllegalArgumentException(s"not a QUERY statement: $s")
     }
