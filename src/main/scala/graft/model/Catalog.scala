@@ -210,11 +210,14 @@ object Catalog {
     s"$cacheRoot/$cacheVersion/${new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")}-$fp/$name"
   }
 
-  private def materialize(path: String)(build: => DataFrame): Unit =
+  /** Run `write` unless the store at `path` is already complete. */
+  private def once(path: String)(write: => Unit): Unit =
     synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        build.write.mode("overwrite").parquet(path)
+      if (!new java.io.File(s"$path/_SUCCESS").exists()) write
     }
+
+  private def materialize(path: String)(build: => DataFrame): Unit =
+    once(path)(build.write.mode("overwrite").parquet(path))
 
   /** Rows per parquet data page in a range-laid store. The writer records
     * each page's min/max in the page index, so a pushed key predicate reads
@@ -231,7 +234,7 @@ object Catalog {
     * (not the range partitioner's sample) make the cut points — and so the
     * file count and every file's key range — a function of the rows alone,
     * independent of session cores, shuffle partitions and input splits. */
-  private[model] def cutPoints(df: DataFrame, k: String): Seq[Any] = {
+  private def cutPoints(df: DataFrame, k: String): Seq[Any] = {
     val cuts = Seq.newBuilder[Any]
     var rows = 0L
     df.groupBy(k).count().orderBy(k).collect().foreach { r =>
@@ -262,22 +265,11 @@ object Catalog {
       .mode("overwrite").parquet(path)
   }
 
-  /** Materialize a key-range store (writeRanged) once. */
-  private def materializeRanged(path: String, k: String, sortCols: String*)(
-      build: => DataFrame): Unit =
-    synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        writeRanged(build, path, k, sortCols: _*)
-    }
-
   /** Materialize with a hive-style partition layout, so lookups joining on
     * the partition column get dynamic partition pruning. */
   private def materializeBy(path: String, parts: Seq[String])(
       build: => DataFrame): Unit =
-    synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        build.write.mode("overwrite").partitionBy(parts: _*).parquet(path)
-    }
+    once(path)(build.write.mode("overwrite").partitionBy(parts: _*).parquet(path))
 
   /** The posting index: one row per (keyword, document, score), read from the
     * materialized key-range store (written on first use; writeRanged: files
@@ -292,7 +284,7 @@ object Catalog {
     */
   def index(spark: SparkSession, dir: String): DataFrame = {
     val path = cacheDir(dir, "index")
-    materializeRanged(path, "key", "key", "off")(deriveIndex(spark, dir))
+    once(path)(writeRanged(deriveIndex(spark, dir), path, "key", "key", "off"))
     readImmutable(spark, path)
       .select("key", "off", "score", "pct5", "pct25", "pct75", "pct95")
   }
@@ -431,13 +423,12 @@ object Catalog {
     * reproduce the price postings the oracle derives straight from orders. */
   def tsvFixture(spark: SparkSession, dir: String): String = {
     val path = cacheDir(dir, "tsv_price")
-    synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        table(spark, dir, "orders")
-          .select(concat_ws("\t", lit("price"),
-            concat(lit("order:"), col("o_orderkey")),
-            col("o_totalprice").cast("string")).as("value"))
-          .write.mode("overwrite").text(path)
+    once(path) {
+      table(spark, dir, "orders")
+        .select(concat_ws("\t", lit("price"),
+          concat(lit("order:"), col("o_orderkey")),
+          col("o_totalprice").cast("string")).as("value"))
+        .write.mode("overwrite").text(path)
     }
     path
   }
@@ -449,13 +440,12 @@ object Catalog {
     * and sat on the ANSI getItem trap). */
   def tsvSummariesFixture(spark: SparkSession, dir: String): String = {
     val path = cacheDir(dir, "tsv_summaries")
-    synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        summaries(spark, dir)
-          .select(concat_ws("\t",
-            graft.ingest.TsvLoader.escapeUdf(col("key")),
-            graft.ingest.TsvLoader.escapeUdf(col("json"))).as("value"))
-          .write.mode("overwrite").text(path)
+    once(path) {
+      summaries(spark, dir)
+        .select(concat_ws("\t",
+          graft.ingest.TsvLoader.escapeUdf(col("key")),
+          graft.ingest.TsvLoader.escapeUdf(col("json"))).as("value"))
+        .write.mode("overwrite").text(path)
     }
     path
   }
@@ -467,14 +457,13 @@ object Catalog {
     * is dropped by the text format, exactly like the reference's strptime. */
   def tsvTimeSeriesFixture(spark: SparkSession, dir: String): String = {
     val path = cacheDir(dir, "tsv_events")
-    synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
-        events(spark, dir)
-          .select(concat_ws("\t",
-            concat(lit("event:"), col("event_type")),
-            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
-            col("value").cast("string")).as("value"))
-          .write.mode("overwrite").text(path)
+    once(path) {
+      events(spark, dir)
+        .select(concat_ws("\t",
+          concat(lit("event:"), col("event_type")),
+          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
+          col("value").cast("string")).as("value"))
+        .write.mode("overwrite").text(path)
     }
     path
   }
@@ -487,7 +476,7 @@ object Catalog {
     * analogue of the reference's seek into the sorted summary table. */
   def summaries(spark: SparkSession, dir: String): DataFrame = {
     val path = cacheDir(dir, "summaries")
-    materializeRanged(path, "off", "off")(deriveSummaries(spark, dir))
+    once(path)(writeRanged(deriveSummaries(spark, dir), path, "off", "off"))
     readImmutable(spark, path).select("off", "key", "json")
   }
 
@@ -538,7 +527,7 @@ object Catalog {
     * overrides from a scan of `orders` per statement. */
   def overrides(spark: SparkSession, dir: String): DataFrame = {
     val path = cacheDir(dir, "overrides")
-    materializeRanged(path, "key", "key")(overrideRows(table(spark, dir, "orders")))
+    once(path)(writeRanged(overrideRows(table(spark, dir, "orders")), path, "key", "key"))
     readImmutable(spark, path).select("key", "json")
   }
 
