@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.graft.InSetColumn
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.ast._
 import graft.compiler.{Compiled, QueryCompiler}
 import graft.functions.{Funcs, Keywords}
@@ -167,13 +168,32 @@ object QueryExec {
   private def row(schema: StructType, values: Seq[Any]): Row =
     new GenericRowWithSchema(values.toArray, schema)
 
+  /** Pages up to this many keys seek by a pushed In; larger ones by range. */
+  private val SeekKeys = 1000
+
   /** Fetch `df`'s rows whose `k` is in `values`, grouped by `k` — empty
-    * without a job when there is nothing to look up. The In predicate
+    * without a job when there is nothing to look up. Up to SeekKeys values
+    * filter by `k IN (values)`; a larger page filters by the values' [min,
+    * max] range and keeps its members on the driver, because a pushed In
+    * costs every task work per value — at 50k page offsets it took longer
+    * than reading the whole summary table at sf0.1. Either predicate
     * reaches the parquet scan, so a key-range store reads only the pages
-    * holding those keys. */
-  private def seek(df: DataFrame, k: String, values: Seq[Any]): Map[Any, Seq[Row]] =
+    * the page's keys can be in. `order` must be Spark's order on `k`. */
+  private def seek[T](df: DataFrame, k: String, values: Seq[T])(
+      implicit order: Ordering[T]): Map[T, Seq[Row]] =
     if (values.isEmpty) Map.empty
-    else df.filter(InSetColumn(col(k), values)).collect().toSeq.groupBy(_.getAs[Any](k))
+    else {
+      val pred =
+        if (values.size <= SeekKeys) InSetColumn(col(k), values)
+        else col(k).between(values.min, values.max)
+      val wanted = values.toSet
+      df.filter(pred).collect().toSeq.map(r => r.getAs[T](k) -> r)
+        .filter(kv => wanted(kv._1)).groupMap(_._1)(_._2)
+    }
+
+  /** Spark's string order: UTF-8 bytes, unsigned. */
+  private val utf8Order: Ordering[String] =
+    Ordering.by[String, UTF8String](UTF8String.fromString)(_ compareTo _)
 
   /** THE page fetch (query.cc:809-898), shared by the Shell (Presenter) and
     * every QUERY entry: the page's summaries by `off IN (page offsets)`;
@@ -194,7 +214,7 @@ object QueryExec {
         docs.flatMap(_._2).map(d => row(schema, Seq(d.getString(1)))))
     } else {
       val ovr = seek(t.overrides.select("key", "json"), "key",
-        docs.flatMap(_._2).map(_.getString(1)).distinct)
+        docs.flatMap(_._2).map(_.getString(1)).distinct)(utf8Order)
       val extra = compiled.extra.filter(_ => stmt.thresholds.isEmpty).map(e =>
         seek(e.select("off", "_header", "_header_key"), "off", offs))
       val pcts = pctCols(pg.schema)

@@ -64,7 +64,9 @@ class QueryPathSpec extends AnyFunSuite {
     ("sample_within_limit", "QUERY RANDOM_SAMPLE(~'price' [-200000, -50000], 50) LIMIT 100;",
       "fa996371da2904e250d33449a46ab3110d1011f225ebbbfe9ebde03450a0d0bc"),
     ("sample_offset", "QUERY RANDOM_SAMPLE('status:F', 20) LIMIT 5 OFFSET 3;",
-      "d6c8b454bffd677e6131c7e237f430dfb64312ebb0dcddfe1e72b9337a3f35e6")
+      "d6c8b454bffd677e6131c7e237f430dfb64312ebb0dcddfe1e72b9337a3f35e6"),
+    ("large_page", "QUERY 'priceband' LIMIT -1;",
+      "b28bae41663aaeba6da7b7c8e3e685bd88b0d393a7385033bf94c77ef8a88429")
   )
 
   for ((name, text, want) <- cases)
