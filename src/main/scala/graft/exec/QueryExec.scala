@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
 import org.apache.spark.sql.graft.InSetColumn
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 import graft.ast._
 import graft.compiler.{Compiled, QueryCompiler}
 import graft.functions.{Funcs, Keywords}
@@ -120,6 +119,7 @@ object QueryExec {
     * (query.cc:726-807):
     *  - a LIMIT that plans as TakeOrderedAndProject: the count is observed on
     *    the result set beneath it, which runs once;
+    *  - LIMIT 0: the page is empty and the count runs on the executors;
     *  - otherwise — LIMIT -1, or a result set the optimizer knows fits the
     *    page, whose limit it drops — the page is the whole set: collected
     *    unsorted, ranked and sliced on the driver, and counted there. A count
@@ -133,22 +133,24 @@ object QueryExec {
   private def ranked(spark: SparkSession, t: Tables, stmt: QueryStmt): (Page, Compiled) = {
     val (res, compiled) = results(spark, t, stmt)
     val set = res.select((Seq("off", "score") ++ pctCols(res)).map(col): _*)
-    val observed = Option.when(stmt.limit >= 0)(
+    val observed = Option.when(stmt.limit > 0)(
         topK(set.observe(CountMetric, count(lit(1))), stmt.limit, stmt.offset))
       .filter(_.queryExecution.sparkPlan.isInstanceOf[TakeOrderedAndProjectExec])
-    val (rows, total) = observed match {
-      case Some(top) =>
-        val rows = top.collect().toSeq
-        val n = top.queryExecution.observedMetrics.getOrElse(CountMetric,
-          throw new IllegalStateException(s"no observed result count for $stmt"))
-        (rows, n.getLong(0))
-      case None =>
-        val all = set.collect()
-        val from = math.min(stmt.offset, Int.MaxValue).toInt
-        val until = if (stmt.limit < 0) all.length
-          else from + math.min(stmt.limit, all.length.toLong).toInt
-        (all.sorted(rankOrder).slice(from, until).toSeq, all.length.toLong)
-    }
+    val (rows, total) =
+      if (stmt.limit == 0) (Nil, set.count())
+      else observed match {
+        case Some(top) =>
+          val rows = top.collect().toSeq
+          val n = top.queryExecution.observedMetrics.getOrElse(CountMetric,
+            throw new IllegalStateException(s"no observed result count for $stmt"))
+          (rows, n.getLong(0))
+        case None =>
+          val all = set.collect()
+          val from = math.min(stmt.offset, Int.MaxValue).toInt
+          val until = if (stmt.limit < 0) all.length
+            else from + math.min(stmt.limit, all.length.toLong).toInt
+          (all.sorted(rankOrder).slice(from, until).toSeq, all.length.toLong)
+      }
     val pg = stmt.thresholds match {
       case None => Page(total, set.schema, rows)
       case Some(th) =>
@@ -168,32 +170,13 @@ object QueryExec {
   private def row(schema: StructType, values: Seq[Any]): Row =
     new GenericRowWithSchema(values.toArray, schema)
 
-  /** Pages up to this many keys seek by a pushed In; larger ones by range. */
-  private val SeekKeys = 1000
-
   /** Fetch `df`'s rows whose `k` is in `values`, grouped by `k` — empty
-    * without a job when there is nothing to look up. Up to SeekKeys values
-    * filter by `k IN (values)`; a larger page filters by the values' [min,
-    * max] range and keeps its members on the driver, because a pushed In
-    * costs every task work per value — at 50k page offsets it took longer
-    * than reading the whole summary table at sf0.1. Either predicate
+    * without a job when there is nothing to look up. The In predicate
     * reaches the parquet scan, so a key-range store reads only the pages
-    * the page's keys can be in. `order` must be Spark's order on `k`. */
-  private def seek[T](df: DataFrame, k: String, values: Seq[T])(
-      implicit order: Ordering[T]): Map[T, Seq[Row]] =
+    * holding those keys, and only the page's rows reach the driver. */
+  private def seek(df: DataFrame, k: String, values: Seq[Any]): Map[Any, Seq[Row]] =
     if (values.isEmpty) Map.empty
-    else {
-      val pred =
-        if (values.size <= SeekKeys) InSetColumn(col(k), values)
-        else col(k).between(values.min, values.max)
-      val wanted = values.toSet
-      df.filter(pred).collect().toSeq.map(r => r.getAs[T](k) -> r)
-        .filter(kv => wanted(kv._1)).groupMap(_._1)(_._2)
-    }
-
-  /** Spark's string order: UTF-8 bytes, unsigned. */
-  private val utf8Order: Ordering[String] =
-    Ordering.by[String, UTF8String](UTF8String.fromString)(_ compareTo _)
+    else df.filter(InSetColumn(col(k), values)).collect().toSeq.groupBy(_.getAs[Any](k))
 
   /** THE page fetch (query.cc:809-898), shared by the Shell (Presenter) and
     * every QUERY entry: the page's summaries by `off IN (page offsets)`;
@@ -214,7 +197,7 @@ object QueryExec {
         docs.flatMap(_._2).map(d => row(schema, Seq(d.getString(1)))))
     } else {
       val ovr = seek(t.overrides.select("key", "json"), "key",
-        docs.flatMap(_._2).map(_.getString(1)).distinct)(utf8Order)
+        docs.flatMap(_._2).map(_.getString(1)).distinct)
       val extra = compiled.extra.filter(_ => stmt.thresholds.isEmpty).map(e =>
         seek(e.select("off", "_header", "_header_key"), "off", offs))
       val pcts = pctCols(pg.schema)

@@ -1,6 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The table bundle every executor operates on — the Spark equivalent of the
@@ -224,27 +225,26 @@ object Catalog {
     * about one page per matching key run instead of a whole row group. */
   private val PageRows = 1000
 
-  /** Row budget of one range-laid file. A run of one key is never split, so
-    * a run longer than this gets a file of its own. */
+  /** Row budget of one range-laid file. A run of one key is never split:
+    * a value goes to the file its first row falls in, so a file holds at
+    * most RowsPerFile rows plus the rest of its last run. */
   private val RowsPerFile = 1L << 18
 
-  /** The file cut points of a range layout over column `k`: walk the exact
-    * per-value row counts in key order and start a new file before a value
-    * whose rows would take the current file past RowsPerFile. Exact counts
+  /** The file cut points of a range layout over column `k`: number the rows
+    * in key order, give each value the block of RowsPerFile rows its first
+    * row falls in, and cut before the first value of every block but the
+    * first. The running count runs on the executors over the exact
+    * per-value counts; only the cut points reach the driver. Exact counts
     * (not the range partitioner's sample) make the cut points — and so the
     * file count and every file's key range — a function of the rows alone,
     * independent of session cores, shuffle partitions and input splits. */
   private def cutPoints(df: DataFrame, k: String): Seq[Any] = {
-    val cuts = Seq.newBuilder[Any]
-    var rows = 0L
-    df.groupBy(k).count().orderBy(k).collect().foreach { r =>
-      if (rows > 0 && rows + r.getLong(1) > RowsPerFile) {
-        cuts += r.get(0)
-        rows = 0L
-      }
-      rows += r.getLong(1)
-    }
-    cuts.result()
+    val before = Window.orderBy(k).rowsBetween(Window.unboundedPreceding, -1)
+    df.groupBy(k).count()
+      .withColumn("block", floor(coalesce(sum("count").over(before), lit(0L)) / RowsPerFile))
+      .filter(col("block") > 0)
+      .groupBy("block").agg(min(k)).orderBy("block")
+      .collect().map(_.get(1)).toSeq
   }
 
   /** Write `df` as a key-range store at `path`: one file per cut-point

@@ -83,6 +83,45 @@ class QueryPathSpec extends AnyFunSuite {
       assert(sha256(out) == want, s"$text printed:\n$out")
     }
 
+  test("LIMIT 0 counts on the executors and collects no result rows") {
+    val t = tables
+    val (out, plans) = TestSpark.executedPlans(Presenter.execute(spark, t,
+      new Presenter.SessionState, stmt("QUERY 'status:F' LIMIT 0;")))
+    assert(out.contains("\"result-count\":"), out)
+    // every action is a global count: no plan returns the result set's rows
+    assert(plans.nonEmpty && plans.forall(_.contains("keys=[], functions=[count(")),
+      s"LIMIT 0 collected more than a count:\n${plans.mkString("\n")}")
+  }
+
+  test("a page of more than 1000 keys sparse over summaries collects only " +
+      "its own summary rows") {
+    val t = Catalog.tables(spark, "/root/testdata/sf0.01")
+    val s = stmt("QUERY 'status:F' LIMIT -1;")
+    val fetched = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        if (qe.executedPlan.toString.contains("/summaries]"))
+          qe.executedPlan.collectFirst {
+            case p if p.metrics.contains("numOutputRows") => p.metrics("numOutputRows").value
+          }.foreach(fetched.addAndGet)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val page =
+      try {
+        val page = QueryExec.fetch(spark, t, s)
+        org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+        page
+      } finally spark.listenerManager.unregister(l)
+    val offs = page.rows.map(_.getLong(0)).distinct
+    assert(offs.size > 1000, s"page of ${offs.size} offsets")
+    assert(offs.max - offs.min > 2 * offs.size, "page is not sparse")
+    assert(fetched.get == offs.size,
+      s"${offs.size} page offsets, ${fetched.get} summary rows collected")
+  }
+
   test("a warm lookup runs at most 4 jobs; KEYS FOR an OR at most 3") {
     val t = tables
     def run(text: String): Long = TestSpark.jobsAndRecords(
