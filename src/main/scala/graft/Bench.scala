@@ -144,10 +144,6 @@ object Bench {
     // deltas, bus-drained around each rep so they attribute exactly
     val counters = new graft.util.BenchCounters
     spark.sparkContext.addSparkListener(counters)
-    def snap(): graft.util.BenchCounters.Snap = {
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      counters.snapshot
-    }
 
     // Warmup: touch the hot paths once (ignore result + errors).
     for (w <- Seq("q1_pricing", "j2_and", "s1_keyword_leaf"))
@@ -169,7 +165,7 @@ object Bench {
       // loop releases them so nothing carries into the next query.
       spark.catalog.clearCache()
       val times = (1 to reps).map { _ =>
-        val c0 = snap()
+        val c0 = counters.drainedSnapshot(spark.sparkContext)
         counters.markWindow()
         val w0 = System.currentTimeMillis()
         val t0 = System.nanoTime()
@@ -179,7 +175,7 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
           }
         val wall = (System.nanoTime() - t0) / 1e9
-        val delta = snap() - c0
+        val delta = counters.drainedSnapshot(spark.sparkContext) - c0
         // driver-phase split (VERDICT r20 #2): wall = time-to-first-job +
         // job-span + tail; a stall with executors idle shows up as a
         // t_first_job or tail far above job-span, straight off the artifact

@@ -19,7 +19,7 @@ object PlanAudit {
         val docs = graft.model.Catalog.documents(spark, sfDir)
         val mid = 250L
         val write = graft.streaming.DocumentsIngest
-          .containPairBatchWriter(base, 0.9, 50)
+          .containAdmission(base, 0.9, 50)
         write(docs.filter(col("doc_id") < mid), 0L)
         write(docs.filter(col("doc_id") >= mid), 1L)
         graft.streaming.DocumentsIngest.containPairBatchFrame(spark, base,

@@ -9,7 +9,7 @@ import graft.ml.{Ann, Ivf, IvfCodec, Multimodal, NearDup, Retrieval}
 import graft.model.{Catalog, Tables}
 import graft.operators.{PostingAlgebra, TimeSeriesOps}
 import graft.operators.PostingAlgebra._
-import graft.streaming.EventsIngest
+import graft.streaming.{EmbeddingsIngest, EventsIngest, Sinks, Stores}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, each with equivalent DuckDB SQL in `oracleSql` (over the same
@@ -432,30 +432,31 @@ object SparkEntry {
         .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"), col("event_type"))
         .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_value"))
         .orderBy("day", "event_type")),
-    "ev_stream_daily" -> ((s, dir) => EventsIngest.dailyCountsOnce(s, dir)),
-    "ev_stream_dedup" -> ((s, dir) => EventsIngest.dedupDailyOnce(s, dir)),
+    "ev_stream_daily" -> ((s, dir) => Sinks.memory(s, Stores.DailyCounts, dir)),
+    "ev_stream_dedup" -> ((s, dir) => Sinks.memory(s, Stores.DedupDaily, dir)),
     // custom-state streaming (§2.10): flatMapGroupsWithState per-user
     // profile; final per-user update == the batch lifetime aggregate
-    "ev_user_profile" -> ((s, dir) => EventsIngest.userProfilesOnce(s, dir)),
+    "ev_user_profile" -> ((s, dir) => EventsIngest.finalProfiles(
+      Sinks.memory(s, Stores.UserProfiles, dir))),
     // stream-static enrichment: broadcast dimension join inside the stream
     // (stateless per micro-batch), then the stateful aggregate
-    "ev_stream_enrich" -> ((s, dir) => EventsIngest.enrichedOnce(s, dir)),
+    "ev_stream_enrich" -> ((s, dir) => Sinks.memory(s, Stores.Enriched, dir)),
     // billion-row-dim variant: NO broadcast — the stream shuffles against
     // the dimension per micro-batch (the shape when the dim outgrows an
     // executor); identical results, pinned by the same oracle
     "ev_stream_enrich_big" -> ((s, dir) =>
-      EventsIngest.enrichedShuffledOnce(s, dir)),
+      Sinks.memory(s, Stores.EnrichedShuffled, dir)),
     // stream-stream interval self-join (purchases × same-user trailing
     // views) — watermark + time-interval condition bound the join state
     "ev_stream_join" -> ((s, dir) =>
-      EventsIngest.intervalJoinOnce(s, dir)
+      Sinks.memory(s, Stores.IntervalJoin, dir)
         .select(col("user_id"), unix_micros(col("p_ts")).as("p_us"),
           unix_micros(col("v_ts")).as("v_us"))),
     // left-outer variant: unmatched purchases emit with null views once the
     // watermark proves no view can pair; both engines restrict to the
     // watermark-resolved region (2-day cutoff from max event time)
     "ev_stream_left_join" -> ((s, dir) =>
-      EventsIngest.intervalJoinLeftOnce(s, dir)
+      Sinks.memory(s, Stores.IntervalJoinLeft, dir)
         .crossJoin(broadcast(Catalog.events(s, dir).agg(max("ts").as("mx"))))
         .filter(col("p_ts") <= col("mx") - expr("interval 2 days"))
         .select(col("user_id"), unix_micros(col("p_ts")).as("p_us"),
@@ -711,28 +712,28 @@ object SparkEntry {
     // exact intersection, appended idempotently (b=<id> overwrite) —
     // the dedup_pairs_stream discipline for the containment tier
     "contain_pairs_stream" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.containPairsOnce(s, dir,
-        Catalog.scratch(dir, "contain_pairs_stream"), 0.9, 50)),
+      Sinks.folded(s, Stores.ContainPairs, dir,
+        Catalog.scratch(dir, "contain_pairs_stream"))),
     // generation fold of the streamed containment pair store (sorted
     // doc_a generation, MANIFEST flip) read back through the manifest
     "contain_pairs_compact" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.compactedContainPairsOnce(s, dir,
-        Catalog.scratch(dir, "contain_pairs_compact"), 0.9, 50)),
+      Sinks.compacted(s, Stores.ContainPairs, dir,
+        Catalog.scratch(dir, "contain_pairs_compact"))),
     // the shingle sketch's stream twin (Catalog.shingleSketch): new docs
     // stream through the SAME per-doc projection the batch build uses —
     // stateless, a doc's shingles complete within its micro-batch
     "shingle_stream_index" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.shingleSketchOnce(s, dir)),
+      Sinks.memory(s, Stores.ShingleSketch, dir)),
     // the (sh, df) sibling's stream twin: per-batch delta generations
     // via the SAME idempotent writer as winnow_stream_df, read = one fold
     "shingle_stream_df" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.shingleDfOnce(s, dir,
+      Sinks.folded(s, Stores.ShingleDf, dir,
         Catalog.scratch(dir, "shingle_df_stream"))),
     // generation compaction of the streamed shingle sketch (the
     // winnow_compact twin): small per-batch files folded into one sorted
     // sh-keyed generation behind the MANIFEST flip
     "shingle_compact" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.compactedShingleSketchOnce(s, dir,
+      Sinks.compacted(s, Stores.ShingleSketch, dir,
         Catalog.scratch(dir, "shingle_compact"))),
     // MOSS winnowing: substring-overlap candidates from the ~1/w-sized
     // fingerprint sketch (any shared run of >= k+w-1 tokens is guaranteed
@@ -752,12 +753,12 @@ object SparkEntry {
     // incremental sketch maintenance: new documents stream through the SAME
     // fingerprint pipeline the batch build uses and append — stateless
     "winnow_stream_index" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.sketchOnce(s, dir)),
+      Sinks.memory(s, Stores.WinnowSketch, dir)),
     // incremental df maintenance: each micro-batch appends its OWN (fp, df)
     // counts as a delta generation; the read is a sum over generations —
     // the stored sketch is never rescanned at ingest (VERDICT r9 #1)
     "winnow_stream_df" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.dfOnce(s, dir,
+      Sinks.folded(s, Stores.WinnowDf, dir,
         Catalog.scratch(dir, "winnow_df_stream"))),
     // always-on override refresh: new summary overrides stream through the
     // SAME derivation the batch table uses (Catalog.overrideRows) — the
@@ -765,13 +766,13 @@ object SparkEntry {
     // a stateless append sink; completes streamed ingest across all three
     // logical table types (index, summaries, overrides)
     "ovr_stream" -> ((s, dir) =>
-      graft.streaming.OverridesIngest.overridesOnce(s, dir)),
+      Sinks.memory(s, Stores.Overrides, dir)),
     // generation compaction: the streamed parquet sketch sink's small
     // per-batch files rewritten into one sorted fp-keyed generation
     // (Compact.compactIndex == reference merge.cc:120-184); content must
     // equal the batch-built sketch exactly
     "winnow_compact" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.compactedSketchOnce(s, dir,
+      Sinks.compacted(s, Stores.WinnowSketch, dir,
         Catalog.scratch(dir, "winnow_compact"))),
     // duplicate-cluster resolution: connected components over the verified
     // near-dup pair graph (pairwise output under-deletes transitive chains).
@@ -794,19 +795,19 @@ object SparkEntry {
     // table: per-batch band-store join + exact-Jaccard verify, appended —
     // must equal the batch MinHash pipeline exactly
     "dedup_pairs_stream" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.pairsOnce(s, dir,
-        Catalog.scratch(dir, "dup_pairs_stream"), 0.6)),
+      Sinks.folded(s, Stores.DupPairs, dir,
+        Catalog.scratch(dir, "dup_pairs_stream"))),
     // generation fold of the streamed pair store (sorted doc_a generation,
     // MANIFEST flip) read back through the manifest
     "dedup_pairs_compact" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.compactedPairsOnce(s, dir,
-        Catalog.scratch(dir, "dup_pairs_compact"), 0.6)),
+      Sinks.compacted(s, Stores.DupPairs, dir,
+        Catalog.scratch(dir, "dup_pairs_compact"))),
     // end-to-end lifecycle pin: components over the STREAM-admitted pair
     // store == the batch cluster table — streamed admission keeps the
     // stored clusters valid
     "dedup_clusters_stream" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.clustersOnce(s, dir,
-        Catalog.scratch(dir, "dup_clusters_stream"), 0.6)),
+      Sinks.folded(s, Stores.DupClusters, dir,
+        Catalog.scratch(dir, "dup_clusters_stream"))),
     // span-level exact-substring dedup (Lee et al.): cross-document repeated
     // W-token spans merged into maximal per-doc islands — the boilerplate/
     // license/template catch that doc-level near-dup cannot see
@@ -826,12 +827,12 @@ object SparkEntry {
     // incremental sketch maintenance: new documents stream through the
     // SAME shingle projection the batch build uses — stateless
     "span_stream_index" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.spanSketchOnce(s, dir)),
+      Sinks.memory(s, Stores.SpanSketch, dir)),
     // generation compaction of the streamed span sketch (winnow_compact
     // twin): small per-batch files folded into one sorted h-keyed
     // generation behind the flipped manifest
     "span_compact" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.compactedSpanSketchOnce(s, dir,
+      Sinks.compacted(s, Stores.SpanSketch, dir,
         Catalog.scratch(dir, "span_compact"))),
     // source-pair shingle overlap from the STORED sketch: the
     // cross-source syndication audit (between-sources complement of
@@ -920,18 +921,18 @@ object SparkEntry {
     "quality_stored" -> ((s, dir) =>
       graft.ml.Selection.qualityStored(Catalog.docScores(s, dir), 0.5)),
     // streamed upkeep of the score sidecar: the SAME stateless scoring
-    // projection as the batch store build (metaOnce convention)
+    // projection as the batch store build (the meta_stream_index shape)
     "score_stream_index" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.scoresOnce(s, dir)),
+      Sinks.memory(s, Stores.DocScores, dir)),
     // streamed DSIR scoring against the FROZEN stored ratio (the sq8
     // frozen-quantizer posture for importance weights)
     "dsir_stream_scores" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.dsirScoresOnce(s, dir)),
+      Sinks.memory(s, Stores.DsirScores, dir)),
     // generation compaction of the streamed score sidecar (lex_compact
     // twin): per-batch files folded into one source-sorted generation
     // behind the flipped manifest
     "score_compact" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.compactedScoresOnce(s, dir,
+      Sinks.compacted(s, Stores.DocScores, dir,
         Catalog.scratch(dir, "score_compact"))),
     // the composed curation statement: train split ∩ quality bar, then
     // the α=0.5 temperature draw over survivor counts — all sidecar-side
@@ -1059,12 +1060,12 @@ object SparkEntry {
     // incremental sidecar maintenance: new documents stream through the
     // SAME stateless chunk projection the batch build uses
     "cdc_stream_index" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.cdcChunksOnce(s, dir)),
+      Sinks.memory(s, Stores.CdcChunks, dir)),
     // generation compaction of the streamed chunk store (span_compact
     // twin): small per-batch files folded into one doc-sorted generation
     // behind the flipped manifest
     "cdc_compact" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.compactedCdcChunksOnce(s, dir,
+      Sinks.compacted(s, Stores.CdcChunks, dir,
         Catalog.scratch(dir, "cdc_compact"))),
     // CDC dedup SURGERY: keep each duplicate chunk's first (doc_id,
     // chunk_id) occurrence and rewrite trailing copies out of the text —
@@ -1088,7 +1089,7 @@ object SparkEntry {
     // streamed BPE accounting with the FROZEN learned merges (the
     // dsir_stream_scores posture for the tokenizer)
     "bpe_stream_tokens" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.bpeTokensOnce(s, dir)),
+      Sinks.memory(s, Stores.BpeTokens, dir)),
     // per-doc top-3 tf-idf terms over exact corpus document frequencies
     "tfidf_topterms" -> ((s, dir) =>
       graft.ml.CorpusOps.tfidfTopTerms(Catalog.documents(s, dir), 3)),
@@ -1106,7 +1107,8 @@ object SparkEntry {
     // streamed perplexity scoring: the same stream-static join against
     // the frozen model at ingest
     "lm_stream_scores" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.pplOnce(s, dir)),
+      graft.ml.CorpusOps.pplFold(
+        Sinks.memory(s, Stores.PplScored, dir))),
     // interpolated Kneser-Ney per-context parameters off the frozen store
     // (KenLM's smoothing family — the CCNet filter's actual model): one
     // aggregation of the model table, corpus never touched
@@ -1146,7 +1148,7 @@ object SparkEntry {
     // max IS the merge law; fold-to-estimate happens at read
     "sketch_hll_stream" -> ((s, dir) =>
       graft.ml.Sketches.hllFold(
-        graft.streaming.EventsIngest.hllRegistersOnce(s, dir))),
+        Sinks.memory(s, Stores.HllRegisters, dir))),
     // stored-sketch serving: the fold reads (types x 256) rows — the
     // serving cadence never re-touches the event volume
     "sketch_hll_stored" -> ((s, dir) =>
@@ -1156,13 +1158,13 @@ object SparkEntry {
     // (max is idempotent — replay-safe by algebra, not just layout)
     "sketch_hll_compact" -> ((s, dir) =>
       graft.ml.Sketches.hllFold(
-        graft.streaming.EventsIngest.hllCompactOnce(s, dir,
+        Sinks.compacted(s, Stores.HllDeltas, dir,
           Catalog.scratch(dir, "hll_compact")))),
     // the additive sibling: per-batch quantile-grid deltas sum-folded
     // into one generation; the fold must equal the batch report
     "sketch_hdr_compact" -> ((s, dir) =>
       graft.ml.Sketches.hdrQuantilesFrom(
-        graft.streaming.EventsIngest.hdrCompactOnce(s, dir,
+        Sinks.compacted(s, Stores.HdrDeltas, dir,
           Catalog.scratch(dir, "hdr_compact")))),
     // time-sliced quantiles: per-day grids (bounded state per day),
     // folded per (type, day) — daily latency/size percentiles
@@ -1190,7 +1192,7 @@ object SparkEntry {
     // sum-typed state), served by the same heavy-hitter join
     "sketch_cms_stream" -> ((s, dir) =>
       graft.ml.Sketches.cmsHeavyHittersFrom(Catalog.documents(s, dir),
-        graft.streaming.DocumentsIngest.cmsCountersOnce(s, dir), 40)),
+        Sinks.memory(s, Stores.CmsCells, dir), 40)),
     // log-linear quantile sketch (the HdrHistogram bucket law): exact
     // integer bit-length buckets keep the top 5 significant bits, so the
     // bounded mergeable grid answers any rank query within 1/16 relative
@@ -1202,7 +1204,7 @@ object SparkEntry {
     // (count addition IS the merge); quantile fold happens at read
     "sketch_hdr_stream" -> ((s, dir) =>
       graft.ml.Sketches.hdrQuantilesFrom(
-        graft.streaming.EventsIngest.hdrGridOnce(s, dir))),
+        Sinks.memory(s, Stores.HdrGrid, dir))),
     // stored-sketch serving: the fold reads the grid rows — the serving
     // cadence never re-touches the event volume
     "sketch_hdr_stored" -> ((s, dir) =>
@@ -1282,16 +1284,16 @@ object SparkEntry {
     // stateless projection, == the batch index (the text twin of
     // ann_stream_index for the lexical tier)
     "lex_stream_index" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.lexOnce(s, dir)),
+      Sinks.memory(s, Stores.LexIndex, dir)),
     // generation fold of the streamed index behind the flipped MANIFEST,
     // token-sorted so the pushed In(token) skip survives the swap
     "lex_compact" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.compactedLexOnce(s, dir,
+      Sinks.compacted(s, Stores.LexIndex, dir,
         Catalog.scratch(dir, "lex_compact"))),
     // additive stats generations: per-batch (n_docs, sum_dl) deltas folded
     // == the batch corpus statistics
     "lex_stats_stream" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.lexStatsOnce(s, dir,
+      Sinks.folded(s, Stores.LexStats, dir,
         Catalog.scratch(dir, "lex_stats_stream"))),
     // serving continuity across the generation swap (the sq8_topk_gen twin
     // for the lexical tier): the identical BM25 answered FROM the
@@ -1299,7 +1301,7 @@ object SparkEntry {
     // with the term isin still reaching the generation scan as a pushed In
     "bm25_topk_gen" -> ((s, dir) =>
       Retrieval.bm25StoredTopK(
-        graft.streaming.DocumentsIngest.compactedLexOnce(s, dir,
+        Sinks.compacted(s, Stores.LexIndex, dir,
           Catalog.scratch(dir, "bm25_topk_gen")),
         Catalog.lexStatsFolded(s, dir), Seq("hash", "join", "filter"), 15)),
     // BATCHED BM25 serving: a whole query table scored in one plan — the
@@ -1361,7 +1363,7 @@ object SparkEntry {
     // projection the batch sidecar build uses and append — every stored
     // table keeps its streamed twin
     "meta_stream_index" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.metaOnce(s, dir)),
+      Sinks.memory(s, Stores.DocMeta, dir)),
     // the no-reindex DELETE lifecycle over the retrieval stores: near-dup
     // cluster losers tombstone the candidates at serving time while
     // df/stats stay those of the stored index (the deleted-docs contract
@@ -1501,7 +1503,7 @@ object SparkEntry {
       Multimodal.dupCounts(Catalog.phashStore(s, dir))),
     // ...and the sidecar's streamed ingest twin (same stateless projection)
     "mm_phash_stream" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.phashOnce(s, dir)),
+      Sinks.memory(s, Stores.Phash, dir)),
     // Hamming-radius near-dup from the stored 63-bit composite hashes
     // (aHash ++ dHash): 4-band multi-index buckets (pigeonhole-total
     // recall at k<=3, ~15-bit bands keep buckets collision-sized) +
@@ -1533,7 +1535,7 @@ object SparkEntry {
     // the documents STREAM == the batch features — media is decoded once
     // at ingest, not per analysis query
     "mm_stream_features" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.mmFeaturesOnce(s, dir)),
+      Sinks.memory(s, Stores.MmFeatures, dir)),
     "mm_framesample" -> ((s, dir) =>
       Multimodal.frameSample(Catalog.documents(s, dir))),
     "mm_resize" -> ((s, dir) =>
@@ -1546,7 +1548,7 @@ object SparkEntry {
     // streamed JL-projection upkeep: the same constant-sign-matrix fold
     // at ingest (stateless)
     "proj_stream_index" -> ((s, dir) =>
-      graft.streaming.EmbeddingsIngest.projOnce(s, dir)),
+      Sinks.memory(s, Stores.Proj, dir)),
     // two-stage retrieval through the stored JL sketch: coarse cosine in
     // the 16-dim projected store, exact 64-dim rerank of the bounded
     // candidate set
@@ -1564,7 +1566,7 @@ object SparkEntry {
     // streamed audio energy: the same stateless exact-integer projection
     // at ingest
     "mm_stream_audio" -> ((s, dir) =>
-      graft.streaming.DocumentsIngest.audioOnce(s, dir)),
+      Sinks.memory(s, Stores.AudioEnergy, dir)),
     // storage-dedup rate over content-defined chunks: per-source chunk
     // instances vs distinct fingerprints — reads the stored sidecar plus
     // the (doc_id, source) projection; never re-chunks the text
@@ -1615,35 +1617,35 @@ object SparkEntry {
     // signature pipeline the batch build uses and append to the stored
     // bucket index — stateless, no shuffle
     "ann_stream_index" -> ((s, dir) =>
-      graft.streaming.EmbeddingsIngest.bucketsOnce(s, dir)),
+      Sinks.memory(s, Stores.AnnBuckets, dir)),
     // IVF cell upkeep: the coarse-quantizer assignment as a stateless
     // per-row projection (argmax over constant centroids folds into
     // array_max) — new vectors assign themselves on the way in
     "ivf_stream_index" -> ((s, dir) =>
-      graft.streaming.EmbeddingsIngest.cellsOnce(s, dir)),
+      Sinks.memory(s, Stores.IvfCells, dir)),
     // SQ8 composed-store upkeep: new embeddings encode through the FROZEN
     // quantizer (the store's shipped mn/scale constants) AND assign their
     // IVF cell in one stateless projection — the streamed twin of
     // Catalog.sq8IvfStore; exploded to scalar (vec_id, cell, pos, code)
     // so the oracle pins the byte codes element-wise
     "sq8_stream_index" -> ((s, dir) =>
-      explodeCodes(graft.streaming.EmbeddingsIngest.sq8Once(s, dir))),
+      explodeCodes(Sinks.memory(s, Stores.Sq8, dir))),
     // generation compaction of the streamed EMBEDDING indexes (the
     // winnow_compact twins — merge.cc folds ALL table types): small
     // per-batch files rewritten into one sorted generation, read back
     // through the flipped MANIFEST; content must equal the batch build
     "ann_compact" -> ((s, dir) =>
-      graft.streaming.EmbeddingsIngest.compactedBucketsOnce(s, dir,
+      Sinks.compacted(s, Stores.AnnBuckets, dir,
         Catalog.scratch(dir, "ann_compact"))),
     "ivf_compact" -> ((s, dir) =>
-      graft.streaming.EmbeddingsIngest.compactedCellsOnce(s, dir,
+      Sinks.compacted(s, Stores.IvfCells, dir,
         Catalog.scratch(dir, "ivf_compact"))),
     // ...and of the QUANTIZED store (the last streamed index to get the
     // fold): streamed byte codes + cell assignments rewritten into one
     // (cell, vec_id)-sorted generation behind the MANIFEST; exploded to
     // scalar like sq8_stream_index so the oracle pins codes element-wise
     "sq8_compact" -> ((s, dir) =>
-      explodeCodes(graft.streaming.EmbeddingsIngest.compactedSq8Once(s, dir,
+      explodeCodes(Sinks.compacted(s, Stores.Sq8, dir,
         Catalog.scratch(dir, "sq8_compact")))),
     // serving CONTINUITY across the generation swap: the same quantized
     // top-k answered from the COMPACTED streamed generation (read through
@@ -1656,7 +1658,7 @@ object SparkEntry {
     // cell-pruned plan.
     "sq8_topk_gen" -> ((s, dir) =>
       Ivf.topK(IvfCodec.Sq8,
-        graft.streaming.EmbeddingsIngest.sq8GenServing(s, dir,
+        EmbeddingsIngest.sq8GenServing(s, dir,
           Catalog.scratch(dir, "sq8_topk_gen")),
         Catalog.embeddings(s, dir), 0, 10)),
     // every IVF-float lookup below serves from the IVF-FLAT store
@@ -1809,10 +1811,10 @@ object SparkEntry {
     // residual-PQ upkeep: coarse argmax + residual + committed-codebook
     // encode in one stateless projection (the IVFADC ingest path)
     "pqr_stream_index" -> ((s, dir) =>
-      explodeCodes(graft.streaming.EmbeddingsIngest.pqrOnce(s, dir))),
+      explodeCodes(Sinks.memory(s, Stores.Pqr, dir))),
     // ...and its generation fold behind the MANIFEST (the pq_compact twin)
     "pqr_compact" -> ((s, dir) =>
-      explodeCodes(graft.streaming.EmbeddingsIngest.compactedPqrOnce(s, dir,
+      explodeCodes(Sinks.compacted(s, Stores.Pqr, dir,
         Catalog.scratch(dir, "pqr_compact")))),
     // filtered serving at the residual tier — the metadata slice
     // semi-joined on the candidate side (pq_topk_filtered's twin)
@@ -1835,10 +1837,10 @@ object SparkEntry {
     // assign their IVF cell in one stateless projection (no quantizer to
     // freeze — the codebooks are constants); exploded like sq8_stream_index
     "pq_stream_index" -> ((s, dir) =>
-      explodeCodes(graft.streaming.EmbeddingsIngest.pqOnce(s, dir))),
+      explodeCodes(Sinks.memory(s, Stores.Pq, dir))),
     // ...and its generation fold behind the MANIFEST (the sq8_compact twin)
     "pq_compact" -> ((s, dir) =>
-      explodeCodes(graft.streaming.EmbeddingsIngest.compactedPqOnce(s, dir,
+      explodeCodes(Sinks.compacted(s, Stores.Pq, dir,
         Catalog.scratch(dir, "pq_compact")))),
     // the multi-stage retrieval LADDER: PQ shortlist (code bytes only) ->
     // exact float re-rank of the survivors — exact fidelity at O(kCoarse)

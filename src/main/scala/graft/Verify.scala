@@ -67,10 +67,6 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val counters = new graft.util.BenchCounters
     spark.sparkContext.addSparkListener(counters)
-    def snap(): graft.util.BenchCounters.Snap = {
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      counters.snapshot
-    }
     // GRAFT_VERIFY_ONLY=a,b,c restricts the dump (local iteration aid, same
     // contract as Bench's GRAFT_BENCH_ONLY); the driver never sets it.
     val only = sys.env.get("GRAFT_VERIFY_ONLY").map(_.split(",").toSet)
@@ -93,7 +89,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
-      val c0 = snap()
+      val c0 = counters.drainedSnapshot(spark.sparkContext)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -103,7 +99,7 @@ object Verify {
       // entries in one session would otherwise accumulate cached partitions
       finally {
         graft.util.Caches.drain()
-        perEntry += name -> (snap() - c0)
+        perEntry += name -> (counters.drainedSnapshot(spark.sparkContext) - c0)
       }
     }
     val q = jsonStr _

@@ -453,7 +453,8 @@ object Ann {
     * the same lookup from the flipped generation — the cell In-filter
     * file-skips via min/max on the (cell, vec_id) sort. Cosine carries no
     * corpus statistics, so this equals the masked serve exactly. Memoized
-    * per statement window like every *Once compaction. */
+    * per statement window like every streamed-store compaction
+    * (Sinks.compacted). */
   def ivfTombstoneCompactServe(spark: org.apache.spark.sql.SparkSession,
       flat: DataFrame, emb: DataFrame, qVecId: Long, tombstones: DataFrame,
       scratchBase: String, k: Int): DataFrame = {
@@ -1129,127 +1130,87 @@ object Ann {
       }.mkString(" || ")
     }
 
-  /** DuckDB mirror of topKMultiProbe: the single-query LSH oracle with a
-    * per-table FLIPPED signature derived independently in SQL — margins
-    * as a list of abs dot products, argmin via list_position on the list
-    * minimum (first occurrence = lowest bit, queryMultiProbeKeysOf's
-    * tie-break), string surgery for the flip. A candidate matches a
-    * table on the base OR the flipped signature. */
-  def multiProbeOracleSql(qVecId: Long, k: Int,
-      srcSql: String = BaseSrcSql): String = {
+  /** The ONE rendering of the four LSH DuckDB oracles — the per-table
+    * signatures of corpus and query rows, the any-table bucket match, and
+    * the cosine top-k tail. `batch` ranks every query vec_id < `q` through
+    * the shared batchRankSql tail (topKBatch's distinct-pair dedup and
+    * tie-break) instead of the single query vec_id = `q`; `multiProbe`
+    * also matches each table's FLIPPED query signature, derived
+    * independently in SQL — margins as a list of abs dot products, argmin
+    * via list_position on the list minimum (first occurrence = lowest bit,
+    * queryMultiProbeKeysOf's tie-break), string surgery for the flip. */
+  private def lshOracleSql(batch: Boolean, multiProbe: Boolean, q: Long,
+      k: Int, srcSql: String): String = {
     val eSigs = lshSigExprs("e.emb").zipWithIndex
       .map { case (s, t) => s"$s AS sig$t" }.mkString(", ")
     val qSigs = lshSigExprs("q.qemb").zipWithIndex
       .map { case (s, t) => s"$s AS qsig$t" }.mkString(", ")
-    val margins = (0 until Tables).map { t =>
-      (0 until Bits).map { b =>
-        s"abs(list_dot_product(q.qemb, ${planeSql(planes(t * Bits + b))}))"
-      }.mkString("[", ",", "]") + s" AS m$t"
-    }.mkString(", ")
-    val flips = (0 until Tables).map { t =>
-      s"""substr(qsig$t, 1, list_position(m$t, list_min(m$t)) - 1) ||
-         |(CASE WHEN substr(qsig$t, list_position(m$t, list_min(m$t)), 1) = '1'
-         |  THEN '0' ELSE '1' END) ||
-         |substr(qsig$t, list_position(m$t, list_min(m$t)) + 1) AS qflip$t""".stripMargin
-    }.mkString(", ")
-    val matchCond = (0 until Tables)
-      .map(t => s"es.sig$t = qs.qsig$t OR es.sig$t = qs.qflip$t")
-      .mkString(" OR ")
+    val qKey = if (batch) "q.qid" else "q.qemb"
+    val qs =
+      if (!multiProbe) s"qs AS (SELECT $qKey, $qSigs FROM q)"
+      else {
+        val margins = (0 until Tables).map { t =>
+          (0 until Bits).map { b =>
+            s"abs(list_dot_product(q.qemb, ${planeSql(planes(t * Bits + b))}))"
+          }.mkString("[", ",", "]") + s" AS m$t"
+        }.mkString(", ")
+        val flips = (0 until Tables).map { t =>
+          s"""substr(qsig$t, 1, list_position(m$t, list_min(m$t)) - 1) ||
+             |(CASE WHEN substr(qsig$t, list_position(m$t, list_min(m$t)), 1) = '1'
+             |  THEN '0' ELSE '1' END) ||
+             |substr(qsig$t, list_position(m$t, list_min(m$t)) + 1) AS qflip$t""".stripMargin
+        }.mkString(", ")
+        s"""qs0 AS (SELECT $qKey, $qSigs, $margins FROM q),
+           |qs AS (SELECT *, $flips FROM qs0)""".stripMargin
+      }
+    val matchCond = (0 until Tables).map { t =>
+      s"es.sig$t = qs.qsig$t" +
+        (if (multiProbe) s" OR es.sig$t = qs.qflip$t" else "")
+    }.mkString(" OR ")
+    val tail =
+      if (batch)
+        s"""pairs AS (SELECT DISTINCT qs.qid, es.vec_id FROM es, qs
+           |          WHERE ($matchCond) AND es.vec_id <> qs.qid),
+           |cand AS (SELECT p.qid, p.vec_id,
+           |    round(list_dot_product(e.emb, q.qemb) /
+           |          sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
+           |  FROM pairs p JOIN e ON e.vec_id = p.vec_id JOIN q ON q.qid = p.qid)
+           |${batchRankSql(k)}""".stripMargin
+      else
+        s"""cand AS (SELECT es.vec_id, es.emb, qs.qemb FROM es, qs
+           |         WHERE ($matchCond) AND es.vec_id <> $q)
+           |SELECT vec_id,
+           |  round(list_dot_product(emb, qemb) /
+           |        sqrt(list_dot_product(emb, emb) * list_dot_product(qemb, qemb)), 6) AS sim
+           |FROM cand ORDER BY sim DESC, vec_id LIMIT $k""".stripMargin
+    val qRows =
+      if (batch) s"SELECT vec_id AS qid, emb AS qemb FROM e WHERE vec_id < $q"
+      else s"SELECT emb AS qemb FROM e WHERE vec_id = $q"
     s"""WITH e AS ($srcSql),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
+       |q AS ($qRows),
        |es AS (SELECT e.vec_id, e.emb, $eSigs FROM e),
-       |qs0 AS (SELECT q.qemb, $qSigs, $margins FROM q),
-       |qs AS (SELECT *, $flips FROM qs0),
-       |cand AS (SELECT es.vec_id, es.emb, qs.qemb FROM es, qs
-       |         WHERE ($matchCond) AND es.vec_id <> $qVecId)
-       |SELECT vec_id,
-       |  round(list_dot_product(emb, qemb) /
-       |        sqrt(list_dot_product(emb, emb) * list_dot_product(qemb, qemb)), 6) AS sim
-       |FROM cand ORDER BY sim DESC, vec_id LIMIT $k
+       |$qs,
+       |$tail
        |""".stripMargin.replaceAll("\\s+", " ")
   }
 
   /** DuckDB mirror of topK over the `embeddings` view. */
-  def oracleSql(qVecId: Long, k: Int,
-      srcSql: String = BaseSrcSql): String = {
-    val eSigs = lshSigExprs("e.emb").zipWithIndex
-      .map { case (s, t) => s"$s AS sig$t" }.mkString(", ")
-    val qSigs = lshSigExprs("q.qemb").zipWithIndex
-      .map { case (s, t) => s"$s AS qsig$t" }.mkString(", ")
-    val matchCond = (0 until Tables).map(t => s"es.sig$t = qs.qsig$t").mkString(" OR ")
-    s"""WITH e AS ($srcSql),
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = $qVecId),
-       |es AS (SELECT e.vec_id, e.emb, $eSigs FROM e),
-       |qs AS (SELECT q.qemb, $qSigs FROM q),
-       |cand AS (SELECT es.vec_id, es.emb, qs.qemb FROM es, qs
-       |         WHERE ($matchCond) AND es.vec_id <> $qVecId)
-       |SELECT vec_id,
-       |  round(list_dot_product(emb, qemb) /
-       |        sqrt(list_dot_product(emb, emb) * list_dot_product(qemb, qemb)), 6) AS sim
-       |FROM cand ORDER BY sim DESC, vec_id LIMIT $k
-       |""".stripMargin.replaceAll("\\s+", " ")
-  }
+  def oracleSql(qVecId: Long, k: Int, srcSql: String = BaseSrcSql): String =
+    lshOracleSql(batch = false, multiProbe = false, qVecId, k, srcSql)
 
-  /** DuckDB mirror of topKBatch for the query batch vec_id < maxQid: the
-    * same any-table bucket match per (query, vector) pair, the same
-    * distinct-pair dedup, and the shared batchRankSql top-k tail with
-    * topKBatch's exact tie-break. */
+  /** DuckDB mirror of topKMultiProbe (single query). */
+  def multiProbeOracleSql(qVecId: Long, k: Int,
+      srcSql: String = BaseSrcSql): String =
+    lshOracleSql(batch = false, multiProbe = true, qVecId, k, srcSql)
+
+  /** DuckDB mirror of topKBatch for the query batch vec_id < maxQid. */
   def lshBatchOracleSql(maxQid: Long, k: Int,
-      srcSql: String = BaseSrcSql): String = {
-    val eSigs = lshSigExprs("e.emb").zipWithIndex
-      .map { case (s, t) => s"$s AS sig$t" }.mkString(", ")
-    val qSigs = lshSigExprs("q.qemb").zipWithIndex
-      .map { case (s, t) => s"$s AS qsig$t" }.mkString(", ")
-    val matchCond = (0 until Tables).map(t => s"es.sig$t = qs.qsig$t").mkString(" OR ")
-    s"""WITH e AS ($srcSql),
-       |q AS (SELECT vec_id AS qid, emb AS qemb FROM e WHERE vec_id < $maxQid),
-       |es AS (SELECT e.vec_id, e.emb, $eSigs FROM e),
-       |qs AS (SELECT q.qid, $qSigs FROM q),
-       |pairs AS (SELECT DISTINCT qs.qid, es.vec_id FROM es, qs
-       |          WHERE ($matchCond) AND es.vec_id <> qs.qid),
-       |cand AS (SELECT p.qid, p.vec_id,
-       |    round(list_dot_product(e.emb, q.qemb) /
-       |          sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |  FROM pairs p JOIN e ON e.vec_id = p.vec_id JOIN q ON q.qid = p.qid)
-       |${batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
-  }
+      srcSql: String = BaseSrcSql): String =
+    lshOracleSql(batch = true, multiProbe = false, maxQid, k, srcSql)
 
-  /** DuckDB mirror of topKBatchMultiProbe: lshBatchOracleSql's chain with
-    * the per-table flipped signature (multiProbeOracleSql's margin-argmin
-    * string surgery) derived per QUERY ROW. */
+  /** DuckDB mirror of topKBatchMultiProbe for the query batch
+    * vec_id < maxQid. */
   def multiProbeBatchOracleSql(maxQid: Long, k: Int,
-      srcSql: String = BaseSrcSql): String = {
-    val eSigs = lshSigExprs("e.emb").zipWithIndex
-      .map { case (s, t) => s"$s AS sig$t" }.mkString(", ")
-    val qSigs = lshSigExprs("q.qemb").zipWithIndex
-      .map { case (s, t) => s"$s AS qsig$t" }.mkString(", ")
-    val margins = (0 until Tables).map { t =>
-      (0 until Bits).map { b =>
-        s"abs(list_dot_product(q.qemb, ${planeSql(planes(t * Bits + b))}))"
-      }.mkString("[", ",", "]") + s" AS m$t"
-    }.mkString(", ")
-    val flips = (0 until Tables).map { t =>
-      s"""substr(qsig$t, 1, list_position(m$t, list_min(m$t)) - 1) ||
-         |(CASE WHEN substr(qsig$t, list_position(m$t, list_min(m$t)), 1) = '1'
-         |  THEN '0' ELSE '1' END) ||
-         |substr(qsig$t, list_position(m$t, list_min(m$t)) + 1) AS qflip$t""".stripMargin
-    }.mkString(", ")
-    val matchCond = (0 until Tables)
-      .map(t => s"es.sig$t = qs.qsig$t OR es.sig$t = qs.qflip$t")
-      .mkString(" OR ")
-    s"""WITH e AS ($srcSql),
-       |q AS (SELECT vec_id AS qid, emb AS qemb FROM e WHERE vec_id < $maxQid),
-       |es AS (SELECT e.vec_id, e.emb, $eSigs FROM e),
-       |qs0 AS (SELECT q.qid, $qSigs, $margins FROM q),
-       |qs AS (SELECT *, $flips FROM qs0),
-       |pairs AS (SELECT DISTINCT qs.qid, es.vec_id FROM es, qs
-       |          WHERE ($matchCond) AND es.vec_id <> qs.qid),
-       |cand AS (SELECT p.qid, p.vec_id,
-       |    round(list_dot_product(e.emb, q.qemb) /
-       |          sqrt(list_dot_product(e.emb, e.emb) * list_dot_product(q.qemb, q.qemb)), 6) AS sim
-       |  FROM pairs p JOIN e ON e.vec_id = p.vec_id JOIN q ON q.qid = p.qid)
-       |${batchRankSql(k)}
-       |""".stripMargin.replaceAll("\\s+", " ")
-  }
+      srcSql: String = BaseSrcSql): String =
+    lshOracleSql(batch = true, multiProbe = true, maxQid, k, srcSql)
 }

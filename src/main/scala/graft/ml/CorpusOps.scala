@@ -707,7 +707,7 @@ object CorpusOps {
     * (Catalog.lmStore). */
   /** The ONE per-doc bigram-pair projection (doc_id, w1, w2) — shared by
     * LM training (lmBigramCounts), batch scoring (pplBigram), and the
-    * streamed scorer (DocumentsIngest.pplOnce), so the tokenize/guard
+    * streamed scorer (streaming.Stores.PplScored), so the tokenize/guard
     * convention cannot drift between the three (review finding, r19).
     * The CASE guards the transform itself — the <2-token
     * descending-sequence trap. */
@@ -739,7 +739,7 @@ object CorpusOps {
   /** Per-bigram SCORED rows (doc_id, lp) against a frozen LM — the
     * stateless stream-static join the batch scorer folds per doc
     * (pplBigram) and the streamed twin sinks then folds at read
-    * (DocumentsIngest.pplOnce): one rendering of the join + add-one
+    * (streaming.Stores.PplScored): one rendering of the join + add-one
     * smoothing formula for both. */
   private[graft] def pplBigramScored(docs: DataFrame, lm: DataFrame,
       vocab: Long): DataFrame = {

@@ -147,7 +147,7 @@ object Retrieval {
 
   /** The sidecar's row projection (doc_id, lang, source, dl) — STATELESS
     * per-row, shared by the batch store build (Catalog.docMeta) and the
-    * streamed upkeep (DocumentsIngest.metaOnce), the lexRows convention:
+    * streamed upkeep (streaming.Stores.DocMeta), the lexRows convention:
     * one projection, two paths, no drift. */
   def metaRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"), col("source"),

@@ -346,7 +346,7 @@ object Selection {
   /** The shared per-doc selection-sidecar projection — (doc_id, source,
     * n_tok, score, split) — used identically by the batch store build
     * (Catalog.docScores) and the streamed twin
-    * (DocumentsIngest.scoresOnce): stateless per-row, so streaming it
+    * (streaming.Stores.DocScores): stateless per-row, so streaming it
     * needs no state store and a doc's sidecar row is complete within its
     * micro-batch (the metaRows convention, Retrieval.scala). This is the
     * table downstream curation reads INSTEAD of the corpus text — scoring

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * window bounded by document length — no all-pairs stage, no driver
   * state. At 100 TB the one-call cache below becomes the STORED positional
   * sketch (the winnowSketch pattern): Catalog.spanSketch materializes
-  * (doc_id, pos, h) once, DocumentsIngest.spanSketchOnce maintains it
+  * (doc_id, pos, h) once, streaming.Stores.SpanSketch maintains it
   * incrementally, Compact folds the streamed generations, and
   * sharedSpansFrom reads the stored table for both the df aggregation and
   * the probe — the corpus text is tokenized exactly once, at build time,

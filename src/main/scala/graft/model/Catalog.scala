@@ -127,12 +127,13 @@ object Catalog {
   }
 
   /** Materialization cache. Versioned so a derivation change invalidates old
-    * caches; lives inside the repo (the only writable area) and is gitignored. */
+    * caches; `.graft-cache` under the working directory (gitignored) unless
+    * GRAFT_CACHE names another root. */
   private val cacheVersion = "v13"
   /** Exposed for specs that assert the materialization landed on disk. */
   def cacheVersionTag: String = cacheVersion
-  private def cacheRoot: String =
-    sys.env.getOrElse("GRAFT_CACHE", "/root/repo/.graft-cache")
+  def cacheRoot: String = sys.env.getOrElse("GRAFT_CACHE",
+    java.nio.file.Paths.get(".graft-cache").toAbsolutePath.toString)
 
   /** Short content fingerprint of a source directory: name+size+mtime+tail
     * bytes of every parquet entry (one level of recursion for
@@ -533,7 +534,7 @@ object Catalog {
 
   /** The override derivation as a pure projection over an orders relation —
     * shared by the batch table above and the streamed override ingest
-    * (streaming.OverridesIngest), so the two paths cannot drift. */
+    * (streaming.Stores.Overrides), so the two paths cannot drift. */
   def overrideRows(orders: DataFrame): DataFrame =
     orders.filter(col("o_orderkey") % 7 === 0)
       .select(
@@ -616,7 +617,7 @@ object Catalog {
     * the sibling of `winnowSketch` (VERDICT r9 #1): the df-cap pruning an
     * admission batch needs is a LOOKUP against this table, never a
     * re-aggregation of the whole sketch. Maintained incrementally at ingest
-    * by appending per-batch deltas (DocumentsIngest.runDfDeltaSink) that a
+    * by appending per-batch deltas (streaming.Stores.WinnowDf) that a
     * generation merge (Compact.mergeDfGenerations) folds back into one row
     * per fp — the Spark analogue of the reference's generation merge
     * (/root/reference/src/merge.cc:120-184), which also never recounts. */
@@ -899,7 +900,7 @@ object Catalog {
   /** The MATERIALIZED per-document selection-score sidecar — (doc_id,
     * source, n_tok, score, split): the quality-classifier score and the
     * md5 train/val/test assignment, computed ONCE at store build (in a
-    * deployment: once at ingest — DocumentsIngest.scoresOnce streams the
+    * deployment: once at ingest — streaming.Stores.DocScores streams the
     * same projection) so curation statements read this sidecar and never
     * scan corpus text — docMeta's posture for the selection family. Laid
     * out by source: the mixture/quota verbs partition on it, and the
@@ -917,7 +918,7 @@ object Catalog {
 
   /** The MATERIALIZED perceptual-hash sidecar (doc_id, phash): media is
     * decoded and aHashed once per sf-dir (at ingest in a deployment —
-    * DocumentsIngest.phashOnce streams the same projection); image dedup
+    * streaming.Stores.Phash streams the same projection); image dedup
     * statements read this, never the media bytes. Laid out hash-sorted so
     * group lookups row-group-prune. */
   def phashStore(spark: SparkSession, dir: String): DataFrame = {
@@ -1143,7 +1144,7 @@ object Catalog {
     * persisting derived index blocks instead of recomputing per query
     * (/root/reference/src/table-backend-writeonce.cc:594-636). Streamed
     * admission appends per-batch verified pairs
-    * (streaming.DocumentsIngest.runPairSink); compaction folds the
+    * (streaming.DocumentsIngest.pairAdmission); compaction folds the
     * generations (dedup_pairs_compact). (Doc restored to its definition —
     * it had strayed above indexKeyOff; review finding, r19.) */
   def dupPairs(spark: SparkSession, dir: String,

@@ -3,14 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-/** Incremental maintenance of the materialized winnowing sketch
-  * (Catalog.winnowSketch): new documents stream through the SAME
-  * fingerprint pipeline the batch build uses (NearDup.winnowFingerprints —
-  * pure per-row projection, no state store, no shuffle) and append to the
-  * stored index. Paired with NearDup.incrementalDupesFrom this closes the
-  * ingest loop: stream fingerprints in, admission-check the new batch
-  * against the existing sketch, corpus text never re-read — the text-side
-  * twin of EmbeddingsIngest's ANN index upkeep.
+/** The documents stream every text-side store record (Stores) is
+  * maintained from, plus the per-batch admission writers of the two
+  * stream-admitted pair graphs. The stateless stores (winnow sketch,
+  * shingle/span sketches, chunk, lexical, metadata and score sidecars)
+  * stream through the SAME per-row projection their batch build uses and
+  * append; paired with NearDup.incrementalDupesFrom this closes the ingest
+  * loop: stream fingerprints in, admission-check the new batch against the
+  * existing sketch, corpus text never re-read.
   */
 object DocumentsIngest {
 
@@ -21,88 +21,8 @@ object DocumentsIngest {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-
   def stream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(schema).parquet(s"$dir/{documents.parquet}")
-
-  /** Stream-derived sketch rows (doc_id, fp) — identical projection to the
-    * batch index build. */
-  def sketchRows(docs: DataFrame): DataFrame =
-    graft.ml.NearDup.winnowFingerprints(docs)
-
-  /** Append the streamed sketch rows to a parquet index directory (the
-    * deployment shape — shared sink protocol, see Sinks). */
-  def runSketchSink(spark: SparkSession, dir: String, outPath: String,
-      checkpoint: String): Unit =
-    Sinks.parquetOnce(sketchRows(stream(spark, dir)), outPath, checkpoint)
-
-  /** One-shot streamed sketch build over all available input (memory sink)
-    * — the CORRECTNESS entry point. Memoized per statement window. */
-  def sketchOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:winnowsketch:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_wsk",
-        sketchRows(stream(spark, dir)))
-    }
-
-  /** Incremental maintenance of the (fp, df) document-frequency sibling
-    * (Catalog.winnowDf): each micro-batch appends its OWN fingerprint
-    * counts as a delta generation — counting only the batch, never
-    * rescanning the stored sketch (VERDICT r9 #1). Reading the table is a
-    * sum over delta generations, which Compact.mergeDfGenerations folds
-    * back to one row per fp at compaction cadence. */
-  /** The df delta sink's per-batch writer — IDEMPOTENT under foreachBatch's
-    * at-least-once contract via the b=<batchId> overwrite dirs every
-    * foreachBatch sink here uses (the pair/lexStats pattern): this was the
-    * last blind `append` left in the streaming tier, and a replayed batch
-    * would have double-counted its fingerprints in every downstream df cap
-    * (VERDICT r14 #7 sweep). Named so the replay spec can invoke it twice
-    * with the same (batch, id) and pin the convergence. */
-  private[graft] def dfDeltaBatchWriter(deltaPath: String,
-      key: String = "fp"): (DataFrame, Long) => Unit = (batch, id) => {
-    // layout-migration guard: a delta store written by the pre-r15 blind
-    // append keeps part files at the ROOT of deltaPath; mixing b=<id>
-    // subdirs into it would trip Spark's conflicting-directory-structures
-    // assertion on the next read. Fail loudly with the migration step
-    // instead of corrupting the store. Resolved through Hadoop's
-    // FileSystem API so the guard holds on every filesystem the sink can
-    // write to — java.io.File silently sees nothing on HDFS/S3 paths
-    // (ADVICE r15).
-    val rootPath = new org.apache.hadoop.fs.Path(deltaPath)
-    val fs = rootPath.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath) && fs.listStatus(rootPath).exists(s =>
-        s.isFile && s.getPath.getName.startsWith("part-")))
-      sys.error(s"$deltaPath holds a legacy flat df delta layout; fold it " +
-        "into a generation first (Compact.mergeDfGenerations) and point " +
-        "the sink at a fresh delta dir before resuming")
-    batch.groupBy(key)
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$deltaPath/b=$id")
-    ()
-  }
-
-  def runDfDeltaSink(spark: SparkSession, dir: String, deltaPath: String,
-      checkpoint: String): Unit =
-    Sinks.foreachBatchOnce(sketchRows(stream(spark, dir)), checkpoint,
-      dfDeltaBatchWriter(deltaPath))
-
-  /** One-shot streamed df maintenance — the CORRECTNESS entry point: stream
-    * the docs through the delta sink into a fresh scratch generation dir,
-    * then return the generation fold (sum per fp), which must equal the
-    * batch-computed document frequency. Memoized per statement window; the
-    * scratch dir is cleared first so re-runs across statement windows never
-    * double-append. */
-  def dfOnce(spark: SparkSession, dir: String, scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:winnowdf:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      runDfDeltaSink(spark, dir, s"$scratchBase/deltas", s"$scratchBase/ck")
-      Sinks.readDeltasOrEmpty(spark, s"$scratchBase/deltas",
-          StructType(Seq(StructField("fp", StringType),
-            StructField("df", LongType))))
-        .groupBy("fp")
-        .agg(org.apache.spark.sql.functions.sum("df").as("df"))
-    }
 
   /** Stream-derived 3-gram shingle sketch rows (doc_id, sh) — identical
     * projection to the batch store build (Catalog.shingleSketch): a doc's
@@ -113,326 +33,6 @@ object DocumentsIngest {
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.md5(
           org.apache.spark.sql.functions.col("shingle")).as("sh"))
-
-  /** One-shot streamed shingle-sketch build — the CORRECTNESS entry point
-    * for Catalog.shingleSketch's stream twin. */
-  def shingleSketchOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:shinglesketch:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_shsk",
-        shingleRows(stream(spark, dir)))
-    }
-
-  /** One-shot streamed (sh, df) maintenance — Catalog.shingleDf's stream
-    * twin, riding the SAME idempotent delta-sink writer as winnow_stream_df
-    * (dfDeltaBatchWriter keyed on sh): each batch appends its OWN shingle
-    * counts, the read is a generation fold, the stored sketch is never
-    * rescanned at ingest. */
-  def shingleDfOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:shingledf:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      Sinks.foreachBatchOnce(shingleRows(stream(spark, dir)),
-        s"$scratchBase/ck", dfDeltaBatchWriter(s"$scratchBase/deltas", "sh"))
-      Sinks.readDeltasOrEmpty(spark, s"$scratchBase/deltas",
-          StructType(Seq(StructField("sh", StringType),
-            StructField("df", LongType))))
-        .groupBy("sh")
-        .agg(org.apache.spark.sql.functions.sum("df").as("df"))
-    }
-
-  /** One-shot streamed-then-compacted sketch — the CORRECTNESS entry point
-    * for compaction: run the parquet sketch sink (the deployment appender,
-    * small files per micro-batch), compact the accumulated files into one
-    * sorted fp-keyed generation, flip the MANIFEST pointer onto it
-    * (Compact.compactAndFlip — the atomic reader swap), and return the rows
-    * read back THROUGH the manifest — which must equal the batch-built
-    * sketch exactly. The explicit partition count keeps the generation a
-    * genuinely smaller file set than the raw streamed sink (a deployment
-    * derives it from input bytes / target file size). */
-  def compactedSketchOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:winnowcompact:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      runSketchSink(spark, dir, s"$scratchBase/raw", s"$scratchBase/ck")
-      graft.ingest.Compact.compactAndFlip(spark, s"$scratchBase/raw",
-        s"$scratchBase/idx", "fp", Seq("fp", "doc_id"),
-        partitions = Some(4))
-    }
-
-  /** Streamed-then-compacted 3-gram shingle sketch — the winnow_compact
-    * twin for Catalog.shingleSketch: parquet sink per micro-batch, fold
-    * into one sorted sh-keyed generation, MANIFEST flip, read back
-    * through it; must equal the batch store projection exactly. */
-  def compactedShingleSketchOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:shinglecompact:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      Sinks.parquetOnce(shingleRows(stream(spark, dir)),
-        s"$scratchBase/raw", s"$scratchBase/ck")
-      graft.ingest.Compact.compactAndFlip(spark, s"$scratchBase/raw",
-        s"$scratchBase/idx", "sh", Seq("sh", "doc_id"),
-        partitions = Some(4))
-    }
-
-  /** Incremental maintenance of the positional span sketch
-    * (Catalog.spanSketch): new documents stream through the SAME shingle
-    * projection the batch build uses (SpanDedup.spanShingles — stateless
-    * per-row, no shuffle) and append. One-shot memory-sink entry point;
-    * the parquet deployment shape is compactedSpanSketchOnce below. */
-  def spanSketchOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:spansketch:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_ssk",
-        graft.ml.SpanDedup.spanShingles(stream(spark, dir)))
-    }
-
-  /** Streamed-then-compacted span sketch — the winnow_compact twin for the
-    * positional sketch: parquet appender per micro-batch, fold the small
-    * files into one sorted h-keyed generation, flip the MANIFEST, read back
-    * through it; must equal the batch-built projection row-for-row. */
-  def compactedSpanSketchOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:spancompact:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      Sinks.parquetOnce(graft.ml.SpanDedup.spanShingles(stream(spark, dir)),
-        s"$scratchBase/raw", s"$scratchBase/ck")
-      graft.ingest.Compact.compactAndFlip(spark, s"$scratchBase/raw",
-        s"$scratchBase/idx", "h", Seq("h", "doc_id", "pos"),
-        partitions = Some(4))
-    }
-
-  /** Incremental maintenance of the content-defined chunk store
-    * (Catalog.cdcChunks): new documents stream through the SAME stateless
-    * projection the batch build uses (CorpusOps.cdcChunkRows — a doc's
-    * chunks depend on that doc alone, so no state store and no shuffle; a
-    * doc's chunk rows are complete within its micro-batch). One-shot
-    * memory-sink entry point; the parquet deployment shape is
-    * compactedCdcChunksOnce below. */
-  def cdcChunksOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:cdcchunks:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_cdc",
-        graft.ml.CorpusOps.cdcChunkRows(stream(spark, dir)))
-    }
-
-  /** Streamed-then-compacted chunk store — the span_compact twin for the
-    * chunk sidecar: parquet appender per micro-batch, fold the small files
-    * into one doc-sorted generation, flip the MANIFEST, read back through
-    * it; must equal the batch-built store row-for-row. */
-  def compactedCdcChunksOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:cdccompact:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      Sinks.parquetOnce(graft.ml.CorpusOps.cdcChunkRows(stream(spark, dir)),
-        s"$scratchBase/raw", s"$scratchBase/ck")
-      graft.ingest.Compact.compactAndFlip(spark, s"$scratchBase/raw",
-        s"$scratchBase/idx", "doc_id", Seq("doc_id", "chunk_id"),
-        partitions = Some(4))
-    }
-
-  /** Incremental maintenance of the inverted index (Catalog.lexIndex):
-    * new documents stream through the SAME stateless projection the batch
-    * build uses (Retrieval.lexRows — tf is a per-row filter-count over the
-    * doc's own token array, so no streaming aggregation and no state
-    * store; a doc's tf rows are complete within its micro-batch). One-shot
-    * memory-sink entry point. */
-  def lexOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:lexindex:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_lex",
-        graft.ml.Retrieval.lexRows(stream(spark, dir)))
-    }
-
-  /** Streamed-then-compacted inverted index — the winnow_compact twin for
-    * the lexical store: parquet appender per micro-batch, fold the small
-    * files into one token-sorted generation, flip the MANIFEST, read back
-    * through it; must equal the batch-built index row-for-row. The
-    * token-sorted generation is what keeps bm25_stored's pushed In(token)
-    * row-group skip across the swap. */
-  def compactedLexOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:lexcompact:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      Sinks.parquetOnce(graft.ml.Retrieval.lexRows(stream(spark, dir)),
-        s"$scratchBase/raw", s"$scratchBase/ck")
-      graft.ingest.Compact.compactAndFlip(spark, s"$scratchBase/raw",
-        s"$scratchBase/idx", "token", Seq("token", "doc_id"),
-        partitions = Some(4))
-    }
-
-  /** Incremental maintenance of the document-metadata sidecar
-    * (Catalog.docMeta): new documents stream through the SAME stateless
-    * row projection the batch build uses (Retrieval.metaRows) and append —
-    * the lexOnce convention; no state store, a doc's sidecar row is
-    * complete within its micro-batch. One-shot memory-sink entry point. */
-  def metaOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:docmeta:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_meta",
-        graft.ml.Retrieval.metaRows(stream(spark, dir)))
-    }
-
-  /** Streamed count-min counter grid: token occurrences from newly
-    * ingested documents fold into the d×w cell sums — bounded sum-typed
-    * streaming state (2048 rows however much text flows), the CMS
-    * lifecycle's ingest end. Complete-mode one-shot; the serve end
-    * (Sketches.cmsHeavyHittersFrom) joins this grid. */
-  def cmsCountersOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:cmscells:$dir") {
-      // a STATEFUL aggregation, so it rides the bounded-state-partition
-      // one-shot protocol like every other stateful stream (review
-      // finding, r19: this was the only stateful one-shot paying the
-      // session default's 32-partition state-store bring-up)
-      EventsIngest.memorySinkOnce(spark, 8, "graft_stream_cms",
-        "complete")(s =>
-        graft.ml.Sketches.cmsCells(stream(s, dir).select(
-          org.apache.spark.sql.functions.expr(
-            "explode(split(text, ' '))").as("token"))))
-    }
-
-  /** Incremental maintenance of the selection-score sidecar
-    * (Catalog.docScores): new documents stream through the SAME stateless
-    * scoring projection the batch store build uses (Selection.scoreRows —
-    * the classifier fold, token count, and split assignment are all pure
-    * per-row) — the metaOnce convention. This is WHERE a deployment
-    * scores: once at ingest; curation statements then read the sidecar. */
-  def scoresOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:docscores:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_scores",
-        graft.ml.Selection.scoreRows(stream(spark, dir)))
-    }
-
-  /** Streamed DSIR scoring against the FROZEN stored ratio
-    * (Catalog.dsirRatio) — the sq8 frozen-quantizer posture applied to
-    * importance weights: the ratio constants were fixed at store build,
-    * so streaming docs score through the same stateless per-row fold the
-    * batch serving path uses; a ratio refresh is a store rebuild + new
-    * generation, never streaming state. */
-  def dsirScoresOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:dsirscores:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_dsir",
-        graft.ml.Selection.dsirWeightsFrom(stream(spark, dir),
-          graft.model.Catalog.dsirRatio(spark, dir, "src0")))
-    }
-
-  /** Streamed BPE accounting against the FROZEN learned merges
-    * (Catalog.bpeMerges) — the dsirScoresOnce posture for the tokenizer:
-    * the merge list was fixed at store build, so new documents count
-    * their subword tokens through the same stateless per-row fold chain
-    * the batch entry uses (zero joins, zero state); a tokenizer refit is
-    * a store rebuild + re-account, never streaming state. */
-  def bpeTokensOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:bpetokens:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_bpe",
-        graft.ml.Bpe.docTokens(stream(spark, dir),
-          graft.model.Catalog.bpeMergePairs(spark, dir)))
-    }
-
-  /** Streamed audio frame energy — the audio tier's ingest twin: new
-    * media scores its frames through the same stateless exact-integer
-    * projection the batch entry uses (decode → frame → Σs² — a
-    * per-row explode, no state, no shuffle), so silence verdicts are
-    * available the moment a document lands. */
-  def audioOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:audio:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_audio",
-        graft.ml.Multimodal.audioEnergy(stream(spark, dir)))
-    }
-
-  /** Streamed perplexity scoring against the FROZEN stored bigram LM —
-    * the dsirScoresOnce posture for the CCNet tier: the model was trained
-    * at store build; new documents' bigrams score through a STATELESS
-    * stream-static join against the store (append-safe — a per-doc
-    * aggregation inside the stream would need a watermark the ingest has
-    * no event time for), and the per-doc mean folds at READ over the
-    * scored sink — score at ingest, aggregate at serve. Matches the batch
-    * entry row-for-row (same join, same fold, same rounding). A model
-    * refresh is a store rebuild, never streaming state. */
-  def pplOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:ppl:$dir") {
-      // the scoring join and the per-doc fold are CorpusOps' renderings
-      // verbatim (bigramPairs/pplBigramScored/pplFold — review finding,
-      // r19: this method carried the third hand-copy of the bigram
-      // explode + smoothing formula); only the sink between them is
-      // streaming-specific
-      graft.ml.CorpusOps.pplFold(
-        Sinks.memoryOnce(spark, "graft_stream_ppl",
-          graft.ml.CorpusOps.pplBigramScored(stream(spark, dir),
-            graft.model.Catalog.lmStore(spark, dir),
-            graft.model.Catalog.lmVocab(spark, dir))))
-    }
-
-  /** Streamed-then-compacted score sidecar — the lex_compact twin for
-    * the selection store: per-batch parquet appends folded into one
-    * source-sorted generation behind the flipped MANIFEST; must equal the
-    * batch-built Catalog.docScores row-for-row. Source-sorted so the
-    * curation verbs' source-pruned reads keep row-group skipping across
-    * the swap. */
-  def compactedScoresOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:scorecompact:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      Sinks.parquetOnce(graft.ml.Selection.scoreRows(stream(spark, dir)),
-        s"$scratchBase/raw", s"$scratchBase/ck")
-      graft.ingest.Compact.compactAndFlip(spark, s"$scratchBase/raw",
-        s"$scratchBase/idx", "source", Seq("source", "doc_id"),
-        partitions = Some(4))
-    }
-
-  /** Incremental maintenance of the additive stats store
-    * (Catalog.lexStats): each micro-batch appends its OWN (n_docs, sum_dl)
-    * delta row — idempotently, via the per-batch b=<id> overwrite dirs the
-    * pair sink uses (foreachBatch is at-least-once; a replayed blind
-    * append would double-count the batch in every avgdl downstream).
-    * Readers fold the generations with one tiny sum. */
-  /** The stats sink's per-batch writer — named for the replay spec (invoke
-    * twice with the same (batch, id): the b=<id> overwrite converges). */
-  private[graft] def lexStatsBatchWriter(
-      deltaPath: String): (DataFrame, Long) => Unit = (batch, id) => {
-    graft.ml.Retrieval.lexStatsRows(batch)
-      .write.mode("overwrite").parquet(s"$deltaPath/b=$id")
-    ()
-  }
-
-  def runLexStatsSink(docsStream: DataFrame, deltaPath: String,
-      checkpoint: String): Unit =
-    Sinks.foreachBatchOnce(docsStream, checkpoint,
-      lexStatsBatchWriter(deltaPath))
-
-  /** One-shot streamed stats maintenance — the CORRECTNESS entry point:
-    * stream the docs through the delta sink, fold the generations; must
-    * equal the batch-computed corpus statistics. */
-  def lexStatsOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:lexstats:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      runLexStatsSink(stream(spark, dir), s"$scratchBase/deltas",
-        s"$scratchBase/ck")
-      // zero-batch corpus → NULL sums, which the stats fold reads as 0
-      Sinks.readDeltasOrEmpty(spark, s"$scratchBase/deltas",
-          StructType(Seq(StructField("n_docs", LongType),
-            StructField("sum_dl", LongType))))
-        .agg(org.apache.spark.sql.functions.sum("n_docs").as("n_docs"),
-          org.apache.spark.sql.functions.sum("sum_dl").as("sum_dl"))
-    }
-
-  /** Streamed media feature extraction: the documents stream through the
-    * SAME planted-PGM decode projection the batch entry uses
-    * (Multimodal.documentFeatures — a stateless mapPartitions, the codec
-    * batch shape) == the batch decode. This is where a real pipeline
-    * decodes media: ONCE at ingest, with features landing beside the
-    * payload — not per analysis query. One-shot memory-sink entry point. */
-  def mmFeaturesOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:mmfeatures:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_mmf",
-        graft.ml.Multimodal.documentFeatures(spark, stream(spark, dir)))
-    }
-
-  /** Streamed upkeep of the perceptual-hash sidecar (Catalog.phashStore):
-    * the same stateless decode+aHash projection over the documents
-    * stream — media is hashed once at ingest, dedup statements read the
-    * sidecar. */
-  def phashOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:phash:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_phash",
-        graft.ml.Multimodal.phashRows(spark, stream(spark, dir)))
-    }
 
   // ---- streamed admission of the near-dup PAIR GRAPH (Catalog.dupPairs) --
 
@@ -449,12 +49,12 @@ object DocumentsIngest {
     * lets the cluster table build once and stay valid under streamed
     * admission. At 100 TB both stores are the fp/band-partitioned stored
     * indexes the batch probes — corpus text is never re-read. */
-  def runPairSink(docsStream: DataFrame, scratchBase: String,
-      minJaccard: Double): Unit = {
+  def pairAdmission(scratchBase: String,
+      minJaccard: Double): (DataFrame, Long) => Unit = {
     val shinglePath = s"$scratchBase/shingles"
     val bandPath = s"$scratchBase/bands"
     val pairPath = s"$scratchBase/pairs"
-    val writeBatch: (DataFrame, Long) => Unit = (batch, id) => {
+    (batch, id) => {
       val spark = batch.sparkSession
       // IDEMPOTENT per-batch writes (review finding, r14): foreachBatch is
       // at-least-once, and a blind append replayed after a partial failure
@@ -490,52 +90,7 @@ object DocumentsIngest {
       batchBands.unpersist(false)
       ()
     }
-    Sinks.foreachBatchOnce(docsStream, s"$scratchBase/ck", writeBatch)
   }
-
-  /** The (doc_a, doc_b, jaccard) schema of the pair store — the read-side
-    * fallback for a corpus whose stream produced no batches. */
-  private val pairSchema = StructType(Seq(StructField("doc_a", LongType),
-    StructField("doc_b", LongType), StructField("jaccard", DoubleType)))
-
-  /** One-shot streamed pair-graph admission — the CORRECTNESS entry point:
-    * stream the docs through the pair sink into a fresh scratch store and
-    * read the accumulated verified pairs back; must equal the batch
-    * pipeline exactly. */
-  def pairsOnce(spark: SparkSession, dir: String, scratchBase: String,
-      minJaccard: Double): DataFrame =
-    graft.util.Caches.memoize(s"stream:duppairs:$dir:$scratchBase:$minJaccard") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      runPairSink(stream(spark, dir), scratchBase, minJaccard)
-      // Hadoop-FS existence, NOT java.io.File (review finding, r19): a
-      // local-disk check sees nothing under an hdfs:///s3a:// default FS,
-      // which would silently take the empty fallback on every remote
-      // deployment — reporting zero duplicates with no error
-      if (Sinks.pathExists(spark, s"$scratchBase/pairs"))
-        spark.read.parquet(s"$scratchBase/pairs")
-          .select("doc_a", "doc_b", "jaccard")
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), pairSchema)
-    }
-
-  /** Streamed-then-compacted pair graph — fold the per-batch appended pair
-    * files into one sorted doc_a-keyed generation, flip the MANIFEST, read
-    * back through it; must equal the batch pipeline row-for-row. */
-  def compactedPairsOnce(spark: SparkSession, dir: String,
-      scratchBase: String, minJaccard: Double): DataFrame =
-    graft.util.Caches.memoize(
-        s"stream:dupcompact:$dir:$scratchBase:$minJaccard") {
-      val pairs = pairsOnce(spark, dir, scratchBase, minJaccard)
-      // zero-batch corpus: nothing to compact — hand back the (empty)
-      // pair frame instead of compactAndFlip failing on a missing dir
-      if (!Sinks.pathExists(spark, s"$scratchBase/pairs")) pairs
-      // the compacted generation carries the per-batch b partition key
-      // through; the read-back projection drops it
-      else graft.ingest.Compact.compactAndFlip(spark, s"$scratchBase/pairs",
-        s"$scratchBase/idx", "doc_a", Seq("doc_a", "doc_b"),
-        partitions = Some(4))
-        .select("doc_a", "doc_b", "jaccard")
-    }
 
   // -- streamed admission of the CONTAINMENT pair graph (containPairs) --
 
@@ -547,7 +102,7 @@ object DocumentsIngest {
     * df sidecar), computes the exact intersection against the join-pruned
     * store and the set sizes from the sizes sidecar, and writes the
     * batch's verified pairs. Same per-batch `b=<id>` OVERWRITE discipline as
-    * runPairSink: foreachBatch is at-least-once, and the pair set derived
+    * pairAdmission: foreachBatch is at-least-once, and the pair set derived
     * at batch id is a pure function of the (deterministic) accumulated
     * store state, so a replay rewrites identical content instead of
     * double-appending — IDEMPOTENT, not additive (the HLL/HDR-compaction
@@ -564,16 +119,9 @@ object DocumentsIngest {
     * rare-at-admission). A shingle that crosses the cap mid-stream can
     * additionally admit pairs the batch generation skips — strictly MORE
     * recall at identical exact values, the conservative direction for a
-    * dedup store. */
-  def runContainPairSink(docsStream: DataFrame, scratchBase: String,
-      minContainment: Double, maxDf: Int): Unit =
-    Sinks.foreachBatchOnce(docsStream, s"$scratchBase/ck",
-      containPairBatchWriter(scratchBase, minContainment, maxDf))
-
-  /** The containment sink's named batch writer — exposed (the
-    * lexStatsBatchWriter pattern) so StreamReplaySpec can re-invoke it
-    * with the same (batch, id) and pin convergence. */
-  private[graft] def containPairBatchWriter(scratchBase: String,
+    * dedup store. Exposed so StreamReplaySpec can re-invoke it with the
+    * same (batch, id) and pin convergence. */
+  def containAdmission(scratchBase: String,
       minContainment: Double, maxDf: Int): (DataFrame, Long) => Unit = {
     val pairPath = s"$scratchBase/pairs"
     (batch, id) => {
@@ -581,15 +129,17 @@ object DocumentsIngest {
       val batchSh = graft.ml.NearDup.shingles(batch).cache()
       batchSh.write.mode("overwrite")
         .parquet(s"$scratchBase/shingles/b=$id")
-      // incremental sidecars, the dfDeltaBatchWriter discipline (VERDICT
+      // incremental sidecars through the one delta writer (VERDICT
       // r20 #3: the writer re-grouped the ENTIRE accumulated shingle store
       // for df and doc sizes on every micro-batch — O(store) work per
       // batch, quadratic over the stream): each batch appends its OWN
       // (shingle, df) and (doc_id, n) counts as idempotent b=<id>
       // generations; admission then JOINS against the folds, and the raw
       // store is only ever read join-pruned, never re-aggregated.
-      dfDeltaBatchWriter(s"$scratchBase/dfdeltas", "shingle")(batchSh, id)
-      dfDeltaBatchWriter(s"$scratchBase/sizedeltas", "doc_id")(batchSh, id)
+      Sinks.deltaWriter(s"$scratchBase/dfdeltas",
+        Sinks.counts("shingle"))(batchSh, id)
+      Sinks.deltaWriter(s"$scratchBase/sizedeltas",
+        Sinks.counts("doc_id"))(batchSh, id)
       containPairBatchFrame(spark, scratchBase, batchSh, minContainment,
         maxDf)
         .write.mode("overwrite").parquet(s"$pairPath/b=$id")
@@ -644,63 +194,4 @@ object DocumentsIngest {
           .as("containment"))
       .filter(col("containment") >= minContainment)
   }
-
-  /** The (doc_a, doc_b, na, nb, containment) schema of the containment
-    * pair store — the zero-batch read-side fallback. */
-  private val containPairSchema = StructType(Seq(
-    StructField("doc_a", LongType), StructField("doc_b", LongType),
-    StructField("na", LongType), StructField("nb", LongType),
-    StructField("containment", DoubleType)))
-
-  /** One-shot streamed containment-pair admission — the CORRECTNESS entry
-    * point: stream the docs through the containment sink into a fresh
-    * scratch store and read the accumulated verified pairs back; equals
-    * the batch NearDup.containmentPairs output whenever no shingle
-    * crosses the df cap between batches (always true under the one-batch
-    * AvailableNow run the entry performs; in general the streamed store
-    * is a recall-superset at identical exact values — see
-    * runContainPairSink). */
-  def containPairsOnce(spark: SparkSession, dir: String, scratchBase: String,
-      minContainment: Double, maxDf: Int): DataFrame =
-    graft.util.Caches.memoize(
-        s"stream:containpairs:$dir:$scratchBase:$minContainment:$maxDf") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      runContainPairSink(stream(spark, dir), scratchBase, minContainment,
-        maxDf)
-      if (Sinks.pathExists(spark, s"$scratchBase/pairs"))
-        spark.read.parquet(s"$scratchBase/pairs")
-          .select("doc_a", "doc_b", "na", "nb", "containment")
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        containPairSchema)
-    }
-
-  /** Streamed-then-compacted containment pair graph — fold the per-batch
-    * appended pair files into one sorted doc_a-keyed generation, flip the
-    * MANIFEST, read back through it; the compactedPairsOnce posture for
-    * the containment tier. */
-  def compactedContainPairsOnce(spark: SparkSession, dir: String,
-      scratchBase: String, minContainment: Double, maxDf: Int): DataFrame =
-    graft.util.Caches.memoize(
-        s"stream:containcompact:$dir:$scratchBase:$minContainment:$maxDf") {
-      val pairs = containPairsOnce(spark, dir, scratchBase, minContainment,
-        maxDf)
-      if (!Sinks.pathExists(spark, s"$scratchBase/pairs")) pairs
-      else graft.ingest.Compact.compactAndFlip(spark, s"$scratchBase/pairs",
-        s"$scratchBase/idx", "doc_a", Seq("doc_a", "doc_b"),
-        partitions = Some(4))
-        .select("doc_a", "doc_b", "na", "nb", "containment")
-    }
-
-  /** Cluster resolution over the STREAM-ADMITTED pair store — the
-    * end-to-end lifecycle pin: components of the streamed pairs must equal
-    * the batch-built cluster table (Catalog.dupClusters), which is what
-    * entitles the stored table to keep serving while admission streams. */
-  def clustersOnce(spark: SparkSession, dir: String, scratchBase: String,
-      minJaccard: Double): DataFrame =
-    graft.util.Caches.memoize(
-        s"stream:dupclusters:$dir:$scratchBase:$minJaccard") {
-      graft.ml.Clusters.connectedComponents(
-        pairsOnce(spark, dir, scratchBase, minJaccard))
-    }
 }

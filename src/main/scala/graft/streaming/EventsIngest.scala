@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import graft.model.Catalog
 
 /** §2.9 — Structured Streaming ingest of the `events` stream. The reference
@@ -17,55 +15,12 @@ import graft.model.Catalog
   *    ca-load per generation.
   *  - `dailyCounts`: event-time tumbling-window aggregation with a watermark
   *    for late data.
+  *
+  * Each streamed event store is a record in `Stores`; the stateful ones
+  * (windows, dedup, profiles, joins, enrichment, sketch grids) carry a
+  * bounded state-partition count the shared memory one-shot applies.
   */
 object EventsIngest {
-
-  private val runId = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Run a one-shot (AvailableNow) stream with a bounded state-partition
-    * count. A stateful micro-batch commits one state-store checkpoint PER
-    * SHUFFLE PARTITION per operator — at the session default of 32 that is
-    * hundreds of small files for a few seconds of local input, which is
-    * bring-up cost, not work. The partition count is pinned into the
-    * checkpoint at the first batch, so this only applies to these
-    * self-contained one-shot runs (fresh checkpoint each call); an always-on
-    * deployment sizes `spark.sql.shuffle.partitions` to its cluster before
-    * starting the query and never pays bring-up again. */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(
-      f: SparkSession => T): T = {
-    // a FRESH session (same SparkContext/SharedState/extensions, SQLConf
-    // rebuilt from build-time options — newSession does NOT copy the
-    // parent's runtime conf; every conf these streams rely on is set at
-    // session build in GraftSession, ADVICE r10) carries the bounded
-    // partition count, so the parent session's
-    // spark.sql.shuffle.partitions is never mutated — a query running
-    // concurrently on the parent keeps its own setting (ADVICE r9)
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    f(s)
-  }
-
-  /** Run a one-shot (AvailableNow) memory-sink stream on the bounded-state
-    * cloned session and return the sink table — registered with
-    * Caches.trackSinkTable so drain() drops it with the statement's memo
-    * (the runId-fresh tables otherwise accumulate for the session
-    * lifetime). */
-  private[streaming] def memorySinkOnce(spark: SparkSession, n: Int, prefix: String,
-      mode: String, confs: Map[String, String] = Map.empty)(
-      build: SparkSession => DataFrame): DataFrame =
-    withStatePartitions(spark, n) { s =>
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      val name = s"${prefix}_${runId.incrementAndGet()}"
-      val q = build(s).writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      graft.util.Caches.trackSinkTable(s, name)
-      s.table(name)
-    }
 
   /** The raw event stream, normalized like the batch reader. The file
     * source needs an explicit schema; deriving it from the parquet footer
@@ -87,13 +42,6 @@ object EventsIngest {
       concat(lit("event:"), col("event_type")).as("key"),
       unix_timestamp(col("ts")).as("off"),
       col("value").as("score"))
-
-  /** Run the stateless postings sink to parquet until all currently-available
-    * input is processed (Trigger.AvailableNow — the batch-of-the-stream mode;
-    * a deployment would run the same query continuously). */
-  def runPostingsSink(spark: SparkSession, dir: String, outPath: String,
-      checkpoint: String): Unit =
-    Sinks.parquetOnce(postings(stream(spark, dir)), outPath, checkpoint)
 
   /** Watermarked daily tumbling-window counts per event type. */
   def dailyCounts(events: DataFrame): DataFrame =
@@ -138,14 +86,6 @@ object EventsIngest {
       .withWatermark("ts", "2 days")
       .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
       .select(col("user_id"), col("event_type"), col("day"))
-
-  /** One-shot streaming dedup over all available input (append mode — rows
-    * flow out in the micro-batch where their key is first seen). */
-  def dedupDailyOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:dedup:$dir") {
-      memorySinkOnce(spark, 8, "graft_stream_dedup", "append")(s =>
-        dedupDaily(stream(s, dir)))
-    }
 
   /** Per-user lifetime profile state: first/last event second, event count,
     * raw value sum. Merging an event is commutative and associative, so the
@@ -192,20 +132,17 @@ object EventsIngest {
       .withColumn("sum_value", round(col("sum_value"), 2))
   }
 
-  /** One-shot profile stream: run userProfiles over all available input in
-    * Update mode (memory sink accumulates every per-batch update), then keep
-    * each user's LAST update — n_events strictly grows per update, so the
-    * max-n row is the final state. The kept set equals the batch
-    * groupBy(user_id) aggregate. */
-  def userProfilesOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:profiles:$dir") {
-      import org.apache.spark.sql.expressions.Window
-      memorySinkOnce(spark, 8, "graft_stream_prof", "update")(s =>
-        userProfiles(stream(s, dir)))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("user_id").orderBy(desc("n_events"))))
-        .filter(col("rn") === 1).drop("rn")
-    }
+  /** Each user's LAST profile update out of a stream of Update-mode
+    * emissions (Stores.UserProfiles) — n_events strictly grows per update,
+    * so the max-n row is the final state, and the kept set equals the
+    * batch groupBy(user_id) aggregate. */
+  def finalProfiles(updates: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    updates
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("user_id").orderBy(desc("n_events"))))
+      .filter(col("rn") === 1).drop("rn")
+  }
 
   /** Stream-static enrichment: the event stream joined to a STATIC dimension
     * (customer market segment keyed by user_id = c_custkey), then aggregated
@@ -288,143 +225,4 @@ object EventsIngest {
       "left_outer")
       .select(col("user_id"), col("p_ts"), col("v_ts"))
   }
-
-  /** One-shot left-outer interval join over all available input. */
-  def intervalJoinLeftOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:ivjoinleft:$dir") {
-      memorySinkOnce(spark, 8, "graft_stream_ljoin", "append")(s =>
-        intervalJoinLeft(stream(s, dir)))
-    }
-
-  /** One-shot stream-stream interval join over all available input (append
-    * mode — pairs emit once both watermarks pass). */
-  def intervalJoinOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:ivjoin:$dir") {
-      memorySinkOnce(spark, 8, "graft_stream_join", "append")(s =>
-        intervalJoin(stream(s, dir)))
-    }
-
-  /** One-shot stream-static enrichment over all available input (complete
-    * mode → memory sink). */
-  def enrichedOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:enrich:$dir") {
-      memorySinkOnce(spark, 8, "graft_stream_enrich", "complete")(s =>
-        enriched(stream(s, dir), Catalog.table(s, dir, "customer")))
-    }
-
-  /** One-shot shuffled (non-broadcast) enrichment over all available input. */
-  def enrichedShuffledOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:enrichbig:$dir") {
-      // broadcast DISABLED on the cloned session: the testdata dimension is
-      // small enough that the planner would otherwise pick a broadcast join
-      // and the entry would silently exercise the same plan as
-      // ev_stream_enrich — the point here is the big-dim SHUFFLE shape
-      // (StreamingSpec pins the plan contains no broadcast join)
-      memorySinkOnce(spark, 8, "graft_stream_enrichbig", "complete",
-        Map("spark.sql.autoBroadcastJoinThreshold" -> "-1"))(s =>
-        enrichedShuffled(stream(s, dir), Catalog.table(s, dir, "customer")))
-    }
-
-  /** One-shot daily counts: run the windowed aggregation over all available
-    * input (complete mode → in-memory sink) and return the result table.
-    * This is the CORRECTNESS entry point — the same aggregation the batch
-    * `ev_daily_counts` query does, produced by the streaming engine. */
-  def dailyCountsOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:daily:$dir") {
-      memorySinkOnce(spark, 8, "graft_stream_daily", "complete")(s =>
-        dailyCounts(stream(s, dir)))
-    }
-
-  /** Streamed HLL register upkeep: the sketch's max-rho registers ARE the
-    * ideal streaming state — bounded at (event_types × 256) rows however
-    * many events flow through, and max is the merge law, so the streaming
-    * aggregation's state update is exactly the batch partial aggregate.
-    * Sketch at ingest, estimate at serve: the fold to an estimate happens
-    * at read (Sketches.hllFold over the sink), never inside the stream. */
-  def hllRegistersOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:hllregs:$dir") {
-      memorySinkOnce(spark, 8, "graft_stream_hllregs", "complete")(s =>
-        graft.ml.Sketches.hllRegisters(stream(s, dir)))
-    }
-
-  /** Per-batch HLL register delta writer — IDEMPOTENT twice over: the
-    * b=<batchId> overwrite dirs absorb foreachBatch's at-least-once replay
-    * (the dfDelta convention), and max-merge is idempotent anyway (a
-    * replayed register can only re-assert the same max — the property
-    * that makes max-typed sketch state the easiest to maintain
-    * incrementally, vs the additive deltas below which NEED the overwrite
-    * discipline). Each batch writes ITS OWN registers; nothing rescans
-    * the stored sketch. */
-  private[graft] def hllDeltaBatchWriter(
-      deltaPath: String): (DataFrame, Long) => Unit = (batch, id) => {
-    graft.ml.Sketches.hllRegisters(batch)
-      .write.mode("overwrite").parquet(s"$deltaPath/b=$id")
-    ()
-  }
-
-  /** Streamed-then-compacted HLL register store — the generational end of
-    * the sketch lifecycle (winnow_compact's posture with a NON-ADDITIVE
-    * merge law): per-batch register deltas accumulate as small files, and
-    * compaction max-folds them into ONE sorted generation behind the
-    * MANIFEST flip. Reading the compacted store and folding to an
-    * estimate must equal the whole-corpus batch sketch exactly (max is
-    * associative/commutative and every event lands in some batch). */
-  def hllCompactOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:hllcompact:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      Sinks.foreachBatchOnce(stream(spark, dir), s"$scratchBase/ck",
-        hllDeltaBatchWriter(s"$scratchBase/deltas"))
-      graft.ingest.Compact.writeGenerationAndFlip(spark,
-        Sinks.readDeltasOrEmpty(spark, s"$scratchBase/deltas",
-            StructType(Seq(StructField("event_type", StringType),
-              StructField("reg", IntegerType),
-              StructField("mr", IntegerType))))
-          .groupBy("event_type", "reg").agg(max("mr").as("mr")),
-        s"$scratchBase/idx", "event_type", Seq("event_type", "reg"),
-        partitions = Some(1))
-    }
-
-  /** Per-batch HDR quantile-grid delta writer — additive counts, so the
-    * b=<batchId> overwrite is what makes at-least-once replay safe (a
-    * replayed additive delta would otherwise double-count; contrast the
-    * idempotent max deltas above). */
-  private[graft] def hdrDeltaBatchWriter(
-      deltaPath: String): (DataFrame, Long) => Unit = (batch, id) => {
-    graft.ml.Sketches.hdrGrid(batch)
-      .write.mode("overwrite").parquet(s"$deltaPath/b=$id")
-    ()
-  }
-
-  /** Streamed-then-compacted quantile grid — hllCompactOnce's additive
-    * sibling: per-batch bucket-count deltas sum-fold into one sorted
-    * generation behind the MANIFEST flip; the quantile fold over the
-    * compacted grid must equal the whole-corpus batch report. */
-  def hdrCompactOnce(spark: SparkSession, dir: String,
-      scratchBase: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:hdrcompact:$dir:$scratchBase") {
-      graft.ingest.Compact.rmTree(scratchBase)
-      Sinks.foreachBatchOnce(stream(spark, dir), s"$scratchBase/ck",
-        hdrDeltaBatchWriter(s"$scratchBase/deltas"))
-      graft.ingest.Compact.writeGenerationAndFlip(spark,
-        Sinks.readDeltasOrEmpty(spark, s"$scratchBase/deltas",
-            StructType(Seq(StructField("event_type", StringType),
-              StructField("shift", IntegerType),
-              StructField("w", LongType), StructField("cnt", LongType))))
-          .groupBy("event_type", "shift", "w").agg(sum("cnt").as("cnt")),
-        s"$scratchBase/idx", "event_type",
-        Seq("event_type", "shift", "w"), partitions = Some(1))
-    }
-
-  /** Streamed log-linear quantile grid upkeep: the bucket counts are
-    * SUM-typed streaming state bounded at the grid size however many
-    * events flow (the CMS-counter posture applied to rank questions);
-    * count addition is the merge law, so the streaming aggregation's
-    * state update IS the batch partial aggregate. Quantile folds happen
-    * at read (Sketches.hdrQuantilesFrom), never inside the stream. */
-  def hdrGridOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:hdrgrid:$dir") {
-      memorySinkOnce(spark, 8, "graft_stream_hdrgrid", "complete")(s =>
-        graft.ml.Sketches.hdrGrid(stream(s, dir)))
-    }
 }

@@ -7,12 +7,13 @@ import org.apache.spark.sql.types._
   * result-refresh mechanism (/root/reference/README.md:38-49,
   * src/query.cc:877-890): overrides are keyed JSON overlays consulted per
   * result so summary fields update WITHOUT rebuilding the indexes. Batch
-  * loading covers the initial table (S6); this sink is its always-on twin:
-  * new source rows stream through the SAME derivation the batch table uses
-  * (Catalog.overrideRows — a pure per-row projection, no state store, no
-  * shuffle) and append to the stored `summary_overrides` table. With the
-  * postings/sketch/ANN sinks this completes always-on ingest across all
-  * three logical table types (index, summaries, overrides).
+  * loading covers the initial table (S6); its always-on twin is the
+  * `Stores.Overrides` record: new source rows stream through the SAME
+  * derivation the batch table uses (Catalog.overrideRows — a pure per-row
+  * projection, no state store, no shuffle) and append to the stored
+  * `summary_overrides` table. With the postings/sketch/ANN stores this
+  * completes always-on ingest across all three logical table types (index,
+  * summaries, overrides).
   */
 object OverridesIngest {
 
@@ -24,24 +25,4 @@ object OverridesIngest {
 
   def stream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(schema).parquet(s"$dir/{orders.parquet}")
-
-  /** Stream-derived override rows (key, json) — identical projection to the
-    * batch table. */
-  def overrideRows(orders: DataFrame): DataFrame =
-    graft.model.Catalog.overrideRows(orders)
-
-  /** Append the streamed override rows to a parquet table directory (the
-    * deployment shape: the overlay join reads this table per statement). */
-  def runOverrideSink(spark: SparkSession, dir: String, outPath: String,
-      checkpoint: String): Unit =
-    Sinks.parquetOnce(overrideRows(stream(spark, dir)), outPath, checkpoint)
-
-  /** One-shot streamed override build over all available input (memory
-    * sink) — the CORRECTNESS entry point; must equal the batch-derived
-    * override table exactly. Memoized per statement window. */
-  def overridesOnce(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Caches.memoize(s"stream:overrides:$dir") {
-      Sinks.memoryOnce(spark, "graft_stream_ovr",
-        overrideRows(stream(spark, dir)))
-    }
 }

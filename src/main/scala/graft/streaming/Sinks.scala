@@ -2,19 +2,25 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
+import graft.ingest.Compact
+import graft.util.Caches
 
-/** The ONE streaming sink protocol shared by the always-on index/table
-  * writers (documents, embeddings, overrides, event postings): a parquet
-  * append sink (the deployment shape — same layout the batch
-  * materializations write), a memory-sink one-shot (the CORRECTNESS
-  * entry-point shape), and the foreachBatch one-shot scaffolding the
-  * delta/pair sinks ride. Sink setup lives in exactly one place so
-  * options, trigger mode, and the drain-tracking rule (ADVICE r9: every
-  * one-shot sink table must be registered for Caches.drain or it pins
-  * rows in driver memory for the session) cannot drift between ingest
-  * families. EventsIngest keeps its own one-shot variant deliberately —
-  * its stateful streams need a cloned session with bounded state
-  * partitions, a different protocol, not a drifted copy of this one. */
+/** The ONE streaming sink protocol every stream-maintained store (a
+  * `Store` record in `Stores`) rides. Three shared one-shots serve every
+  * record:
+  *
+  *  - `memory`: drain the store's stream into a memory-sink table,
+  *    memoized per statement window (the CORRECTNESS entry-point shape);
+  *  - `compacted`: parquet sink (the deployment appender, small files per
+  *    micro-batch) → one sorted generation behind a MANIFEST flip;
+  *  - `folded`: foreachBatch through the store's per-batch delta writer →
+  *    the fold over the delta generations.
+  *
+  * Sink setup lives in exactly one place so options, trigger mode, and the
+  * drain-tracking rule (ADVICE r9: every one-shot sink table must be
+  * registered for Caches.drain or it pins rows in driver memory for the
+  * session) cannot drift between stores. A stateful store's bounded state
+  * partitions and confs are record data, not a second protocol. */
 object Sinks {
 
   private val runId = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -33,10 +39,15 @@ object Sinks {
     q.awaitTermination()
   }
 
+  /** Append `store`'s streamed rows to a parquet directory — the
+    * deployment shape every stateless store shares. */
+  def append(spark: SparkSession, store: Store, dir: String, outPath: String,
+      checkpoint: String): Unit =
+    parquetOnce(store.stream(spark, dir), outPath, checkpoint)
+
   /** The ONE foreachBatch one-shot: drain all currently-available input
-    * through `writer` (review finding, r19 — this scaffolding existed in
-    * five hand-copies across the delta/pair/compaction sinks; an option
-    * change must land here exactly once). */
+    * through `writer` (review finding, r19 — an option change must land
+    * here exactly once). */
   def foreachBatchOnce(rows: DataFrame, checkpoint: String,
       writer: (DataFrame, Long) => Unit): Unit = {
     val q = rows.writeStream
@@ -59,43 +70,122 @@ object Sinks {
   /** Read a stream-produced delta/store dir, or an EMPTY frame with
     * `schema` when the stream produced no batches and never created the
     * dir (a zero-input corpus terminates Trigger.AvailableNow without a
-    * foreachBatch call) — the pair store's fallback generalized to every
-    * delta reader, so sibling entry points cannot diverge between a
-    * graceful empty result and PATH_NOT_FOUND (review finding, r19). */
+    * foreachBatch call), so every delta store ends in a graceful empty
+    * result rather than PATH_NOT_FOUND (review finding, r19). */
   def readDeltasOrEmpty(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     if (pathExists(spark, path)) spark.read.parquet(path)
     else spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
 
-  /** The shared memory-sink body — mode is the only variance between the
-    * append and complete one-shots, so the queryName/tracking/trigger
-    * sequence has exactly one rendering. */
-  private def memorySink(spark: SparkSession, prefix: String,
-      rows: DataFrame, mode: String): DataFrame = {
-    val name = s"${prefix}_${runId.incrementAndGet()}"
-    val q = rows.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.util.Caches.trackSinkTable(spark, name)
-    spark.table(name)
+  /** The ONE per-batch delta writer: each micro-batch overwrites its OWN
+    * `b=<batchId>` generation with `f(batch)`, so foreachBatch's
+    * at-least-once replay converges instead of double-counting (VERDICT
+    * r14 #7). Nothing rescans the stored generations. */
+  def deltaWriter(deltaPath: String,
+      f: DataFrame => DataFrame): (DataFrame, Long) => Unit = (batch, id) => {
+    // layout-migration guard: a delta store written by the pre-r15 blind
+    // append keeps part files at the ROOT of deltaPath; mixing b=<id>
+    // subdirs into it would trip Spark's conflicting-directory-structures
+    // assertion on the next read. Fail loudly with the migration step
+    // instead of corrupting the store. Resolved through Hadoop's
+    // FileSystem API so the guard holds on every filesystem the sink can
+    // write to — java.io.File silently sees nothing on HDFS/S3 paths
+    // (ADVICE r15).
+    val rootPath = new org.apache.hadoop.fs.Path(deltaPath)
+    val fs = rootPath.getFileSystem(
+      batch.sparkSession.sparkContext.hadoopConfiguration)
+    if (fs.exists(rootPath) && fs.listStatus(rootPath).exists(s =>
+        s.isFile && s.getPath.getName.startsWith("part-")))
+      sys.error(s"$deltaPath holds a legacy flat delta layout; fold it " +
+        "into a generation first (Compact.mergeDfGenerations) and point " +
+        "the sink at a fresh delta dir before resuming")
+    f(batch).write.mode("overwrite").parquet(s"$deltaPath/b=$id")
+    ()
   }
 
-  /** Drain all currently-available input into a tracked memory-sink table
-    * and return it (dropped again by Caches.drain at statement-window
-    * end). */
-  def memoryOnce(spark: SparkSession, prefix: String,
-      rows: DataFrame): DataFrame =
-    memorySink(spark, prefix, rows, "append")
+  /** Per-`key` row counts of one batch, as (key, df) — the delta of every
+    * document-frequency and set-size store. */
+  def counts(key: String): DataFrame => DataFrame =
+    _.groupBy(key).agg(org.apache.spark.sql.functions.count(
+      org.apache.spark.sql.functions.lit(1)).as("df"))
 
-  /** Complete-mode one-shot for streaming AGGREGATIONS whose state is
-    * bounded by construction (sketch grids, register sets) — append mode
-    * would never emit rows that keep updating. */
-  def memoryCompleteOnce(spark: SparkSession, prefix: String,
-      rows: DataFrame): DataFrame =
-    memorySink(spark, prefix, rows, "complete")
+  /** The memory-sink table name prefix of `store`. */
+  def sinkName(store: Store): String = s"graft_stream_${store.name}"
+
+  /** Drain all currently-available input of `store` into a tracked
+    * memory-sink table and return it — memoized per statement window, and
+    * dropped again by Caches.drain at window end. A stateful store runs on
+    * a FRESH session (same SparkContext/SharedState/extensions; newSession
+    * does not copy the parent's runtime conf, and every conf these streams
+    * rely on is set at session build in GraftSession, ADVICE r10) carrying
+    * its bounded shuffle-partition count and confs, so the caller's
+    * session is never mutated (ADVICE r9). The partition count is pinned
+    * into the checkpoint at the first batch, so it only bounds these
+    * self-contained one-shot runs; an always-on deployment sizes
+    * `spark.sql.shuffle.partitions` to its cluster before starting. */
+  def memory(spark: SparkSession, store: Store, dir: String): DataFrame =
+    Caches.memoize(s"stream:${store.name}:$dir") {
+      val s =
+        if (store.statePartitions.isEmpty && store.confs.isEmpty) spark
+        else {
+          val c = spark.newSession()
+          (store.statePartitions.map(n =>
+              "spark.sql.shuffle.partitions" -> n.toString) ++ store.confs)
+            .foreach { case (k, v) => c.conf.set(k, v) }
+          c
+        }
+      val name = s"${sinkName(store)}_${runId.incrementAndGet()}"
+      val q = store.stream(s, dir).writeStream
+        .outputMode(store.mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      Caches.trackSinkTable(s, name)
+      s.table(name)
+    }
+
+  /** Stream `store` into a fresh scratch dir and return its rows read
+    * back through one sorted generation behind the flipped MANIFEST
+    * (Compact's atomic reader swap) — which must equal the batch-built
+    * store exactly. A row store goes through the parquet sink and
+    * compactAndFlip; a delta store compacts its fold. The explicit
+    * partition count keeps the generation a genuinely smaller file set
+    * than the raw streamed sink (a deployment derives it from input bytes
+    * / target file size). Memoized per statement window; the scratch dir
+    * is cleared first so re-runs across windows never double-append. */
+  def compacted(spark: SparkSession, store: Store, dir: String,
+      scratchBase: String): DataFrame =
+    Caches.memoize(s"stream:${store.name}:compact:$dir:$scratchBase") {
+      val idx = s"$scratchBase/idx"
+      val parts = Some(store.partitions)
+      if (store.deltas.isDefined)
+        Compact.writeGenerationAndFlip(spark,
+          folded(spark, store, dir, scratchBase), idx, store.sort.head,
+          store.sort, parts)
+      else {
+        Compact.rmTree(scratchBase)
+        parquetOnce(store.stream(spark, dir), s"$scratchBase/raw",
+          s"$scratchBase/ck")
+        Compact.compactAndFlip(spark, s"$scratchBase/raw", idx,
+          store.sort.head, store.sort, parts)
+      }
+    }
+
+  /** Stream `store` through its per-batch delta writer into a fresh
+    * scratch dir and return the fold over the generations. Memoized per
+    * statement window; the scratch dir is cleared first. */
+  def folded(spark: SparkSession, store: Store, dir: String,
+      scratchBase: String): DataFrame = {
+    val d = store.deltas.getOrElse(
+      sys.error(s"store ${store.name} keeps no delta generations"))
+    Caches.memoize(s"stream:${store.name}:$dir:$scratchBase") {
+      Compact.rmTree(scratchBase)
+      foreachBatchOnce(store.stream(spark, dir), s"$scratchBase/ck",
+        d.writer(scratchBase))
+      d.fold(readDeltasOrEmpty(spark, s"$scratchBase/${d.dir}", d.schema))
+    }
+  }
 }

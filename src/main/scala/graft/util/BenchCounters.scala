@@ -11,8 +11,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * (VERDICT r13 #4) — job counts can: a query whose driver-environment
   * inflation comes from many short driver-scheduled waves shows it directly
   * in `jobs`, while a data-volume problem shows in `shuffleBytes`/`taskMs`.
-  * Snapshot exactness requires draining the async listener bus first —
-  * org.apache.spark.graft.ListenerBridge.waitUntilEmpty. */
+  * Snapshot exactness requires draining the async listener bus first,
+  * which `drainedSnapshot` does (ListenerBridge.waitUntilEmpty). */
 final class BenchCounters extends SparkListener {
   private val jobs = new AtomicLong
   private val stages = new AtomicLong
@@ -62,6 +62,13 @@ final class BenchCounters extends SparkListener {
   /** (jobs, stages, shuffleBytes, taskMs) — running totals. */
   def snapshot: BenchCounters.Snap =
     BenchCounters.Snap(jobs.get, stages.get, shuffleBytes.get, taskMs.get)
+
+  /** Drain `sc`'s listener bus, then snapshot — the exact totals of every
+    * job that has finished so far. */
+  def drainedSnapshot(sc: org.apache.spark.SparkContext): BenchCounters.Snap = {
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    snapshot
+  }
 }
 
 object BenchCounters {

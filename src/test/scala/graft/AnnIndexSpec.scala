@@ -32,7 +32,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // row-group skipping at the scan, no runtime bucket join
     assert(p.contains("In(bucket"), s"bucket In filter not pushed:\n$p")
     assert(new java.io.File(
-      s"/root/repo/.graft-cache/${Catalog.cacheVersionTag}").exists())
+      s"${Catalog.cacheRoot}/${Catalog.cacheVersionTag}").exists())
     assert(df.count() == 10)
   }
 

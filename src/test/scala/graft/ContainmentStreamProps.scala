@@ -5,7 +5,7 @@ import org.scalacheck.Prop.forAll
 import graft.streaming.DocumentsIngest
 
 /** Scalacheck laws for the streamed containment pair admission
-  * (DocumentsIngest.containPairBatchWriter) — the cases the fixed
+  * (DocumentsIngest.containAdmission) — the cases the fixed
   * two-batch StreamReplaySpec cannot reach:
   *
   *  - EXACTNESS: every streamed pair's (na, nb, containment) equals an
@@ -74,7 +74,7 @@ object ContainmentStreamProps extends Properties("ContainmentStream") {
         .createTempDirectory("graft_containprops").toString
       try {
         val df = docs.toDF("doc_id", "text", "source")
-        val write = DocumentsIngest.containPairBatchWriter(base, MinC, MaxDf)
+        val write = DocumentsIngest.containAdmission(base, MinC, MaxDf)
         val batchOf = (id: Long) =>
           df.filter(org.apache.spark.sql.functions.col("doc_id") % k === id)
         (0L until k.toLong).foreach(id => write(batchOf(id), id))

@@ -39,12 +39,10 @@ class CorpusOpsSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(counters)
     try {
       val pairs = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("doc_a", "doc_b")
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      val before = counters.snapshot
+      val before = counters.drainedSnapshot(spark.sparkContext)
       val cc = Clusters.connectedComponents(pairs)
       val rows = cc.collect()
-      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      val delta = counters.snapshot - before
+      val delta = counters.drainedSnapshot(spark.sparkContext) - before
       assert(rows.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
         Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
       assert(delta.jobs == 3,

@@ -133,8 +133,8 @@ class RetrievalSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getInt(3))).toSet
     assert(streamedRows == batchRows)
     // stats: per-batch delta generations fold to the batch aggregate
-    graft.streaming.DocumentsIngest.runLexStatsSink(src,
-      s"$base/deltas", s"$base/ck2")
+    graft.streaming.Sinks.foreachBatchOnce(src, s"$base/ck2",
+      graft.streaming.Sinks.deltaWriter(s"$base/deltas", Retrieval.lexStatsRows))
     assert(spark.read.parquet(s"$base/deltas").count() == 3,
       "one delta generation per micro-batch")
     val folded = spark.read.parquet(s"$base/deltas")
@@ -202,8 +202,8 @@ class RetrievalSpec extends AnyFunSuite {
     val scratch = java.nio.file.Files
       .createTempDirectory("graft_bm25_gen").toString
     try {
-      val gen = graft.streaming.DocumentsIngest.compactedLexOnce(
-        spark, dir, scratch)
+      val gen = graft.streaming.Sinks.compacted(spark,
+        graft.streaming.Stores.LexIndex, dir, scratch)
       val fromGen = Retrieval.bm25StoredTopK(gen,
         Catalog.lexStats(spark, dir), terms, 15)
       val got = fromGen.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

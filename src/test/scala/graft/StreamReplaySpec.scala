@@ -1,17 +1,18 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.Catalog
-import graft.streaming.DocumentsIngest
+import graft.streaming.{DocumentsIngest, Sinks, Store, Stores}
 
 /** Replay idempotence of the streamed index sinks (VERDICT r14 #7): the
   * engine's foreachBatch sinks run under Structured Streaming's
   * at-least-once contract, so a micro-batch may be delivered AGAIN after a
   * partial failure. The pair sink got per-batch overwrite dirs in r14;
-  * these specs pin the same property for the lex-stats and winnow-df delta
-  * sinks (re-invoking the named batch writer with the same (batch, id)
-  * must converge, not double-count) and for the parquet file-sink
+  * these specs pin the same property for every delta store riding the
+  * one delta writer (re-invoking a record's batch writer with the same
+  * (batch, id) must converge, not double-count) and for the parquet file-sink
   * generations behind the lex and span compactions (an aborted attempt's
   * orphan part-file is invisible to readers — the FileStreamSink metadata
   * log is the commit record, and compaction reads through it).
@@ -24,80 +25,65 @@ class StreamReplaySpec extends AnyFunSuite {
   private def scratch(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_replay_$tag").toString
 
-  test("lex-stats delta sink: replayed micro-batch converges") {
-    val base = scratch("lexstats")
-    try {
-      val docs = Catalog.documents(spark, dir)
-      val deltas = s"$base/deltas"
-      val write = DocumentsIngest.lexStatsBatchWriter(deltas)
-      write(docs, 0L)
-      val once = spark.read.parquet(deltas)
-        .agg(sum("n_docs"), sum("sum_dl")).collect()(0)
-      // at-least-once replay: the SAME batch delivered again under the
-      // same id — the b=0 overwrite must converge, a blind append would
-      // double every count feeding avgdl
-      write(docs, 0L)
-      val twice = spark.read.parquet(deltas)
-        .agg(sum("n_docs"), sum("sum_dl")).collect()(0)
-      assert(twice == once, s"replay double-counted: $once -> $twice")
-    } finally graft.ingest.Compact.rmTree(base)
-  }
+  /** One delta store under replay: `input` is one micro-batch of the
+    * store's stream, `fold` the read whose value a replay must not change,
+    * and `total`, where given, a count a LATER batch must double. */
+  private case class DeltaCase(store: Store, input: () => DataFrame,
+      fold: DataFrame => Any, total: Option[DataFrame => Long] = None)
 
-  test("winnow-df delta sink: replayed micro-batch converges") {
-    val base = scratch("winnowdf")
-    try {
-      val fps = graft.ml.NearDup.winnowFingerprints(
-        Catalog.documents(spark, dir))
-      val deltas = s"$base/deltas"
-      val write = DocumentsIngest.dfDeltaBatchWriter(deltas)
-      write(fps, 0L)
-      val once = spark.read.parquet(deltas).groupBy("fp")
-        .agg(sum("df").as("df")).collect()
-        .map(r => (r.get(0), r.getLong(1))).toSet
-      write(fps, 0L)
-      val twice = spark.read.parquet(deltas).groupBy("fp")
-        .agg(sum("df").as("df")).collect()
-        .map(r => (r.get(0), r.getLong(1))).toSet
-      assert(twice == once, "df replay double-counted fingerprints")
-      // a LATER batch still accumulates (the overwrite is per-batch, not
-      // per-store)
-      write(fps, 1L)
-      val next = spark.read.parquet(deltas).agg(sum("df")).collect()(0)
-        .getLong(0)
-      assert(next == 2 * once.toSeq.map(_._2).sum)
-    } finally graft.ingest.Compact.rmTree(base)
-  }
+  private def docs() = Catalog.documents(spark, dir)
+  private def events() = Catalog.events(spark, dir)
 
-  test("sketch delta sinks: replayed micro-batch converges for BOTH merge " +
-    "algebras (idempotent max registers, overwrite-guarded additive grid)") {
-    val base = scratch("sketch")
-    try {
-      val ev = Catalog.events(spark, dir)
-      val hllDeltas = s"$base/hll"
-      val wHll = graft.streaming.EventsIngest.hllDeltaBatchWriter(hllDeltas)
-      wHll(ev, 0L);
-      val hllOnce = spark.read.parquet(hllDeltas)
-        .groupBy("event_type", "reg").agg(max("mr").as("mr")).collect()
-        .map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-      wHll(ev, 0L)
-      val hllTwice = spark.read.parquet(hllDeltas)
-        .groupBy("event_type", "reg").agg(max("mr").as("mr")).collect()
-        .map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-      assert(hllTwice == hllOnce, "register replay changed the max-merge")
-      val hdrDeltas = s"$base/hdr"
-      val wHdr = graft.streaming.EventsIngest.hdrDeltaBatchWriter(hdrDeltas)
-      wHdr(ev, 0L)
-      val hdrOnce = spark.read.parquet(hdrDeltas)
-        .agg(sum("cnt")).collect()(0).getLong(0)
-      wHdr(ev, 0L)
-      val hdrTwice = spark.read.parquet(hdrDeltas)
-        .agg(sum("cnt")).collect()(0).getLong(0)
-      assert(hdrTwice == hdrOnce, "additive grid replay double-counted")
-      // a LATER batch still accumulates
-      wHdr(ev, 1L)
-      assert(spark.read.parquet(hdrDeltas).agg(sum("cnt")).collect()(0)
-        .getLong(0) == 2 * hdrOnce)
-    } finally graft.ingest.Compact.rmTree(base)
+  /** Every delta store rides the one delta writer (Sinks.deltaWriter)
+    * through its record; each test replays its stores' batches. */
+  private val deltaTests: Seq[(String, Seq[DeltaCase])] = Seq(
+    "lex-stats delta sink: replayed micro-batch converges" -> Seq(
+      DeltaCase(Stores.LexStats, docs,
+        _.agg(sum("n_docs"), sum("sum_dl")).collect()(0))),
+    "winnow-df delta sink: replayed micro-batch converges" -> Seq(
+      DeltaCase(Stores.WinnowDf,
+        () => Stores.WinnowDf.rows(docs(), dir),
+        _.groupBy("fp").agg(sum("df").as("df")).collect()
+          .map(r => (r.get(0), r.getLong(1))).toSet,
+        Some(_.agg(sum("df")).collect()(0).getLong(0)))),
+    ("sketch delta sinks: replayed micro-batch converges for BOTH merge " +
+      "algebras (idempotent max registers, overwrite-guarded additive " +
+      "grid)") -> Seq(
+      DeltaCase(Stores.HllDeltas, events,
+        _.groupBy("event_type", "reg").agg(max("mr").as("mr")).collect()
+          .map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap),
+      DeltaCase(Stores.HdrDeltas, events,
+        _.agg(sum("cnt")).collect()(0).getLong(0),
+        Some(_.agg(sum("cnt")).collect()(0).getLong(0)))))
+
+  deltaTests.foreach { case (name, cases) =>
+    test(name) {
+      cases.foreach { c =>
+        val base = scratch(c.store.name)
+        try {
+          val write = c.store.deltas.get.writer(base)
+          def read() = spark.read.parquet(s"$base/deltas")
+          val batch = c.input()
+          write(batch, 0L)
+          val once = c.fold(read())
+          // at-least-once replay: the SAME batch delivered again under the
+          // same id — the b=0 overwrite must converge, a blind append would
+          // double every count downstream
+          write(batch, 0L)
+          val twice = c.fold(read())
+          assert(twice == once,
+            s"${c.store.name} replay double-counted: $once -> $twice")
+          // a LATER batch still accumulates (the overwrite is per-batch,
+          // not per-store)
+          c.total.foreach { total =>
+            val one = total(read())
+            write(batch, 1L)
+            assert(total(read()) == 2 * one,
+              s"${c.store.name}: a later batch did not accumulate")
+          }
+        } finally graft.ingest.Compact.rmTree(base)
+      }
+    }
   }
 
   test("containment pair sink: replayed micro-batch converges; two-batch " +
@@ -110,7 +96,7 @@ class StreamReplaySpec extends AnyFunSuite {
           r.getDouble(4))).toSet
       val docs = Catalog.documents(spark, dir)
       val mid = 75L
-      val write = DocumentsIngest.containPairBatchWriter(base, 0.9, 50)
+      val write = DocumentsIngest.containAdmission(base, 0.9, 50)
       write(docs.filter(col("doc_id") < mid), 0L)
       val once = pairSet()
       // at-least-once replay of the SAME (batch, id): the b=0 overwrite
@@ -141,7 +127,7 @@ class StreamReplaySpec extends AnyFunSuite {
     try {
       val docs = Catalog.documents(spark, dir)
       val mid = 75L
-      val write = DocumentsIngest.containPairBatchWriter(base, 0.9, 50)
+      val write = DocumentsIngest.containAdmission(base, 0.9, 50)
       write(docs.filter(col("doc_id") < mid), 0L)
       write(docs.filter(col("doc_id") >= mid), 1L)
       // rebuild batch 1's admission frame and pin its plan: df comes from
@@ -177,7 +163,7 @@ class StreamReplaySpec extends AnyFunSuite {
       keyCol: String, sortCols: Seq[String]): Unit = {
     val base = scratch(tag)
     try {
-      graft.streaming.Sinks.parquetOnce(
+      Sinks.parquetOnce(
         rows(DocumentsIngest.stream(spark, dir)),
         s"$base/raw", s"$base/ck")
       val committed = spark.read.parquet(s"$base/raw").count()

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.model.Catalog
-import graft.streaming.EventsIngest
+import graft.streaming.{DocumentsIngest, EventsIngest, Sinks, Stores}
 
 /** Structured Streaming ingest (SURVEY §2.9): the streaming pipelines must
   * produce exactly what the equivalent batch derivation produces over the
@@ -16,7 +16,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("postings sink: stream output == batch derivation") {
     val out = Files.createTempDirectory("graft-stream").toString
-    EventsIngest.runPostingsSink(spark, dir, s"$out/postings", s"$out/ckpt")
+    Sinks.append(spark, Stores.Postings, dir, s"$out/postings", s"$out/ckpt")
     val streamed = spark.read.parquet(s"$out/postings")
     val batch = Catalog.events(spark, dir).select(
       concat(lit("event:"), col("event_type")).as("key"),
@@ -28,7 +28,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("windowed daily counts: stream (complete mode) == batch aggregation") {
-    val streamed = EventsIngest.dailyCountsOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.DailyCounts, dir)
     val batch = Catalog.events(spark, dir)
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sum_value"))
@@ -40,7 +40,8 @@ class StreamingSpec extends AnyFunSuite {
     // flatMapGroupsWithState merges events commutatively, so each user's
     // LAST emitted update must equal the batch lifetime groupBy regardless
     // of micro-batch slicing
-    val streamed = EventsIngest.userProfilesOnce(spark, dir)
+    val streamed = EventsIngest.finalProfiles(
+      Sinks.memory(spark, Stores.UserProfiles, dir))
     val batch = Catalog.events(spark, dir)
       .groupBy("user_id")
       .agg(min(unix_timestamp(col("ts"))).as("first_sec"),
@@ -54,7 +55,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming dedup within watermark == batch distinct") {
     // every duplicate of a (user, type, day) key lands inside that day, so
     // watermark expiry never re-admits one — streaming == batch DISTINCT
-    val streamed = EventsIngest.dedupDailyOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.DedupDaily, dir)
     val batch = Catalog.events(spark, dir)
       .select(col("user_id"), col("event_type"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
@@ -104,7 +105,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streamed ANN bucket rows == batch index build (incremental upkeep)") {
-    val streamed = graft.streaming.EmbeddingsIngest.bucketsOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.AnnBuckets, dir)
     val batch = graft.ml.Ann.bucketIds(Catalog.embeddings(spark, dir))
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).count() == 0)
@@ -114,7 +115,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streamed IVF cell rows == batch cell assignment (index upkeep)") {
     // the projection-shaped streaming argmax must agree with the batch
     // max(struct) aggregate, ties included
-    val streamed = graft.streaming.EmbeddingsIngest.cellsOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.IvfCells, dir)
     val batch = graft.ml.Ann.cellAssignment(Catalog.embeddings(spark, dir))
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).count() == 0)
@@ -125,7 +126,7 @@ class StreamingSpec extends AnyFunSuite {
     // the frozen-quantizer encode + cell argmax (one stateless projection)
     // must reproduce the batch-built composed store exactly — byte codes
     // and cell assignment both
-    val streamed = graft.streaming.EmbeddingsIngest.sq8Once(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.Sq8, dir)
       .select("vec_id", "cell", "codes")
     val batch = Catalog.sq8IvfStore(spark, dir)
       .select("vec_id", "cell", "codes")
@@ -140,8 +141,7 @@ class StreamingSpec extends AnyFunSuite {
     // and cell assignments as the hive-partitioned batch store
     val base = java.nio.file.Files.createTempDirectory("graft_sq8_compact").toString
     try {
-      val compacted = graft.streaming.EmbeddingsIngest
-        .compactedSq8Once(spark, dir, base)
+      val compacted = Sinks.compacted(spark, Stores.Sq8, dir, base)
         .select("vec_id", "cell", "codes")
       val batch = Catalog.sq8IvfStore(spark, dir)
         .select("vec_id", "cell", "codes")
@@ -155,7 +155,7 @@ class StreamingSpec extends AnyFunSuite {
     // the committed-codebook encode + cell argmax (one stateless
     // projection — no quantizer to freeze) must reproduce the batch-built
     // composed PQ store exactly, code bytes and cell assignment both
-    val streamed = graft.streaming.EmbeddingsIngest.pqOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.Pq, dir)
       .select("vec_id", "cell", "codes")
     val batch = Catalog.pqIvfStore(spark, dir)
       .select("vec_id", "cell", "codes")
@@ -167,8 +167,7 @@ class StreamingSpec extends AnyFunSuite {
   test("compacted PQ generation == materialized pqIvfStore (PQ fold)") {
     val base = java.nio.file.Files.createTempDirectory("graft_pq_compact").toString
     try {
-      val compacted = graft.streaming.EmbeddingsIngest
-        .compactedPqOnce(spark, dir, base)
+      val compacted = Sinks.compacted(spark, Stores.Pq, dir, base)
         .select("vec_id", "cell", "codes")
       val batch = Catalog.pqIvfStore(spark, dir)
         .select("vec_id", "cell", "codes")
@@ -179,7 +178,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join == batch interval join") {
-    val streamed = EventsIngest.intervalJoinOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.IntervalJoin, dir)
     val ev = Catalog.events(spark, dir)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"))
@@ -201,7 +200,7 @@ class StreamingSpec extends AnyFunSuite {
     val ev = Catalog.events(spark, dir)
     val cutoff = ev.agg(max("ts")).head.getTimestamp(0).toInstant
       .minus(java.time.Duration.ofDays(2))
-    val streamed = EventsIngest.intervalJoinLeftOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.IntervalJoinLeft, dir)
       .filter(col("p_ts") <= lit(java.sql.Timestamp.from(cutoff)))
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"))
@@ -294,9 +293,9 @@ class StreamingSpec extends AnyFunSuite {
     // ADVICE r9: without the drop, each statement window's runId-fresh
     // graft_stream_* table pins its rows in driver memory for the session
     graft.util.Caches.drain() // fresh window
-    graft.streaming.DocumentsIngest.sketchOnce(spark, dir)
+    Sinks.memory(spark, Stores.WinnowSketch, dir)
     val live = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_stream_wsk"))
+      .map(_.name).filter(_.startsWith(Sinks.sinkName(Stores.WinnowSketch)))
     assert(live.nonEmpty, "one-shot did not register a sink view")
     graft.util.Caches.drain()
     val after = spark.catalog.listTables().collect()
@@ -305,7 +304,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streamed winnow sketch == batch sketch (text index upkeep)") {
-    val streamed = graft.streaming.DocumentsIngest.sketchOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.WinnowSketch, dir)
     val batch = graft.ml.NearDup.winnowFingerprints(
       Catalog.documents(spark, dir))
     assert(streamed.count() == batch.count())
@@ -318,7 +317,7 @@ class StreamingSpec extends AnyFunSuite {
     // an always-on sink: the streamed derivation must equal the batch
     // table row-for-row so the overlay join is oblivious to which path
     // populated summary_overrides
-    val streamed = graft.streaming.OverridesIngest.overridesOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.Overrides, dir)
     val batch = Catalog.overrides(spark, dir)
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).count() == 0)
@@ -329,8 +328,7 @@ class StreamingSpec extends AnyFunSuite {
     // the appending sink a deployment actually runs — same derivation as
     // the memory-sink entry, pinned separately so the two cannot drift
     val base = java.nio.file.Files.createTempDirectory("graft_ovr_sink").toString
-    graft.streaming.OverridesIngest.runOverrideSink(spark, dir,
-      s"$base/out", s"$base/ck")
+    Sinks.append(spark, Stores.Overrides, dir, s"$base/out", s"$base/ck")
     val sunk = spark.read.parquet(s"$base/out")
     val batch = Catalog.overrides(spark, dir)
     assert(sunk.count() == batch.count())
@@ -346,7 +344,7 @@ class StreamingSpec extends AnyFunSuite {
     // so the one-shot disables autoBroadcastJoinThreshold on its cloned
     // session; this pin runs the identical conf + batch plan and asserts
     // the join is a real shuffle join
-    val streamed = EventsIngest.enrichedShuffledOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.EnrichedShuffled, dir)
     val batch = Catalog.events(spark, dir)
       .join(Catalog.table(spark, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment")),
@@ -366,7 +364,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-static enrichment: streamed segment aggregate == batch join") {
-    val streamed = EventsIngest.enrichedOnce(spark, dir)
+    val streamed = Sinks.memory(spark, Stores.Enriched, dir)
     val batch = Catalog.events(spark, dir)
       .join(Catalog.table(spark, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment")),
@@ -404,7 +402,8 @@ class StreamingSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StringType)))
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    graft.streaming.DocumentsIngest.runPairSink(src, s"$base/store", 0.5)
+    Sinks.foreachBatchOnce(src, s"$base/store/ck",
+      DocumentsIngest.pairAdmission(s"$base/store", 0.5))
     val streamed = spark.read.parquet(s"$base/store/pairs")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = graft.ml.NearDup.nearDuplicates(
