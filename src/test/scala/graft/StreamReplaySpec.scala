@@ -86,6 +86,21 @@ class StreamReplaySpec extends AnyFunSuite {
     }
   }
 
+  test("delta writer refuses a legacy flat delta layout") {
+    // part files at the ROOT of a delta dir (the pre-b=<id> blind-append
+    // layout) must stop the writer before it mixes b=<id> subdirs in
+    val base = scratch("legacy")
+    try {
+      val deltas = s"$base/deltas"
+      val fps = Stores.WinnowDf.rows(docs(), dir)
+      Sinks.counts("fp")(fps).write.parquet(deltas)
+      val err = intercept[RuntimeException](
+        Sinks.deltaWriter(deltas, Sinks.counts("fp"))(fps, 0L))
+      assert(err.getMessage.contains("legacy flat delta layout"))
+      assert(!new java.io.File(s"$deltas/b=0").exists())
+    } finally graft.ingest.Compact.rmTree(base)
+  }
+
   test("containment pair sink: replayed micro-batch converges; two-batch " +
       "admission equals the batch pipeline (VERDICT r19 #5)") {
     val base = scratch("containpairs")
