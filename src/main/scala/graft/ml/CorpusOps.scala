@@ -424,22 +424,9 @@ object CorpusOps {
        |FROM b JOIN tokd USING (doc_id)""".stripMargin
       .replaceAll("\\s+", " ")
 
-  /** Storage-dedup rate over the content-defined chunks — the figure CDC
-    * exists to produce: per source, total chunks vs distinct chunk
-    * fingerprints and the duplicate ratio (what fraction of chunk
-    * instances a content-addressed store would NOT have to keep). One
-    * aggregation over chunkCdc's output; the distinct rides the same
-    * partial-aggregating groupBy. */
-  def dedupCdcReport(docs: DataFrame, k: Int = 4, mod: Int = 16): DataFrame =
-    chunkCdc(docs, k, mod)
-      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_chunks"),
-        countDistinct("fp").as("n_unique"))
-      .select(col("source"), col("n_chunks"), col("n_unique"),
-        round(lit(1.0) - col("n_unique") / col("n_chunks"), 6)
-          .as("dup_ratio"))
-
+  /** DuckDB mirror of dedupCdcReportFrom — the storage-dedup rate over the
+    * content-defined chunks: per source, total chunks vs distinct chunk
+    * fingerprints and the duplicate ratio. */
   def dedupCdcReportOracleSql(k: Int = 4, mod: Int = 16): String =
     s"""WITH ch AS (${chunkCdcOracleSql(k, mod)}),
        |j AS (SELECT source, fp FROM ch JOIN documents USING (doc_id))

@@ -377,42 +377,6 @@ object Catalog {
       |         o_totalprice * 1.05, o_totalprice * 1.15 FROM orders
       |)""".stripMargin.replace("\n", " ")
 
-  /** The bucketed co-location layout SCALE.md describes for 100 TB: the same
-    * index rows, physically bucketed (and sorted) by `off` via the catalog.
-    * Two scans of this table joined on `off` are co-partitioned — Catalyst
-    * plans the posting-algebra joins (AND/SUBTRACT/ORDER BY/theta) with NO
-    * Exchange on either side (asserted by BucketedJoinSpec). The catalog
-    * entry is session-scoped (in-memory catalog); the parquet lives in the
-    * warehouse dir. */
-  def bucketedIndex(spark: SparkSession, dir: String, buckets: Int = 8): DataFrame = {
-    // the sanitized path alone is LOSSY (/sf.1 and /sf_1 collide onto one
-    // table name, silently serving the first dir's buckets to the second)
-    // — fold in the source fingerprint like every cacheDir store key
-    // (review finding, r19)
-    val name = "graft_index_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + sourceFingerprint(dir)
-    synchronized {
-      if (!spark.catalog.tableExists(name)) {
-        // the in-memory catalog forgets tables across JVMs but the warehouse
-        // files persist — clear the orphaned location before re-creating
-        val loc = new java.io.File(
-          spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-          name)
-        if (loc.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete(); ()
-          }
-          rm(loc)
-        }
-        index(spark, dir).write
-          .bucketBy(buckets, "off").sortBy("off")
-          .mode("overwrite").format("parquet").saveAsTable(name)
-      }
-    }
-    spark.table(name)
-  }
-
   /** Writable scratch path for entries that exercise WRITE paths (S7 TSV
     * load, S11 copy): beside the materialization cache, keyed per sf-dir. */
   def scratch(dir: String, name: String): String = cacheDir(dir, s"scratch_$name")

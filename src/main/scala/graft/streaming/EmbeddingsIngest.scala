@@ -99,12 +99,14 @@ object EmbeddingsIngest {
 
   /** The frozen quantizer: the batch store's constant (mn, scale) columns
     * (a one-row bounded lookup — the shipped quantizer, exactly what a
-    * deployment distributes to its encoders). */
-  def frozenQuantizer(spark: SparkSession, dir: String): (Double, Double) = {
-    val st = graft.model.Catalog.sq8Store(spark, dir)
-      .select("mn", "scale").head()
-    (st.getDouble(0), st.getDouble(1))
-  }
+    * deployment distributes to its encoders). Read once per statement:
+    * the streamed store's encode and the generation serving both need it. */
+  def frozenQuantizer(spark: SparkSession, dir: String): (Double, Double) =
+    graft.util.Caches.memoize(s"sq8:quantizer:$dir") {
+      val st = graft.model.Catalog.sq8Store(spark, dir)
+        .select("mn", "scale").head()
+      (st.getDouble(0), st.getDouble(1))
+    }
 
   /** The generation-SERVING store — sq8_topk_gen's source, shared with
     * its QuantSpec pin so the entry and the spec cannot drift: the

@@ -17,8 +17,8 @@ object Caches {
     override def initialValue: List[DataFrame] = Nil
   }
 
-  private val memoed = new ThreadLocal[Map[String, DataFrame]] {
-    override def initialValue: Map[String, DataFrame] = Map.empty
+  private val memoed = new ThreadLocal[Map[String, Any]] {
+    override def initialValue: Map[String, Any] = Map.empty
   }
 
   private val sinkTables = new ThreadLocal[List[(org.apache.spark.sql.SparkSession, String)]] {
@@ -45,14 +45,16 @@ object Caches {
     * stream per rep: micro-batch bring-up is paid once per deployment, not
     * per read, and the repeats measure steady-state sink access — the same
     * protocol batch queries follow with shared tracked caches. Cleared by
-    * `drain()`, so distinct statements never share a stream run. */
-  def memoize(key: String)(build: => DataFrame): DataFrame =
+    * `drain()`, so distinct statements never share a stream run. The same
+    * memo holds small driver-side values a statement would otherwise read
+    * twice, such as the frozen SQ8 quantizer. */
+  def memoize[T](key: String)(build: => T): T =
     memoed.get.get(key) match {
-      case Some(df) => df
+      case Some(v) => v.asInstanceOf[T]
       case None =>
-        val df = build
-        memoed.set(memoed.get + (key -> df))
-        df
+        val v = build
+        memoed.set(memoed.get + (key -> v))
+        v
     }
 
   /** Unpersist every tracked DataFrame (non-blocking), drop memoized

@@ -9,8 +9,9 @@ import java.nio.file.{Files, Paths}
   * differently from Spark's int64 even when every value agrees.
   * scripts/oracle_types.py DESCRIBEs every oracle and fails
   * HUGEINT/UHUGEINT/DECIMAL outputs, but it only protects commits when it
-  * RUNS — this spec shells it over the real SparkEntry.oracleSql map so
-  * the next bare `sum(n)` fails the suite, not the driver's round report.
+  * RUNS — this spec shells it over every entry's oracle
+  * (SparkEntry.oracleSql) so the next bare `sum(n)` fails the suite, not
+  * the driver's round report.
   * Cancels (never silently passes) when python3/duckdb are unavailable. */
 class OracleTypesSpec extends AnyFunSuite {
 

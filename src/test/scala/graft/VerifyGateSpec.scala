@@ -30,8 +30,22 @@ class VerifyGateSpec extends AnyFunSuite {
       """"q1_agg":{"jobs":28,"stages":30,"shuffle_bytes":0,"task_ms":0}}"""
     assert(Verify.parseJobsBaseline(json) ==
       Map("a" -> 5L, "q1_agg" -> 28L))
-    // a missing or corrupt file parses to empty — the gate then passes
-    // everything (no committed baseline, nothing to regress against)
+    // corrupt content parses to empty; readJobsBaseline refuses it
     assert(Verify.parseJobsBaseline("not json").isEmpty)
+  }
+
+  test("a missing baseline passes every entry; an unreadable one fails") {
+    val dir = java.nio.file.Files.createTempDirectory("verify_baseline")
+    val corrupt = dir.resolve("corrupt.json")
+    try {
+      assert(Verify.readJobsBaseline(dir.resolve("absent.json")).isEmpty)
+      // a directory exists but cannot be read as the counter map
+      intercept[java.io.IOException](Verify.readJobsBaseline(dir))
+      java.nio.file.Files.writeString(corrupt, "not json")
+      intercept[IllegalArgumentException](Verify.readJobsBaseline(corrupt))
+    } finally {
+      java.nio.file.Files.deleteIfExists(corrupt)
+      java.nio.file.Files.deleteIfExists(dir)
+    }
   }
 }
