@@ -3,13 +3,14 @@ package graft
 /** Diagnostic main: print the formatted, AQE-final physical plan of the
   * named entries, or of every `audit`-flagged entry when no name is given,
   * so scan pruning, pushdown and join strategies can be inspected without
-  * editing any spec (usage: PlanAudit [sfDir] [name...]). The special name
+  * editing any spec (usage: PlanAudit <sfDir> [name...]). The special name
   * `contain_writer_frame` prints the containment micro-batch ADMISSION
   * frame's plan (the foreachBatch writer's work — not reachable through any
   * declared entry, which only reads the store). */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    require(args.nonEmpty, "usage: PlanAudit <sfDir> [name...]")
+    val sfDir = args(0)
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.entries.filter(_.audit).map(_.name)
     val spark = GraftSession.local()

@@ -19,7 +19,7 @@ object Family extends Enumeration {
     Sketch, Lexical, Dense, Media = Value
 }
 
-/** One driver-contract entry: its Spark plan over an sf dir, the DuckDB SQL
+/** One checked entry: its Spark plan over an sf dir, the DuckDB SQL
   * that must return the same rows over the same parquet tables, and its
   * family. `audit` marks the scale-critical plans `PlanAudit` prints when
   * it is given no names. */
@@ -27,7 +27,7 @@ final case class Entry(name: String, family: Family.Value,
     run: (SparkSession, String) => DataFrame, oracleSql: String,
     audit: Boolean = false)
 
-/** Driver contract — one `Entry` per implemented operator from SURVEY.md
+/** The entry registry — one `Entry` per implemented operator from SURVEY.md
   * §2, in `entries`. `queries` and `oracleSql` are its two views by name;
   * the oracles run over the same parquet tables, via the shared
   * `idx`/`summ`/`ovr` CTE derivations in Catalog.
@@ -235,7 +235,7 @@ object SparkEntry {
     Entry("s1_keyword_leaf", Scan, (s, dir) => idxKey(s, dir, "price"),
       s"$IDX SELECT off, score FROM idx WHERE key = 'price'", audit = true),
     // CAST(0.0 AS DOUBLE): a bare 0.0 literal is DECIMAL(2,1) in DuckDB —
-    // the driver's hasher serializes it differently than Spark's DoubleType
+    // the result hasher serializes it differently than Spark's DoubleType
     // (the HUGEINT lesson of r17, same convention: match types, not values)
     Entry("s2_key_lookup", Scan, (s, dir) =>
       Catalog.summaries(s, dir).filter(col("key") === "order:42")
@@ -2566,7 +2566,8 @@ object SparkEntry {
     memory("mm_stream_audio", Media, Stores.AudioEnergy, Multimodal.audioEnergyOracleSql)
   )
 
-  /** The driver contract's two views of `entries`, by name. */
+  /** The two views of `entries` by name that Verify, Bench and the specs
+    * read. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     entries.map(e => e.name -> e.run).toMap
 

@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
   * HUGEINT/UHUGEINT/DECIMAL outputs, but it only protects commits when it
   * RUNS — this spec shells it over every entry's oracle
   * (SparkEntry.oracleSql) so the next bare `sum(n)` fails the suite, not
-  * the driver's round report.
+  * a later round report.
   * Cancels (never silently passes) when python3/duckdb are unavailable. */
 class OracleTypesSpec extends AnyFunSuite {
 
