@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.expressions.{BloomContains, DotProduct, PqSim, PqrSim, Sq8Sim}
+import graft.expressions.{BloomContains, DotProduct, PqCodes, PqSim, PqrSim, Sq8Sim}
 
 /** Session extensions registering graft's native Catalyst functions and
   * optimizer rules (installed via spark.sql.extensions in
@@ -47,6 +47,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         val c = arity("graft_pqr_sim", 4, children)
         PqrSim(c(0), c(1), c(2), c(3)) }))
+    for ((name, residual) <- Seq("graft_pq_codes" -> false, "graft_pqr_codes" -> true))
+      e.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(classOf[PqCodes].getName, name),
+        (children: Seq[Expression]) => PqCodes(arity(name, 1, children).head, residual)))
     e.injectFunction((
       FunctionIdentifier("graft_bloom_contains"),
       new ExpressionInfo(classOf[BloomContains].getName, "graft_bloom_contains"),

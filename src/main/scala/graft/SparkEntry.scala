@@ -22,10 +22,11 @@ object Family extends Enumeration {
 /** One checked entry: its Spark plan over an sf dir, the DuckDB SQL
   * that must return the same rows over the same parquet tables, and its
   * family. `audit` marks the scale-critical plans `PlanAudit` prints when
-  * it is given no names. */
+  * it is given no names; `statement` is a QUERY entry's text, whose route
+  * Verify reports. */
 final case class Entry(name: String, family: Family.Value,
     run: (SparkSession, String) => DataFrame, oracleSql: String,
-    audit: Boolean = false)
+    audit: Boolean = false, statement: Option[String] = None)
 
 /** The entry registry — one `Entry` per implemented operator from SURVEY.md
   * §2, in `entries`. `queries` and `oracleSql` are its two views by name;
@@ -213,11 +214,13 @@ object SparkEntry {
 
   /** A QUERY statement's page, through the full statement path. */
   private def ql(name: String, text: String, oracleSql: String): Entry =
-    Entry(name, Ql, (s, dir) => QueryExec.runPage(s, t(s, dir), text), oracleSql)
+    Entry(name, Ql, (s, dir) => QueryExec.runPage(s, t(s, dir), text), oracleSql,
+      statement = Some(text))
 
   /** A QUERY statement's rows with their summaries. */
   private def qlRows(name: String, text: String, oracleSql: String): Entry =
-    Entry(name, Ql, (s, dir) => QueryExec.runRows(s, t(s, dir), text), oracleSql)
+    Entry(name, Ql, (s, dir) => QueryExec.runRows(s, t(s, dir), text), oracleSql,
+      statement = Some(text))
 
   /** `es` after checking that no two share a name: `queries` and
     * `oracleSql` are keyed by name, so a second record of one name would

@@ -98,6 +98,7 @@ object Verify {
       }
     val perEntry = scala.collection.mutable.ListBuffer
       .empty[(String, graft.util.BenchCounters.Snap)]
+    val statements = SparkEntry.entries.flatMap(e => e.statement.map(e.name -> _)).toMap
     SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
@@ -111,7 +112,14 @@ object Verify {
       // entries in one session would otherwise accumulate cached partitions
       finally {
         graft.util.Caches.drain()
-        perEntry += name -> (counters.drainedSnapshot(spark.sparkContext) - c0)
+        val c = counters.drainedSnapshot(spark.sparkContext) - c0
+        perEntry += name -> c
+        // a QUERY entry's job count depends on its route: say which it took
+        statements.get(name).foreach { text =>
+          val stmt = graft.parser.Parser.parseStatement(text).asInstanceOf[graft.ast.QueryStmt]
+          println(s"[verify] $name: ${c.jobs} jobs, route " +
+            graft.exec.Seek.route(spark, graft.model.Catalog.tables(spark, sfDir), stmt))
+        }
       }
     }
     val q = jsonStr _

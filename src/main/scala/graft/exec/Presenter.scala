@@ -47,11 +47,14 @@ object Presenter {
   def errorEnvelope(message: String): String =
     s"""{"error":"${jsonEscape(String.valueOf(message))}"}"""
 
-  /** QUERY → the JSON envelope: the fetched page (QueryExec.fetch — summary
-    * + override merge, pct bands and headers already on each row) and the
-    * count from the same evaluation. */
-  def queryJson(spark: SparkSession, t: Tables, stmt: QueryStmt): String = {
-    val pg = QueryExec.fetch(spark, t, stmt)
+  /** QUERY → the JSON envelope of the fetched page (QueryExec.fetch). */
+  def queryJson(spark: SparkSession, t: Tables, stmt: QueryStmt): String =
+    envelope(QueryExec.fetch(spark, t, stmt))
+
+  /** The JSON envelope of a fetched page — summary + override merge, pct
+    * bands and headers already on each row — and the count from the same
+    * evaluation. */
+  private[graft] def envelope(pg: QueryExec.Page): String = {
     val hasHeaders = pg.schema.fieldNames.contains("_header")
     val hasBands = pg.schema.fieldNames.contains("pct5")
     val items = pg.rows.map { r =>

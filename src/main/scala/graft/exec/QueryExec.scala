@@ -19,6 +19,11 @@ import graft.parser.Printer
   * with the count from the same evaluation, bucket-header synthesis, and the
   * page fetch by seek (keys-only, or summary + override + S4 headers). The
   * JSON envelope lives in Presenter.
+  *
+  * Two routes share the paging, headers and fetch assembly here: a
+  * statement whose footers bound it within Seek.SeekRows is evaluated on
+  * the driver (Seek) without a Spark job; every other one runs the Spark
+  * plan below. The page says which route it took.
   */
 object QueryExec {
 
@@ -57,7 +62,7 @@ object QueryExec {
 
   /** The threshold plan for a statement: the stripped key name, whether
     * reversed, and the bucket table. */
-  private def thresholdPlan(th: Thresholds): (String, Seq[Bucket]) = {
+  private[exec] def thresholdPlan(th: Thresholds): (String, Seq[Bucket]) = {
     val (key, reversed) =
       if (th.key.startsWith("~")) (th.key.drop(1), true) else (th.key, false)
     val sorted = th.values.sorted
@@ -91,8 +96,10 @@ object QueryExec {
   }
 
   /** A page on the driver: rows in rank order under `schema`, plus the
-    * statement's total match count ("result-count", query.cc:933). */
-  final case class Page(total: Long, schema: StructType, rows: Seq[Row]) {
+    * statement's total match count ("result-count", query.cc:933), the
+    * route it ran on and, on the seek route, the rows each store returned. */
+  final case class Page(total: Long, schema: StructType, rows: Seq[Row], route: Route,
+      decoded: Map[String, Long] = Map.empty) {
     def toDF(spark: SparkSession): DataFrame =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
@@ -100,7 +107,7 @@ object QueryExec {
   /** (score DESC, off ASC) — topK's order, applied on the driver. Doubles
     * compare as Spark sorts them: NaN above every value, -0.0 == 0.0,
     * nulls after every score. */
-  private val rankOrder: Ordering[Row] = (a: Row, b: Row) => {
+  private[graft] val rankOrder: Ordering[Row] = (a: Row, b: Row) => {
     val (sa, sb) = (a.get(1), b.get(1))
     val byScore =
       if (sa == null || sb == null) (sa == null).compare(sb == null)
@@ -111,12 +118,28 @@ object QueryExec {
     if (byScore != 0) byScore else a.getLong(0).compare(b.getLong(0))
   }
 
+  /** The statement's page of an already ranked result set. */
+  private[exec] def slice(ranked: Seq[Row], stmt: QueryStmt): Seq[Row] = {
+    val from = math.min(stmt.offset, Int.MaxValue).toInt
+    val until = if (stmt.limit < 0) ranked.length
+      else from + math.min(stmt.limit, ranked.length.toLong).toInt
+    ranked.slice(from, until)
+  }
+
   private val CountMetric = "graft_result_count"
 
   /** The ranked page (off, score [, pcts] [, _header, _header_key]) and the
-    * total count, from ONE evaluation of results() with no cache — the
-    * reference builds `offsets` once, partial-sorts it and pages it
-    * (query.cc:726-807):
+    * total count, on the route Seek picks: the driver seek for a statement
+    * its footers bound within Seek.SeekRows, else the Spark plan. */
+  def page(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame =
+    (Seek.plan(spark, t, stmt) match {
+      case Right(seek) => seek.page()
+      case Left(reason) => ranked(spark, t, stmt, reason)._1
+    }).toDF(spark)
+
+  /** The Spark route's page, from ONE evaluation of results() with no
+    * cache — the reference builds `offsets` once, partial-sorts it and pages
+    * it (query.cc:726-807):
     *  - a LIMIT that plans as TakeOrderedAndProject: the count is observed on
     *    the result set beneath it, which runs once;
     *  - LIMIT 0: the page is empty and the count runs on the executors;
@@ -125,12 +148,9 @@ object QueryExec {
     *    unsorted, ranked and sliced on the driver, and counted there. A count
     *    observed under the global sort would double: the range partitioner's
     *    sampling job runs the observed subtree a second time.
-    * Threshold headers are looked up in the constant bucket table. */
-  def page(spark: SparkSession, t: Tables, stmt: QueryStmt): DataFrame =
-    ranked(spark, t, stmt)._1.toDF(spark)
-
-  /** page() on the driver, with the statement's compiled extra. */
-  private def ranked(spark: SparkSession, t: Tables, stmt: QueryStmt): (Page, Compiled) = {
+    * Returned with the statement's compiled extra. */
+  private def ranked(spark: SparkSession, t: Tables, stmt: QueryStmt,
+      reason: String): (Page, Compiled) = {
     val (res, compiled) = results(spark, t, stmt)
     val set = res.select((Seq("off", "score") ++ pctCols(res)).map(col): _*)
     val observed = Option.when(stmt.limit > 0)(
@@ -146,29 +166,41 @@ object QueryExec {
           (rows, n.getLong(0))
         case None =>
           val all = set.collect()
-          val from = math.min(stmt.offset, Int.MaxValue).toInt
-          val until = if (stmt.limit < 0) all.length
-            else from + math.min(stmt.limit, all.length.toLong).toInt
-          (all.sorted(rankOrder).slice(from, until).toSeq, all.length.toLong)
+          (slice(all.sorted(rankOrder).toSeq, stmt), all.length.toLong)
       }
-    val pg = stmt.thresholds match {
-      case None => Page(total, set.schema, rows)
+    (paged(stmt, set.schema, rows, total, Route.Spark(reason)), compiled)
+  }
+
+  /** The page of `rows` in rank order; with thresholds, each row gets its
+    * bucket's header, looked up in the constant bucket table. */
+  private[exec] def paged(stmt: QueryStmt, schema: StructType, rows: Seq[Row],
+      total: Long, route: Route): Page =
+    stmt.thresholds match {
+      case None => Page(total, schema, rows, route)
       case Some(th) =>
         val (_, bs) = thresholdPlan(th)
-        val schema = StructType(set.schema.fields ++ headerFields)
-        Page(total, schema, rows.map { r =>
+        val withHeaders = StructType(schema.fields ++ headerFields)
+        Page(total, withHeaders, rows.map { r =>
           val b = bs.find(b => r.getDouble(1) < b.hi)
-          row(schema, r.toSeq ++ Seq(b.map(_.header).orNull, b.map(_.headerKey).orNull))
-        })
+          row(withHeaders, r.toSeq ++ Seq(b.map(_.header).orNull, b.map(_.headerKey).orNull))
+        }, route)
     }
-    (pg, compiled)
-  }
 
   private val headerFields = Seq(
     StructField("_header", StringType), StructField("_header_key", StringType))
 
-  private def row(schema: StructType, values: Seq[Any]): Row =
+  private[exec] def row(schema: StructType, values: Seq[Any]): Row =
     new GenericRowWithSchema(values.toArray, schema)
+
+  /** The page fetch's three seeks by key, each grouped by that key: the
+    * summaries (off, key, json) of the page's offsets, the overrides
+    * (key, json) of their keys, and — for S4 statements — the extra headers
+    * (off, _header, _header_key) of the page's offsets. */
+  private[exec] trait Fetcher {
+    def summaries(offs: Seq[Long]): Map[Any, Seq[Row]]
+    def overrides(keys: Seq[String]): Map[Any, Seq[Row]]
+    def headers: Option[Seq[Long] => Map[Any, Seq[Row]]]
+  }
 
   /** Fetch `df`'s rows whose `k` is in `values`, grouped by `k` — empty
     * without a job when there is nothing to look up. The In predicate
@@ -178,35 +210,57 @@ object QueryExec {
     if (values.isEmpty) Map.empty
     else df.filter(InSetColumn(col(k), values)).collect().toSeq.groupBy(_.getAs[Any](k))
 
+  /** The Spark route's seeks: pushed InSets over the stored frames. */
+  private def sparkFetcher(t: Tables, compiled: Compiled, stmt: QueryStmt): Fetcher =
+    new Fetcher {
+      def summaries(offs: Seq[Long]) = seek(t.summaries.select("off", "key", "json"), "off", offs)
+      def overrides(keys: Seq[String]) = seek(t.overrides.select("key", "json"), "key", keys)
+      def headers = compiled.extra.filter(_ => stmt.thresholds.isEmpty).map(e =>
+        offs => seek(e.select("off", "_header", "_header_key"), "off", offs))
+    }
+
   /** THE page fetch (query.cc:809-898), shared by the Shell (Presenter) and
-    * every QUERY entry: the page's summaries by `off IN (page offsets)`;
-    * then, unless keys-only, the overrides by `key IN (those keys)` and the
-    * S4 extra headers by `off IN (page offsets)`, merged on the page in rank
-    * order. A page offset with no summary row yields no row; an override
-    * merges its body into the summary's (query.cc:877-890).
+    * every QUERY entry, on the route Seek picks: the page's summaries by
+    * `off IN (page offsets)`; then, unless keys-only, the overrides by
+    * `key IN (those keys)` and the S4 extra headers by `off IN (page
+    * offsets)`, merged on the page in rank order. A page offset with no
+    * summary row yields no row; an override merges its body into the
+    * summary's (query.cc:877-890).
     * Columns: keys-only → (key); else off, score, key, json [, pcts]
     * [, _header, _header_key] — threshold headers win over S4 headers. */
-  def fetch(spark: SparkSession, t: Tables, stmt: QueryStmt): Page = {
-    val (pg, compiled) = ranked(spark, t, stmt)
+  def fetch(spark: SparkSession, t: Tables, stmt: QueryStmt): Page =
+    Seek.plan(spark, t, stmt) match {
+      case Right(seek) =>
+        val pg = assemble(stmt, seek.page(), seek.fetcher)
+        pg.copy(decoded = seek.decoded)
+      case Left(reason) => fetchOnSpark(spark, t, stmt, reason)
+    }
+
+  /** The fetch on the Spark route, whatever the statement's bound. */
+  private[graft] def fetchOnSpark(spark: SparkSession, t: Tables, stmt: QueryStmt,
+      reason: String): Page = {
+    val (pg, compiled) = ranked(spark, t, stmt, reason)
+    assemble(stmt, pg, sparkFetcher(t, compiled, stmt))
+  }
+
+  private def assemble(stmt: QueryStmt, pg: Page, f: Fetcher): Page = {
     val offs = pg.rows.map(_.getLong(0)).distinct
-    val summ = seek(t.summaries.select("off", "key", "json"), "off", offs)
+    val summ = f.summaries(offs)
     val docs = pg.rows.map(r => r -> summ.getOrElse(r.getLong(0), Nil))
     if (stmt.keysOnly) {
       val schema = StructType(Seq(StructField("key", StringType)))
-      Page(pg.total, schema,
-        docs.flatMap(_._2).map(d => row(schema, Seq(d.getString(1)))))
+      pg.copy(schema = schema,
+        rows = docs.flatMap(_._2).map(d => row(schema, Seq(d.getString(1)))))
     } else {
-      val ovr = seek(t.overrides.select("key", "json"), "key",
-        docs.flatMap(_._2).map(_.getString(1)).distinct)
-      val extra = compiled.extra.filter(_ => stmt.thresholds.isEmpty).map(e =>
-        seek(e.select("off", "_header", "_header_key"), "off", offs))
+      val ovr = f.overrides(docs.flatMap(_._2).map(_.getString(1)).distinct)
+      val extra = f.headers.map(_(offs))
       val pcts = pctCols(pg.schema)
       val schema = StructType(
         Seq(StructField("off", LongType), StructField("score", DoubleType),
           StructField("key", StringType), StructField("json", StringType)) ++
           pcts.map(StructField(_, DoubleType)) ++
           (if (stmt.thresholds.isDefined || extra.isDefined) headerFields else Nil))
-      Page(pg.total, schema, docs.flatMap { case (r, ds) =>
+      pg.copy(schema = schema, rows = docs.flatMap { case (r, ds) =>
         val headers: Seq[Seq[Any]] =
           if (stmt.thresholds.isDefined)
             Seq(Seq(r.getAs[String]("_header"), r.getAs[String]("_header_key")))

@@ -42,40 +42,15 @@ object Pq {
       b.length == Ksub && b.forall(_.length == SubDim)),
     s"TrainedPqCodebooks shape != ${M}x${Ksub}x$SubDim")
 
-  /** Squared distance from the j-th subspace of `emb` to codebook centroid
-    * (j, k) — unrolled left-to-right over the SubDim components, the same
-    * IEEE sequence as the oracle's unrolled SQL, so the argmins agree.
-    * Parameterized over the codebook set so the RESIDUAL tier
-    * (PqResidual) encodes through the identical expression shape. */
-  private[ml] def distExprWith(emb: Column, j: Int, k: Int,
-      books: Seq[Seq[Seq[Double]]]): Column = {
-    val c = books(j)(k)
-    (0 until SubDim).map { d =>
-      val x = element_at(emb, j * SubDim + d + 1)
-      (x - lit(c(d))) * (x - lit(c(d)))
-    }.reduceLeft(_ + _)
-  }
-
-  private def distExpr(emb: Column, j: Int, k: Int): Column =
-    distExprWith(emb, j, k, TrainedPqCodebooks.books)
-
   /** The M-byte code row for a double-array embedding column: each byte
     * is the 0-based index of the subspace's nearest centroid (ties →
-    * lowest index, via first-occurrence array_position on the same
-    * computed distances both engines share). A pure per-row expression —
-    * the batch store build and the streamed upkeep share it verbatim
-    * (there is no quantizer to freeze: the codebooks ARE committed
-    * constants). */
-  private[graft] def codesExprWith(emb: Column,
-      books: Seq[Seq[Seq[Double]]]): Column =
-    array((0 until M).map { j =>
-      val dists = array((0 until Ksub).map(k =>
-        distExprWith(emb, j, k, books)): _*)
-      (array_position(dists, array_min(dists)) - 1).cast("byte")
-    }: _*)
-
-  private[graft] def codesExpr(emb: Column): Column =
-    codesExprWith(emb, TrainedPqCodebooks.books)
+    * lowest index), through the PqCodes kernel — over the residual
+    * codebooks for the residual tier (PqResidual). A pure per-row
+    * expression — the batch store build and the streamed upkeep share it
+    * verbatim (there is no quantizer to freeze: the codebooks ARE
+    * committed constants). */
+  private[graft] def codesExpr(emb: Column, residual: Boolean = false): Column =
+    call_function(if (residual) "graft_pqr_codes" else "graft_pq_codes", emb)
 
   /** (vec_id, codes array<tinyint> of length M) — the PERSISTABLE store
     * content (Catalog.pqIvfStore lays it out under the coarse quantizer). */
@@ -150,7 +125,7 @@ object Pq {
     books(j).map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
 
   /** The (j, k) squared distance, unrolled in the same left-to-right
-    * component order as distExpr. Parameterized over codebooks and the
+    * component order as the PqCodes kernel. Parameterized over codebooks and the
     * source array's SQL rendering (the residual tier's is an expression,
     * not a column name). */
   private[ml] def distSqlWith(j: Int, k: Int, books: Seq[Seq[Seq[Double]]],

@@ -44,7 +44,7 @@ object PqResidual {
   def pqrRows(emb: DataFrame, cells: DataFrame): DataFrame =
     residualRows(emb, cells)
       .select(col("vec_id"), col("cell"),
-        Pq.codesExprWith(col("remb"), TrainedPqrCodebooks.books).as("codes"))
+        Pq.codesExpr(col("remb"), residual = true).as("codes"))
 
   // Serving: the composed residual-PQ×IVF store (Catalog.pqrIvfStore) is
   // one tier of the shared IVF path (Ivf); its codec (IvfCodec.Pqr) ranks

@@ -15,13 +15,15 @@ import org.apache.spark.sql.types.StructType
   * shuffle-free Spark equivalent (noted per function).
   *
   * Scale: AND/SUBTRACT compile to left_semi/left_anti joins — Catalyst picks
-  * broadcast automatically when the rhs key set is small; nothing here ever
-  * collects to the driver.
+  * broadcast automatically when the rhs key set is small; nothing here
+  * collects to the driver. A statement small enough for the driver does not
+  * come here: graft.exec.Seek evaluates the same operators over the rows it
+  * read, and SeekAlgebraProps pins the two to each other.
   */
 object PostingAlgebra {
 
   private val postingCols = Seq("off", "score")
-  private val pctNames = Seq("pct5", "pct25", "pct75", "pct95")
+  private[graft] val pctNames = Seq("pct5", "pct25", "pct75", "pct95")
 
   /** The optional percentile-band columns of the universal value
     * (/root/reference/src/ca-table.h:102-105) present on this posting set.

@@ -91,10 +91,10 @@ object EmbeddingsIngest {
     emb.select(col("vec_id"), cellExpr(col("embedding")).as("cell"),
         col("embedding").cast("array<double>").as("e"))
       .select(col("vec_id"), col("cell"),
-        graft.ml.Pq.codesExprWith(
+        graft.ml.Pq.codesExpr(
           zip_with(col("e"),
             element_at(cents, col("cell").cast("int")), (a, b) => a - b),
-          graft.ml.TrainedPqrCodebooks.books).as("codes"))
+          residual = true).as("codes"))
   }
 
   /** The frozen quantizer: the batch store's constant (mn, scale) columns
