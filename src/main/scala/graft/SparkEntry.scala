@@ -181,7 +181,7 @@ object SparkEntry {
   private def plantedRecall(name: String, codec: IvfCodec,
       store: (SparkSession, String) => DataFrame): Entry =
     Entry(name, Dense, (s, dir) => Ivf.recallAtKFrom(codec, store(s, dir),
-      Catalog.plantedEmb(s, dir), Catalog.plantedExactTop10(s, dir), 0L, 10),
+      Catalog.plantedEmb(s, dir), Catalog.exactTop10(s, dir, Catalog.Planted), 0L, 10),
       Ivf.recallOracleSql(codec, 0L, 10, srcSql = Ann.plantedClusterSrcSql(0L, 10)))
 
   /** The stored RRF hybrid of `terms` and vector 0 (n = 20, k = 10), both
@@ -2180,7 +2180,7 @@ object SparkEntry {
     // inconsistent hybrid fusions...
     // ONE oracle for both dense delete-lifecycle ends — identity across
     // the compaction flip IS the contract (cosine carries no corpus stats)
-    ivfTopK("ann_masked_serve", IvfCodec.Flat, Catalog.ivfFlat, DeadMask).copy(audit = true),
+    ivfTopK("ann_masked_serve", IvfCodec.Flat, Catalog.ivfFlat(_, _), DeadMask).copy(audit = true),
     // ...and its compaction end: tombstones folded OUT of the flat store
     // into a new sorted generation behind the atomic MANIFEST flip, served
     // identically (cosine carries no corpus stats, so masked == compacted
@@ -2299,7 +2299,7 @@ object SparkEntry {
     // twin of sq8IvfStore): the probed partitions' floats are read
     // directly, so the former assignment-table ⋈ embeddings corpus join is
     // gone from the serving plans (VERDICT r14 #5 job audit)
-    ivfTopK("emb_topk_ivf", IvfCodec.Flat, Catalog.ivfFlat).copy(audit = true),
+    ivfTopK("emb_topk_ivf", IvfCodec.Flat, Catalog.ivfFlat(_, _)).copy(audit = true),
     // index-health audit: per-cell population + load factor from the
     // STORED assignment (hot cell = probe becomes a scan; empty cell =
     // wasted centroid — the IVF rebalance trigger)
@@ -2324,15 +2324,15 @@ object SparkEntry {
     // metadata-constrained ANN: nearest neighbours among label = 3 only —
     // the predicate reaches the flat store's parquet scan as a pushed
     // EqualTo beside the partition pruning; probe stage identical
-    ivfTopK("emb_topk_filtered", IvfCodec.Flat, Catalog.ivfFlat, Label3),
+    ivfTopK("emb_topk_filtered", IvfCodec.Flat, Catalog.ivfFlat(_, _), Label3),
     // BATCHED IVF serving: a whole query table answered in ONE plan —
     // probe assignment, candidate join and per-query top-k all declarative,
     // zero per-query driver round-trips (the 100 TB serving shape; the
     // single-query entries above are the point-lookup shape)
-    ivfBatch("emb_topk_ivf_batch", IvfCodec.Flat, Catalog.ivfFlat),
+    ivfBatch("emb_topk_ivf_batch", IvfCodec.Flat, Catalog.ivfFlat(_, _)),
     // the serving matrix's fourth corner: batched AND metadata-filtered —
     // same batch plan, label predicate pushed into the flat-store scan
-    ivfBatch("emb_topk_filtered_batch", IvfCodec.Flat, Catalog.ivfFlat, Label3).copy(audit = true),
+    ivfBatch("emb_topk_filtered_batch", IvfCodec.Flat, Catalog.ivfFlat(_, _), Label3).copy(audit = true),
     // scalar int8 quantization COMPOSED with the coarse quantizer: the 4x-
     // smaller byte codes live inside the MATERIALIZED cell-partitioned
     // store; a lookup probes its nearest cells, dequantizes only those
@@ -2380,16 +2380,16 @@ object SparkEntry {
     // quantized end
     ivfTopK("sq8_topk_filtered", IvfCodec.Sq8, Catalog.sq8IvfStore, EnSlice),
     ivfTopK("sq8_masked_serve", IvfCodec.Sq8, Catalog.sq8IvfStore, DeadMask),
-    ivfTopK("pq_topk_filtered", IvfCodec.Pq, Catalog.pqIvfStore, EnSlice),
-    ivfTopK("pq_masked_serve", IvfCodec.Pq, Catalog.pqIvfStore, DeadMask),
+    ivfTopK("pq_topk_filtered", IvfCodec.Pq, Catalog.pqIvfStore(_, _), EnSlice),
+    ivfTopK("pq_masked_serve", IvfCodec.Pq, Catalog.pqIvfStore(_, _), DeadMask),
     // PRODUCT quantization composed with the coarse quantizer: one byte
     // per subspace (32x smaller than the floats, vs SQ8's 4x); the lookup
     // probes its nearest cells and ranks through the PqSim ADC kernel —
     // candidates contribute only their M code bytes, every reconstructed
     // float comes from the committed codebook constants
-    ivfTopK("emb_topk_pq", IvfCodec.Pq, Catalog.pqIvfStore),
+    ivfTopK("emb_topk_pq", IvfCodec.Pq, Catalog.pqIvfStore(_, _)),
     // batched PQ serving — the sq8_topk_batch shape over the 32x store
-    ivfBatch("pq_topk_batch", IvfCodec.Pq, Catalog.pqIvfStore),
+    ivfBatch("pq_topk_batch", IvfCodec.Pq, Catalog.pqIvfStore(_, _)),
     // the PQ store's content, exploded to scalar so codes pin element-wise
     Entry("pq_store_codes", Dense, (s, dir) => {
       import org.apache.spark.sql.functions.{col, posexplode}
@@ -2401,7 +2401,7 @@ object SparkEntry {
     // v − c(cell(v)); the coarse term absorbs between-cell variance, so
     // the same M bytes quantize a tighter distribution (PqrSpec pins the
     // reconstruction-error win over the raw tier)
-    ivfTopK("emb_topk_pqr", IvfCodec.Pqr, Catalog.pqrIvfStore),
+    ivfTopK("emb_topk_pqr", IvfCodec.Pqr, Catalog.pqrIvfStore(_, _)),
     // the residual store's content, exploded like pq_store_codes
     Entry("pqr_store_codes", Dense, (s, dir) => {
       import org.apache.spark.sql.functions.{col, posexplode}
@@ -2412,7 +2412,7 @@ object SparkEntry {
     }, graft.ml.PqResidual.codesOracleSql()),
     // the residual tier's planted recall gate (stored fixtures, the
     // pq_recall_planted twin — completes the quality ladder)
-    plantedRecall("pqr_recall_planted", IvfCodec.Pqr, Catalog.plantedPqrIvf),
+    plantedRecall("pqr_recall_planted", IvfCodec.Pqr, Catalog.pqrIvfStore(_, _, Catalog.Planted)),
     // residual-PQ upkeep: coarse argmax + residual + committed-codebook
     // encode in one stateless projection (the IVFADC ingest path)
     memory("pqr_stream_index", Dense, Stores.Pqr,
@@ -2422,12 +2422,12 @@ object SparkEntry {
       graft.ml.PqResidual.codesOracleSql(), read = explodeCodes),
     // filtered serving at the residual tier — the metadata slice
     // semi-joined on the candidate side (pq_topk_filtered's twin)
-    ivfTopK("pqr_topk_filtered", IvfCodec.Pqr, Catalog.pqrIvfStore, EnSlice),
+    ivfTopK("pqr_topk_filtered", IvfCodec.Pqr, Catalog.pqrIvfStore(_, _), EnSlice),
     // the delete lifecycle's masked serve at the residual tier
-    ivfTopK("pqr_masked_serve", IvfCodec.Pqr, Catalog.pqrIvfStore, DeadMask),
+    ivfTopK("pqr_masked_serve", IvfCodec.Pqr, Catalog.pqrIvfStore(_, _), DeadMask),
     // batched residual-PQ serving — the pq_topk_batch shape with the
     // candidate's cell feeding the IVFADC reconstruction kernel
-    ivfBatch("pqr_topk_batch", IvfCodec.Pqr, Catalog.pqrIvfStore),
+    ivfBatch("pqr_topk_batch", IvfCodec.Pqr, Catalog.pqrIvfStore(_, _)),
     // PQ upkeep: new embeddings encode through the COMMITTED codebooks and
     // assign their IVF cell in one stateless projection (no quantizer to
     // freeze — the codebooks are constants); exploded like sq8_stream_index
@@ -2452,7 +2452,7 @@ object SparkEntry {
     // every recall gate below serves from STORED fixtures (VERDICT r14
     // #5): the exact k-row baseline, and for the planted regime the
     // planted corpus + its bucket/cell/quantized indexes, are materialized
-    // once per sf-dir (Catalog.exactTop10 / planted*) — a gate statement
+    // once per sf-dir (Catalog.exactTop10, base or Planted) — a gate statement
     // ranks the approximate lookup(s) and compares against a 10-row read,
     // never re-deriving corpus, index, or baseline (they were the last
     // ad-hoc multi-wave entries: 7-13 jobs each in BENCH_r14)
@@ -2466,14 +2466,15 @@ object SparkEntry {
     // regression now moves a non-trivial number on both engines
     Entry("ann_recall_planted", Dense, (s, dir) =>
       Ann.recallAtKFrom(Catalog.plantedEmb(s, dir),
-        Catalog.plantedBuckets(s, dir), Catalog.plantedIvfFlat(s, dir),
-        Catalog.plantedExactTop10(s, dir), 0, 10),
+        Catalog.annBuckets(s, dir, Catalog.Planted),
+        Catalog.ivfFlat(s, dir, Catalog.Planted),
+        Catalog.exactTop10(s, dir, Catalog.Planted), 0, 10),
       Ann.recallOracleSql(0, 10,
         Ann.plantedClusterSrcSql(0L, 10))),
     // the PQ tier's driver-checked recall gate in the same planted regime
     // (VERDICT r13 #7) — completes the quality ladder: LSH/IVF via
     // ann_recall_planted, PQ here, floors pinned in PqSpec
-    plantedRecall("pq_recall_planted", IvfCodec.Pq, Catalog.plantedPqIvf),
+    plantedRecall("pq_recall_planted", IvfCodec.Pq, Catalog.pqIvfStore(_, _, Catalog.Planted)),
     // FILTERED recall: the label-constrained lookup vs the exact slice
     // baseline — the number that quantifies post-filtering's recall trade
     // (the filtered-serving contract the docs promise the ladder measures)

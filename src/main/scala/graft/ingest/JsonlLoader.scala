@@ -38,14 +38,11 @@ object JsonlLoader {
   def documents(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(documentsSchema).option("mode", "FAILFAST").json(path)
 
-  /** Round-trip entry point: write the corpus as JSONL once (guarded by
-    * the writer's _SUCCESS marker, the materialize convention), read it
-    * back through the pinned-schema loader. */
+  /** Round-trip entry point: write the corpus as JSONL once (published
+    * whole by Catalog.publish, like every store), read it back through the
+    * pinned-schema loader. */
   def documentsRoundTrip(spark: SparkSession, dir: String,
-      scratch: String): DataFrame = synchronized {
-    if (!new java.io.File(s"$scratch/_SUCCESS").exists())
-      graft.model.Catalog.documents(spark, dir)
-        .write.mode("overwrite").json(scratch)
-    documents(spark, scratch)
-  }
+      scratch: String): DataFrame =
+    documents(spark, graft.model.Catalog.publish(scratch)(
+      graft.model.Catalog.documents(spark, dir).write.json(_)))
 }

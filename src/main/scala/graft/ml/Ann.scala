@@ -766,7 +766,7 @@ object Ann {
   }
 
   /** Public exactTopKIds over an (vec_id, embedding) frame — the PERSISTABLE
-    * exact-baseline content (Catalog.exactTop10 / plantedExactTop10
+    * exact-baseline content (Catalog.exactTop10, base or planted,
     * materialize it so the recall gates READ their k-row baseline instead of
     * re-running the corpus-wide ranking per statement — VERDICT r14 #5). */
   def exactIds(emb: DataFrame, qVecId: Long, k: Int): DataFrame =

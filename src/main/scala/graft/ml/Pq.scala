@@ -76,7 +76,7 @@ object Pq {
     * the PLANTED regime over an ad-hoc store built from the planted corpus
     * with the same pqCodes ∘ cellAssignment composition as
     * Catalog.pqIvfStore (the stored-fixture gate is Ivf.recallAtKFrom over
-    * Catalog.plantedPqIvf). Returns (method, hits, recall). */
+    * Catalog.pqIvfStore over Catalog.Planted). Returns (method, hits, recall). */
   def recallAtKPlanted(emb: DataFrame, qVecId: Long, m: Int,
       k: Int): DataFrame = {
     val e = graft.util.Caches.track(

@@ -1,7 +1,6 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The table bundle every executor operates on — the Spark equivalent of the
@@ -37,12 +36,23 @@ final case class Tables(
   * statistics, and the page index narrows it to about one page — the Spark
   * analogue of the reference's SeekToKey block index
   * (table-backend-writeonce.cc:594-636) — instead of a full scan.
+  *
+  * Every materialized store, fixture and bloom comes to exist through one
+  * build-aside publish (`open`, `publish`): it is built into a sibling
+  * `<path>.building-<uuid>` and published by one atomic directory rename,
+  * the way the reference's TableBuilder makes a table visible only after
+  * its Sync has written index and header (table-backend-writeonce.cc:661-726).
+  * A reader — in this JVM or another sharing the cache root — sees the
+  * whole store or none; a build that fails leaves nothing at the store path;
+  * and when two builders race, the loser drops its copy and reads the
+  * winner's.
   */
 object Catalog {
 
   /** Memoized base readers for IMMUTABLE parquet (the source tables and the
-    * _SUCCESS-guarded materialized stores — content never changes once
-    * written; assertStableSource refuses a regenerated source dir). Every
+    * published stores — a store directory exists only once its rename has
+    * published it whole, and nothing writes into it afterwards;
+    * assertStableSource refuses a regenerated source dir). Every
     * `spark.read.parquet` call otherwise schedules a schema-inference job
     * over the footers, so an entry touching 4 stores paid 4 jobs before its
     * first real wave — the largest single contributor to the per-entry job
@@ -113,23 +123,22 @@ object Catalog {
     // would have collapsed a multi-file source to ONE partition)
     if (f.isDirectory || !tableKeys.contains(name))
       readImmutable(spark, src)
-    else {
-      val path = cacheDir(dir, s"src_$name")
-      materialize(path) {
+    else
+      open(spark, dir, s"src_$name", Layout.Plain) {
         val byBytes = (f.length / (1 << 20)).toInt
         val byRows = (footerRows(spark, src) / rowsPerSplit(name)).toInt
         val parts = math.max(1, math.min(
           spark.sparkContext.defaultParallelism, math.max(byBytes, byRows)))
         spark.read.parquet(src).repartitionByRange(parts, col(tableKeys(name)))
       }
-      readImmutable(spark, path)
-    }
   }
 
   /** Materialization cache. Versioned so a derivation change invalidates old
-    * caches; `.graft-cache` under the working directory (gitignored) unless
+    * caches (v14: stores are published by rename, so a v13 directory left
+    * half-written by an in-place overwrite is never taken as published);
+    * `.graft-cache` under the working directory (gitignored) unless
     * GRAFT_CACHE names another root. */
-  private val cacheVersion = "v13"
+  private val cacheVersion = "v14"
   /** Exposed for specs that assert the materialization landed on disk. */
   def cacheVersionTag: String = cacheVersion
   def cacheRoot: String = sys.env.getOrElse("GRAFT_CACHE",
@@ -206,20 +215,70 @@ object Catalog {
     * path — the fingerprint already disambiguates same-named dirs, and a
     * long segment pushes the store name past explain()'s path truncation,
     * which the plan-pin specs match on). */
-  private def cacheDir(dir: String, name: String): String = {
+  private[graft] def cacheDir(dir: String, name: String): String = {
     val fp = sourceFingerprint(dir)
     assertStableSource(dir, fp)
     s"$cacheRoot/$cacheVersion/${new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9.]", "_")}-$fp/$name"
   }
 
-  /** Run `write` unless the store at `path` is already complete. */
-  private def once(path: String)(write: => Unit): Unit =
-    synchronized {
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) write
+  /** Make the directory `path` exist whole, and return it. Unless it is
+    * already published, `write` fills a sibling `<path>.building-<uuid>` and
+    * one atomic rename publishes it as `path`. If `write` fails, its sibling
+    * is deleted and nothing appears at `path`. If another builder publishes
+    * `path` first, the rename fails on the existing directory: this build is
+    * deleted and the winner's stays untouched. A sibling left by a killed
+    * build is never read (readers only open `path`) and blocks nothing, since
+    * every build gets a fresh one. */
+  private[graft] def publish(path: String)(write: String => Unit): String = {
+    import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption}
+    val dst = Paths.get(path)
+    if (!Files.exists(dst)) {
+      val tmp = dst.resolveSibling(
+        s"${dst.getFileName}.building-${java.util.UUID.randomUUID}")
+      try {
+        write(tmp.toString)
+        try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: FileSystemException if Files.exists(dst) => () }
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
     }
+    path
+  }
 
-  private def materialize(path: String)(build: => DataFrame): Unit =
-    once(path)(build.write.mode("overwrite").parquet(path))
+  /** How `open` lays out a store's rows: the write shapes the stores use.
+    * `Ranged`, `Hashed` and `Single` sort each file by `by`; they spread the
+    * rows by key ranges of `by.head` (`writeRanged`), by a hash of
+    * `by.head`, or not at all (one file). */
+  private[graft] sealed trait Layout {
+    def write(df: DataFrame, path: String): Unit = this match {
+      case Layout.Ranged(by @ _*) => writeRanged(df, path, by.head, by: _*)
+      case Layout.Hashed(by @ _*) =>
+        df.repartition(col(by.head)).sortWithinPartitions(by.map(col): _*)
+          .write.parquet(path)
+      case Layout.Single(by @ _*) =>
+        df.repartition(1).sortWithinPartitions(by.map(col): _*).write.parquet(path)
+      case Layout.Cells => df.write.partitionBy("cell").parquet(path)
+      case Layout.Plain => df.write.parquet(path)
+    }
+  }
+  private[graft] object Layout {
+    final case class Ranged(by: String*) extends Layout
+    final case class Hashed(by: String*) extends Layout
+    final case class Single(by: String*) extends Layout
+    /** Hive-partitioned by `cell`, so a probe reads only its cells. */
+    case object Cells extends Layout
+    /** Written as `build` leaves it. */
+    case object Plain extends Layout
+  }
+
+  /** The store `name` of sf-dir `dir`: published from `build` laid out by
+    * `layout` on first use (`publish`), then read immutably, projected to
+    * `cols` when any are named. */
+  private[graft] def open(spark: SparkSession, dir: String, name: String,
+      layout: Layout, cols: String*)(build: => DataFrame): DataFrame = {
+    val df = readImmutable(spark,
+      publish(cacheDir(dir, name))(layout.write(build, _)))
+    if (cols.isEmpty) df else df.select(cols.map(col): _*)
+  }
 
   /** Rows per parquet data page in a range-laid store. The writer records
     * each page's min/max in the page index, so a pushed key predicate reads
@@ -232,20 +291,37 @@ object Catalog {
   private val RowsPerFile = 1L << 18
 
   /** The file cut points of a range layout over column `k`: number the rows
-    * in key order, give each value the block of RowsPerFile rows its first
+    * in key order, give each value the block of `rowsPerFile` rows its first
     * row falls in, and cut before the first value of every block but the
-    * first. The running count runs on the executors over the exact
-    * per-value counts; only the cut points reach the driver. Exact counts
-    * (not the range partitioner's sample) make the cut points — and so the
-    * file count and every file's key range — a function of the rows alone,
-    * independent of session cores, shuffle partitions and input splits. */
-  private def cutPoints(df: DataFrame, k: String): Seq[Any] = {
-    val before = Window.orderBy(k).rowsBetween(Window.unboundedPreceding, -1)
-    df.groupBy(k).count()
-      .withColumn("block", floor(coalesce(sum("count").over(before), lit(0L)) / RowsPerFile))
-      .filter(col("block") > 0)
-      .groupBy("block").agg(min(k)).orderBy("block")
-      .collect().map(_.get(1)).toSeq
+    * first. The exact per-value counts are range-partitioned by `k` and
+    * sorted within each partition, so partition i holds values below
+    * partition i + 1's. Only the per-partition totals reach the driver; each
+    * partition then runs its own running count from the rows before it and
+    * returns the first value of each block it starts. Exact counts (not the
+    * range partitioner's sample, which only places the partitions) make the
+    * cut points — and so the file count and every file's key range — a
+    * function of the rows alone, independent of session cores, shuffle
+    * partitions and input splits. */
+  private[graft] def cutPoints(df: DataFrame, k: String,
+      rowsPerFile: Long = RowsPerFile): Seq[Any] = {
+    val counts = df.groupBy(k).count()
+      .repartitionByRange(col(k)).sortWithinPartitions(k).rdd
+    val totals = counts.mapPartitionsWithIndex((i, rows) =>
+      Iterator(i -> rows.map(_.getLong(1)).sum)).collect().sortBy(_._1)
+    val before = totals.map(_._2).scanLeft(0L)(_ + _)
+    val firsts = counts.mapPartitionsWithIndex { (i, rows) =>
+      var n = before(i)
+      var prev = -1L
+      rows.flatMap { r =>
+        val block = n / rowsPerFile
+        n += r.getLong(1)
+        val starts = block != prev
+        prev = block
+        if (block > 0 && starts) Some((block, i, r.get(0))) else None
+      }
+    }.collect()
+    // a block spanning partitions starts in the first of them
+    firsts.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.minBy(_._2)._3)
   }
 
   /** Write `df` as a key-range store at `path`: one file per cut-point
@@ -263,14 +339,8 @@ object Catalog {
     df.repartitionById(cuts.size + 1, file)
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.option("parquet.page.row.count.limit", PageRows)
-      .mode("overwrite").parquet(path)
+      .parquet(path)
   }
-
-  /** Materialize with a hive-style partition layout, so lookups joining on
-    * the partition column get dynamic partition pruning. */
-  private def materializeBy(path: String, parts: Seq[String])(
-      build: => DataFrame): Unit =
-    once(path)(build.write.mode("overwrite").partitionBy(parts: _*).parquet(path))
 
   /** The posting index: one row per (keyword, document, score), read from the
     * materialized key-range store (written on first use; writeRanged: files
@@ -283,12 +353,11 @@ object Catalog {
     *  - timestamped keyword (epoch-days score): orderdate
     *  - duplicate offsets within one key (event-series shape): qty
     */
-  def index(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "index")
-    once(path)(writeRanged(deriveIndex(spark, dir), path, "key", "key", "off"))
-    readImmutable(spark, path)
-      .select("key", "off", "score", "pct5", "pct25", "pct75", "pct95")
-  }
+  def index(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "index", Layout.Ranged("key", "off"),
+      "key", "off", "score", "pct5", "pct25", "pct75", "pct95") {
+      deriveIndex(spark, dir)
+    }
 
   /** The raw 6-way union derivation (used to build the materialized index and
     * mirrored verbatim by the DuckDB `idx` CTE). */
@@ -386,52 +455,43 @@ object Catalog {
     * derived deterministically from `orders` and written once — the S7 entry
     * loads it back through TsvLoader (doc-key resolution included) and must
     * reproduce the price postings the oracle derives straight from orders. */
-  def tsvFixture(spark: SparkSession, dir: String): String = {
-    val path = cacheDir(dir, "tsv_price")
-    once(path) {
+  def tsvFixture(spark: SparkSession, dir: String): String =
+    publish(cacheDir(dir, "tsv_price")) {
       table(spark, dir, "orders")
         .select(concat_ws("\t", lit("price"),
           concat(lit("order:"), col("o_orderkey")),
           col("o_totalprice").cast("string")).as("value"))
-        .write.mode("overwrite").text(path)
+        .write.text(_)
     }
-    path
-  }
 
   /** Summary-table TSV fixture (`key TAB json` — ca-load.cc's summary
     * output-type): the derived summaries table written through the SAME
     * escape the loader undoes, so tsv_load_summaries round-trips the
     * whole escape contract (r19: loadSummaries previously had no caller
     * and sat on the ANSI getItem trap). */
-  def tsvSummariesFixture(spark: SparkSession, dir: String): String = {
-    val path = cacheDir(dir, "tsv_summaries")
-    once(path) {
+  def tsvSummariesFixture(spark: SparkSession, dir: String): String =
+    publish(cacheDir(dir, "tsv_summaries")) {
       summaries(spark, dir)
         .select(concat_ws("\t",
           graft.ingest.TsvLoader.escapeUdf(col("key")),
           graft.ingest.TsvLoader.escapeUdf(col("json"))).as("value"))
-        .write.mode("overwrite").text(path)
+        .write.text(_)
     }
-    path
-  }
 
   /** Time-series TSV fixture (`key TAB date-string TAB value`,
     * ca-load.cc --output-type=time-series): derived from `events`, written
     * once. Loading it back parses the date with the default format and stores
     * epoch SECONDS as the offset (ca-load.cc:296-314) — sub-second precision
     * is dropped by the text format, exactly like the reference's strptime. */
-  def tsvTimeSeriesFixture(spark: SparkSession, dir: String): String = {
-    val path = cacheDir(dir, "tsv_events")
-    once(path) {
+  def tsvTimeSeriesFixture(spark: SparkSession, dir: String): String =
+    publish(cacheDir(dir, "tsv_events")) {
       events(spark, dir)
         .select(concat_ws("\t",
           concat(lit("event:"), col("event_type")),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"),
           col("value").cast("string")).as("value"))
-        .write.mode("overwrite").text(path)
+        .write.text(_)
     }
-    path
-  }
 
   /** Summary table: offset → (document key, JSON body), materialized as a
     * key-range store over `off` (writeRanged; /root/reference/README.md:24-27,
@@ -439,11 +499,10 @@ object Catalog {
     * `off IN (page offsets)`: the pushed predicate matches one file's off
     * range and the page index reads about one page per offset — the Spark
     * analogue of the reference's seek into the sorted summary table. */
-  def summaries(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "summaries")
-    once(path)(writeRanged(deriveSummaries(spark, dir), path, "off", "off"))
-    readImmutable(spark, path).select("off", "key", "json")
-  }
+  def summaries(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "summaries", Layout.Ranged("off"), "off", "key", "json") {
+      deriveSummaries(spark, dir)
+    }
 
   /** Address offset of the SECOND summary table (customers) in the single
     * 64-bit summary address space (/root/reference/src/schema.cc:97-106,
@@ -490,11 +549,10 @@ object Catalog {
     * a key-range store over `key` (writeRanged), so the page fetch's pushed
     * `key IN (page keys)` reads about one page instead of deriving the
     * overrides from a scan of `orders` per statement. */
-  def overrides(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "overrides")
-    once(path)(writeRanged(overrideRows(table(spark, dir, "orders")), path, "key", "key"))
-    readImmutable(spark, path).select("key", "json")
-  }
+  def overrides(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "overrides", Layout.Ranged("key"), "key", "json") {
+      overrideRows(table(spark, dir, "orders"))
+    }
 
   /** The override derivation as a pure projection over an orders relation —
     * shared by the batch table above and the streamed override ingest
@@ -538,28 +596,35 @@ object Catalog {
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "embeddings")
 
+  /** The corpus a vector store indexes: the base `embeddings` table, or the
+    * recall gates' planted-cluster corpus (`plantedEmb`). A store over the
+    * planted corpus keeps its own cache name. */
+  sealed abstract class Vectors(val rows: (SparkSession, String) => DataFrame) {
+    def name(base: String, planted: String): String =
+      if (this == Planted) planted else base
+  }
+  case object Base extends Vectors(embeddings)
+  case object Planted extends Vectors(plantedEmb)
+
   /** The MATERIALIZED LSH bucket index over `embeddings` — (vec_id, bucket)
     * with bucket = "t:sig", written once per sf-dir and partitioned by
     * bucket, so a similarity lookup's plan reads ONLY the query's L bucket
     * partitions (dynamic partition pruning on the broadcast bucket join)
     * instead of recomputing every vector's signatures per statement
     * (VERDICT r4 #1). The Spark analogue of the reference's stored index
-    * blocks (/root/reference/src/table-backend-writeonce.cc:594-636). */
-  def annBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "ann_buckets")
-    materialize(path) {
-      // Repartition by bucket but keep bucket a DATA column: each file
-      // covers a few buckets, and the lookup's pushed In(bucket, ...) filter
-      // can skip a file whose bucket dictionary misses every probe key. A
-      // hive partitionBy("bucket")
-      // layout (2^Bits × Tables = 256 directories of ~30 rows each) made
-      // listing + footer reads dominate the lookup at bench scale.
-      graft.ml.Ann.bucketIds(embeddings(spark, dir))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("bucket", "vec_id")
+    * blocks (/root/reference/src/table-backend-writeonce.cc:594-636).
+    * Hashed by bucket but keeping bucket a DATA column: each file covers a
+    * few buckets, and the lookup's pushed In(bucket, ...) filter can skip a
+    * file whose bucket dictionary misses every probe key. A hive
+    * partitionBy("bucket") layout (2^Bits × Tables = 256 directories of ~30
+    * rows each) made listing + footer reads dominate the lookup at bench
+    * scale. */
+  def annBuckets(spark: SparkSession, dir: String,
+      v: Vectors = Base): DataFrame =
+    open(spark, dir, v.name("ann_buckets", "planted_buckets"),
+      Layout.Hashed("bucket", "vec_id"), "vec_id", "bucket") {
+      graft.ml.Ann.bucketIds(v.rows(spark, dir))
     }
-    readImmutable(spark, path).select("vec_id", "bucket")
-  }
 
   /** The MATERIALIZED winnowing sketch over `documents` — (doc_id, fp),
     * written once per sf-dir, repartitioned by fp so the incremental-dedup
@@ -567,15 +632,11 @@ object Catalog {
     * skip files via min/max stats. This is what "the existing corpus's
     * sketch" means at 100 TB: new batches join against THIS table; the
     * corpus text is never re-read. Same stored-index role as annBuckets. */
-  def winnowSketch(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "winnow_sketch")
-    materialize(path) {
+  def winnowSketch(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "winnow_sketch", Layout.Hashed("fp", "doc_id"),
+      "doc_id", "fp") {
       graft.ml.NearDup.winnowFingerprints(documents(spark, dir))
-        .repartition(col("fp"))
-        .sortWithinPartitions("fp", "doc_id")
     }
-    readImmutable(spark, path).select("doc_id", "fp")
-  }
 
   /** The MATERIALIZED fingerprint document-frequency table — (fp, df),
     * the sibling of `winnowSketch` (VERDICT r9 #1): the df-cap pruning an
@@ -585,16 +646,10 @@ object Catalog {
     * generation merge (Compact.mergeDfGenerations) folds back into one row
     * per fp — the Spark analogue of the reference's generation merge
     * (/root/reference/src/merge.cc:120-184), which also never recounts. */
-  def winnowDf(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "winnow_df")
-    materialize(path) {
-      winnowSketch(spark, dir)
-        .groupBy("fp").agg(count(lit(1)).as("df"))
-        .repartition(col("fp"))
-        .sortWithinPartitions("fp")
+  def winnowDf(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "winnow_df", Layout.Hashed("fp"), "fp", "df") {
+      winnowSketch(spark, dir).groupBy("fp").agg(count(lit(1)).as("df"))
     }
-    readImmutable(spark, path).select("fp", "df")
-  }
 
   /** The MATERIALIZED 3-word-shingle sketch over `documents` — (doc_id,
     * sh), sh = md5 of the shingle (the hash IS the identity the df join
@@ -605,31 +660,21 @@ object Catalog {
     * posture for the whole-doc 3-gram tier (VERDICT r19 #4:
     * ngram_novelty was the last derived statement re-shingling the
     * corpus and re-aggregating df per run). */
-  def shingleSketch(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "shingle_sketch")
-    materialize(path) {
+  def shingleSketch(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "shingle_sketch", Layout.Hashed("sh", "doc_id"),
+      "doc_id", "sh") {
       graft.ml.NearDup.shingles(documents(spark, dir))
         .select(col("doc_id"), md5(col("shingle")).as("sh"))
-        .repartition(col("sh"))
-        .sortWithinPartitions("sh", "doc_id")
     }
-    readImmutable(spark, path).select("doc_id", "sh")
-  }
 
   /** The MATERIALIZED shingle document-frequency sibling — (sh, df): the
     * winnowDf posture for the 3-gram tier. Novelty (and any future
     * rarity-weighted scorer) LOOKS UP df against this table instead of
     * re-counting the sketch in-statement. */
-  def shingleDf(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "shingle_df")
-    materialize(path) {
-      shingleSketch(spark, dir)
-        .groupBy("sh").agg(count(lit(1)).as("df"))
-        .repartition(col("sh"))
-        .sortWithinPartitions("sh")
+  def shingleDf(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "shingle_df", Layout.Hashed("sh"), "sh", "df") {
+      shingleSketch(spark, dir).groupBy("sh").agg(count(lit(1)).as("df"))
     }
-    readImmutable(spark, path).select("sh", "df")
-  }
 
   /** The MATERIALIZED positional span sketch over `documents` — (doc_id,
     * pos, h), the md5 of the W-token shingle at every position
@@ -639,15 +684,11 @@ object Catalog {
     * reads at 100 TB: the corpus text is tokenized ONCE at build time;
     * every subsequent boilerplate pass scans this table, never the text.
     * Same stored-index role as winnowSketch. */
-  def spanSketch(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "span_sketch")
-    materialize(path) {
+  def spanSketch(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "span_sketch", Layout.Hashed("h", "doc_id", "pos"),
+      "doc_id", "pos", "h") {
       graft.ml.SpanDedup.spanShingles(documents(spark, dir))
-        .repartition(col("h"))
-        .sortWithinPartitions("h", "doc_id", "pos")
     }
-    readImmutable(spark, path).select("doc_id", "pos", "h")
-  }
 
   /** The MATERIALIZED content-defined chunk store over `documents` —
     * (doc_id, chunk_id, tok_start, n_tok, fp), the chunk family's sidecar
@@ -658,16 +699,11 @@ object Catalog {
     * contiguous and pushed doc_id predicates skip files via min/max
     * stats; every chunk statement reads THIS table — the corpus text is
     * tokenized once, at build time. Same stored-index role as spanSketch. */
-  def cdcChunks(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "cdc_chunks")
-    materialize(path) {
+  def cdcChunks(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "cdc_chunks", Layout.Hashed("doc_id", "chunk_id"),
+      "doc_id", "chunk_id", "tok_start", "n_tok", "fp") {
       graft.ml.CorpusOps.cdcChunkRows(documents(spark, dir))
-        .repartition(col("doc_id"))
-        .sortWithinPartitions("doc_id", "chunk_id")
     }
-    readImmutable(spark, path)
-      .select("doc_id", "chunk_id", "tok_start", "n_tok", "fp")
-  }
 
   /** The MATERIALIZED inverted index over `documents` — (token, doc_id,
     * tf, dl), token-sorted so a query's term `isin` skips row groups via
@@ -678,26 +714,19 @@ object Catalog {
     * below; the corpus text is never re-tokenized at query time. Built by
     * the same stateless projection streamed upkeep uses
     * (Retrieval.lexRows). */
-  def lexIndex(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "lex_index")
-    materialize(path) {
+  def lexIndex(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "lex_index", Layout.Hashed("token", "doc_id"),
+      "token", "doc_id", "tf", "dl") {
       graft.ml.Retrieval.lexRows(documents(spark, dir))
-        .repartition(col("token"))
-        .sortWithinPartitions("token", "doc_id")
     }
-    readImmutable(spark, path).select("token", "doc_id", "tf", "dl")
-  }
 
   /** The additive corpus-statistics store beside `lexIndex` — (n_docs,
     * sum_dl) rows, one per generation; readers fold them with a tiny sum,
     * so N/avgdl never cost a corpus or index scan at serving time. */
-  def lexStats(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "lex_stats")
-    materialize(path) {
+  def lexStats(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "lex_stats", Layout.Plain, "n_docs", "sum_dl") {
       graft.ml.Retrieval.lexStatsRows(documents(spark, dir))
     }
-    readImmutable(spark, path).select("n_docs", "sum_dl")
-  }
 
   /** The lexical stats fold of the IMMUTABLE serving store as a LOCAL
     * 1-row frame — the additive-generations fold (sum n_docs, sum sum_dl,
@@ -759,15 +788,11 @@ object Catalog {
     * postings — never the corpus text. dl (token count) rides along so the
     * filtered tier's (n_docs, avgdl) are one aggregate over THIS sidecar.
     * Laid out by lang so the filter predicate skips whole files. */
-  def docMeta(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "doc_meta")
-    materialize(path) {
+  def docMeta(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "doc_meta", Layout.Hashed("lang", "doc_id"),
+      "doc_id", "lang", "source", "dl") {
       graft.ml.Retrieval.metaRows(documents(spark, dir))
-        .repartition(col("lang"))
-        .sortWithinPartitions("lang", "doc_id")
     }
-    readImmutable(spark, path).select("doc_id", "lang", "source", "dl")
-  }
 
   /** The MATERIALIZED (key, off) posting-occurrence store — one row per
     * DISTINCT (key, off) carrying its duplicate count: the
@@ -777,16 +802,11 @@ object Catalog {
     * of shuffling the full index per statement — the dominant exchange in
     * the live counts/log-odds layers. Key-sorted so the membership join's
     * downstream key aggregation shuffles pre-grouped rows. */
-  def indexKeyOff(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "index_key_off")
-    materialize(path) {
-      index(spark, dir).groupBy("key", "off")
-        .agg(count(lit(1)).as("dup_n"))
-        .repartition(col("key"))
-        .sortWithinPartitions("key", "off")
+  def indexKeyOff(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "index_key_off", Layout.Hashed("key", "off"),
+      "key", "off", "dup_n") {
+      index(spark, dir).groupBy("key", "off").agg(count(lit(1)).as("dup_n"))
     }
-    readImmutable(spark, path).select("key", "off", "dup_n")
-  }
 
   /** The MATERIALIZED benchmark shingle set for decontamination — the
     * distinct 3-gram shingles of the bench slice (doc_id < benchMaxId),
@@ -795,17 +815,13 @@ object Catalog {
     * the bloom beside it) is a committed fixture, not per-statement work
     * (VERDICT r15 #5). */
   def decontamBench(spark: SparkSession, dir: String,
-      benchMaxId: Long): DataFrame = {
-    val path = cacheDir(dir, s"decontam_bench_$benchMaxId")
-    materialize(path) {
+      benchMaxId: Long): DataFrame =
+    open(spark, dir, s"decontam_bench_$benchMaxId", Layout.Hashed("shingle"),
+      "shingle") {
       graft.ml.NearDup.shingles(documents(spark, dir))
         .filter(col("doc_id") < benchMaxId)
         .select("shingle").distinct()
-        .repartition(col("shingle"))
-        .sortWithinPartitions("shingle")
     }
-    readImmutable(spark, path).select("shingle")
-  }
 
   /** The SERIALIZED bloom filter over decontamBench — sized from the actual
     * bench cardinality (ADVICE r14), built once per sf-dir beside the
@@ -813,27 +829,24 @@ object Catalog {
     * time: the statement inlines the bytes as a codegen literal
     * (graft_bloom_contains) and never schedules the cache/count/collect
     * build waves the per-statement construction paid (VERDICT r15 #5).
-    * Memoized per path; written atomically via tmp + rename. */
+    * Memoized per path; a directory holding `bloom.bin`, published like
+    * every store. */
   private val blooms =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]
   def decontamBloomBytes(spark: SparkSession, dir: String, benchMaxId: Long,
       fpp: Double = 0.01): Array[Byte] = {
     val path = cacheDir(dir, s"decontam_bloom_$benchMaxId")
-    blooms.computeIfAbsent(path, _ => synchronized {
-      val f = new java.io.File(s"$path/bloom.bin")
-      if (!f.exists()) {
+    blooms.computeIfAbsent(path, _ => {
+      publish(path) { tmp =>
         val bench = decontamBench(spark, dir, benchMaxId)
-        val bf = bench.stat.bloomFilter("shingle",
-          math.max(bench.count(), 1L), fpp)
         val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        f.getParentFile.mkdirs()
-        val tmp = new java.io.File(s"$path/bloom.bin.tmp")
-        java.nio.file.Files.write(tmp.toPath, bos.toByteArray)
-        if (!tmp.renameTo(f) && !f.exists())
-          sys.error(s"could not commit $f")
+        bench.stat.bloomFilter("shingle", math.max(bench.count(), 1L), fpp)
+          .writeTo(bos)
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+        java.nio.file.Files.write(java.nio.file.Paths.get(tmp, "bloom.bin"),
+          bos.toByteArray)
       }
-      java.nio.file.Files.readAllBytes(f.toPath)
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path, "bloom.bin"))
     })
   }
 
@@ -850,15 +863,12 @@ object Catalog {
   def correlateMatched(spark: SparkSession, dir: String, aKey: String,
       bKey: String): DataFrame = {
     val tag = s"${aKey}_$bKey".toLowerCase.replaceAll("[^a-z0-9]", "_")
-    val path = cacheDir(dir, s"correlate_$tag")
-    materialize(path) {
+    open(spark, dir, s"correlate_$tag", Layout.Hashed("key", "off"),
+      "key", "lo", "hi", "off", "in_a", "in_b", "n_a", "n_b", "limit_a",
+      "limit_b", "prior") {
       graft.exec.CorrelateExec.matchedRanges(spark, tables(spark, dir),
         graft.ast.Leaf(aKey), graft.ast.Leaf(bKey))
-        .repartition(col("key"))
-        .sortWithinPartitions("key", "off")
     }
-    readImmutable(spark, path).select("key", "lo", "hi", "off", "in_a",
-      "in_b", "n_a", "n_b", "limit_a", "limit_b", "prior")
   }
 
   /** The MATERIALIZED per-document selection-score sidecar — (doc_id,
@@ -869,31 +879,22 @@ object Catalog {
     * scan corpus text — docMeta's posture for the selection family. Laid
     * out by source: the mixture/quota verbs partition on it, and the
     * source-pruned reads skip whole files. */
-  def docScores(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "doc_scores")
-    materialize(path) {
+  def docScores(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "doc_scores", Layout.Hashed("source", "doc_id"),
+      "doc_id", "source", "n_tok", "score", "split") {
       graft.ml.Selection.scoreRows(documents(spark, dir))
-        .repartition(col("source"))
-        .sortWithinPartitions("source", "doc_id")
     }
-    readImmutable(spark, path)
-      .select("doc_id", "source", "n_tok", "score", "split")
-  }
 
   /** The MATERIALIZED perceptual-hash sidecar (doc_id, phash): media is
     * decoded and aHashed once per sf-dir (at ingest in a deployment —
     * streaming.Stores.Phash streams the same projection); image dedup
     * statements read this, never the media bytes. Laid out hash-sorted so
     * group lookups row-group-prune. */
-  def phashStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "phash")
-    materialize(path) {
+  def phashStore(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "phash", Layout.Hashed("phash", "doc_id"),
+      "doc_id", "phash") {
       graft.ml.Multimodal.phashRows(spark, documents(spark, dir))
-        .repartition(col("phash"))
-        .sortWithinPartitions("phash", "doc_id")
     }
-    readImmutable(spark, path).select("doc_id", "phash")
-  }
 
   /** The MATERIALIZED composite-hash store for Hamming-radius image
     * near-dup — (doc_id, ph = aHash ++ dHash 63 bits, sharpness): the
@@ -903,30 +904,22 @@ object Catalog {
     * decoded once, at build — sharpness (keep-best's score) rides the
     * same pass as one more column, so the selection verb never re-reads
     * bytes (r19; cache name versioned for the schema change). */
-  def phashNearStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "phash_near_sh")
-    materialize(path) {
+  def phashNearStore(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "phash_near_sh", Layout.Hashed("ph", "doc_id"),
+      "doc_id", "ph", "sharpness") {
       graft.ml.Multimodal.phashNearRows(spark, documents(spark, dir))
-        .repartition(col("ph"))
-        .sortWithinPartitions("ph", "doc_id")
     }
-    readImmutable(spark, path).select("doc_id", "ph", "sharpness")
-  }
 
   /** The MATERIALIZED image near-dup PAIR graph — (doc_a, doc_b, hamming):
     * the banded multi-index Hamming search (Multimodal.phashNearFrom) over
     * the composite-hash store, run once per sf-dir — the dupPairs posture
     * for the image modality. */
   def phashPairs(spark: SparkSession, dir: String,
-      k: Int = 3): DataFrame = {
-    val path = cacheDir(dir, s"phash_pairs_k$k")
-    materialize(path) {
+      k: Int = 3): DataFrame =
+    open(spark, dir, s"phash_pairs_k$k", Layout.Hashed("doc_a", "doc_b"),
+      "doc_a", "doc_b", "hamming") {
       graft.ml.Multimodal.phashNearFrom(phashNearStore(spark, dir), k)
-        .repartition(col("doc_a"))
-        .sortWithinPartitions("doc_a", "doc_b")
     }
-    readImmutable(spark, path).select("doc_a", "doc_b", "hamming")
-  }
 
   /** The MATERIALIZED image duplicate-CLUSTER table — (doc_id,
     * cluster_id): connected components over the stored phash pair graph
@@ -935,15 +928,11 @@ object Catalog {
     * label loop runs once per sf-dir at store build; cluster statements
     * are reads, removal is one anti-join. */
   def phashClusters(spark: SparkSession, dir: String,
-      k: Int = 3): DataFrame = {
-    val path = cacheDir(dir, s"phash_clusters_k$k")
-    materialize(path) {
+      k: Int = 3): DataFrame =
+    open(spark, dir, s"phash_clusters_k$k", Layout.Hashed("doc_id"),
+      "doc_id", "cluster_id") {
       graft.ml.Clusters.connectedComponents(phashPairs(spark, dir, k))
-        .repartition(col("doc_id"))
-        .sortWithinPartitions("doc_id")
     }
-    readImmutable(spark, path).select("doc_id", "cluster_id")
-  }
 
   /** The MATERIALIZED host-rank store — (host, rank_i): fixed-point
     * integer PageRank over the planted host link graph (LinkGraph), the
@@ -955,32 +944,25 @@ object Catalog {
     * touch the graph. Host-sorted single file: the store is
     * hosts-cardinality (~10^8 at web scale — still ~1 GB, a table, not a
     * broadcast assumption). */
-  def pagerankStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "pagerank_hosts")
-    materialize(path) {
+  def pagerankStore(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "pagerank_hosts", Layout.Single("host"),
+      "host", "rank_i") {
       val e = graft.ml.LinkGraph.plantedEdges(documents(spark, dir))
       val n = e.select("src").unionAll(e.select("dst")).distinct().count()
       graft.ml.LinkGraph.pageRank(e, n)
-        .coalesce(1).sortWithinPartitions("host")
     }
-    readImmutable(spark, path).select("host", "rank_i")
-  }
 
   /** The MATERIALIZED learned BPE merge table — (round, pa, pb, pair_n):
     * tokenizer training (Bpe.train — the per-round argmax driver loop over
     * the vocabulary-sized state) runs ONCE per sf-dir at store build, the
     * pagerankStore posture; encode/accounting statements read these M
     * rows. */
-  def bpeMerges(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "bpe_merges")
-    materialize(path) {
-      val m = graft.ml.Bpe.train(documents(spark, dir))
+  def bpeMerges(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "bpe_merges", Layout.Single("round"),
+      "round", "pa", "pb", "pair_n") {
       import spark.implicits._
-      m.toDF("round", "pa", "pb", "pair_n")
-        .coalesce(1).sortWithinPartitions("round")
+      graft.ml.Bpe.train(documents(spark, dir)).toDF("round", "pa", "pb", "pair_n")
     }
-    readImmutable(spark, path).select("round", "pa", "pb", "pair_n")
-  }
 
   /** The MATERIALIZED JL projection sidecar — (vec_id, proj DOUBLE[16]):
     * the 4× sketch of the float corpus (Quant.randProjectVec), built once
@@ -988,14 +970,10 @@ object Catalog {
     * and touches the full vectors only for the bounded candidate
     * re-rank. Parquet doubles round-trip exactly, so stored == fresh
     * bit-for-bit. */
-  def projStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "proj_jl16")
-    materialize(path) {
+  def projStore(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "proj_jl16", Layout.Single("vec_id"), "vec_id", "proj") {
       graft.ml.Quant.randProjectVec(embeddings(spark, dir), 64, 16)
-        .repartition(1).sortWithinPartitions("vec_id")
     }
-    readImmutable(spark, path).select("vec_id", "proj")
-  }
 
   /** The MATERIALIZED HLL register sketch — (event_type, reg, mr): the
     * distinct-user summary maintained at whatever cadence the deployment
@@ -1003,43 +981,32 @@ object Catalog {
     * (types × 256) rows — the serving cadence never re-touches the event
     * volume. Registers max-merge, so a rebuild and an incremental append
     * fold to the same store. */
-  def hllStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "hll_regs")
-    materialize(path) {
+  def hllStore(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "hll_regs", Layout.Single("event_type", "reg"),
+      "event_type", "reg", "mr") {
       graft.ml.Sketches.hllRegisters(events(spark, dir))
-        .repartition(1).sortWithinPartitions("event_type", "reg")
     }
-    readImmutable(spark, path).select("event_type", "reg", "mr")
-  }
 
   /** The MATERIALIZED log-linear quantile grid — (event_type, shift, w,
     * cnt), hllStore's sibling for rank questions: built once from the
     * event volume, merged by plain count addition, served by a window
     * over the bounded grid (Sketches.hdrQuantilesFrom). The serving
     * cadence never re-touches the events. */
-  def hdrStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "hdr_grid")
-    materialize(path) {
+  def hdrStore(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "hdr_grid", Layout.Single("event_type", "shift", "w"),
+      "event_type", "shift", "w", "cnt") {
       graft.ml.Sketches.hdrGrid(events(spark, dir))
-        .repartition(1).sortWithinPartitions("event_type", "shift", "w")
     }
-    readImmutable(spark, path).select("event_type", "shift", "w", "cnt")
-  }
 
   /** The MATERIALIZED bigram language model — (w1, w2, c): the CCNet-tier
     * LM trained once per sf-dir (CorpusOps.lmBigramCounts), laid out by
     * w1 so the scoring join shuffles pre-grouped contexts. Perplexity
     * statements join this store; the model refreshes by rebuild, never
     * in-statement. */
-  def lmStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "lm_bigrams")
-    materialize(path) {
+  def lmStore(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "lm_bigrams", Layout.Hashed("w1", "w2"), "w1", "w2", "c") {
       graft.ml.CorpusOps.lmBigramCounts(documents(spark, dir))
-        .repartition(col("w1"))
-        .sortWithinPartitions("w1", "w2")
     }
-    readImmutable(spark, path).select("w1", "w2", "c")
-  }
 
   /** The LM's token-vocabulary size (distinct w1 ∪ w2 of the store) as a
     * driver-side constant — the lexStatsFolded memo posture: the add-one
@@ -1076,12 +1043,9 @@ object Catalog {
     // '/' would nest an unintended directory level — the correlateMatched
     // normalization; review finding, r19)
     val slug = targetSrc.toLowerCase.replaceAll("[^a-z0-9]", "_")
-    val path = cacheDir(dir, s"dsir_ratio_$slug")
-    materialize(path) {
+    open(spark, dir, s"dsir_ratio_$slug", Layout.Single("b"), "b", "lr") {
       graft.ml.Selection.ratioTable(documents(spark, dir), targetSrc)
-        .coalesce(1).sortWithinPartitions("b")
     }
-    readImmutable(spark, path).select("b", "lr")
   }
 
   /** The stored DSIR ratio as DRIVER-SIDE CONSTANTS — the 256-row store
@@ -1112,15 +1076,11 @@ object Catalog {
     * generations (dedup_pairs_compact). (Doc restored to its definition —
     * it had strayed above indexKeyOff; review finding, r19.) */
   def dupPairs(spark: SparkSession, dir: String,
-      minJaccard: Double = 0.6): DataFrame = {
-    val path = cacheDir(dir, f"dup_pairs_j${(minJaccard * 100).round}%d")
-    materialize(path) {
+      minJaccard: Double = 0.6): DataFrame =
+    open(spark, dir, f"dup_pairs_j${(minJaccard * 100).round}%d",
+      Layout.Hashed("doc_a", "doc_b"), "doc_a", "doc_b", "jaccard") {
       graft.ml.NearDup.nearDuplicates(documents(spark, dir), minJaccard)
-        .repartition(col("doc_a"))
-        .sortWithinPartitions("doc_a", "doc_b")
     }
-    readImmutable(spark, path).select("doc_a", "doc_b", "jaccard")
-  }
 
   /** The MATERIALIZED benchmark band sidecar — (doc_a, band, bkey), the
     * banded-MinHash rows of the benchmark split (doc_id < benchMaxId),
@@ -1134,18 +1094,14 @@ object Catalog {
     * recompute. benchMaxId is part of the path (the containPairs
     * discipline: a different split must never serve a stale sidecar). */
   def benchBands(spark: SparkSession, dir: String,
-      benchMaxId: Long): DataFrame = {
-    val path = cacheDir(dir, s"bench_bands_$benchMaxId")
-    materialize(path) {
+      benchMaxId: Long): DataFrame =
+    open(spark, dir, s"bench_bands_$benchMaxId", Layout.Single("band", "bkey"),
+      "doc_a", "band", "bkey") {
       graft.ml.NearDup.bands(graft.ml.NearDup.signatures(
           graft.ml.NearDup.shingles(
             documents(spark, dir).filter(col("doc_id") < benchMaxId))))
         .select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
-        .coalesce(1)
-        .sortWithinPartitions("band", "bkey")
     }
-    readImmutable(spark, path).select("doc_a", "band", "bkey")
-  }
 
   /** The MATERIALIZED containment pair graph — (doc_a, doc_b, na, nb,
     * containment), the verified asymmetric-containment pairs
@@ -1158,16 +1114,13 @@ object Catalog {
       minContainment: Double = 0.9, maxDf: Int = 50): DataFrame = {
     // BOTH parameters in the path (ADVICE r19): a call with a different
     // maxDf must not silently serve a store built under the old df cap
-    val path = cacheDir(dir,
-      f"contain_pairs_c${(minContainment * 100).round}%d_df$maxDf%d")
-    materialize(path) {
+    open(spark, dir,
+      f"contain_pairs_c${(minContainment * 100).round}%d_df$maxDf%d",
+      Layout.Hashed("doc_a", "doc_b"),
+      "doc_a", "doc_b", "na", "nb", "containment") {
       graft.ml.NearDup.containmentPairs(documents(spark, dir),
-          minContainment, maxDf)
-        .repartition(col("doc_a"))
-        .sortWithinPartitions("doc_a", "doc_b")
+        minContainment, maxDf)
     }
-    readImmutable(spark, path)
-      .select("doc_a", "doc_b", "na", "nb", "containment")
   }
 
   /** The MATERIALIZED duplicate-cluster table — (doc_id, cluster_id),
@@ -1179,40 +1132,36 @@ object Catalog {
     * driver-bench inflation). Sorted by doc_id so the anti-join's pushed
     * filters get min/max file skipping. */
   def dupClusters(spark: SparkSession, dir: String,
-      minJaccard: Double = 0.6): DataFrame = {
-    val path = cacheDir(dir, f"dup_clusters_j${(minJaccard * 100).round}%d")
-    materialize(path) {
+      minJaccard: Double = 0.6): DataFrame =
+    open(spark, dir, f"dup_clusters_j${(minJaccard * 100).round}%d",
+      Layout.Hashed("doc_id"), "doc_id", "cluster_id") {
       graft.ml.Clusters.connectedComponents(dupPairs(spark, dir, minJaccard))
-        .repartition(col("doc_id"))
-        .sortWithinPartitions("doc_id")
     }
-    readImmutable(spark, path).select("doc_id", "cluster_id")
-  }
 
   /** The MATERIALIZED IVF coarse-quantizer assignment over `embeddings` —
     * (vec_id, cell), partitioned by cell: an IVF lookup reads only the
     * probed cells' partitions. Centroids stay derived (a Cells-row
-    * broadcast). */
-  def ivfCells(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "ivf_cells")
-    materializeBy(path, Seq("cell")) {
-      graft.ml.Ann.cellAssignment(embeddings(spark, dir))
+    * broadcast). Over the planted corpus the probed-cell `isin` of the
+    * recall gates prunes partitions statically. */
+  def ivfCells(spark: SparkSession, dir: String,
+      v: Vectors = Base): DataFrame =
+    open(spark, dir, v.name("ivf_cells", "planted_cells"), Layout.Cells) {
+      graft.ml.Ann.cellAssignment(v.rows(spark, dir))
     }
-    readImmutable(spark, path)
-  }
+
+  /** (vec_id, cell) of `ivfCells`, the join side of the composed stores. */
+  private def cellOf(spark: SparkSession, dir: String, v: Vectors): DataFrame =
+    ivfCells(spark, dir, v).select(col("vec_id"), col("cell"))
 
   /** The MATERIALIZED SQ8 code store over `embeddings` — (vec_id,
     * codes array<tinyint>, mn, scale): the 4×-smaller embedding index
     * (Quant.sq8Store), written once per sf-dir and sorted by vec_id. The
     * serving layout is `sq8IvfStore` below; this flat store is the base
     * generation the composition derives from. */
-  def sq8Store(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "sq8_codes")
-    materialize(path) {
+  def sq8Store(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "sq8_codes", Layout.Plain, "vec_id", "codes", "mn", "scale") {
       graft.ml.Quant.sq8Store(embeddings(spark, dir)).sort("vec_id")
     }
-    readImmutable(spark, path).select("vec_id", "codes", "mn", "scale")
-  }
 
   /** The MATERIALIZED composed SQ8×IVF index — the int8 codes stored
     * INSIDE the coarse-quantizer layout (vec_id, codes, mn, scale;
@@ -1221,15 +1170,10 @@ object Catalog {
     * lookup (Ivf.topK with IvfCodec.Sq8) probes its nearest cells and
     * dequantizes ONLY those partitions' codes, so the serving path is
     * O(probed cells), not O(corpus) (VERDICT r10 #1). */
-  def sq8IvfStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "sq8_ivf")
-    materializeBy(path, Seq("cell")) {
-      sq8Store(spark, dir)
-        .join(ivfCells(spark, dir).select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
+  def sq8IvfStore(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "sq8_ivf", Layout.Cells) {
+      sq8Store(spark, dir).join(cellOf(spark, dir, Base), Seq("vec_id"))
     }
-    readImmutable(spark, path)
-  }
 
   /** The MATERIALIZED composed PQ×IVF index — the M-byte product-quantized
     * codes stored INSIDE the coarse-quantizer layout (vec_id, codes;
@@ -1238,29 +1182,22 @@ object Catalog {
     * committed codebooks) with the stored cell assignment. A PQ lookup
     * (Ivf.topK with IvfCodec.Pq) probes its nearest cells and ranks only those
     * partitions' codes through the PqSim kernel. */
-  def pqIvfStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "pq_ivf")
-    materializeBy(path, Seq("cell")) {
-      graft.ml.Pq.pqCodes(embeddings(spark, dir))
-        .join(ivfCells(spark, dir).select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
+  def pqIvfStore(spark: SparkSession, dir: String,
+      v: Vectors = Base): DataFrame =
+    open(spark, dir, v.name("pq_ivf", "planted_pq_ivf"), Layout.Cells) {
+      graft.ml.Pq.pqCodes(v.rows(spark, dir)).join(cellOf(spark, dir, v), Seq("vec_id"))
     }
-    readImmutable(spark, path)
-  }
 
   /** The MATERIALIZED composed residual-PQ×IVF index — the IVFPQ design
     * proper (Jégou et al. 2011): M-byte codes of each vector's RESIDUAL
     * to its coarse centroid, stored cell-partitioned like pqIvfStore.
     * Encode is one stateless projection over the two committed constant
     * tables (PqResidual.pqrRows). */
-  def pqrIvfStore(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "pqr_ivf")
-    materializeBy(path, Seq("cell")) {
-      graft.ml.PqResidual.pqrRows(embeddings(spark, dir),
-        ivfCells(spark, dir).select(col("vec_id"), col("cell")))
+  def pqrIvfStore(spark: SparkSession, dir: String,
+      v: Vectors = Base): DataFrame =
+    open(spark, dir, v.name("pqr_ivf", "planted_pqr_ivf"), Layout.Cells) {
+      graft.ml.PqResidual.pqrRows(v.rows(spark, dir), cellOf(spark, dir, v))
     }
-    readImmutable(spark, path)
-  }
 
   /** The MATERIALIZED IVF-FLAT serving store — embeddings re-laid-out
     * hive-partitioned by cell (vec_id, embedding, label, cell), the float
@@ -1271,16 +1208,13 @@ object Catalog {
     * (single, filtered, batch, rrf dense tier). ivfCells stays the build
     * intermediate / streamed-upkeep content; this is the read-optimized
     * derivation. At 100 TB this duplicates the corpus once — the standard
-    * cost of any vector index over raw storage. */
-  def ivfFlat(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "ivf_flat")
-    materializeBy(path, Seq("cell")) {
-      embeddings(spark, dir)
-        .join(ivfCells(spark, dir).select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
+    * cost of any vector index over raw storage. The planted corpus has no
+    * label column: its store only serves the unfiltered gate lookups. */
+  def ivfFlat(spark: SparkSession, dir: String,
+      v: Vectors = Base): DataFrame =
+    open(spark, dir, v.name("ivf_flat", "planted_ivf_flat"), Layout.Cells) {
+      v.rows(spark, dir).join(cellOf(spark, dir, v), Seq("vec_id"))
     }
-    readImmutable(spark, path)
-  }
 
   // ---- planted-regime recall fixtures (VERDICT r14 #5) ----
   // The quality gates' planted corpus and its derived indexes are ordinary
@@ -1290,113 +1224,39 @@ object Catalog {
   // the last ad-hoc multi-wave entries in the bench — 7-13 jobs each).
   // Parameters (qVecId=0, m=10, k=10) are the pinned gate regime shared
   // with the DuckDB oracles, which re-derive everything in SQL as before.
+  // The bucket, cell, IVF-flat, PQ, residual-PQ and exact-baseline stores
+  // over it are the base accessors with `Planted`.
 
   /** The MATERIALIZED planted-cluster corpus (Ann.plantedCluster at the
     * gate regime): base embeddings double-widened + 10 variants of vec 0. */
-  def plantedEmb(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "planted_cluster_q0m10")
-    materialize(path) {
-      graft.ml.Ann.plantedCluster(embeddings(spark, dir), 0L, 10)
-        .sort("vec_id")
+  def plantedEmb(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "planted_cluster_q0m10", Layout.Plain, "vec_id", "embedding") {
+      graft.ml.Ann.plantedCluster(embeddings(spark, dir), 0L, 10).sort("vec_id")
     }
-    readImmutable(spark, path).select("vec_id", "embedding")
-  }
 
-  /** annBuckets over the planted corpus — same layout rationale. */
-  def plantedBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "planted_buckets")
-    materialize(path) {
-      graft.ml.Ann.bucketIds(plantedEmb(spark, dir))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("bucket", "vec_id")
-    }
-    readImmutable(spark, path).select("vec_id", "bucket")
-  }
-
-  /** ivfCells over the planted corpus — hive-partitioned by cell so the
-    * gate's probed-cell `isin` prunes partitions statically. */
-  def plantedCells(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "planted_cells")
-    materializeBy(path, Seq("cell")) {
-      graft.ml.Ann.cellAssignment(plantedEmb(spark, dir))
-    }
-    readImmutable(spark, path)
-  }
-
-  /** ivfFlat over the planted corpus (no label column — the planted
-    * fixtures only serve the unfiltered gate lookups). */
-  def plantedIvfFlat(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "planted_ivf_flat")
-    materializeBy(path, Seq("cell")) {
-      plantedEmb(spark, dir)
-        .join(plantedCells(spark, dir).select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
-    }
-    readImmutable(spark, path)
-  }
-
-  /** sq8IvfStore over the planted corpus (same composed layout). */
-  def plantedSq8Ivf(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "planted_sq8_ivf")
-    materializeBy(path, Seq("cell")) {
+  /** sq8IvfStore over the planted corpus (same composed layout), encoded
+    * from the planted vectors, as no SQ8 base store exists for them. */
+  def plantedSq8Ivf(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "planted_sq8_ivf", Layout.Cells) {
       graft.ml.Quant.sq8Store(plantedEmb(spark, dir))
-        .join(plantedCells(spark, dir).select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
+        .join(cellOf(spark, dir, Planted), Seq("vec_id"))
     }
-    readImmutable(spark, path)
-  }
 
-  /** pqIvfStore over the planted corpus (same composed layout). */
-  def plantedPqIvf(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "planted_pq_ivf")
-    materializeBy(path, Seq("cell")) {
-      graft.ml.Pq.pqCodes(plantedEmb(spark, dir))
-        .join(plantedCells(spark, dir).select(col("vec_id"), col("cell")),
-          Seq("vec_id"))
+  /** The k-row exact-baseline id set for the gate query — the brute-force
+    * ranking runs at store build, the gate reads 10 rows. */
+  def exactTop10(spark: SparkSession, dir: String,
+      v: Vectors = Base): DataFrame =
+    open(spark, dir, v.name("exact_top10_q0", "planted_exact_top10_q0"),
+      Layout.Plain, "vec_id") {
+      graft.ml.Ann.exactIds(v.rows(spark, dir), 0L, 10)
     }
-    readImmutable(spark, path)
-  }
-
-  /** pqrIvfStore over the planted corpus (same composed layout). */
-  def plantedPqrIvf(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "planted_pqr_ivf")
-    materializeBy(path, Seq("cell")) {
-      graft.ml.PqResidual.pqrRows(
-        plantedEmb(spark, dir),
-        plantedCells(spark, dir).select(col("vec_id"), col("cell")))
-    }
-    readImmutable(spark, path)
-  }
-
-  /** The k-row exact-baseline id set for the gate query over the BASE
-    * corpus — the brute-force ranking runs at store build, the gate reads
-    * 10 rows. */
-  def exactTop10(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "exact_top10_q0")
-    materialize(path) {
-      graft.ml.Ann.exactIds(embeddings(spark, dir), 0L, 10)
-    }
-    readImmutable(spark, path).select("vec_id")
-  }
 
   /** The k-row exact baseline RESTRICTED to the label-3 slice — the
     * filtered recall gate's comparison set. */
-  def exactTop10Filtered(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "exact_top10_q0_label3")
-    materialize(path) {
+  def exactTop10Filtered(spark: SparkSession, dir: String): DataFrame =
+    open(spark, dir, "exact_top10_q0_label3", Layout.Plain, "vec_id") {
       graft.ml.Ann.exactIdsFiltered(embeddings(spark, dir), 0L, 3, 10)
     }
-    readImmutable(spark, path).select("vec_id")
-  }
-
-  /** The k-row exact baseline over the PLANTED corpus. */
-  def plantedExactTop10(spark: SparkSession, dir: String): DataFrame = {
-    val path = cacheDir(dir, "planted_exact_top10_q0")
-    materialize(path) {
-      graft.ml.Ann.exactIds(plantedEmb(spark, dir), 0L, 10)
-    }
-    readImmutable(spark, path).select("vec_id")
-  }
 
   /** Normalize the events `ts` column to session-zoned TimestampType.
     * Testdata generations have shipped three physical encodings:

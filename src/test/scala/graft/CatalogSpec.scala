@@ -6,8 +6,87 @@ import graft.model.Catalog
 /** The fail-loud staleness posture around the materialization cache
   * (VERDICT r13 #8): fingerprinted keys rebuild cleanly ACROSS sessions,
   * but a mid-session source regeneration must throw, not silently mix
-  * derived-store generations between entries. */
+  * derived-store generations between entries. And the build-aside publish
+  * behind every store (`Catalog.open`): a store path holds a whole store or
+  * nothing. */
 class CatalogSpec extends AnyFunSuite {
+
+  /** Run `body` with the store path of `name` under a fresh, empty source
+    * dir, then delete that source's cache directory. */
+  private def withStore(name: String)(body: (String, String) => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-publish").toString
+    val path = Catalog.cacheDir(dir, name)
+    try body(dir, path)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(path).getParentFile)
+  }
+
+  /** The `.building-*` siblings of a store path. */
+  private def buildingSiblings(path: String): Seq[String] = {
+    val f = new java.io.File(path)
+    Option(f.getParentFile.list()).toSeq.flatten
+      .filter(_.startsWith(s"${f.getName}.building-"))
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).toSeq.sorted
+
+  test("a build whose write fails part-way leaves nothing at the store " +
+      "path, and the next open builds the store cleanly") {
+    import TestSpark.spark
+    import org.apache.spark.sql.functions.{col, udf}
+    withStore("failing") { (dir, path) =>
+      // the last of 8 partitions fails after the others have written files
+      val failAt = udf((id: Long) =>
+        if (id == 95L) throw new IllegalStateException("injected") else id)
+      intercept[Exception] {
+        Catalog.open(spark, dir, "failing", Catalog.Layout.Plain) {
+          spark.range(0, 100, 1, 8).select(failAt(col("id")).as("id"))
+        }
+      }
+      assert(!new java.io.File(path).exists(), s"a failed build left $path")
+      assert(buildingSiblings(path).isEmpty)
+      val df = Catalog.open(spark, dir, "failing", Catalog.Layout.Plain, "id") {
+        spark.range(0, 100, 1, 8).toDF()
+      }
+      assert(ids(df) == (0L until 100L))
+    }
+  }
+
+  test("a store another publisher finishes during this build is kept: " +
+      "open returns the winner's rows and drops its own build") {
+    import TestSpark.spark
+    withStore("raced") { (dir, path) =>
+      def files = new java.io.File(path).listFiles().toSeq
+        .map(f => (f.getName, f.length, f.lastModified)).sorted
+      var winner = Seq.empty[(String, Long, Long)]
+      val df = Catalog.open(spark, dir, "raced", Catalog.Layout.Plain, "id") {
+        spark.range(5).write.parquet(path) // the winner publishes first
+        winner = files
+        spark.range(10).toDF()
+      }
+      assert(winner.nonEmpty)
+      assert(files == winner, "the losing build replaced the winner's files")
+      assert(ids(df) == (0L until 5L))
+      assert(buildingSiblings(path).isEmpty)
+    }
+  }
+
+  test("a .building sibling left by a killed build is never read and does " +
+      "not block the next open") {
+    import TestSpark.spark
+    withStore("killed") { (dir, path) =>
+      // a killed build's partial output: data files, no _SUCCESS
+      val left = s"$path.building-killed"
+      spark.range(1000, 1003).write.parquet(left)
+      new java.io.File(s"$left/_SUCCESS").delete()
+      val df = Catalog.open(spark, dir, "killed", Catalog.Layout.Plain, "id") {
+        spark.range(10).toDF()
+      }
+      assert(ids(df) == (0L until 10L))
+      assert(buildingSiblings(path) == Seq("killed.building-killed"))
+    }
+  }
 
   test("mid-session source regeneration fails loud, stable sources pass") {
     val dir = s"/tmp/graft-catalog-spec-${System.nanoTime()}"

@@ -7,7 +7,8 @@ import graft.model.Catalog
 
 /** The key-range store layout (Catalog.writeRanged) on sf0.01: index files
   * hold disjoint key ranges, a key lookup reads one page of one file, and
-  * the layout is a function of the rows alone. */
+  * the layout is a function of the rows alone. Its cut points equal a
+  * driver-side reference, and computing them moves no data into one task. */
 class RangeLayoutSpec extends AnyFunSuite {
   import TestSpark.spark
 
@@ -18,6 +19,74 @@ class RangeLayoutSpec extends AnyFunSuite {
     df.groupBy(input_file_name()).agg(min(k), max(k), count(lit(1))).collect()
       .map(r => (r.get(1).toString, r.get(2).toString, r.getLong(3))).toSeq
       .sortBy(_._1)
+
+  private val small = "/root/testdata/sf0.001"
+
+  /** The cut points from their definition, on the driver: the first value
+    * of every block of `rowsPerFile` rows but the first, in key order. */
+  private def referenceCuts(df: DataFrame, k: String, rowsPerFile: Long): Seq[Any] = {
+    var before = 0L
+    var prev = 0L
+    df.groupBy(k).count().orderBy(k).collect().toSeq.flatMap { r =>
+      val block = before / rowsPerFile
+      before += r.getLong(1)
+      val starts = block != prev
+      prev = block
+      if (starts) Some(r.get(0)) else None
+    }
+  }
+
+  /** The messages logged while `body` runs. */
+  private def logged(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("range-layout-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        seen.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    appender.start()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    try { body; seen.toArray(Array.empty[String]).toSeq }
+    finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  test("cut points equal a driver-side reference over the sf0.001 index " +
+      "and summaries") {
+    for ((df, k) <- Seq(Catalog.deriveIndex(spark, small) -> "key",
+        Catalog.deriveSummaries(spark, small) -> "off");
+        rows <- Seq(1L, 97L, 4096L, 1L << 18)) {
+      val want = referenceCuts(df, k, rows)
+      assert(Catalog.cutPoints(df, k, rows) == want, s"$k every $rows rows")
+      if (rows == 97L) assert(want.size >= 5, s"$k: ${want.size} cuts")
+    }
+  }
+
+  test("a writeRanged build logs no unpartitioned-window warning") {
+    val warning = "No Partition Defined for Window operation"
+    // the capture sees the warning when a window has no partition
+    val probe = logged(spark.range(10).withColumn("r",
+      row_number().over(org.apache.spark.sql.expressions.Window.orderBy("id")))
+      .collect())
+    assert(probe.exists(_.contains(warning)), probe)
+    val base = java.nio.file.Files.createTempDirectory("graft-cuts").toFile
+    try {
+      val seen = logged(Catalog.writeRanged(Catalog.deriveIndex(spark, small),
+        s"$base/index", "key", "key", "off"))
+      assert(!seen.exists(_.contains(warning)), seen.filter(_.contains(warning)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+  }
 
   test("index files hold disjoint key ranges; a name: lookup reads one page") {
     val idx = Catalog.index(spark, dir)
