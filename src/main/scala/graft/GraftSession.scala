@@ -21,6 +21,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // local paths go through graft.util.LocalFs: no process forked per
+      // chmod or permission read when libhadoop is absent
+      .config("spark.hadoop.fs.file.impl", classOf[graft.util.LocalFs].getName)
 
   /** The sandbox mains' session (Bench/Verify/Smoke/Shell/tests). Scan
     * sizing lives HERE, not in `builder` (ADVICE r15): a deployment

@@ -27,10 +27,12 @@ import graft.functions.{Funcs, Keywords}
 import graft.model.Tables
 import graft.operators.PostingAlgebra
 
-/** Where a QUERY statement runs: on the driver over at most `bound` stored
-  * rows, or on the Spark plan for a named reason. */
+/** Where small work runs: on the driver within a measured bound, or on the
+  * Spark plan for a named reason. */
 sealed trait Route
 object Route {
+  /** On the driver, within `bound`: the stored rows a QUERY statement's
+    * leaves span, or the bytes of a TSV batch (TsvLoader). */
   final case class Seek(bound: Long) extends Route
   final case class Spark(reason: String) extends Route
 }
@@ -222,25 +224,12 @@ object Seek {
     /** The rows whose `column` is in `values`, projected on `cols`, in file
       * order; nothing is read for no values. */
     def read(column: String, values: Set[Any], cols: Seq[String]): Vector[Row] = {
+      val want = (cols :+ column).distinct
+      val at = want.indexOf(column)
       val rows = if (values.isEmpty) Vector.empty else each(column, values) { r =>
-        val file = r.getFooter.getFileMetaData.getSchema
-        val want = (cols :+ column).distinct
-        val schema = new MessageType(file.getName,
-          want.map(c => file.getType(file.getFieldIndex(c))): _*)
-        r.setRequestedSchema(schema)
-        val io = new ColumnIOFactory().getColumnIO(schema, file)
-        val at = want.indexOf(column)
         val out = Vector.newBuilder[Row]
-        var pages = r.readNextFilteredRowGroup()
-        while (pages != null) {
-          val records = io.getRecordReader(pages, new Records(want.size))
-          var i = 0L
-          while (i < pages.getRowCount) {
-            val v = records.read()
-            if (values.contains(v(at))) out += Row.fromSeq(v.take(cols.size).toSeq)
-            i += 1
-          }
-          pages = r.readNextFilteredRowGroup()
+        records(r, want, filtered = true) { v =>
+          if (values.contains(v(at))) out += Row.fromSeq(v.take(cols.size).toSeq)
         }
         out.result()
       }.flatten.toVector
@@ -251,6 +240,40 @@ object Seek {
     /** Rows this store returned to the driver. */
     var decoded = 0L
   }
+
+  /** Every record of `r` (or of its filtered pages), projected on the
+    * primitive columns `cols`, as value arrays passed to `f`. */
+  private def records(r: ParquetFileReader, cols: Seq[String], filtered: Boolean)(
+      f: Array[Any] => Unit): Unit = {
+    val file = r.getFooter.getFileMetaData.getSchema
+    val schema = new MessageType(file.getName,
+      cols.map(c => file.getType(file.getFieldIndex(c))): _*)
+    r.setRequestedSchema(schema)
+    val io = new ColumnIOFactory().getColumnIO(schema, file)
+    def next() = if (filtered) r.readNextFilteredRowGroup() else r.readNextRowGroup()
+    var pages = next()
+    while (pages != null) {
+      val reader = io.getRecordReader(pages, new Records(cols.size))
+      var i = 0L
+      while (i < pages.getRowCount) { f(reader.read()); i += 1 }
+      pages = next()
+    }
+  }
+
+  /** Every row of the parquet `files`, projected on the primitive columns
+    * `cols`, as value arrays passed to `f` in file order. */
+  private[graft] def scan(files: Seq[FileStatus], conf: Configuration, cols: Seq[String])(
+      f: Array[Any] => Unit): Unit =
+    files.foreach { st =>
+      val in = HadoopInputFile.fromStatus(st, conf)
+      val r = ParquetFileReader.open(in, footer(st, conf),
+        HadoopReadOptions.builder(conf).build(), in.newStream())
+      try records(r, cols, filtered = false)(f) finally r.close()
+    }
+
+  /** Rows in the footers of the parquet `files`. */
+  private[graft] def footerRows(files: Seq[FileStatus], conf: Configuration): Long =
+    files.map(footer(_, conf).getBlocks.asScala.map(_.getRowCount).sum).sum
 
   /** Flat records of primitive columns as value arrays (null when absent). */
   private final class Records(n: Int) extends RecordMaterializer[Array[Any]] {
@@ -271,7 +294,7 @@ object Seek {
 
   /** The files of a frame that is a bare column projection of one
     * unpartitioned parquet relation. */
-  private def storedFiles(df: DataFrame): Option[Seq[FileStatus]] = {
+  private[graft] def storedFiles(df: DataFrame): Option[Seq[FileStatus]] = {
     def files(r: LogicalRelation) = r.relation match {
       case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] &&
           h.partitionSchema.isEmpty =>

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
+import graft.exec.{Route, Seek}
 import graft.ingest.{Merge, SortedWriter, TsvLoader}
 
 class IngestSpec extends AnyFunSuite {
@@ -29,6 +30,8 @@ class IngestSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         Option(r.getAs[java.lang.Double]("pct5")).map(_.doubleValue)))
       .sortBy(_._2)
+    // in-memory summaries are not a stored relation: the Spark join, by name
+    assert(TsvLoader.route(spark, path, summaries) == Route.Spark(Seek.notStored("summaries")))
     // unknown doc key dX drops; d2 carries its percentile band
     assert(rows.toSeq == Seq(
       ("price", 100L, 10.5, None),
