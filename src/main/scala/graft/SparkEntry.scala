@@ -2238,9 +2238,9 @@ object SparkEntry {
     // with the lowest-|margin| bit flipped — 2L query-side probes against
     // the SAME stored index instead of doubling the stored table count
     Entry("emb_topk_lsh_mp", Dense, (s, dir) =>
-      Ann.topKMultiProbe(Catalog.embeddings(s, dir),
-        Catalog.annBuckets(s, dir), 0, 10),
-      Ann.multiProbeOracleSql(0, 10)),
+      Ann.topK(Catalog.embeddings(s, dir), Catalog.annBuckets(s, dir), 0, 10,
+        multiProbe = true),
+      Ann.oracleSql(0, 10, multiProbe = true)),
     // BATCHED LSH serving: each query row hashes itself into its L bucket
     // keys in-plan; candidates arrive through the bucket equi-join against
     // the stored index — zero per-query driver round-trips, the bulk
@@ -2252,10 +2252,10 @@ object SparkEntry {
     // batched multi-probe: each query row derives its 2L keys in-plan
     // (margin argmin + bit flip as declarative expressions)
     Entry("emb_topk_lsh_mp_batch", Dense, (s, dir) => {
-      Ann.topKBatchMultiProbe(Catalog.embeddings(s, dir),
-        Catalog.annBuckets(s, dir),
-        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10)
-    }, Ann.multiProbeBatchOracleSql(8, 10)),
+      Ann.topKBatch(Catalog.embeddings(s, dir), Catalog.annBuckets(s, dir),
+        Catalog.embeddings(s, dir).filter(col("vec_id") < 8), 10,
+        multiProbe = true)
+    }, Ann.lshBatchOracleSql(8, 10, multiProbe = true)),
     // incremental index maintenance: new embeddings stream through the SAME
     // signature pipeline the batch build uses and append to the stored
     // bucket index — stateless, no shuffle

@@ -176,10 +176,17 @@ object Ivf {
       vec: Array[Double], qVecId: Long, k: Int,
       r: Restrict[DataFrame] = Unrestricted,
       probes: Int = Ann.Probes): DataFrame =
-    restricted(
+    rankedTopK(codec, restricted(
         store.filter(col("cell").isin(Ann.probedCellsOf(vec, probes): _*)), r)
-      .filter(col("vec_id") =!= qVecId)
-      .select(col("vec_id"),
+      .filter(col("vec_id") =!= qVecId), vec, k)
+
+  /** The single lookups' shared ranking tail over a candidate frame in the
+    * codec's row shape: score every row with the codec against the literal
+    * query and its self-dot, then take the (sim DESC, vec_id ASC) top-k.
+    * The IVF tiers and the LSH lookup (Ann.topKAt) rank through it. */
+  private[ml] def rankedTopK(codec: IvfCodec, cand: DataFrame,
+      vec: Array[Double], k: Int): DataFrame =
+    cand.select(col("vec_id"),
         codec.sim(Ann.litVec(vec), lit(Ann.selfDot(vec))).as("sim"))
       .orderBy(desc("sim"), asc("vec_id"))
       .limit(k)
@@ -210,33 +217,27 @@ object Ivf {
     * per-query top-k, nothing collected, so |Q| can itself be data-scale.
     *
     * Query-table contract: qids must be DISTINCT (both per-query windows
-    * key on qid). `excludeSelf` (default true, matching the single lookup)
-    * drops each query's own row; an EXTERNAL query table whose ids live in
-    * a different id space must pass excludeSelf = false. `keepRank` keeps
-    * the per-query rank for a fusion consumer. Returns (qid, vec_id, sim),
-    * ≤ k rows per query. */
+    * key on qid), and each query's own row is excluded, as in the single
+    * lookup. `keepRank` keeps the per-query rank for a fusion consumer.
+    * Returns (qid, vec_id, sim), ≤ k rows per query. */
   def topKBatch(codec: IvfCodec, store: DataFrame, queries: DataFrame, k: Int,
-      r: Restrict[DataFrame] = Unrestricted, excludeSelf: Boolean = true,
+      r: Restrict[DataFrame] = Unrestricted,
       keepRank: Boolean = false): DataFrame =
-    Ann.topKPerQuery(candidates(codec, store, queries, r, excludeSelf), k,
-      keepRank)
+    Ann.topKPerQuery(candidates(codec, store, queries, r), k, keepRank)
 
   /** The ONE batch candidate chain — probe assignment, probed-cell pruning
-    * of the restricted store, optional self-exclusion, codec scoring.
-    * Every batch lookup and the hard-negative miner compose it. Returns
+    * of the restricted store, self-exclusion, codec scoring. Every batch
+    * lookup and the hard-negative miner compose it. Returns
     * (qid, vec_id, sim), unranked. */
   private[ml] def candidates(codec: IvfCodec, store: DataFrame,
-      queries: DataFrame, r: Restrict[DataFrame],
-      excludeSelf: Boolean): DataFrame = {
+      queries: DataFrame, r: Restrict[DataFrame]): DataFrame = {
     val q = queries.select(col("vec_id").as("qid"),
       codec.query(col("embedding")).as("qemb"))
     val probed = probeBatch(q, Ann.centroids(queries))
-    val joined = probed.join(prunedByProbedCells(restricted(store, r), probed),
-      Seq("cell"))
-    val cand = if (excludeSelf) joined.filter(col("vec_id") =!= col("qid"))
-               else joined
-    cand.select(col("qid"), col("vec_id"),
-      codec.sim(col("qemb"), col("qn")).as("sim"))
+    probed.join(prunedByProbedCells(restricted(store, r), probed), Seq("cell"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"),
+        codec.sim(col("qemb"), col("qn")).as("sim"))
   }
 
   /** The batched probe stage: each (qid, qemb) row of `q` ranks the
@@ -268,18 +269,14 @@ object Ivf {
     store.join(broadcast(probed.select("cell")), Seq("cell"), "left_semi")
 
   /** The recall gate from STORED fixtures: recall@k of one lookup against
-    * a k-row stored exact baseline, the ≤k-id overlap computed on the
-    * driver (Ann.recallRows). Returns (method, hits, recall). */
+    * a k-row stored exact baseline — the one-arm call of Ann.recallFrom.
+    * Returns (method, hits, recall). */
   def recallAtKFrom(codec: IvfCodec, store: DataFrame, emb: DataFrame,
       exact: DataFrame, qVecId: Long, k: Int,
       r: Restrict[DataFrame] = Unrestricted,
-      method: Option[String] = None): DataFrame = {
-    val ids = exact.select("vec_id").collect().map(_.getLong(0)).toSet
-    val got = topK(codec, store, emb, qVecId, k, r)
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    Ann.recallRows(emb.sparkSession, ids,
-      Seq(method.getOrElse(codec.name) -> got), k)
-  }
+      method: Option[String] = None): DataFrame =
+    Ann.recallFrom(emb, exact, qVecId, k, Seq(method.getOrElse(codec.name) ->
+      (topKAt(codec, store, _, qVecId, k, r))))
 
   // ---- DuckDB mirrors ----
 

@@ -138,13 +138,6 @@ class AnnIndexSpec extends AnyFunSuite {
         .map(r => (qid, r.getLong(0), r.getDouble(1)))
     }.toSet
     assert(batch == singles)
-    // the external-id-space escape hatch: with excludeSelf = false a
-    // corpus-drawn query keeps its own row, which must rank first (sim 1.0)
-    val self = Ivf.topKBatch(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
-        emb.filter(col("vec_id") < 4), 1, excludeSelf = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(self.length == 4 && self.forall(r => r._1 == r._2 && r._3 == 1.0),
-      s"excludeSelf=false must rank each query's own row first: ${self.toSeq}")
   }
 
   test("batched LSH serving == per-query single lookups, bucket equi-join") {
@@ -172,11 +165,6 @@ class AnnIndexSpec extends AnyFunSuite {
         .map(r => (qid, r.getLong(0), r.getDouble(1)))
     }.toSet
     assert(batch == singles)
-    val self = Ann.topKBatch(emb, bk,
-        emb.filter(col("vec_id") < 4), 1, excludeSelf = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(self.length == 4 && self.forall(r => r._1 == r._2 && r._3 == 1.0),
-      s"excludeSelf=false must rank each query's own row first: ${self.toSeq}")
   }
 
   test("filtered batch == per-query filtered singles, label pushed") {

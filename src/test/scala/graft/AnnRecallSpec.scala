@@ -106,7 +106,7 @@ class AnnRecallSpec extends AnyFunSuite {
       df.collect().map(_.getDouble(1)).toSeq.sorted
     try {
       val single = simsOf(Ann.topK(emb, bk, 0L, K))
-      val multi = simsOf(Ann.topKMultiProbe(emb, bk, 0L, K))
+      val multi = simsOf(Ann.topK(emb, bk, 0L, K, multiProbe = true))
       assert(multi.size >= single.size)
       // pairwise dominance of the sorted similarity lists: with a
       // candidate superset and the same ranking, every rank's sim can
@@ -122,12 +122,13 @@ class AnnRecallSpec extends AnyFunSuite {
     val emb = Catalog.embeddings(spark, dir)
     val bk = Catalog.annBuckets(spark, dir)
     try {
-      val batch = Ann.topKBatchMultiProbe(emb, bk,
-          emb.filter(org.apache.spark.sql.functions.col("vec_id") < 8), K)
+      val batch = Ann.topKBatch(emb, bk,
+          emb.filter(org.apache.spark.sql.functions.col("vec_id") < 8), K,
+          multiProbe = true)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
       val singles = (0L until 8L).flatMap { qid =>
-        Ann.topKMultiProbe(emb, bk, qid, K).collect()
+        Ann.topK(emb, bk, qid, K, multiProbe = true).collect()
           .map(r => (qid, r.getLong(0), r.getDouble(1)))
       }.toSet
       assert(batch == singles)

@@ -234,20 +234,10 @@ class MlSpec extends AnyFunSuite {
 
   test("ngramJaccard plan construction launches no Spark job (VERDICT r4 #5)") {
     val docs = Seq((0L, "a b c d e"), (1L, "a b c d f")).toDF("doc_id", "text")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = NearDup.ngramJaccard(docs, 0.6, maxDf = 50) // construct only
-      Thread.sleep(1500) // listener bus is async; give any stray job time to surface
-      assert(jobs.get() == 0, "constructing the DataFrame must not run a job")
-      assert(df.columns.toSeq == Seq("doc_a", "doc_b", "jaccard"))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (df, jobs, _) = TestSpark.jobsAndRecords(
+      NearDup.ngramJaccard(docs, 0.6, maxDf = 50)) // construct only
+    assert(jobs == 0, "constructing the DataFrame must not run a job")
+    assert(df.columns.toSeq == Seq("doc_a", "doc_b", "jaccard"))
   }
 
   test("IVF top-k: clone ranks first; probing touches only probed cells") {

@@ -27,18 +27,21 @@ class QueryConstProps extends AnyFunSuite {
   test("driver bucket keys == the signature expression, bit for bit") {
     val vecs = randomVecs(60)
     val df = vecs.toDF("vec_id", "embedding")
-    // engine side: the SAME signature expressions the index build uses
     val e = df.select(col("vec_id"), col("embedding").as("emb"))
-    val engine = e.select(col("vec_id") +:
-        (0 until Ann.Tables).map(t =>
-          concat(lit(s"$t:"), Ann.signature(col("emb"), t)).as(s"b$t")): _*)
-      .collect()
-      .map(r => r.getLong(0) ->
-        (1 to Ann.Tables).map(r.getString).toSeq).toMap
-    for ((id, v) <- vecs) {
-      val driver = Ann.queryBucketKeysOf(v.map(_.toDouble).toArray)
-      assert(driver == engine(id),
-        s"vec $id: driver $driver != engine ${engine(id)}")
+    for (mp <- Seq(false, true)) {
+      // engine side: the SAME key expressions topKBatch explodes — the
+      // index build's signatures, and for multi-probe the in-plan flip
+      val keys = Ann.probeKeys(col("emb"), mp)
+      val engine = e.select(col("vec_id") +:
+          keys.zipWithIndex.map { case (c, i) => c.as(s"b$i") }: _*)
+        .collect()
+        .map(r => r.getLong(0) -> (1 to keys.size).map(r.getString).toSeq)
+        .toMap
+      for ((id, v) <- vecs) {
+        val driver = Ann.probeKeysOf(v.map(_.toDouble).toArray, mp)
+        assert(driver == engine(id),
+          s"vec $id multiProbe=$mp: driver $driver != engine ${engine(id)}")
+      }
     }
   }
 
@@ -71,8 +74,8 @@ class QueryConstProps extends AnyFunSuite {
     def hamming(a: String, b: String): Int = a.zip(b).count(p => p._1 != p._2)
     for ((_, v) <- randomVecs(60)) {
       val vec = v.map(_.toDouble).toArray
-      val base = Ann.queryBucketKeysOf(vec)
-      val mp = Ann.queryMultiProbeKeysOf(vec)
+      val base = Ann.probeKeysOf(vec, multiProbe = false)
+      val mp = Ann.probeKeysOf(vec, multiProbe = true)
       assert(mp.size == 2 * Ann.Tables)
       assert(base.forall(mp.contains), "multi-probe must include base keys")
       for (t <- 0 until Ann.Tables) {

@@ -4,7 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for all specs (getOrCreate — tests fork once). */
 object TestSpark {
-  lazy val spark: SparkSession = GraftSession.local("4")
+  /** Plan strings render scan locations in full: Spark cuts them at
+    * `spark.sql.maxMetadataStringLength` (100 characters by default), and a
+    * long cache root would push the store names the plan pins look for past
+    * the cut. */
+  lazy val spark: SparkSession = {
+    val s = GraftSession.local("4")
+    s.conf.set("spark.sql.maxMetadataStringLength", Int.MaxValue.toLong)
+    s
+  }
 
   def postingsDf(p: Seq[(Long, Double)]): DataFrame = {
     import spark.implicits._
