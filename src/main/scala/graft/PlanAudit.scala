@@ -6,7 +6,8 @@ package graft
   * editing any spec (usage: PlanAudit <sfDir> [name...]). The special name
   * `contain_writer_frame` prints the containment micro-batch ADMISSION
   * frame's plan (the foreachBatch writer's work — not reachable through any
-  * declared entry, which only reads the store). */
+  * declared entry, which only reads the store). Stored serving lookups are
+  * pinned to their Spark plans, which they keep over SeekRows. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanAudit <sfDir> [name...]")
@@ -30,7 +31,8 @@ object PlanAudit {
           graft.streaming.DocumentsIngest.containPairBatchFrame(spark, base,
             graft.ml.NearDup.shingles(docs.filter(col("doc_id") >= mid)),
             0.9, 50)
-        } else SparkEntry.queries(name)(spark, sfDir)
+        } else graft.exec.Route.onSpark("PlanAudit prints the Spark plan")(
+          SparkEntry.queries(name)(spark, sfDir))
       // run the frame's own plan, so its adaptive plan is the final one
       df.queryExecution.toRdd.foreach(_ => ())
       println(s"\n========== $name ==========")

@@ -103,9 +103,12 @@ object Verify {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
       val c0 = counters.drainedSnapshot(spark.sparkContext)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      var routes = Seq.empty[graft.exec.Route]
+      try {
+        val (df, rs) = graft.exec.Route.observed(fn(spark, sfDir))
+        routes = rs
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // release any operator-internal caches before the next entry — 60
@@ -114,11 +117,14 @@ object Verify {
         graft.util.Caches.drain()
         val c = counters.drainedSnapshot(spark.sparkContext) - c0
         perEntry += name -> c
-        // a QUERY entry's job count depends on its route: say which it took
-        statements.get(name).foreach { text =>
+        // a QUERY or serving entry's job count depends on its route: say
+        // which it took (a serving entry lists each lookup's)
+        statements.get(name).map { text =>
           val stmt = graft.parser.Parser.parseStatement(text).asInstanceOf[graft.ast.QueryStmt]
-          println(s"[verify] $name: ${c.jobs} jobs, route " +
-            graft.exec.Seek.route(spark, graft.model.Catalog.tables(spark, sfDir), stmt))
+          Seq(graft.exec.Seek.route(spark, graft.model.Catalog.tables(spark, sfDir), stmt))
+        }.getOrElse(routes) match {
+          case Nil =>
+          case rs => println(s"[verify] $name: ${c.jobs} jobs, route ${rs.mkString(", ")}")
         }
       }
     }

@@ -14,10 +14,13 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
 import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, MutableProjection}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, LogicalRelation, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.ast._
@@ -26,16 +29,6 @@ import graft.compiler.QueryCompiler.TokenKind
 import graft.functions.{Funcs, Keywords}
 import graft.model.Tables
 import graft.operators.PostingAlgebra
-
-/** Where small work runs: on the driver within a measured bound, or on the
-  * Spark plan for a named reason. */
-sealed trait Route
-object Route {
-  /** On the driver, within `bound`: the stored rows a QUERY statement's
-    * leaves span, or the bytes of a TSV batch (TsvLoader). */
-  final case class Seek(bound: Long) extends Route
-  final case class Spark(reason: String) extends Route
-}
 
 /** The driver-side route for small QUERY statements — the reference's
   * in-process SeekToKey on a sorted table (ca-table.h:230-257). The index,
@@ -194,7 +187,7 @@ object Seek {
   }
 
   /** One stored frame's parquet files, read by `column IN values`. */
-  private final class Store(files: Seq[FileStatus], conf: Configuration) {
+  private[graft] final class Store(files: Seq[FileStatus], conf: Configuration) {
 
     /** Open a reader per file whose row-group statistics admit the
       * predicate, with the page index filter on. The dictionary filter is
@@ -281,6 +274,7 @@ object Seek {
     private val root = new GroupConverter {
       private val fields: Array[Converter] = Array.tabulate(n)(i => new PrimitiveConverter {
         override def addLong(v: Long): Unit = values(i) = v
+        override def addInt(v: Int): Unit = values(i) = v
         override def addDouble(v: Double): Unit = values(i) = v
         override def addBinary(v: Binary): Unit = values(i) = v.toStringUsingUTF8
       })
@@ -292,22 +286,110 @@ object Seek {
     def getRootConverter: GroupConverter = root
   }
 
-  /** The files of a frame that is a bare column projection of one
-    * unpartitioned parquet relation. */
-  private[graft] def storedFiles(df: DataFrame): Option[Seq[FileStatus]] = {
-    def files(r: LogicalRelation) = r.relation match {
-      case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] &&
-          h.partitionSchema.isEmpty =>
-        Some(h.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus))
+  /** A frame that is a bare column projection of one parquet relation:
+    * the relation, and each of its files with its partition values, from
+    * the relation's file index. */
+  private[graft] final case class Stored(relation: HadoopFsRelation,
+      files: Seq[(InternalRow, FileStatus)]) {
+
+    /** The files of the partitions whose `column` is one of `values`. */
+    def partitions(column: String, values: Set[Long]): Seq[(InternalRow, FileStatus)] = {
+      val i = relation.partitionSchema.fieldIndex(column)
+      val t = relation.partitionSchema(i).dataType
+      files.filter { case (v, _) =>
+        !v.isNullAt(i) && values(v.get(i, t).asInstanceOf[Number].longValue)
+      }
+    }
+
+    /** The files whose row-group statistics admit `column` = `value`. */
+    def admitting(column: String, value: Long, conf: Configuration): Seq[(InternalRow, FileStatus)] = {
+      val pred = predicate(column, Set[Any](value))
+      files.filter { case (_, st) =>
+        footer(st, conf).getBlocks.asScala.exists(b => !StatisticsFilter.canDrop(pred, b.getColumns))
+      }
+    }
+  }
+
+  private[graft] def stored(df: DataFrame): Option[Stored] = {
+    def of(r: LogicalRelation) = r.relation match {
+      case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        Some(Stored(h, h.location.listFiles(Nil, Nil).flatMap(p =>
+          p.files.map(f => p.values -> f.fileStatus))))
       case _ => None
     }
     df.queryExecution.analyzed match {
       case Project(list, r: LogicalRelation) if list.forall(_.isInstanceOf[AttributeReference]) =>
-        files(r)
-      case r: LogicalRelation => files(r)
+        of(r)
+      case r: LogicalRelation => of(r)
       case _ => None
     }
   }
+
+  /** The files of a frame that is a bare column projection of one
+    * unpartitioned parquet relation. */
+  private[graft] def storedFiles(df: DataFrame): Option[Seq[FileStatus]] =
+    stored(df).filter(_.relation.partitionSchema.isEmpty).map(_.files.map(_._2))
+
+  /** A stored frame's Store, when it is unpartitioned. */
+  private[graft] def store(df: DataFrame, conf: Configuration): Option[Store] =
+    storedFiles(df).map(new Store(_, conf))
+
+  private val readers = new ConcurrentHashMap[(SparkSession, StructType, StructType, StructType),
+    PartitionedFile => Iterator[InternalRow]]
+
+  /** Every row of `files` of `s`, as Spark's parquet source reads it:
+    * the `required` columns, then the partition values. The reader is
+    * built once per (session, schemas). Each file is read to its end, which
+    * closes it. A row is valid only inside `f`. */
+  private[graft] def scanRows(spark: SparkSession, s: Stored, files: Seq[(InternalRow, FileStatus)],
+      required: StructType)(f: InternalRow => Unit): Unit = {
+    val h = s.relation
+    val read = readers.computeIfAbsent((spark, h.dataSchema, h.partitionSchema, required), _ =>
+      h.fileFormat.buildReaderWithPartitionValues(spark, h.dataSchema, h.partitionSchema,
+        required, Nil, h.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConfWithOptions(h.options)))
+    files.foreach { case (values, st) =>
+      val it = read(PartitionedFile(values, SparkPath.fromPath(st.getPath), 0, st.getLen,
+        Array.empty, st.getModificationTime, st.getLen))
+      while (it.hasNext) f(it.next())
+    }
+  }
+
+  /** Compiled `cols` over rows of `input`, with their output schema. */
+  private[graft] final case class Projection(project: MutableProjection, schema: StructType)
+
+  private val projections = new ConcurrentHashMap[(Boolean, StructType, Seq[String]), Projection]
+
+  /** `cols` over rows of `input`, analyzed and compiled for evaluation on
+    * the driver — once per ANSI mode (which the casts fix at analysis),
+    * input schema and column text. A projection writes into one row: hold
+    * its lock while evaluating and reading it. */
+  private[graft] def projection(spark: SparkSession, input: StructType, cols: Column*): Projection =
+    projections.computeIfAbsent((spark.sessionState.conf.ansiEnabled, input, cols.map(_.toString)), _ => {
+      val df = spark.createDataFrame(java.util.List.of[Row](), input).select(cols: _*)
+      // the analyzed projection with its runtime-replaceable calls (`get`)
+      // replaced, as the optimizer does before any evaluation
+      val Project(list, in) = ReplaceExpressions(df.queryExecution.analyzed): @unchecked
+      Projection(MutableProjection.create(list, in.output), df.schema)
+    })
+
+  /** The rows of a frame whose optimized plan is a local relation. */
+  private[graft] def localRows(df: DataFrame): Option[Seq[InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
+
+  /** The non-null `column` values of a local frame, as longs. */
+  private[graft] def localIds(df: DataFrame, column: String): Option[Set[Long]] =
+    localRows(df.select(df(column).cast(LongType)))
+      .map(_.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet)
+
+  /** The top `k` of (id, score) rows in QueryExec.rankOrder, as a local
+    * frame under `schema`: what orderBy(desc(score), asc(id)).limit(k)
+    * returns, with no job to collect it. */
+  private[graft] def ranked(spark: SparkSession, schema: StructType, rows: Seq[Row], k: Int): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.sorted(QueryExec.rankOrder).take(k): _*), schema)
 
   /** A statement leaf's lookup: the `key` rows of the index (with the
     * leaf's bands) or, for KEY=, of the summaries. */

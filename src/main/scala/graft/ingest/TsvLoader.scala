@@ -1,6 +1,5 @@
 package graft.ingest
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
@@ -8,11 +7,8 @@ import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.MutableProjection
-import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
-import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -107,14 +103,14 @@ object TsvLoader {
 
   private val LineSchema = StructType(Seq(StructField("value", StringType)))
 
-  /** Each line of `lines` split into its 3+ columns (key, mid, score,
-    * pct5..pct95) — the one projection both index routes and the
-    * time-series mode evaluate. */
-  private def columns(lines: DataFrame): DataFrame = {
+  /** A line's 3+ columns (key, mid, score, pct5..pct95) over its `value`
+    * — the one projection both index routes and the time-series mode
+    * evaluate. */
+  private def columnList: Seq[Column] = {
     val parts = split(col("value"), "\t")
     // `get` (not getItem) — the percentile columns are optional and ANSI mode
     // rejects out-of-bounds getItem.
-    lines.select(
+    Seq(
       unescapeUdf(get(parts, lit(0))).as("key"),
       unescapeUdf(get(parts, lit(1))).as("mid"),
       get(parts, lit(2)).cast("double").as("score"),
@@ -123,6 +119,8 @@ object TsvLoader {
       get(parts, lit(5)).cast("double").as("pct75"),
       get(parts, lit(6)).cast("double").as("pct95"))
   }
+
+  private def columns(lines: DataFrame): DataFrame = lines.select(columnList: _*)
 
   /** Index mode: resolve document keys against the summary table
     * (ca-load.cc:282-294 — unknown doc keys are an error there; here they are
@@ -182,28 +180,13 @@ object TsvLoader {
     }
   }
 
-  /** `columns` analyzed and compiled for the driver route, with its
-    * schema: once per ANSI mode, which the casts fix at analysis. */
-  private final case class Lines(project: MutableProjection, schema: StructType)
-
-  private val compiled = new ConcurrentHashMap[Boolean, Lines]
-
-  private def lines(spark: SparkSession): Lines =
-    compiled.computeIfAbsent(spark.sessionState.conf.ansiEnabled, _ => {
-      val cols = columns(spark.createDataFrame(java.util.List.of[Row](), LineSchema))
-      // the analyzed projection with its runtime-replaceable calls (`get`)
-      // replaced, as the optimizer does before any evaluation
-      val Project(list, in) = ReplaceExpressions(cols.queryExecution.analyzed): @unchecked
-      Lines(MutableProjection.create(list, in.output), cols.schema)
-    })
-
   /** The driver route: the batch's lines through `columns`, each joined to
     * the offs of its document key, as a local frame with the Spark route's
     * schema. No Spark job runs; the frame is one partition, so an append
     * writes one file, as the Spark route's does. */
   private def resolved(spark: SparkSession, b: Batch, summaries: DataFrame): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val cols = lines(spark)
+    val cols = Seek.projection(spark, LineSchema, columnList: _*)
     val offs = offsOf(b.summaries, conf)
     val schema = StructType(cols.schema("key") +: summaries.schema("off") +: cols.schema.drop(2))
     val out = new java.util.ArrayList[Row]

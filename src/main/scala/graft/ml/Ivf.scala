@@ -1,7 +1,12 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, UnsafeArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import graft.exec.{Route, Seek}
 
 /** One IVF tier's codec — ONLY what differs between the flat, SQ8, PQ and
   * residual-PQ tiers: the candidate score over one row of the tier's
@@ -163,22 +168,125 @@ object Ivf {
         store.join(ids.select("vec_id"), Seq("vec_id"), "left_anti")
     }
 
-  /** Top-k of query vector `qVecId` against the codec's store: ONE bounded
-    * query-row collect, probe arithmetic on the driver, then a single
-    * probed-partition scan ranked against the literal query. Returns
-    * (vec_id, sim). */
+  /** Top-k of query vector `qVecId` against the codec's store, as
+    * (vec_id, sim). When `local` bounds the lookup, the query row and the
+    * probed cells are read and ranked on the driver. Otherwise it is ONE
+    * bounded query-row collect, probe arithmetic on the driver, then a
+    * single probed-partition scan ranked against the literal query. */
   def topK(codec: IvfCodec, store: DataFrame, emb: DataFrame, qVecId: Long,
       k: Int, r: Restrict[DataFrame] = Unrestricted): DataFrame =
-    topKAt(codec, store, Ann.queryVec(emb, qVecId), qVecId, k, r)
+    Route.serve(for {
+      vec <- localVec(emb, qVecId)
+      cells <- local(store, vec, r, Ann.Probes)
+    } yield cells._1 -> (vec, cells._2)) { case (vec, cells) =>
+      cells.topK(codec, vec, qVecId, k)
+    } {
+      topKAt(codec, store, Ann.queryVec(emb, qVecId), qVecId, k, r)
+    }
 
   /** topK for an already-collected query vector, at probe width `probes`. */
   private[ml] def topKAt(codec: IvfCodec, store: DataFrame,
       vec: Array[Double], qVecId: Long, k: Int,
       r: Restrict[DataFrame] = Unrestricted,
       probes: Int = Ann.Probes): DataFrame =
-    rankedTopK(codec, restricted(
-        store.filter(col("cell").isin(Ann.probedCellsOf(vec, probes): _*)), r)
-      .filter(col("vec_id") =!= qVecId), vec, k)
+    Route.serve(local(store, vec, r, probes))(_.topK(codec, vec, qVecId, k)) {
+      rankedTopK(codec, restricted(
+          store.filter(col("cell").isin(Ann.probedCellsOf(vec, probes): _*)), r)
+        .filter(col("vec_id") =!= qVecId), vec, k)
+    }
+
+  val NotCells = "the store is not partitioned by cell"
+  val NotLocal = "the restriction's ids are not a local relation"
+  val NoLabel = "the store has no label column"
+  val NotLongIds = "vec_id is not BIGINT"
+
+  /** `emb`'s row `qVecId` read on the driver, as Ann.queryVec returns it:
+    * the files whose statistics admit the id, within SeekRows. An absent
+    * id fails as Ann.queryVec does. */
+  private[ml] def localVec(emb: DataFrame, qVecId: Long): Either[String, Array[Double]] = {
+    val conf = emb.sparkSession.sparkContext.hadoopConfiguration
+    for {
+      s <- Seek.stored(emb).toRight(Seek.notStored("embeddings"))
+      _ <- Either.cond(s.relation.dataSchema("vec_id").dataType == LongType, (), NotLongIds)
+      files = s.admitting("vec_id", qVecId, conf)
+      rows = Seek.footerRows(files.map(_._2), conf)
+      _ <- Either.cond(rows <= Seek.SeekRows, (), Seek.overBound(rows))
+    } yield {
+      val cols = StructType(Seq(s.relation.dataSchema("vec_id"), s.relation.dataSchema("embedding")))
+      val elem = cols(1).dataType.asInstanceOf[ArrayType].elementType
+      var vec: Option[Array[Double]] = None
+      Seek.scanRows(emb.sparkSession, s, files, cols) { row =>
+        if (vec.isEmpty && !row.isNullAt(0) && row.getLong(0) == qVecId)
+          vec = Some(row.getArray(1).toArray[Any](elem).map(_.asInstanceOf[Number].doubleValue))
+      }
+      require(vec.nonEmpty, s"query vec_id $qVecId not present in corpus")
+      vec.get
+    }
+  }
+
+  /** The driver plan of a single lookup: the store's probed `cell=` files,
+    * bound by their footer rows within SeekRows, under a restriction the
+    * driver can apply (none, a label, or a local id set). */
+  private[ml] def local(store: DataFrame, vec: Array[Double], r: Restrict[DataFrame],
+      probes: Int): Either[String, (Long, Cells)] = {
+    val conf = store.sparkSession.sparkContext.hadoopConfiguration
+    for {
+      s <- Seek.stored(store).toRight(Seek.notStored("the IVF store"))
+      _ <- Either.cond(s.relation.partitionSchema.fieldNames.contains("cell"), (), NotCells)
+      _ <- Either.cond(s.relation.dataSchema("vec_id").dataType == LongType, (), NotLongIds)
+      rr <- r match {
+        case Unrestricted => Right(Unrestricted)
+        case Label(l) => Either.cond(s.relation.dataSchema.fieldNames.contains("label"), Label(l), NoLabel)
+        case Allowed(ids) => Seek.localIds(ids, "vec_id").map(Allowed(_)).toRight(NotLocal)
+        case Masked(ids) => Seek.localIds(ids, "vec_id").map(Masked(_)).toRight(NotLocal)
+      }
+      files = s.partitions("cell", Ann.probedCellsOf(vec, probes).toSet)
+      bound = Seek.footerRows(files.map(_._2), conf)
+      _ <- Either.cond(bound <= Seek.SeekRows, (), Seek.overBound(bound))
+    } yield bound -> new Cells(store, s, files, rr)
+  }
+
+  /** The probed cells' files of a stored IVF store, ranked on the driver:
+    * each row that passes the self-exclusion and the restriction is scored
+    * by the codec's own `sim` Column, compiled once per codec and store
+    * schema with the query and its self-dot as bound input columns. */
+  private[ml] final class Cells(store: DataFrame, s: Seek.Stored,
+      files: Seq[(InternalRow, FileStatus)], r: Restrict[Set[Long]]) {
+
+    def topK(codec: IvfCodec, vec: Array[Double], qVecId: Long, k: Int): DataFrame = {
+      val spark = store.sparkSession
+      val data = s.relation.dataSchema
+      val input = StructType(data ++ s.relation.partitionSchema ++ Seq(
+        StructField("qemb", ArrayType(DoubleType, containsNull = false), nullable = false),
+        StructField("qn", DoubleType, nullable = false)))
+      val sim = Seek.projection(spark, input, codec.sim(col("qemb"), col("qn")).as("sim"))
+      val id = data.fieldIndex("vec_id")
+      val keep: (Long, InternalRow) => Boolean = r match {
+        case Unrestricted => (_, _) => true
+        case Label(l) =>
+          val i = data.fieldIndex("label")
+          (_, row) => !row.isNullAt(i) &&
+            row.get(i, data(i).dataType).asInstanceOf[Number].longValue == l
+        case Allowed(ids) => (v, _) => ids(v)
+        case Masked(ids) => (v, _) => !ids(v)
+      }
+      val q = InternalRow(UnsafeArrayData.fromPrimitiveArray(vec), Ann.selfDot(vec))
+      val joined = new JoinedRow
+      val rows = Vector.newBuilder[Row]
+      sim.project.synchronized {
+        Seek.scanRows(spark, s, files, data) { row =>
+          if (!row.isNullAt(id)) {
+            val v = row.getLong(id)
+            if (v != qVecId && keep(v, row)) {
+              val out = sim.project(joined(row, q))
+              rows += Row(v, if (out.isNullAt(0)) null else out.getDouble(0))
+            }
+          }
+        }
+      }
+      Seek.ranked(spark, StructType(Seq(store.schema("vec_id"), sim.schema("sim"))), rows.result(), k)
+    }
+  }
 
   /** The single lookups' shared ranking tail over a candidate frame in the
     * codec's row shape: score every row with the codec against the literal

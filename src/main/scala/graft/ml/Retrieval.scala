@@ -1,8 +1,12 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import graft.exec.{Route, Seek}
 
 /** Keyword and hybrid retrieval over the corpus — the serving-side verbs a
   * training-data platform runs next to its dedup/quality passes: BM25
@@ -284,14 +288,88 @@ object Retrieval {
     * stored path shares its oracle (bm25OracleSql under the same scope).
     * Under `scope`, the slice semi-joins the postings before the df window
     * and its statistics replace `stats`; the mask anti-joins after it. */
+  /** When `local` bounds the request, the term postings are read from the
+    * pages whose `token` statistics admit the terms and scored on the
+    * driver. */
   def bm25StoredTopK(index: DataFrame, stats: DataFrame,
       terms: Seq[String], k: Int,
       scope: Scope[Slice, DataFrame] = Scope()): DataFrame =
-    masked(withDfWindow(
-        sliced(index.filter(col("token").isin(terms: _*)), scope)), scope)
-      .crossJoin(scopeStats(stats, scope))
-      .groupBy("doc_id").agg(round(sum(contribExpr), 4).as("bm25"))
-      .orderBy(desc("bm25"), asc("doc_id")).limit(k)
+    Route.serve(local(index, stats, terms, scope))(_.topK(k)) {
+      masked(withDfWindow(
+          sliced(index.filter(col("token").isin(terms: _*)), scope)), scope)
+        .crossJoin(scopeStats(stats, scope))
+        .groupBy("doc_id").agg(round(sum(contribExpr), 4).as("bm25"))
+        .orderBy(desc("bm25"), asc("doc_id")).limit(k)
+    }
+
+  val NotFolded = "the stats are not one local (n_docs, avgdl) row"
+  val NotLocal = "the scope's ids are not a local relation"
+
+  /** The driver plan of a stored BM25 request: an unpartitioned stored
+    * index whose page statistics bound the query terms' postings within
+    * SeekRows (the pages each term's statistics admit), folded local stats,
+    * and a scope of local id sets. */
+  private def local(index: DataFrame, stats: DataFrame, terms: Seq[String],
+      scope: Scope[Slice, DataFrame]): Either[String, (Long, Postings)] = {
+    def ids(df: DataFrame) = Seek.localIds(df, "doc_id").toRight(NotLocal)
+    val scoped = scope.slice.fold(stats)(_.stats)
+    val ts = terms.toSet[Any]
+    for {
+      idx <- Seek.store(index, index.sparkSession.sparkContext.hadoopConfiguration)
+        .toRight(Seek.notStored("the lexical index"))
+      _ <- Either.cond(index.schema("doc_id").dataType == LongType, (), Ivf.NotLongIds)
+      row <- Seek.localRows(scoped).filter(rows =>
+        scoped.columns.sameElements(Array("n_docs", "avgdl")) && rows.size == 1)
+        .map(_.head).toRight(NotFolded)
+      slice <- scope.slice.map(s => ids(s.ids).map(Some(_))).getOrElse(Right(None))
+      mask <- scope.mask.map(m => ids(m).map(Some(_))).getOrElse(Right(None))
+      // per term: the page index bounds an IN by its values' [min, max]
+      bound = ts.iterator.map(t => idx.bound("token", Set(t))).sum
+      _ <- Either.cond(bound <= Seek.SeekRows, (), Seek.overBound(bound))
+    } yield bound -> new Postings(index, idx, ts, scoped.schema, row, slice, mask)
+  }
+
+  /** A stored BM25 request on the driver, in the Spark plan's order: the
+    * slice keeps its postings, per-term df counts them, the mask drops its
+    * docs, and each posting's contribExpr — compiled once per input
+    * schema, the statistics bound as input columns — sums per doc in
+    * token order and rounds through the same `round`. */
+  private final class Postings(index: DataFrame, idx: Seek.Store, terms: Set[Any],
+      statsSchema: StructType, stats: InternalRow, slice: Option[Set[Long]],
+      mask: Option[Set[Long]]) {
+
+    def topK(k: Int): DataFrame = {
+      val spark = index.sparkSession
+      val input = StructType(Seq(index.schema("tf"), StructField("df", LongType, nullable = false),
+        index.schema("dl")) ++ statsSchema.fields)
+      val contrib = Seek.projection(spark, input, contribExpr)
+      val rounded = Seek.projection(spark,
+        StructType(Seq(StructField("bm25", DoubleType))), round(col("bm25"), 4).as("bm25"))
+      val postings = terms.toSeq.flatMap(t => idx.read("token", Set(t), Seq("token", "doc_id", "tf", "dl")))
+        .filter(p => p.get(1) != null && slice.forall(_(p.getLong(1))))
+      val df = postings.groupBy(_.get(0)).view.mapValues(_.size.toLong).toMap
+      val sums = collection.mutable.LinkedHashMap.empty[Long, Option[Double]]
+      contrib.project.synchronized {
+        postings.filter(p => mask.forall(!_(p.getLong(1))))
+          .sortBy(p => UTF8String.fromString(p.getString(0)))
+          .foreach { p =>
+            val out = contrib.project(InternalRow(p.get(2), df(p.get(0)), p.get(3),
+              stats.get(0, statsSchema(0).dataType), stats.get(1, statsSchema(1).dataType)))
+            // Spark's sum: nulls skipped, the first value added to 0.0
+            val c = if (out.isNullAt(0)) None else Some(out.getDouble(0))
+            sums.updateWith(p.getLong(1))(s => Some(c.map(s.flatten.getOrElse(0.0) + _)
+              .orElse(s.flatten)))
+          }
+      }
+      val rows = rounded.project.synchronized {
+        sums.iterator.map { case (doc, s) =>
+          val out = rounded.project(InternalRow(s.map(Double.box).orNull))
+          Row(doc, if (out.isNullAt(0)) null else out.getDouble(0))
+        }.toVector
+      }
+      Seek.ranked(spark, StructType(Seq(index.schema("doc_id"), rounded.schema("bm25"))), rows, k)
+    }
+  }
 
   /** The lang-sliced bm25StoredTopK under the signature
     * perfbench/harness/src/Harness.scala calls (the harness may not be
@@ -559,12 +637,42 @@ object Retrieval {
     * cells only, approximate by construction), both under the same
     * `scope`, and the fusion runs over the two k-bounded rankings. Neither
     * tier touches anything corpus-sized at query time. */
+  /** When both tiers' driver plans bound the request, both rank and fuse
+    * on the driver. */
   def rrfStored(index: DataFrame, stats: DataFrame, emb: DataFrame,
       flat: DataFrame, terms: Seq[String], qVecId: Long, n: Int,
-      k: Int, scope: Scope[Slice, DataFrame] = Scope()): DataFrame =
-    fuse(ranks(bm25StoredTopK(index, stats, terms, n, scope), "bm25", "doc_id"),
-      ranks(Ivf.topK(IvfCodec.Flat, flat, emb, qVecId, n, denseRestrict(scope)),
-        "sim", "vec_id"), k)
+      k: Int, scope: Scope[Slice, DataFrame] = Scope()): DataFrame = {
+    val dense = denseRestrict(scope)
+    Route.serve(for {
+      lex <- local(index, stats, terms, scope)
+      vec <- Ivf.localVec(emb, qVecId)
+      den <- Ivf.local(flat, vec, dense, Ann.Probes)
+    } yield (lex._1 + den._1) -> (lex._2, vec, den._2)) { case (lex, vec, den) =>
+      fusedLocal(lex.topK(n), den.topK(IvfCodec.Flat, vec, qVecId, n), k)
+    } {
+      fuse(ranks(bm25StoredTopK(index, stats, terms, n, scope), "bm25", "doc_id"),
+        ranks(Ivf.topK(IvfCodec.Flat, flat, emb, qVecId, n, dense), "sim", "vec_id"), k)
+    }
+  }
+
+  /** `fuse` over two local rankings, on the driver: each row's rank is its
+    * position, the contributions sum per doc from 0.0 as Spark's sum does
+    * (two positive addends commute exactly), and the sum rounds through the
+    * same `round`. */
+  private def fusedLocal(lex: DataFrame, den: DataFrame, k: Int): DataFrame = {
+    val spark = lex.sparkSession
+    val rounded = Seek.projection(spark,
+      StructType(Seq(StructField("rrf", DoubleType))), round(col("rrf"), 6).as("rrf"))
+    val sums = collection.mutable.LinkedHashMap.empty[Long, Double]
+    for (tier <- Seq(lex, den); (r, i) <- tier.collect().zipWithIndex)
+      sums(r.getLong(0)) = sums.getOrElse(r.getLong(0), 0.0) + 1.0 / (RrfK + i + 1)
+    val rows = rounded.project.synchronized {
+      sums.iterator.map { case (doc, s) => Row(doc, rounded.project(InternalRow(s)).getDouble(0)) }
+        .toVector
+    }
+    val id = StructField("doc_id", LongType, lex.schema(0).nullable || den.schema(0).nullable)
+    Seek.ranked(spark, StructType(Seq(id, rounded.schema("rrf"))), rows, k)
+  }
 
   /** BATCHED stored hybrid — the whole hybrid serving matrix in one plan:
     * the lexical tier is bm25StoredTopKBatch, the dense tier is

@@ -134,11 +134,13 @@ object Catalog {
   }
 
   /** Materialization cache. Versioned so a derivation change invalidates old
-    * caches (v14: stores are published by rename, so a v13 directory left
-    * half-written by an in-place overwrite is never taken as published);
+    * caches (v15: cell stores hold one file per cell and hashed stores
+    * PageRows-row pages; v14: stores are published by rename, so a v13
+    * directory left half-written by an in-place overwrite is never taken as
+    * published);
     * `.graft-cache` under the working directory (gitignored) unless
     * GRAFT_CACHE names another root. */
-  private val cacheVersion = "v14"
+  private val cacheVersion = "v15"
   /** Exposed for specs that assert the materialization landed on disk. */
   def cacheVersionTag: String = cacheVersion
   def cacheRoot: String = sys.env.getOrElse("GRAFT_CACHE",
@@ -253,18 +255,24 @@ object Catalog {
       case Layout.Ranged(by @ _*) => writeRanged(df, path, by.head, by: _*)
       case Layout.Hashed(by @ _*) =>
         df.repartition(col(by.head)).sortWithinPartitions(by.map(col): _*)
-          .write.parquet(path)
+          .write.option("parquet.page.row.count.limit", PageRows).parquet(path)
       case Layout.Single(by @ _*) =>
         df.repartition(1).sortWithinPartitions(by.map(col): _*).write.parquet(path)
-      case Layout.Cells => df.write.partitionBy("cell").parquet(path)
+      case Layout.Cells =>
+        df.repartition(col("cell")).write.option("maxRecordsPerFile", RowsPerFile)
+          .partitionBy("cell").parquet(path)
       case Layout.Plain => df.write.parquet(path)
     }
   }
   private[graft] object Layout {
     final case class Ranged(by: String*) extends Layout
+    /** PageRows-row pages, so a pushed `by.head` predicate reads about one
+      * page per matching run of each file. */
     final case class Hashed(by: String*) extends Layout
     final case class Single(by: String*) extends Layout
-    /** Hive-partitioned by `cell`, so a probe reads only its cells. */
+    /** Hive-partitioned by `cell`, one file per cell up to RowsPerFile
+      * rows, so a probe opens only its cells' files and the file count
+      * follows the rows, not the session's parallelism. */
     case object Cells extends Layout
     /** Written as `build` leaves it. */
     case object Plain extends Layout
@@ -447,8 +455,31 @@ object Catalog {
       |)""".stripMargin.replace("\n", " ")
 
   /** Writable scratch path for entries that exercise WRITE paths (S7 TSV
-    * load, S11 copy): beside the materialization cache, keyed per sf-dir. */
-  def scratch(dir: String, name: String): String = cacheDir(dir, s"scratch_$name")
+    * load, S11 copy): beside the materialization cache, keyed per sf-dir and
+    * per JVM — entries clear their scratch before writing, so two JVMs over
+    * one cache root must never share one. Removed when the JVM exits. */
+  def scratch(dir: String, name: String): String = {
+    val path = scratchFor(dir, name, jvm)
+    scratches.add(path)
+    path
+  }
+
+  /** The scratch path of `name` for the JVM identified by `jvmId`. */
+  private[graft] def scratchFor(dir: String, name: String, jvmId: String): String =
+    cacheDir(dir, s"scratch_${name}_$jvmId")
+
+  /** This JVM's identity among those sharing a cache root: its process id
+    * and a random tag, as a process id alone repeats across containers. */
+  private[graft] lazy val jvm: String =
+    s"${ProcessHandle.current.pid}-${java.util.UUID.randomUUID.toString.take(8)}"
+
+  /** This JVM's scratch paths, deleted in process when it exits. */
+  private lazy val scratches = {
+    val paths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    sys.addShutdownHook(paths.forEach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))))
+    paths
+  }
 
   /** A TSV fixture in the reference's text-ingest shape
     * (`key TAB dockey TAB value`, /root/reference/src/ca-load.cc:116-391),

@@ -67,7 +67,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("emb_topk_ivf reads the materialized IVF-flat store") {
-    val df = SparkEntry.queries("emb_topk_ivf")(spark, dir)
+    val df = TestSpark.onSpark(SparkEntry.queries("emb_topk_ivf")(spark, dir))
     val p = plan(df)
     assert(p.contains("ivf_flat"), s"plan does not scan ivf_flat:\n$p")
     // probed cells are a static filter on the partition column → the scan

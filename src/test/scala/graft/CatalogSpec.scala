@@ -139,4 +139,15 @@ class CatalogSpec extends AnyFunSuite {
     assert(!(f1 eq f3), "fuzzy entry memo leaked across statement windows")
     graft.util.Caches.drain()
   }
+
+  test("two JVMs get different scratch roots for the same entry") {
+    val dir = "/root/testdata/sf0.001"
+    val a = Catalog.scratchFor(dir, "bm25_topk_gen", "101-aaaa")
+    val b = Catalog.scratchFor(dir, "bm25_topk_gen", "202-bbbb")
+    assert(a != b)
+    assert(new java.io.File(a).getParent == new java.io.File(b).getParent)
+    assert(Catalog.scratch(dir, "bm25_topk_gen") ==
+      Catalog.scratchFor(dir, "bm25_topk_gen", Catalog.jvm))
+    assert(Catalog.jvm.startsWith(s"${ProcessHandle.current.pid}-"))
+  }
 }

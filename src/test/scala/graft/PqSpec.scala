@@ -36,7 +36,7 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("the PQ lookup is cell-pruned and ranks through the ADC kernel") {
-    val p = SparkEntry.queries("emb_topk_pq")(spark, dir)
+    val p = TestSpark.onSpark(SparkEntry.queries("emb_topk_pq")(spark, dir))
       .queryExecution.executedPlan.toString
     assert(p.contains("pq_ivf"), s"plan does not scan pq_ivf:\n$p")
     assert("""PartitionFilters: \[[^\]]*cell#\d+[^\]]* IN """.r

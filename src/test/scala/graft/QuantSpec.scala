@@ -47,7 +47,7 @@ class QuantSpec extends AnyFunSuite {
   }
 
   test("the entry's lookup is cell-pruned over the composed store") {
-    val p = SparkEntry.queries("emb_topk_sq8")(spark, dir)
+    val p = TestSpark.onSpark(SparkEntry.queries("emb_topk_sq8")(spark, dir))
       .queryExecution.executedPlan.toString
     // probe path reads the MATERIALIZED composed SQ8×IVF store with a
     // static partition filter on the probed cells — never the flat codes

@@ -131,4 +131,27 @@ class RangeLayoutSpec extends AnyFunSuite {
       assert(a == b)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
   }
+
+  test("a cell store holds one file per cell under any session parallelism") {
+    val base = java.nio.file.Files.createTempDirectory("graft-cells").toFile
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    def files(shuffle: String, split: String): (Int, Int) =
+      try {
+        spark.conf.set(keys(0), shuffle)
+        spark.conf.set(keys(1), split)
+        val rows = Catalog.embeddings(spark, dir).repartition(5)
+          .join(Catalog.ivfCells(spark, dir), Seq("vec_id"))
+        val path = s"$base/cells-$shuffle"
+        Catalog.Layout.Cells.write(rows, path)
+        val cells = new java.io.File(path).listFiles().filter(_.getName.startsWith("cell="))
+        (cells.length, cells.map(_.list().count(_.endsWith(".parquet"))).sum)
+      } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      for ((shuffle, split) <- Seq("2" -> "1m", "7" -> "64m")) {
+        val (cells, parquet) = files(shuffle, split)
+        assert(cells > 1 && parquet == cells, s"shuffle $shuffle: $cells cells, $parquet files")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base)
+  }
 }

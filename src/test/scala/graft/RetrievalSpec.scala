@@ -475,8 +475,8 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("emb_topk_filtered: label predicate pushed, results all carry it") {
-    val df = Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
-      Catalog.embeddings(spark, dir), 0, 10, Ivf.Label(3))
+    val df = TestSpark.onSpark(Ivf.topK(IvfCodec.Flat, Catalog.ivfFlat(spark, dir),
+      Catalog.embeddings(spark, dir), 0, 10, Ivf.Label(3)))
     val labels = Catalog.embeddings(spark, dir)
       .filter(col("label") === 3).select("vec_id")
       .collect().map(_.getLong(0)).toSet

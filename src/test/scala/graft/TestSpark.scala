@@ -28,6 +28,11 @@ object TestSpark {
   def multiset(p: Seq[(Long, Double)]): Map[(Long, Double), Int] =
     p.groupBy(identity).view.mapValues(_.length).toMap
 
+  /** `body` with the stored serving lookups on their Spark plans: at these
+    * scales they run on the driver, and the plan audits pin the scans they
+    * keep over the driver route's bound. */
+  def onSpark[A](body: => A): A = graft.exec.Route.onSpark("pinned by the plan audits")(body)
+
   /** Run `body` and return its value with the executed physical plans of
     * every action it ran, in completion order. */
   def executedPlans[A](body: => A): (A, Seq[String]) = {
