@@ -334,24 +334,26 @@ object Seek {
   private[graft] def store(df: DataFrame, conf: Configuration): Option[Store] =
     storedFiles(df).map(new Store(_, conf))
 
-  private val readers = new ConcurrentHashMap[(SparkSession, StructType, StructType, StructType),
-    PartitionedFile => Iterator[InternalRow]]
+  private val readers = new ConcurrentHashMap[(SparkSession, StructType, StructType,
+    Map[String, String], StructType), PartitionedFile => Iterator[InternalRow]]
 
   /** Every row of `files` of `s`, as Spark's parquet source reads it:
     * the `required` columns, then the partition values. The reader is
-    * built once per (session, schemas). Each file is read to its end, which
-    * closes it. A row is valid only inside `f`. */
+    * built once per (session, schemas, options). Each file is read to its
+    * end, which closes it, or closed when `f` throws. A row is valid only
+    * inside `f`. */
   private[graft] def scanRows(spark: SparkSession, s: Stored, files: Seq[(InternalRow, FileStatus)],
       required: StructType)(f: InternalRow => Unit): Unit = {
     val h = s.relation
-    val read = readers.computeIfAbsent((spark, h.dataSchema, h.partitionSchema, required), _ =>
+    val read = readers.computeIfAbsent((spark, h.dataSchema, h.partitionSchema, h.options, required), _ =>
       h.fileFormat.buildReaderWithPartitionValues(spark, h.dataSchema, h.partitionSchema,
         required, Nil, h.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
         spark.sessionState.newHadoopConfWithOptions(h.options)))
     files.foreach { case (values, st) =>
       val it = read(PartitionedFile(values, SparkPath.fromPath(st.getPath), 0, st.getLen,
         Array.empty, st.getModificationTime, st.getLen))
-      while (it.hasNext) f(it.next())
+      try while (it.hasNext) f(it.next())
+      finally it match { case c: AutoCloseable => c.close(); case _ => }
     }
   }
 

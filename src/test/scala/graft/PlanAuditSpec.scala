@@ -160,8 +160,8 @@ class PlanAuditSpec extends AnyFunSuite {
       s"dedup_semantic re-derives the cell assignment in-statement:\n$ps")
     // the filtered+masked hybrid: both tiers from stores, corpus text
     // never scanned (the rrf_stored family contract)
-    val pm = planOf(
-      SparkEntry.queries("rrf_stored_filtered_masked")(spark, dir))
+    val pm = planOf(TestSpark.onSpark(
+      SparkEntry.queries("rrf_stored_filtered_masked")(spark, dir)))
     assert(pm.contains("lex_index") && pm.contains("ivf_flat") &&
       !TestSpark.scansCorpusText(pm),
       s"filtered+masked hybrid must read only the stored tiers:\n$pm")
